@@ -80,14 +80,6 @@ object Bpe {
     "0" -> "0", // 21: 00
     "1" -> "2") // 22: 12
 
-  /** The merges as a SQL VALUES list — ONE definition feeds both the
-    * Spark fold and the DuckDB oracle's recursive replay.
-    */
-  def mergesSqlValues: String =
-    merges.zipWithIndex
-      .map { case ((a, b), i) => s"(${i + 1},'$a','$b')" }
-      .mkString(", ")
-
   /** The REAL-vocab-scale table every production query uses: all
     * (char, char) then all (bigram, char) merges of [a-z0-9],
     * charset-major — 47,952 ranks ([[graft.functions.BpeVocab

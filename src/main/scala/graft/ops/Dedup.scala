@@ -853,15 +853,6 @@ object Dedup {
   /** Hamming distance between two simhash values (bit-count of xor). */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
-  /** SimHash near-dup candidates: group by simhash value (distance-0
-    * buckets); Hamming-radius pairs are [[simhashNearDupPairs]].
-    */
-  def simhashDupGroups(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    df.select(col(idCol), simhash16(col(textCol)).as("simhash"))
-      .groupBy(col("simhash"))
-      .agg(count(lit(1)).as("n_docs"), min(col(idCol)).as("keep_id"))
-      .filter(col("n_docs") > 1)
-
   /** SimHash near-dup PAIRS within Hamming distance `maxHamming`, via
     * band bucketing over the native wide hash
     * ([[graft.functions.SimHashBits]]): the nBits hash splits into

@@ -1544,14 +1544,4 @@ object Multimodal {
     if (dims > 10) feat(10) = px.channels.toFloat
     (crc.getValue, feat)
   }
-
-  /** Frame-sampling plan for video rows: every `everyMs` ms — pure
-    * column math (no decode needed for the schedule), the decode of each
-    * sampled frame is the stubbed step.
-    */
-  def frameSamplePlan(media: DataFrame, everyMs: Int): DataFrame =
-    media.filter(col("kind") === "video")
-      .select(col("media_id"), col("duration_ms"),
-        explode(sequence(lit(0),
-          col("duration_ms") - 1, lit(everyMs))).as("frame_ts_ms"))
 }

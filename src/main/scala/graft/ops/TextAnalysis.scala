@@ -19,15 +19,6 @@ object TextAnalysis {
     when(length(trim(text)) === 0, lit(0))
       .otherwise(size(split(trim(text), "\\s+")))
 
-  /** BPE-ish subword-boundary token count: splits on whitespace AND
-    * letter/digit/punct boundaries, approximating a byte-pair tokenizer's
-    * token inflation for cost estimation.
-    */
-  def tokenCountBpeIsh(text: Column): Column =
-    when(length(trim(text)) === 0, lit(0))
-      .otherwise(size(split(trim(text),
-        "\\s+|(?<=[a-zA-Z])(?=[0-9])|(?<=[0-9])(?=[a-zA-Z])|(?<=[\\p{Punct}])|(?=[\\p{Punct}])")))
-
   /** Stopwords used by quality scoring and language ID. Deterministic,
     * tiny — inlined as literals so the optimizer constant-folds.
     */
@@ -318,16 +309,4 @@ object TextAnalysis {
         floor(col("sum_logp_x1e6") / col("n_scored")).cast("long"))
       .withColumn("lm_ok", col("avg_logp_x1e6") >= keepThresholdX1e6)
   }
-
-  /** Rolling polynomial hash (Rabin-Karp style) over tokens — a
-    * content-defined fingerprint that, unlike md5, supports windowed
-    * near-dup chunking. Implemented as a codegen-friendly aggregate
-    * expression over the token array.
-    */
-  def rollingHash(text: Column, prime: Long = 1000000007L): Column =
-    aggregate(
-      split(trim(text), "\\s+"),
-      lit(0L),
-      (acc, tok) => pmod(acc * lit(31L) + pmod(hash(tok).cast("long"),
-        lit(prime)), lit(prime)))
 }

@@ -31,18 +31,6 @@ object Aggregate {
         window(col("ts"), "1 hour").getField("start").as("hour_start"))
       .agg(count(lit(1)).as("n_turns"))
 
-  /** distinct conversations per sink — exact for correctness tests;
-    * approx_count_distinct is the 100 TB-scale variant (single-pass HLL,
-    * no distinct shuffle).
-    */
-  def convsPerSink(routed: DataFrame, approx: Boolean = false): DataFrame =
-    if (approx)
-      routed.groupBy(col("sink"))
-        .agg(approx_count_distinct(col("conv_id")).as("n_convs"))
-    else
-      routed.groupBy(col("sink"))
-        .agg(countDistinct(col("conv_id")).as("n_convs"))
-
   /** All metric tables, written under `<root>/_metrics/<batchId>/`.
     * Writes are parallel — no coalesce(1): the (sink, hour) table grows
     * with the time range and at 100x scale a single-task funnel would be

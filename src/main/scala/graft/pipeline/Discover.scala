@@ -480,12 +480,4 @@ object Discover {
       watermarked.filter(cutoffPredicate(asOf, cfg.cutoffSeconds))) // S5
     (guarded, reopened)
   }
-
-  /** New high watermark per day in the delta (for the lineage commit). */
-  def deltaWatermarks(delta: DataFrame): Seq[(String, Timestamp, Long)] =
-    delta.groupBy(col("day"))
-      .agg(max(col("ts")).as("mx"), count(lit(1)).as("n"))
-      .collect()
-      .map(r => (r.getString(0), r.getTimestamp(1), r.getLong(2)))
-      .toSeq
 }

@@ -44,8 +44,7 @@ class RollingHashMinSpec extends AnyFunSuite {
     ).toDF("id", "text")
     // go through parquet: a bare local relation is folded and evaluated
     // on the driver, which would bypass codegen entirely
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "rhm").toString
+    val dir = graft.pipeline.SparkTestSession.scratchDir("rhm")
     docs.write.mode("overwrite").parquet(dir)
     val out = spark.read.parquet(dir).select($"id",
       RollingHashMin.rollingHashMin($"text", 16).as("fp"))

@@ -56,8 +56,7 @@ class SimHashBitsSpec extends AnyFunSuite {
       (2L, base.replace("tok7", "tokX")), // one token changed
       (3L, "completely different content everywhere here now")
     ).toDF("id", "text")
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "shb").toString
+    val dir = graft.pipeline.SparkTestSession.scratchDir("shb")
     docs.write.mode("overwrite").parquet(dir)
     val out = spark.read.parquet(dir).select($"id",
       SimHashBits.simhashBits($"text", 48).as("sh"))

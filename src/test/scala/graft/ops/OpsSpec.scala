@@ -16,8 +16,7 @@ class OpsSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("concatenated gzip members read as one stream (multi-stream fixture analog)") {
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "gz").toString
+    val dir = SparkTestSession.scratchDir("gz")
     val f = new java.io.File(s"$dir/multi.log.gz")
     val out = new java.io.FileOutputStream(f)
     // two independently-gzipped members, 8 lines each, back to back
@@ -37,8 +36,7 @@ class OpsSpec extends AnyFunSuite {
   test("custom gzip_pattern dispatch: a '.gee.zip' gzip file decodes, " +
       "broken gzip is skipped, plain files pass through (s3.rb:89,326; spec:466-467)") {
     import graft.sources.GzipPatternSource
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "geezip").toString
+    val dir = SparkTestSession.scratchDir("geezip")
     // gzip content under a name Hadoop's extension dispatch can't see,
     // with TWO concatenated members (the multi-stream fixture analog)
     val f = new java.io.File(s"$dir/uncompressed.log.gee.zip")
@@ -112,8 +110,7 @@ class OpsSpec extends AnyFunSuite {
   test("gzip bomb guard: an object exceeding the decompressed-bytes cap " +
       "is skipped like a broken file, others still read") {
     import graft.sources.GzipPatternSource
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "gzbomb").toString
+    val dir = SparkTestSession.scratchDir("gzbomb")
     // ~1 MB of zeros compresses to ~1 KB — over a 64 KB cap it must be
     // skipped; OOM is not an acceptable failure mode for one bad object
     val bomb = new java.util.zip.GZIPOutputStream(
@@ -144,8 +141,7 @@ class OpsSpec extends AnyFunSuite {
       "spec:325-339): one event per line, source key in metadata, gzip transparent") {
     import graft.sources.GzipPatternSource
     import graft.pipeline.Pipeline
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "rawlogs").toString
+    val dir = SparkTestSession.scratchDir("rawlogs")
     // uncompressed.log analog: 2 grok lines -> 2 events
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$dir/uncompressed.log"),
@@ -177,8 +173,7 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("invalid UTF-8 bytes sanitize to U+FFFD on read and survive the parse (invalid_utf8.gbk fixture analog)") {
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "gbk").toString
+    val dir = SparkTestSession.scratchDir("gbk")
     val f = new java.io.File(s"$dir/invalid.log")
     // two lines; the first embeds GBK bytes that are invalid UTF-8
     val out = new java.io.FileOutputStream(f)
@@ -364,13 +359,6 @@ class OpsSpec extends AnyFunSuite {
     val big = Multimodal.synthPayload(bigId, "image", 1, 1, 0)
     assert(big.length == 16 + 256 +
       Math.floorMod(bigId * 2654435761L, 1024L).toInt)
-
-    val plan = Multimodal.frameSamplePlan(media.toDF(), everyMs = 1000)
-    val perVideo = plan.groupBy($"media_id").count()
-      .join(media.toDF().select($"media_id", $"duration_ms"), "media_id")
-      .collect()
-    assert(perVideo.forall(r =>
-      r.getLong(1) == (r.getInt(2) + 999) / 1000))
   }
 
   test("kmeans++ seeding spreads seeds across clusters: IVF recall at " +
@@ -434,8 +422,7 @@ class OpsSpec extends AnyFunSuite {
 
   test("writeClusters fails CLOSED on non-convergence unless the " +
       "operator opts into persisting the over-segmentation") {
-    val root = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "wclust").toString
+    val root = SparkTestSession.scratchDir("wclust")
     val chain = (0 until 200).map(i => (f"c$i%03d", f"c${i + 1}%03d"))
       .toDF("id_a", "id_b")
     val ex = intercept[IllegalStateException] {
@@ -534,8 +521,7 @@ class OpsSpec extends AnyFunSuite {
 
     // persisted band state: write old bands as a committed batch plus an
     // orphan; the read-back union drives the same incremental result
-    val root = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "bands").toString
+    val root = SparkTestSession.scratchDir("bands")
     Dedup.writeBands(stored, root, "c1", "b1", "doc_id")
     Dedup.writeBands(incoming.limit(3), root, "c1", "orphan", "doc_id")
     assert(Dedup.readBands(spark, root, "c1", Set.empty).isEmpty)
@@ -644,8 +630,7 @@ class OpsSpec extends AnyFunSuite {
   test("pair materialization: persisted pairs feed cluster resolution " +
       "and curated builds identically to direct derivation; uncommitted " +
       "dirs are invisible") {
-    val root = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "pairs").toString
+    val root = SparkTestSession.scratchDir("pairs")
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val sigs = Dedup.minhashSignatures(docs, "doc_id", "text", 3, 8)
     val pairs = Dedup.lshCandidatePairs(
@@ -715,6 +700,10 @@ class OpsSpec extends AnyFunSuite {
     // a diameter-7 chain: 0-1-2-...-7
     val chain = (0 until 7).map(i => (f"n$i%02d", f"n${i + 1}%02d"))
       .toDF("id_a", "id_b")
+    // a cap below one iteration is rejected up front, never an NPE from
+    // a labels frame no iteration assigned
+    intercept[IllegalArgumentException](
+      Dedup.resolveClustersIter(chain, maxIters = 0))
     val cappedRes = Dedup.resolveClustersIter(chain, maxIters = 2)
     assert(!cappedRes.converged && cappedRes.iterations == 2,
       "the cap must fire on a long chain")
@@ -975,8 +964,7 @@ class OpsSpec extends AnyFunSuite {
       "in-memory table it encodes (expression AND BpeNative), comments " +
       "and blank lines skipped, malformed lines THROW") {
     import graft.functions.{BpeExprs, BpeNative, BpeVocab}
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "bpevocab")
+    val dir = java.nio.file.Paths.get(SparkTestSession.scratchDir("bpevocab"))
     // encode the DEMO table as a merges file, rank = line order, with
     // the noise a hand-maintained file accumulates: comments, blank
     // lines, stray surrounding whitespace
@@ -1035,8 +1023,7 @@ class OpsSpec extends AnyFunSuite {
       "addFile resolves by basename when the path is not a local file " +
       "(the --files executor path)") {
     import graft.functions.{BpeExprs, BpeVocab}
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "bpeship")
+    val dir = java.nio.file.Paths.get(SparkTestSession.scratchDir("bpeship"))
     // unique basename per run: SparkFiles resolves by basename and the
     // ranks cache is keyed by name — both must see a fresh identity
     val base = s"shipped_merges_${System.nanoTime()}.txt"
@@ -1817,8 +1804,7 @@ class OpsSpec extends AnyFunSuite {
   test("compactPairs/compactBands fold committed dirs past the " +
       "threshold: one compacted survivor, identical read set, orphans " +
       "deleted, crash-window duplicates tolerated") {
-    val root = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "dedupcompact").toString
+    val root = SparkTestSession.scratchDir("dedupcompact")
     val committed = (0 until 5).map(i => s"b$i").toSet
     for (i <- 0 until 5)
       Dedup.writePairs(Seq((s"d$i", s"d${i + 10}")).toDF("id_a", "id_b"),
@@ -1863,8 +1849,7 @@ class OpsSpec extends AnyFunSuite {
   test("compactClusters retains only the current label GENERATION " +
       "(label tables supersede — a row fold would fabricate " +
       "multi-label ids)") {
-    val root = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "clustercompact").toString
+    val root = SparkTestSession.scratchDir("clustercompact")
     for (g <- 0 until 3)
       Seq(("a", "a", true), ("b", "a", false))
         .toDF("id", "cluster_id", "keep")

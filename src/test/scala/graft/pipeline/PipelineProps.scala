@@ -153,8 +153,7 @@ object PipelineProps extends Properties("pipeline") {
         "ongoing-request=\"false\", expiry-date=\"2020-01-01 00:00:00\"",
         "not a restore header"))))) { rows =>
       rows.isEmpty || {
-        val dir = java.nio.file.Files.createTempDirectory(
-          java.nio.file.Paths.get("/root/repo/target"), "s6prop").toString
+        val dir = SparkTestSession.scratchDir("s6prop")
         try {
           val ts0 = new Timestamp(Synth.baseEpochMs)
           rows.zipWithIndex.map { case ((sc, rh), i) =>

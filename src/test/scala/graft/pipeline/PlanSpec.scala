@@ -17,8 +17,7 @@ class PlanSpec extends AnyFunSuite {
   import spark.implicits._
 
   private lazy val scratch = {
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "planspec").toString
+    val dir = SparkTestSession.scratchDir("planspec")
     sys.addShutdownHook(
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir)))
     Synth.writeTable(spark, s"$dir/input", 42L, 30L)
@@ -221,8 +220,7 @@ class PlanSpec extends AnyFunSuite {
         graft.ops.Dedup.lshBands(
           graft.ops.Dedup.minhashSignatures(df, "doc_id", "text", 3, 8),
           "doc_id", 8, 2)
-      val root = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get("/root/repo/target"), "bandstore").toString
+      val root = SparkTestSession.scratchDir("bandstore")
       graft.ops.Dedup.writeBands(bandsOf(docs.filter($"doc_id" < 250)),
         root, "c1", "b1", "doc_id")
       val stored = graft.ops.Dedup.readBands(spark, root, "c1", Set("b1"),

@@ -18,9 +18,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = graft.pipeline.SparkTestSession.spark
   import spark.implicits._
 
-  private val scratch =
-    java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "streamspec").toString
+  private val scratch = graft.pipeline.SparkTestSession.scratchDir("streamspec")
 
   override def afterAll(): Unit = {
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(scratch))
