@@ -232,10 +232,12 @@ object BenchExtra {
       val cfg = PipelineConfig(s"$dir/input", s"$dir/sinks")
       val wms = Map("2025-01-01" -> new Timestamp(Synth.baseEpochMs + 3600000L))
       val asOf = new Timestamp(Synth.baseEpochMs + 365L * 86400000L)
-      section("Incremental discovery (watermark pushed into the scan)",
-        "`PushedFilters` carries the per-day ts bounds to Parquet " +
-          "row-group stats; `PartitionFilters` prunes the day partitions — " +
-          "no watermark join anywhere.",
+      section("Incremental discovery (literal watermark predicate)",
+        "`PushedFilters` carries only the cutoff `ts <= asOf - cutoff` and " +
+          "the contract guards; `PartitionFilters` is a tautology. The " +
+          "per-day watermark is applied by the Filter after the scan, so " +
+          "it skips no row group and no partition — but no watermark join " +
+          "anywhere.",
         Discover.delta(spark, cfg, asOf, wms))
 
       section("Full pipeline pass (parse -> route -> enrich -> fused prefix scan)",

@@ -148,9 +148,8 @@ object Queries {
     val ev = t(spark, dir, "events")
       .withColumn("marker",
         when(col("event_type") === "signup", col("event_id")))
-    graft.pipeline.PrefixOps.propagateLastNonNull(
-        ev, col("marker"), "hdr",
-        chunkSize = 1024, convCol = "user_id", idxCol = "event_id")
+    graft.pipeline.PrefixOps.scanMany(ev, Seq(col("marker") -> "hdr"),
+        None, chunkSize = 1024, convCol = "user_id", idxCol = "event_id")
       .select(col("user_id"), col("event_id"), col("hdr"))
       .orderBy(col("user_id"), col("event_id"))
   }
@@ -168,10 +167,10 @@ object Queries {
     */
   def q08(spark: SparkSession, dir: String): DataFrame = {
     val ev = t(spark, dir, "events")
-    graft.pipeline.PrefixOps.prefixSum(ev,
-        when(col("event_type") === "signup", lit(1)).otherwise(lit(0)),
-        "session_id", chunkSize = 1024, convCol = "user_id",
-        idxCol = "event_id")
+    graft.pipeline.PrefixOps.scanMany(ev, Nil,
+        Some(when(col("event_type") === "signup", lit(1)).otherwise(lit(0)) ->
+          "session_id"),
+        chunkSize = 1024, convCol = "user_id", idxCol = "event_id")
       .groupBy(col("user_id"), col("session_id"))
       .agg(count(lit(1)).as("n_events"),
         min(col("event_id")).as("first_event"),
@@ -425,9 +424,10 @@ object Queries {
     */
   def q20(spark: SparkSession, dir: String): DataFrame = {
     val ev = t(spark, dir, "events").filter(col("user_id") < 40)
-    val sess = graft.pipeline.PrefixOps.prefixSum(ev,
-      when(col("event_type") === "signup", lit(1)).otherwise(lit(0)),
-      "session_id", chunkSize = 1024, convCol = "user_id", idxCol = "event_id")
+    val sess = graft.pipeline.PrefixOps.scanMany(ev, Nil,
+      Some(when(col("event_type") === "signup", lit(1)).otherwise(lit(0)) ->
+        "session_id"),
+      chunkSize = 1024, convCol = "user_id", idxCol = "event_id")
     sess.groupBy(col("user_id"), col("session_id"))
       .agg(
         concat_ws("\n",

@@ -7,13 +7,11 @@ import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expression: `nBits`-bit SimHash of a document's
-  * distinct whitespace tokens — the SCALE path of the 16-bit
-  * column-expression variant ([[graft.ops.Dedup.simhash16]], which
-  * re-scans the token array once per bit: 16 aggregate passes per row).
-  * This computes all bit votes in ONE pass per token, O(tokens * nBits)
-  * with no per-bit re-tokenization, and participates in
-  * WholeStageCodegen via a static call (same shape as
-  * [[RollingHashMin]]).
+  * distinct whitespace tokens. This computes all bit votes in ONE pass
+  * per token, O(tokens * nBits) with no per-bit re-tokenization, and
+  * participates in WholeStageCodegen via a static call (same shape as
+  * [[RollingHashMin]]). The 16-bit [[graft.ops.Dedup.simhash16]] is a
+  * projection of it (bits 0, 4, ..., 60).
   *
   * Bit layout is defined hex-digit-wise so an ANSI-SQL oracle can
   * replay it exactly: bit j of a token's hash := bit (j % 4) of the

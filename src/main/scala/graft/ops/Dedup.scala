@@ -834,20 +834,18 @@ object Dedup {
     * over the doc's distinct tokens. Hamming-close simhashes => textual
     * near-dups. Chosen encoding is ANSI-SQL-expressible (position-in-
     * alphabet hex decode) so the oracle can replay it exactly.
+    *
+    * That vote is bit 4i of the one-pass native
+    * [[graft.functions.SimHashBits]] hash (bit 0 of hex digit i), so
+    * this is a projection of it: one 61-bit pass, then bits 0, 4, ..., 60
+    * gathered into the low 16 bits. Null text hashes to 0.
     */
   def simhash16(text: Column): Column = {
-    val toks = array_distinct(split(trim(lower(text)), "\\s+"))
-    val hexAlphabet = "0123456789abcdef"
-    val bitCols = (0 until 16).map { i =>
-      // +1/-1 votes for bit i over tokens, via hex digit parity
-      val votes = aggregate(toks, lit(0),
-        (acc, t) => acc +
-          when((instr(lit(hexAlphabet),
-            substring(md5(t), i + 1, 1)) - 1) % 2 === 1, lit(1))
-            .otherwise(lit(-1)))
-      when(votes > 0, lit(1L << i)).otherwise(lit(0L))
-    }
-    bitCols.reduce(_ + _)
+    val wide = graft.functions.SimHashBits.simhashBits(text, 61)
+    val gathered = (0 until 16)
+      .map(i => shiftleft(shiftright(wide, 4 * i).bitwiseAND(1L), i))
+      .reduce(_.bitwiseOR(_))
+    coalesce(gathered, lit(0L))
   }
 
   /** Hamming distance between two simhash values (bit-count of xor). */

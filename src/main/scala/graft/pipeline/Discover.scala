@@ -18,8 +18,9 @@ import org.apache.spark.sql.functions._
   *    candidate days on the driver from the watermark map so the scan
   *    never lists already-complete partitions;
   *  - zero-length skip (S3) -> `length(text) > 0`;
-  *  - watermark (S4)        -> `ts > wm(day)` via a broadcast join against
-  *    the (tiny) per-day watermark table, read ONCE per run;
+  *  - watermark (S4)        -> `ts > wm(day)` as a literal predicate
+  *    filtered right after the scan (a broadcast join against the tiny
+  *    per-day watermark table when the map is too large to inline);
   *  - cutoff (S5)           -> `ts <= asOf - cutoff` with an injected
   *    deterministic `asOf` clock (tests never read the wall clock);
   *  - exclude regex (S7d)   -> `!text.rlike(excludePattern)` is handled in
@@ -44,13 +45,14 @@ object Discover {
   /** The S4 watermark predicate as a pure literal Column over
     * (day, ts): `day NOT IN committed  OR  (day = d AND ts > wm_d) ...`.
     *
-    * Because every leaf is a literal comparison on the `day` partition
-    * column or the `ts` data column, Catalyst pushes it INTO the scan:
-    * fully-committed days prune at the partition level where possible
-    * and, crucially, Parquet row-group stats (`max(ts) <= wm`) skip
-    * already-processed row groups without reading them — the 100 TB
-    * behavior the reference gets from server-side prefix listing
-    * (s3.rb:144). A broadcast join can never give the scan that.
+    * What reaches the scan: the disjunction mixes the `day` partition
+    * column with the `ts` data column, so Catalyst pushes no `ts > wm`
+    * bound into `PushedFilters` (only the cutoff `ts <= asOf - cutoff`
+    * and the contract guards get there), and its `PartitionFilters`
+    * form is the tautology `(day IS NULL OR day <> d) OR day = d`. The
+    * watermark is therefore applied by the Filter right after the scan:
+    * it skips no row group and prunes no partition. Being literal, it
+    * still needs no join, unlike the broadcast fallback.
     */
   def watermarkPredicate(wms: Map[String, Timestamp]): Column = {
     val days = wms.keys.toSeq.sorted
@@ -291,9 +293,10 @@ object Discover {
     * returned DataFrame and surface in the NEXT cycle's delta.
     *
     * Small watermark maps (the common case: one entry per partition day)
-    * become a scan-pushable literal predicate ([[watermarkPredicate]]);
-    * degenerate maps fall back to a broadcast join — semantically
-    * identical (tested), just not scan-pushable.
+    * become a literal predicate ([[watermarkPredicate]]), filtered right
+    * after the scan; degenerate maps fall back to a broadcast join —
+    * semantically identical (tested). Of the bounds on `ts`, only the
+    * freshness cutoff is pushed into the Parquet scan.
     */
   def delta(spark: SparkSession, cfg: PipelineConfig, asOf: Timestamp,
       wms: Map[String, Timestamp]): DataFrame =
@@ -467,7 +470,7 @@ object Discover {
     val watermarked =
       if (wms.isEmpty) input
       else if (wms.size <= maxLiteralWatermarkTerms)
-        input.filter(watermarkPredicate(wms)) // S4, pushed into the scan
+        input.filter(watermarkPredicate(wms)) // S4, filtered after the scan
       else {
         // fallback: broadcast watermark lookup (one row per day — tiny)
         val wmDf = wms.toSeq.toDF("day", "wm")

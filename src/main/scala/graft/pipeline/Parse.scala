@@ -146,25 +146,6 @@ object Parse {
       .drop("_ok")
   }
 
-  /** P5: propagate the most recent header_version onto all subsequent
-    * turns of the conversation (scale-safe prefix scan). Adds `header`.
-    */
-  def propagateHeaders(df: DataFrame, chunkSize: Int = 4096): DataFrame =
-    PrefixOps.propagateLastNonNull(df, col("header_version"), "header",
-      chunkSize)
-
-  /** P3: multiline sessionization. A turn starts a new logical record
-    * unless it is a continuation line; `session_id` is the running count
-    * of record starts. Adds `session_id`. (Equivalent to
-    * [[sessionizeConfigured]] with `MultilineConfig("^\\s+", negate =
-    * false, what = "previous")` — this overload is the pipeline's
-    * pre-parsed fast path, reusing the `is_continuation` column.)
-    */
-  def sessionize(df: DataFrame, chunkSize: Int = 4096): DataFrame =
-    PrefixOps.prefixSum(df,
-      when(col("is_continuation"), lit(0)).otherwise(lit(1)),
-      "session_id", chunkSize)
-
   /** The reference multiline codec's full configuration surface
     * (spec/inputs/s3_spec.rb:486: `pattern`/`negate`/`what`).
     * A line "belongs to a multiline event" when its text matches
@@ -178,6 +159,14 @@ object Parse {
       s"what must be previous|next, got $what")
   }
 
+  /** The ONE interpretation of pattern/negate: does this row "belong
+    * to a multiline event" under `cfg`?
+    */
+  def belongsUnder(cfg: MultilineConfig, textCol: String): Column = {
+    val matches = col(textCol).rlike(cfg.pattern)
+    if (cfg.negate) !matches else matches
+  }
+
   /** The SINGLE interpretation of `pattern`/`negate`/`what`: returns the
     * input (plus a lag column for what=next) and the "this row CONTINUES
     * the current record" predicate under `cfg`. Both the standalone
@@ -189,14 +178,6 @@ object Parse {
     *  - what=next: a row continues iff the PREVIOUS row belonged (first
     *    row of a conversation always starts) — one chunked lag.
     */
-  /** The ONE interpretation of pattern/negate: does this row "belong
-    * to a multiline event" under `cfg`?
-    */
-  def belongsUnder(cfg: MultilineConfig, textCol: String): Column = {
-    val matches = col(textCol).rlike(cfg.pattern)
-    if (cfg.negate) !matches else matches
-  }
-
   def continuationUnder(df: DataFrame, cfg: MultilineConfig,
       chunkSize: Int = 4096, convCol: String = "conv_id",
       idxCol: String = "turn_idx", textCol: String = "text")
@@ -223,7 +204,7 @@ object Parse {
       idxCol: String = "turn_idx", textCol: String = "text"): DataFrame =
     cfg.what match {
       case "next" =>
-        // fused form (r9): lagOne + prefixSum is two fat-row (conv,
+        // fused form (r9): lagOne + scanMany is two fat-row (conv,
         // chunk) repartitions for one logical scan — the fused
         // operator ([[PrefixOps.lagGatedPrefixSum]]) computes the
         // identical record ids in ONE (equivalence pinned in tests
@@ -234,9 +215,9 @@ object Parse {
       case _ =>
         val (pre, isCont) = continuationUnder(df, cfg, chunkSize, convCol,
           idxCol, textCol)
-        PrefixOps.prefixSum(pre, when(isCont, lit(0)).otherwise(lit(1)),
-            "session_id", chunkSize, convCol, idxCol)
-          .drop("_prev_belongs")
+        PrefixOps.scanMany(pre, Nil,
+          Some(when(isCont, lit(0)).otherwise(lit(1)) -> "session_id"),
+          chunkSize, convCol, idxCol)
     }
 
   /** P2: JSON codec mode (spec:397-441; fixtures json.log,
@@ -306,16 +287,17 @@ object Parse {
         min(col("ts")).as("ts"))
   }
 
-  /** Full parse stage used by the pipeline: column extraction plus the
-    * FUSED prefix scan — header propagation (P5) and sessionization (P3)
-    * share one chunk repartition instead of shuffling the fat rows
-    * twice (see [[PrefixOps.scanBoth]]).
+  /** The parse stage composed on its own: column extraction plus ONE
+    * fused prefix scan — header propagation (P5) and sessionization (P3)
+    * share one chunk repartition ([[PrefixOps.scanMany]]). Only tests
+    * call it: `Route(Enrich(Parse(...)))` is the composed reference that
+    * PipelineSpec compares [[Pipeline]] (which routes and enriches
+    * before its scan) against.
     */
-  def apply(ds: Dataset[Turn], chunkSize: Int = 4096): DataFrame = {
-    val parsed = parseColumns(ds.toDF())
-    PrefixOps.scanBoth(parsed,
-      col("header_version"), "header",
-      when(col("is_continuation"), lit(0)).otherwise(lit(1)), "session_id",
+  def apply(ds: Dataset[Turn], chunkSize: Int = 4096): DataFrame =
+    PrefixOps.scanMany(parseColumns(ds.toDF()),
+      Seq(col("header_version") -> "header"),
+      Some(when(col("is_continuation"), lit(0)).otherwise(lit(1)) ->
+        "session_id"),
       chunkSize)
-  }
 }

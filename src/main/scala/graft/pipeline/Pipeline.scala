@@ -68,7 +68,8 @@ object Pipeline {
     val scanned = PrefixOps.scanMany(enriched,
       Seq(col("header_version") -> "header",
         col("header_fields") -> "header_fields_carried"),
-      when(col("is_continuation"), lit(0)).otherwise(lit(1)), "session_id",
+      Some(when(col("is_continuation"), lit(0)).otherwise(lit(1)) ->
+        "session_id"),
       chunkSize)
     withMeta(scanned, includeObjectProperties)
   }

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, functions}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -34,57 +34,19 @@ import org.apache.spark.sql.functions._
   */
 object PrefixOps {
 
-  /** Running "last non-null value so far" per conv ordered by turn_idx —
-    * the header-propagation primitive (P5). Adds `outCol`.
+  /** The running scan: for EVERY (valueCol -> outName) pair in
+    * `lastCols` a running last-non-null (header propagation, P5), and,
+    * when `sum` is given as (indicator -> outName), a running sum of the
+    * integer indicator (sessionization, P3) — all sharing ONE
+    * (conv, chunk) repartition + sort. The reference carries two header
+    * values per file (`#Version:` and `#Fields:`, s3.rb:280-290);
+    * scanning each with its own decomposition would shuffle the fat rows
+    * once per consumer — this carries any number for one shuffle.
     *
-    * Semantics match
+    * Semantics: each last-non-null output matches
     * `last(valueCol, ignoreNulls).over(partitionBy(conv).orderBy(idx)
-    *   .rowsBetween(unboundedPreceding, currentRow))`.
-    */
-  def propagateLastNonNull(df: DataFrame, valueCol: Column, outCol: String,
-      chunkSize: Int = 4096, convCol: String = "conv_id",
-      idxCol: String = "turn_idx"): DataFrame = {
-    val chunked = df
-      .withColumn("_val", valueCol)
-      .withColumn("_chunk", (col(idxCol) / lit(chunkSize)).cast("long"))
-    val wIn = Window.partitionBy(col(convCol), col("_chunk"))
-      .orderBy(col(idxCol))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val within = chunked.withColumn("_run", last(col("_val"), ignoreNulls = true).over(wIn))
-
-    // One row per (conv, chunk) — INCLUDING chunks with no non-null
-    // value of their own: max_by skips rows whose ordering expression
-    // is null, so ordering by idx only where the value is non-null
-    // yields the chunk's last non-null value, or null for an all-null
-    // chunk. One aggregate over the input replaces the former
-    // two-pass form (a filtered summary aggregate PLUS a distinct
-    // chunk spine, left-joined) — one less full-input pass and one
-    // less join (r9; the PipelineProps naive-window property pins
-    // equivalence across chunk sizes, null runs included).
-    val summaries = chunked
-      .groupBy(col(convCol), col("_chunk"))
-      .agg(max_by(col("_val"),
-        when(col("_val").isNotNull, col(idxCol))).as("_chunk_last"))
-    val wCarry = Window.partitionBy(col(convCol)).orderBy(col("_chunk"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val carry = summaries
-      .withColumn("_carry_in",
-        last(col("_chunk_last"), ignoreNulls = true).over(wCarry))
-      .select(col(convCol), col("_chunk"), col("_carry_in"))
-
-    within
-      .join(carry, Seq(convCol, "_chunk"), "left")
-      .withColumn(outCol, coalesce(col("_run"), col("_carry_in")))
-      .drop("_val", "_chunk", "_run", "_carry_in")
-  }
-
-  /** Fused scan: BOTH running last-non-null (header propagation, P5) and
-    * running sum (sessionization, P3) in one chunk decomposition. The
-    * separate primitives each cost a fat-row shuffle for their window
-    * plus a join; the pipeline needs both over the same ordering, so
-    * fusing them shares the single (conv, chunk) repartition + sort —
-    * at 10^12 turns that halves the dominant shuffle volume of the
-    * parse stage.
+    *   .rowsBetween(unboundedPreceding, currentRow))`, the sum output
+    * the inclusive `sum(indicator)` over the same window (as long).
     *
     * Chunk summaries are derived from the windowed rows themselves
     * (`max_by(running, idx)` per chunk == the chunk's own scan result at
@@ -92,40 +54,30 @@ object PrefixOps {
     * carry-in table is one row per (conv, chunk) and joins back on the
     * partitioning the window already established.
     */
-  def scanBoth(df: DataFrame, valueCol: Column, lastOut: String,
-      indicator: Column, sumOut: String, chunkSize: Int = 4096,
-      convCol: String = "conv_id", idxCol: String = "turn_idx"): DataFrame =
-    scanMany(df, Seq(valueCol -> lastOut), indicator, sumOut, chunkSize,
-      convCol, idxCol)
-
-  /** N-column fused scan: running last-non-null for EVERY (valueCol ->
-    * outName) pair plus one running sum, all sharing the single
-    * (conv, chunk) repartition + sort. The reference carries two header
-    * values per file (`#Version:` and `#Fields:`, s3.rb:280-290);
-    * propagating each with its own scan would shuffle the fat rows once
-    * per header family — this carries any number for one shuffle.
-    */
   def scanMany(df: DataFrame, lastCols: Seq[(Column, String)],
-      indicator: Column, sumOut: String, chunkSize: Int = 4096,
+      sum: Option[(Column, String)], chunkSize: Int = 4096,
       convCol: String = "conv_id", idxCol: String = "turn_idx"): DataFrame = {
+    require(lastCols.nonEmpty || sum.nonEmpty, "scanMany needs a column to scan")
     val n = lastCols.size
     val valNames = (0 until n).map(i => s"_val$i")
     val runNames = (0 until n).map(i => s"_runv$i")
     val chunkLastNames = (0 until n).map(i => s"_chunk_last$i")
     val carryLastNames = (0 until n).map(i => s"_carry_last$i")
 
-    val chunked = lastCols.zip(valNames)
+    val values = lastCols.zip(valNames)
       .foldLeft(df) { case (acc, ((c, _), vn)) => acc.withColumn(vn, c) }
-      .withColumn("_ind", indicator.cast("long"))
+    val chunked = sum
+      .fold(values) { case (ind, _) => values.withColumn("_ind", ind.cast("long")) }
       .withColumn("_chunk", (col(idxCol) / lit(chunkSize)).cast("long"))
     val wIn = Window.partitionBy(col(convCol), col("_chunk"))
       .orderBy(col(idxCol))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val within = valNames.zip(runNames)
+    val lastRuns = valNames.zip(runNames)
       .foldLeft(chunked) { case (acc, (vn, rn)) =>
         acc.withColumn(rn, last(col(vn), ignoreNulls = true).over(wIn))
       }
-      .withColumn("_runs", sum(col("_ind")).over(wIn))
+    val within = sum.fold(lastRuns)(_ =>
+      lastRuns.withColumn("_runs", functions.sum(col("_ind")).over(wIn)))
 
     // one row per (conv, chunk): the chunk's final running values.
     // max_by(run, idx) = the running value AT THE CHUNK'S LAST ROW — the
@@ -134,19 +86,20 @@ object PrefixOps {
     val summaryAggs =
       runNames.zip(chunkLastNames).map { case (rn, cl) =>
         max_by(col(rn), col(idxCol)).as(cl)
-      } :+ max_by(col("_runs"), col(idxCol)).as("_chunk_sum")
+      } ++ sum.map(_ => max_by(col("_runs"), col(idxCol)).as("_chunk_sum"))
     val summaries = within.groupBy(col(convCol), col("_chunk"))
       .agg(summaryAggs.head, summaryAggs.tail: _*)
     val wCarry = Window.partitionBy(col(convCol)).orderBy(col("_chunk"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    val carry = chunkLastNames.zip(carryLastNames)
+    val carryLasts = chunkLastNames.zip(carryLastNames)
       .foldLeft(summaries) { case (acc, (cl, cr)) =>
         acc.withColumn(cr, last(col(cl), ignoreNulls = true).over(wCarry))
       }
-      .withColumn("_carry_sum",
-        coalesce(sum(col("_chunk_sum")).over(wCarry), lit(0L)))
-      .select((Seq(col(convCol), col("_chunk"), col("_carry_sum")) ++
-        carryLastNames.map(col)): _*)
+    val carry = sum
+      .fold(carryLasts)(_ => carryLasts.withColumn("_carry_sum",
+        coalesce(functions.sum(col("_chunk_sum")).over(wCarry), lit(0L))))
+      .select((Seq(col(convCol), col("_chunk")) ++
+        sum.map(_ => col("_carry_sum")) ++ carryLastNames.map(col)): _*)
 
     // SHUFFLE_HASH hint on the (tiny) carry side: the big side is
     // already hash-partitioned AND sorted by (conv, chunk) from the
@@ -157,12 +110,15 @@ object PrefixOps {
     // behind the full upstream stage).
     val joined = within
       .join(carry.hint("SHUFFLE_HASH"), Seq(convCol, "_chunk"), "left")
-    val withOuts = lastCols.map(_._2).zipWithIndex
+    val lastOuts = lastCols.map(_._2).zipWithIndex
       .foldLeft(joined) { case (acc, (out, i)) =>
         acc.withColumn(out,
           coalesce(col(runNames(i)), col(carryLastNames(i))))
       }
-      .withColumn(sumOut, col("_runs") + coalesce(col("_carry_sum"), lit(0L)))
+    val withOuts = sum.fold(lastOuts) { case (_, out) =>
+      lastOuts.withColumn(out,
+        col("_runs") + coalesce(col("_carry_sum"), lit(0L)))
+    }
     withOuts.drop(
       (valNames ++ runNames ++ carryLastNames ++
         Seq("_ind", "_chunk", "_runs", "_carry_sum")): _*)
@@ -209,7 +165,7 @@ object PrefixOps {
     * of record starts where a row starts a record iff the PREVIOUS row
     * of the conversation did not satisfy `belongs` (the first row of a
     * conversation always starts). Semantically identical to
-    * [[lagOne]] (belongs) -> [[prefixSum]] (!prev), which costs TWO
+    * [[lagOne]] (belongs) -> [[scanMany]] (sum of !prev), which costs TWO
     * (conv, chunk) repartitions of the fat rows plus two summary
     * windows and two carry joins; at 10^12 turns the second fat-row
     * shuffle is the dominant avoidable cost of the what=next codec
@@ -264,35 +220,5 @@ object PrefixOps {
         col("_run") - col("_corr") + col("_carry_in"))
       .drop("_b", "_chunk", "_lagb", "_rn", "_ind", "_run", "_corr",
         "_carry_in")
-  }
-
-  /** Running sum of an integer indicator per conv ordered by turn_idx —
-    * the sessionization primitive (P3: multiline grouping). Adds `outCol`
-    * = inclusive prefix sum of `indicator`.
-    */
-  def prefixSum(df: DataFrame, indicator: Column, outCol: String,
-      chunkSize: Int = 4096, convCol: String = "conv_id",
-      idxCol: String = "turn_idx"): DataFrame = {
-    val chunked = df
-      .withColumn("_ind", indicator.cast("long"))
-      .withColumn("_chunk", (col(idxCol) / lit(chunkSize)).cast("long"))
-    val wIn = Window.partitionBy(col(convCol), col("_chunk"))
-      .orderBy(col(idxCol))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val within = chunked.withColumn("_run", sum(col("_ind")).over(wIn))
-
-    val summaries = chunked.groupBy(col(convCol), col("_chunk"))
-      .agg(sum(col("_ind")).as("_chunk_sum"))
-    val wCarry = Window.partitionBy(col(convCol)).orderBy(col("_chunk"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val carry = summaries
-      .withColumn("_carry_in",
-        coalesce(sum(col("_chunk_sum")).over(wCarry), lit(0L)))
-      .select(col(convCol), col("_chunk"), col("_carry_in"))
-
-    within
-      .join(carry, Seq(convCol, "_chunk"), "left")
-      .withColumn(outCol, col("_run") + coalesce(col("_carry_in"), lit(0L)))
-      .drop("_ind", "_chunk", "_run", "_carry_in")
   }
 }

@@ -15,23 +15,35 @@ class SimHashBitsSpec extends AnyFunSuite {
     * space-only trim, `\s+` split KEEPING empty boundary tokens,
     * '' -> [''].
     */
-  private def reference(s: String, nBits: Int): Long = {
+  private def tokenHexes(s: String): Seq[String] = {
     def trimSp(x: String) = x.dropWhile(_ == ' ')
       .reverse.dropWhile(_ == ' ').reverse
     val toks = trimSp(s.toLowerCase(java.util.Locale.ROOT))
       .split("\\s+", -1).distinct
-    val hexes = toks.map { t =>
+    toks.toSeq.map { t =>
       java.security.MessageDigest.getInstance("MD5")
         .digest(t.getBytes("UTF-8")).map("%02x".format(_)).mkString
     }
+  }
+
+  /** Majority vote per output bit; `bitOf(hex, j)` is a token's bit j. */
+  private def votes(s: String, nBits: Int)(bitOf: (String, Int) => Int): Long = {
+    val hexes = tokenHexes(s)
     (0 until nBits).foldLeft(0L) { (acc, j) =>
-      val votes = hexes.map { h =>
-        val nib = Integer.parseInt(h(j / 4).toString, 16)
-        if (((nib >> (j % 4)) & 1) == 1) 1 else -1
-      }.sum
-      if (votes > 0) acc | (1L << j) else acc
+      val v = hexes.map(h => if (bitOf(h, j) == 1) 1 else -1).sum
+      if (v > 0) acc | (1L << j) else acc
     }
   }
+
+  private def nibble(h: String, k: Int): Int =
+    Integer.parseInt(h(k).toString, 16)
+
+  private def reference(s: String, nBits: Int): Long =
+    votes(s, nBits)((h, j) => (nibble(h, j / 4) >> (j % 4)) & 1)
+
+  /** d09's definition: bit i = parity of hex digit i of md5(token). */
+  private def hexParity16(s: String): Long =
+    votes(s, 16)((h, i) => nibble(h, i) % 2)
 
   test("one-pass native compute == per-bit hex-string reference (the SQL definition)") {
     val rng = new scala.util.Random(5)
@@ -46,6 +58,15 @@ class SimHashBitsSpec extends AnyFunSuite {
     for (s <- cases; n <- Seq(16, 48, 63)) {
       assert(SimHashBits.compute(UTF8String.fromString(s), n) ==
         reference(s, n), s"mismatch for '$s' nBits=$n")
+    }
+    // Dedup.simhash16, the 16-bit projection (bits 0, 4, ..., 60) of the
+    // wide hash, against the hex-parity definition; null text is 0
+    val got16 = (cases.map(Option(_)) :+ None).toDF("text")
+      .select($"text", graft.ops.Dedup.simhash16($"text").as("h"))
+      .collect().map(r => Option(r.getString(0)) -> r.getLong(1))
+    assert(got16.length == cases.size + 1)
+    for ((s, h) <- got16) {
+      assert(h == s.fold(0L)(hexParity16), s"simhash16 mismatch for $s")
     }
   }
 

@@ -37,7 +37,8 @@ object PipelineProps extends Properties("pipeline") {
     forAll(genRows, genChunk) { (rows, chunk) =>
       rows.isEmpty || {
         val df = rows.toDF("conv_id", "turn_idx", "v")
-        val got = PrefixOps.prefixSum(df, col("v"), "run", chunkSize = chunk)
+        val got = PrefixOps.scanMany(df, Nil, Some(col("v") -> "run"),
+            chunkSize = chunk)
           .select($"conv_id", $"turn_idx", $"run")
         val w = Window.partitionBy($"conv_id").orderBy($"turn_idx")
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -53,7 +54,7 @@ object PipelineProps extends Properties("pipeline") {
         // v == 0 -> null marker, else a string value
         val df = rows.toDF("conv_id", "turn_idx", "v")
           .withColumn("mark", when($"v" > 0, concat(lit("m"), $"v")))
-        val got = PrefixOps.propagateLastNonNull(df, col("mark"), "hdr",
+        val got = PrefixOps.scanMany(df, Seq(col("mark") -> "hdr"), None,
             chunkSize = chunk)
           .select($"conv_id", $"turn_idx", $"hdr")
         val w = Window.partitionBy($"conv_id").orderBy($"turn_idx")
@@ -85,10 +86,11 @@ object PipelineProps extends Properties("pipeline") {
         val fused = PrefixOps.lagGatedPrefixSum(df, belongs, "sid",
             chunkSize = chunk)
           .select($"conv_id", $"turn_idx", $"sid")
-        val composed = PrefixOps.prefixSum(
-            PrefixOps.lagOne(df, belongs, "_pb", chunkSize = chunk),
-            when(coalesce($"_pb", lit(false)), lit(0)).otherwise(lit(1)),
-            "sid", chunkSize = chunk)
+        val composed = PrefixOps.scanMany(
+            PrefixOps.lagOne(df, belongs, "_pb", chunkSize = chunk), Nil,
+            Some(when(coalesce($"_pb", lit(false)), lit(0)).otherwise(lit(1))
+              -> "sid"),
+            chunkSize = chunk)
           .select($"conv_id", $"turn_idx", $"sid")
         fused.exceptAll(composed).isEmpty &&
           composed.exceptAll(fused).isEmpty

@@ -85,7 +85,8 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("chunked header propagation == naive full-conversation window") {
     val parsed = Parse.parseColumns(Synth.turns(spark, seed, 50L).toDF())
     // tiny chunk size forces the multi-chunk carry-in path
-    val chunked = Parse.propagateHeaders(parsed, chunkSize = 4)
+    val chunked = PrefixOps.scanMany(parsed,
+        Seq(col("header_version") -> "header"), None, chunkSize = 4)
       .select($"conv_id", $"turn_idx", $"header")
     val w = Window.partitionBy($"conv_id").orderBy($"turn_idx")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -97,8 +98,10 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("chunked sessionization == naive running sum; merge flushes trailing session") {
     val parsed = Parse.parseColumns(Synth.turns(spark, seed, 50L).toDF())
-    val chunked = Parse.sessionize(parsed, chunkSize = 4)
-      .select($"conv_id", $"turn_idx", $"session_id")
+    val sess = PrefixOps.scanMany(parsed, Nil,
+      Some(when($"is_continuation", lit(0)).otherwise(lit(1)) -> "session_id"),
+      chunkSize = 4)
+    val chunked = sess.select($"conv_id", $"turn_idx", $"session_id")
     val w = Window.partitionBy($"conv_id").orderBy($"turn_idx")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val naive = parsed
@@ -109,7 +112,6 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     // merged logical records: session count == number of non-continuation
     // physical lines (trailing continuation run is flushed, never lost)
-    val sess = Parse.sessionize(parsed, chunkSize = 4)
     val merged = Parse.mergeSessions(sess)
     val nStarts = parsed.filter(!$"is_continuation").count()
     assert(merged.count() == nStarts)
@@ -197,34 +199,32 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(sorted.collect().forall(identity))
   }
 
-  test("scanMany (2 carried columns) == two sequential propagates + prefixSum") {
-    val parsed = Parse.parseColumns(Synth.turns(spark, seed, 40L).toDF())
-    val fused = PrefixOps.scanMany(parsed,
-        Seq(col("header_version") -> "hv", col("header_fields") -> "hf"),
-        when(col("is_continuation"), lit(0)).otherwise(lit(1)), "sid",
-        chunkSize = 4)
-      .select($"conv_id", $"turn_idx", $"hv", $"hf", $"sid")
-    val sequential = Parse.sessionize(
-        PrefixOps.propagateLastNonNull(
-          PrefixOps.propagateLastNonNull(parsed, col("header_version"), "hv", 4),
-          col("header_fields"), "hf", 4), chunkSize = 4)
-      .select($"conv_id", $"turn_idx", $"hv", $"hf",
-        $"session_id".as("sid"))
-    assert(fused.exceptAll(sequential).isEmpty &&
-      sequential.exceptAll(fused).isEmpty)
-  }
-
-  test("fused scanBoth == sequential propagate + sessionize") {
-    val parsed = Parse.parseColumns(Synth.turns(spark, seed, 50L).toDF())
-    val fused = PrefixOps.scanBoth(parsed,
-        col("header_version"), "header",
-        when($"is_continuation", lit(0)).otherwise(lit(1)), "session_id",
-        chunkSize = 4)
-      .select($"conv_id", $"turn_idx", $"header", $"session_id")
-    val sequential = Parse.sessionize(Parse.propagateHeaders(parsed, 4), 4)
-      .select($"conv_id", $"turn_idx", $"header", $"session_id")
-    assert(fused.exceptAll(sequential).isEmpty &&
-      sequential.exceptAll(fused).isEmpty)
+  test("scanMany (1 or 2 carried columns) == naive last(ignoreNulls) " +
+      "windows + naive running sum") {
+    val w = Window.partitionBy($"conv_id").orderBy($"turn_idx")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val ind = when(col("is_continuation"), lit(0)).otherwise(lit(1))
+    // (input size, carried header columns): the pipeline's two header
+    // families, and the parse stage's single one
+    for ((nConvs, carried) <- Seq(
+        40L -> Seq("header_version" -> "hv", "header_fields" -> "hf"),
+        50L -> Seq("header_version" -> "hv"))) {
+      val parsed = Parse.parseColumns(Synth.turns(spark, seed, nConvs).toDF())
+      val outs = Seq($"conv_id", $"turn_idx") ++ carried.map(c => col(c._2)) :+
+        $"sid"
+      val fused = PrefixOps.scanMany(parsed,
+          carried.map { case (in, out) => col(in) -> out },
+          Some(ind -> "sid"), chunkSize = 4)
+        .select(outs: _*)
+      val naive = carried
+        .foldLeft(parsed) { case (acc, (in, out)) =>
+          acc.withColumn(out, last(col(in), ignoreNulls = true).over(w))
+        }
+        .withColumn("sid", sum(ind.cast("long")).over(w))
+        .select(outs: _*)
+      assert(fused.exceptAll(naive).isEmpty && naive.exceptAll(fused).isEmpty,
+        s"carried ${carried.map(_._1).mkString(",")}")
+    }
   }
 
   test("multiline merge golden case: 4 physical lines -> 2 logical records") {
@@ -235,8 +235,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       Turn("c1", 2, "assistant", "2025-01-01T00:00:02Z INFO [assistant] second line", null, ts0),
       Turn("c1", 3, "assistant", "   trailing continuation (EOF flush)", null, ts0)
     ).toDS()
-    val merged = Parse.mergeSessions(
-      Parse.sessionize(Parse.parseColumns(fixture.toDF())))
+    val merged = Parse.mergeSessions(Parse(fixture))
       .orderBy($"turn_idx").collect()
     assert(merged.length == 2)
     assert(merged(0).getAs[String]("merged_text") ==
@@ -286,8 +285,10 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("sessionizeConfigured(^\\s+, previous) == the built-in sessionize") {
-    val parsed = Parse.parseColumns(Synth.turns(spark, seed, 30L).toDF())
-    val builtin = Parse.sessionize(parsed, chunkSize = 4)
+    // the built-in one: the parse stage's scan over `is_continuation`
+    val ts = Synth.turns(spark, seed, 30L)
+    val parsed = Parse.parseColumns(ts.toDF())
+    val builtin = Parse(ts, chunkSize = 4)
       .select($"conv_id", $"turn_idx", $"session_id")
     val configured = Parse.sessionizeConfigured(parsed,
         Parse.MultilineConfig("^\\s+"), chunkSize = 4)
