@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import java.sql.Timestamp
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -199,32 +199,62 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(sorted.collect().forall(identity))
   }
 
-  test("scanMany (1 or 2 carried columns) == naive last(ignoreNulls) " +
-      "windows + naive running sum") {
+  // Reference for the fused-scan tests: every carried column as a naive
+  // last(ignoreNulls) window, the session id as a naive running sum.
+  private def naiveScan(parsed: DataFrame, carried: Seq[(String, String)],
+      ind: Column, sumOut: String): DataFrame = {
     val w = Window.partitionBy($"conv_id").orderBy($"turn_idx")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    carried
+      .foldLeft(parsed) { case (acc, (in, out)) =>
+        acc.withColumn(out, last(col(in), ignoreNulls = true).over(w))
+      }
+      .withColumn(sumOut, sum(ind.cast("long")).over(w))
+  }
+
+  test("scanMany (2 carried columns) == two sequential propagates + prefixSum") {
+    val parsed = Parse.parseColumns(Synth.turns(spark, seed, 40L).toDF())
     val ind = when(col("is_continuation"), lit(0)).otherwise(lit(1))
-    // (input size, carried header columns): the pipeline's two header
-    // families, and the parse stage's single one
-    for ((nConvs, carried) <- Seq(
-        40L -> Seq("header_version" -> "hv", "header_fields" -> "hf"),
-        50L -> Seq("header_version" -> "hv"))) {
-      val parsed = Parse.parseColumns(Synth.turns(spark, seed, nConvs).toDF())
-      val outs = Seq($"conv_id", $"turn_idx") ++ carried.map(c => col(c._2)) :+
-        $"sid"
-      val fused = PrefixOps.scanMany(parsed,
-          carried.map { case (in, out) => col(in) -> out },
-          Some(ind -> "sid"), chunkSize = 4)
-        .select(outs: _*)
-      val naive = carried
-        .foldLeft(parsed) { case (acc, (in, out)) =>
-          acc.withColumn(out, last(col(in), ignoreNulls = true).over(w))
-        }
-        .withColumn("sid", sum(ind.cast("long")).over(w))
-        .select(outs: _*)
-      assert(fused.exceptAll(naive).isEmpty && naive.exceptAll(fused).isEmpty,
-        s"carried ${carried.map(_._1).mkString(",")}")
-    }
+    val outs = Seq($"conv_id", $"turn_idx", $"hv", $"hf", $"sid")
+    val fused = PrefixOps.scanMany(parsed,
+        Seq(col("header_version") -> "hv", col("header_fields") -> "hf"),
+        Some(ind -> "sid"), chunkSize = 4)
+      .select(outs: _*)
+    // the same scan run one column at a time: two last-only passes, then
+    // a sum-only pass
+    val sequential = PrefixOps.scanMany(
+        PrefixOps.scanMany(
+          PrefixOps.scanMany(parsed, Seq(col("header_version") -> "hv"), None, 4),
+          Seq(col("header_fields") -> "hf"), None, 4),
+        Nil, Some(ind -> "sid"), 4)
+      .select(outs: _*)
+    val naive = naiveScan(parsed,
+        Seq("header_version" -> "hv", "header_fields" -> "hf"), ind, "sid")
+      .select(outs: _*)
+    assert(fused.exceptAll(sequential).isEmpty &&
+      sequential.exceptAll(fused).isEmpty)
+    assert(fused.exceptAll(naive).isEmpty && naive.exceptAll(fused).isEmpty)
+  }
+
+  test("fused scanBoth == sequential propagate + sessionize") {
+    val parsed = Parse.parseColumns(Synth.turns(spark, seed, 50L).toDF())
+    val ind = when($"is_continuation", lit(0)).otherwise(lit(1))
+    val outs = Seq($"conv_id", $"turn_idx", $"header", $"session_id")
+    // one carried column plus the session sum in one scan, as Parse does
+    val fused = PrefixOps.scanMany(parsed,
+        Seq(col("header_version") -> "header"), Some(ind -> "session_id"),
+        chunkSize = 4)
+      .select(outs: _*)
+    val sequential = PrefixOps.scanMany(
+        PrefixOps.scanMany(parsed, Seq(col("header_version") -> "header"), None, 4),
+        Nil, Some(ind -> "session_id"), 4)
+      .select(outs: _*)
+    val naive = naiveScan(parsed, Seq("header_version" -> "header"), ind,
+        "session_id")
+      .select(outs: _*)
+    assert(fused.exceptAll(sequential).isEmpty &&
+      sequential.exceptAll(fused).isEmpty)
+    assert(fused.exceptAll(naive).isEmpty && naive.exceptAll(fused).isEmpty)
   }
 
   test("multiline merge golden case: 4 physical lines -> 2 logical records") {
