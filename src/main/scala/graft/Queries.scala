@@ -552,8 +552,9 @@ object Queries {
   /** P3 configurable form: the multiline codec's `pattern`/`negate`/
     * `what` surface (spec:486) with the `what=next` semantics — a line
     * whose props match the pattern glues to the FOLLOWING line, so the
-    * record boundary depends on the PREVIOUS row's match (a chunked lag
-    * + prefix sum; see Parse.sessionizeConfigured / PrefixOps.lagOne).
+    * record boundary depends on the PREVIOUS row's match (one chunked
+    * prefix scan: a row's record id is 1 + the non-belonging rows before
+    * it; see Parse.sessionizeConfigured / PrefixOps.scanMany).
     */
   def q23(spark: SparkSession, dir: String): DataFrame = {
     val ev = t(spark, dir, "events")

@@ -18,7 +18,10 @@ import org.apache.spark.sql.functions._
   *  - header classification + consumption (P4) with propagation onto
   *    subsequent turns via a distributed prefix scan (P5) — see
   *    [[PrefixOps]];
-  *  - continuation-line sessionization (multiline codec analog, P3);
+  *  - continuation-line sessionization (multiline codec analog, P3),
+  *    whitespace-driven by default and config-driven in
+  *    [[sessionizeConfigured]], the one reading of `pattern`/`negate`/
+  *    `what`;
   *  - dead-letter classification for non-conformant lines instead of a
   *    job failure ("broken files are skipped without crashing",
   *    s3.rb:292-301, CHANGELOG 3.3.5).
@@ -167,58 +170,40 @@ object Parse {
     if (cfg.negate) !matches else matches
   }
 
-  /** The SINGLE interpretation of `pattern`/`negate`/`what`: returns the
-    * input (plus a lag column for what=next) and the "this row CONTINUES
-    * the current record" predicate under `cfg`. Both the standalone
-    * sessionizer and the pipeline's MultilineCodec build on this — the
-    * semantics live in exactly one place.
-    *
-    *  - what=previous: a row continues iff it belongs (matches XOR
-    *    negate) — a pure column predicate;
-    *  - what=next: a row continues iff the PREVIOUS row belonged (first
-    *    row of a conversation always starts) — one chunked lag.
-    */
-  def continuationUnder(df: DataFrame, cfg: MultilineConfig,
-      chunkSize: Int = 4096, convCol: String = "conv_id",
-      idxCol: String = "turn_idx", textCol: String = "text")
-      : (DataFrame, Column) = {
-    val belongs = belongsUnder(cfg, textCol)
-    cfg.what match {
-      case "previous" => (df, belongs)
-      case "next" =>
-        (PrefixOps.lagOne(df, belongs, "_prev_belongs",
-          chunkSize, convCol, idxCol),
-          coalesce(col("_prev_belongs"), lit(false)))
-    }
-  }
-
   /** Config-driven multiline grouping (the `LogStash::Codecs::Multiline`
-    * analog): adds `session_id` = the record id under `cfg`, via the
-    * scale-safe chunked prefix primitives. The reference fixture
-    * (`__SEPARATOR__`, negate=true, what=previous -> 2 records from
-    * multiline.log) is the golden test. Record id = running count of
-    * non-continuation rows ([[continuationUnder]]).
+    * analog) and the ONE interpretation of `what`: adds `session_id` =
+    * the record id under `cfg` and `is_continuation` = "this row
+    * continues the current record", in ONE [[PrefixOps.scanMany]] call
+    * that also carries `lastCols` (the pipeline's header columns). The
+    * reference fixture (`__SEPARATOR__`, negate=true, what=previous -> 2
+    * records from multiline.log) is the golden test.
+    *
+    *  - what=previous: a row continues iff it belongs ([[belongsUnder]]);
+    *    the record id is the running count of non-belonging rows;
+    *  - what=next: a row continues iff the PREVIOUS row belonged (the
+    *    first row of a conversation always starts) — the scan's lag. Its
+    *    record id is 1 + the number of non-belonging rows BEFORE it: the
+    *    same running count minus the row's own indicator, plus 1.
     */
   def sessionizeConfigured(df: DataFrame, cfg: MultilineConfig,
       chunkSize: Int = 4096, convCol: String = "conv_id",
-      idxCol: String = "turn_idx", textCol: String = "text"): DataFrame =
-    cfg.what match {
-      case "next" =>
-        // fused form (r9): lagOne + scanMany is two fat-row (conv,
-        // chunk) repartitions for one logical scan — the fused
-        // operator ([[PrefixOps.lagGatedPrefixSum]]) computes the
-        // identical record ids in ONE (equivalence pinned in tests
-        // against the composed form). `belongs` is the shared
-        // [[belongsUnder]] interpretation.
-        PrefixOps.lagGatedPrefixSum(df, belongsUnder(cfg, textCol),
-          "session_id", chunkSize, convCol, idxCol)
-      case _ =>
-        val (pre, isCont) = continuationUnder(df, cfg, chunkSize, convCol,
-          idxCol, textCol)
-        PrefixOps.scanMany(pre, Nil,
-          Some(when(isCont, lit(0)).otherwise(lit(1)) -> "session_id"),
-          chunkSize, convCol, idxCol)
-    }
+      idxCol: String = "turn_idx", textCol: String = "text",
+      lastCols: Seq[(Column, String)] = Nil): DataFrame = {
+    val next = cfg.what == "next"
+    val start = when(coalesce(col("_belongs"), lit(false)), lit(0))
+      .otherwise(lit(1))
+    val scanned = PrefixOps.scanMany(
+      df.withColumn("_belongs", belongsUnder(cfg, textCol)), lastCols,
+      Some(start -> "session_id"), chunkSize, convCol, idxCol,
+      lag = if (next) Some(col("_belongs") -> "_prev_belongs") else None)
+    val grouped =
+      if (next) scanned
+        .withColumn("session_id", col("session_id") - start + 1)
+        .withColumn("is_continuation",
+          coalesce(col("_prev_belongs"), lit(false)))
+      else scanned.withColumn("is_continuation", col("_belongs"))
+    grouped.drop("_belongs", "_prev_belongs")
+  }
 
   /** P2: JSON codec mode (spec:397-441; fixtures json.log,
     * json_with_message.log). Whole-event JSON decode with top-level

@@ -7,14 +7,21 @@ import org.apache.spark.sql.functions._
   *
   *   parseColumns -> Route -> Enrich -> fused prefix scan
   *
-  * Ordering rationale (plan quality, not semantics — all four stages
-  * commute): routing and enrichment are NARROW column expressions /
-  * broadcast joins, so running them before the prefix scan's
-  * (conv_id, chunk) repartition means the shuffle is the LAST wide step
-  * and Catalyst's column pruning can drop any column a given consumer
-  * doesn't use from the shuffle itself. An aggregate-only consumer
-  * (metrics, Bench) shuffles ~half the bytes because `text`/`body`
-  * are pruned; sink writers still see every column.
+  * Ordering rationale (plan quality, not semantics — for the grok and
+  * json codecs all four stages commute): routing and enrichment are
+  * NARROW column expressions / broadcast joins, so running them before
+  * the prefix scan's (conv_id, chunk) repartition means the shuffle is
+  * the LAST wide step and Catalyst's column pruning can drop any column
+  * a given consumer doesn't use from the shuffle itself. An
+  * aggregate-only consumer (metrics, Bench) shuffles ~half the bytes
+  * because `text`/`body` are pruned; sink writers still see every
+  * column.
+  *
+  * The multiline codec is the exception: parseColumns -> Enrich ->
+  * [[Parse.sessionizeConfigured]] -> Route. Under `what=next` a row's
+  * `is_continuation` (which routing reads) is the previous row's match,
+  * an output of the scan, so routing cannot precede it; `Route` is a
+  * narrow column expression, so running it last adds no shuffle.
   */
 object Pipeline {
 
@@ -41,36 +48,36 @@ object Pipeline {
       includeObjectProperties: Boolean = false,
       codec: Codec = GrokCodec): DataFrame = {
     import org.apache.spark.sql.types.StringType
-    // 1. codec decode: produce the routing-contract columns
-    //    (parse_ok, is_header, is_continuation, header_version/fields)
-    val parsed = codec match {
-      case GrokCodec => Parse.parseColumns(ds.toDF())
-      case MultilineCodec(mc) =>
-        // "continuation" under the CONFIG, overriding the whitespace
-        // default — one shared interpretation (Parse.continuationUnder)
-        val (pre, isCont) = Parse.continuationUnder(
-          Parse.parseColumns(ds.toDF()), mc, chunkSize)
-        pre.withColumn("is_continuation", isCont).drop("_prev_belongs")
+    // BOTH header families propagate (the reference carries
+    // cloudfront_version AND cloudfront_fields per file, s3.rb:280-290),
+    // still one fused shuffle (scanMany).
+    val headers = Seq(col("header_version") -> "header",
+      col("header_fields") -> "header_fields_carried")
+    // the codec decode produces the routing-contract columns (parse_ok,
+    // is_header, is_continuation, header_version/fields)
+    def routeThenScan(parsed: DataFrame): DataFrame =
+      PrefixOps.scanMany(Enrich(Route(parsed, excludePattern)), headers,
+        Some(when(col("is_continuation"), lit(0)).otherwise(lit(1)) ->
+          "session_id"),
+        chunkSize)
+    val scanned = codec match {
+      case GrokCodec => routeThenScan(Parse.parseColumns(ds.toDF()))
       case JsonCodec(fields) =>
-        Parse.parseJsonColumns(ds.toDF(), fields)
+        routeThenScan(Parse.parseJsonColumns(ds.toDF(), fields)
           .withColumn("parse_ok", col("json_ok"))
           .withColumn("is_header", lit(false))
           .withColumn("is_continuation", lit(false))
           .withColumn("header_version", lit(null).cast(StringType))
           .withColumn("header_fields", lit(null).cast(StringType))
-          .withColumn("grok_role", lit(null).cast(StringType))
+          .withColumn("grok_role", lit(null).cast(StringType)))
+      case MultilineCodec(mc) =>
+        // "continuation" under the CONFIG, overriding the whitespace
+        // default: under what=next it is the previous row's match, a
+        // scan output, so this codec routes AFTER its one scan
+        Route(Parse.sessionizeConfigured(
+          Enrich(Parse.parseColumns(ds.toDF())), mc, chunkSize,
+          lastCols = headers), excludePattern)
     }
-    val routed = Route(parsed, excludePattern)
-    val enriched = Enrich(routed)
-    // BOTH header families propagate (the reference carries
-    // cloudfront_version AND cloudfront_fields per file, s3.rb:280-290),
-    // still one fused shuffle (scanMany).
-    val scanned = PrefixOps.scanMany(enriched,
-      Seq(col("header_version") -> "header",
-        col("header_fields") -> "header_fields_carried"),
-      Some(when(col("is_continuation"), lit(0)).otherwise(lit(1)) ->
-        "session_id"),
-      chunkSize)
     withMeta(scanned, includeObjectProperties)
   }
 

@@ -317,8 +317,7 @@ object Streaming {
         // lag; grok/json/what=previous use pure per-row predicates.
         val seamBelongs: Option[org.apache.spark.sql.Column] = codec match {
           case Pipeline.MultilineCodec(mc) if mc.what == "next" =>
-            val m = col("text").rlike(mc.pattern)
-            Some(if (mc.negate) !m else m)
+            Some(Parse.belongsUnder(mc, "text"))
           case _ => None
         }
         // apply carry-in: headers stick across batches; session ids

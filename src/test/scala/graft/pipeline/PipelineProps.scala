@@ -81,19 +81,31 @@ object PipelineProps extends Properties("pipeline") {
       "(the r9 fused what=next scan) for any input and chunk size") =
     forAll(genRows, genChunk) { (rows, chunk) =>
       rows.isEmpty || {
+        // text "2"/"3" belongs (v > 1); v == 0 -> a null lag value
         val df = rows.toDF("conv_id", "turn_idx", "v")
-        val belongs = $"v" > 1
-        val fused = PrefixOps.lagGatedPrefixSum(df, belongs, "sid",
-            chunkSize = chunk)
-          .select($"conv_id", $"turn_idx", $"sid")
-        val composed = PrefixOps.scanMany(
-            PrefixOps.lagOne(df, belongs, "_pb", chunkSize = chunk), Nil,
-            Some(when(coalesce($"_pb", lit(false)), lit(0)).otherwise(lit(1))
-              -> "sid"),
-            chunkSize = chunk)
-          .select($"conv_id", $"turn_idx", $"sid")
-        fused.exceptAll(composed).isEmpty &&
-          composed.exceptAll(fused).isEmpty
+          .withColumn("text", $"v".cast("string"))
+          .withColumn("mark", when($"v" =!= 0, $"v"))
+        val w = Window.partitionBy($"conv_id").orderBy($"turn_idx")
+        val wRun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        // what=next record ids == naive lag -> running sum of record starts
+        val sid = Parse.sessionizeConfigured(df,
+            Parse.MultilineConfig("^[23]$", what = "next"), chunkSize = chunk)
+          .select($"conv_id", $"turn_idx", $"session_id")
+        val naiveSid = df
+          .withColumn("_start",
+            when(coalesce(lag($"v" > 1, 1).over(w), lit(false)), 0L)
+              .otherwise(1L))
+          .withColumn("session_id", sum($"_start").over(wRun))
+          .select($"conv_id", $"turn_idx", $"session_id")
+        // the scan's lag == naive lag: null on a conversation's first row,
+        // and a null previous value stays null
+        val prev = PrefixOps.scanMany(df, Nil, None, chunkSize = chunk,
+            lag = Some($"mark" -> "prev"))
+          .select($"conv_id", $"turn_idx", $"prev")
+        val naivePrev = df.withColumn("prev", lag($"mark", 1).over(w))
+          .select($"conv_id", $"turn_idx", $"prev")
+        sid.exceptAll(naiveSid).isEmpty && naiveSid.exceptAll(sid).isEmpty &&
+          prev.exceptAll(naivePrev).isEmpty && naivePrev.exceptAll(prev).isEmpty
       }
     }
 
@@ -122,9 +134,10 @@ object PipelineProps extends Properties("pipeline") {
       genChunk) { (texts, negate, what, chunk) =>
       texts.isEmpty || {
         val ts0 = new Timestamp(Synth.baseEpochMs)
-        val df = texts.zipWithIndex.map { case (t, i) =>
+        val ds = texts.zipWithIndex.map { case (t, i) =>
           Turn(s"c${i % 2}", i, "user", t, null, ts0)
-        }.toDS().toDF()
+        }.toDS()
+        val df = ds.toDF()
         val cfg = Parse.MultilineConfig("^SEP", negate, what)
         val got = Parse.sessionizeConfigured(df, cfg, chunkSize = chunk)
           .select($"conv_id", $"turn_idx", $"session_id")
@@ -132,16 +145,22 @@ object PipelineProps extends Properties("pipeline") {
         val wRun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
         val matches = $"text".rlike("^SEP")
         val belongs = if (negate) !matches else matches
-        val start = what match {
-          case "previous" => when(belongs, 0L).otherwise(1L)
-          case "next" =>
-            when(coalesce(lag(belongs, 1).over(w), lit(false)), 0L)
-              .otherwise(1L)
+        val continues = what match {
+          case "previous" => belongs
+          case "next" => coalesce(lag(belongs, 1).over(w), lit(false))
         }
-        val naive = df.withColumn("_start", start)
+        val naive = df.withColumn("is_continuation", continues)
+          .withColumn("_start", when($"is_continuation", 0L).otherwise(1L))
           .withColumn("session_id", sum($"_start").over(wRun))
-          .select($"conv_id", $"turn_idx", $"session_id")
-        got.exceptAll(naive).isEmpty && naive.exceptAll(got).isEmpty
+          .select($"conv_id", $"turn_idx", $"session_id", $"is_continuation")
+        val naiveIds = naive.drop("is_continuation")
+        // the pipeline's multiline codec: same record ids, and its routing
+        // flag is the same continuation rule
+        val piped = Pipeline(ds, chunkSize = chunk,
+            codec = Pipeline.MultilineCodec(cfg))
+          .select($"conv_id", $"turn_idx", $"session_id", $"is_continuation")
+        got.exceptAll(naiveIds).isEmpty && naiveIds.exceptAll(got).isEmpty &&
+          piped.exceptAll(naive).isEmpty && naive.exceptAll(piped).isEmpty
       }
     }
 

@@ -412,6 +412,33 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dflt = Pipeline(fixture).orderBy($"turn_idx")
       .select($"sink").collect().map(_.getString(0)).toSeq
     assert(dflt == Seq("tool", "deadletter", "deadletter", "tool"))
+
+    // what=next: a trailing-backslash line glues the FOLLOWING line into
+    // its record, so the glued line continues (never dead-letters) while
+    // the garbage after a non-matching line still does. Chunk size 1
+    // puts every lag across a chunk boundary.
+    val next = Seq(
+      Turn("m2", 0, "user", "2025-01-01T00:00:00Z INFO [user] run cmd \\", null, ts0),
+      Turn("m2", 1, "user", "--flag value", null, ts0),
+      Turn("m2", 2, "user", "2025-01-01T00:00:02Z INFO [user] done", null, ts0),
+      Turn("m2", 3, "user", "@@garbage", null, ts0)
+    ).toDS()
+    for (chunk <- Seq(4096, 1)) {
+      val got = Pipeline(next, chunkSize = chunk,
+          codec = Pipeline.MultilineCodec(Parse.MultilineConfig("\\\\$",
+            what = "next")))
+        .orderBy($"turn_idx")
+        .select($"sink", $"session_id", $"is_continuation").collect()
+      assert(got.map(_.getString(0)).toSeq ==
+        Seq("user", "user", "user", "deadletter"), s"chunk=$chunk")
+      assert(got.map(_.getLong(1)).toSeq == Seq(1L, 1L, 2L, 3L),
+        s"chunk=$chunk")
+      assert(got.map(_.getBoolean(2)).toSeq == Seq(false, true, false, false),
+        s"chunk=$chunk")
+    }
+    assert(Pipeline(next).orderBy($"turn_idx").select($"sink").collect()
+      .map(_.getString(0)).toSeq == Seq("user", "deadletter", "user",
+        "deadletter"), "the glued line dead-letters under the default codec")
   }
 
   test("header golden case: headers consumed, version stamped on subsequent turns") {

@@ -2,6 +2,8 @@ package graft.pipeline
 
 import java.sql.Timestamp
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -369,5 +371,27 @@ class PlanSpec extends AnyFunSuite {
     // toString renders WholeStageCodegen stages as a `*(n)` prefix
     assert(plan.contains("*(1)"),
       s"parse/route column exprs must be codegen'd:\n$plan")
+  }
+
+  test("multiline what=next pipeline pays the grok pipeline's (conv_id, " +
+      "_chunk) windows: one prefix scan, not two") {
+    // the record boundary under what=next reads the PREVIOUS row's
+    // match; that lag must ride the same (conv, chunk) scan as the
+    // headers and record ids instead of a second fat-row decomposition
+    val helper = new AdaptiveSparkPlanHelper {}
+    def chunkWindows(codec: Pipeline.Codec): Int = {
+      val df = Pipeline(Synth.turns(spark, 42L, 5L), codec = codec)
+      df.collect() // AQE final plan; every column, so no window is pruned
+      helper.collect(df.queryExecution.executedPlan) {
+        case w: WindowExec if w.partitionSpec.flatMap(_.references)
+            .map(_.name) == Seq("conv_id", "_chunk") => w
+      }.size
+    }
+    val grok = chunkWindows(Pipeline.GrokCodec)
+    val next = chunkWindows(Pipeline.MultilineCodec(
+      Parse.MultilineConfig("\\\\$", what = "next")))
+    assert(grok > 0)
+    assert(next == grok,
+      s"what=next runs $next (conv_id, _chunk) windows, grok runs $grok")
   }
 }
