@@ -7,11 +7,11 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Real-vocab BPE as native Catalyst expressions — the scale path
-  * [[graft.ops.Bpe]] promises: the pure-Catalyst rank fold is one
-  * `aggregate` per merge rank, fine for a demo table but structurally
-  * impossible at a learned vocabulary's size (tens of thousands of
-  * ranks). Here the ranks live in ONE per-JVM hash map and
+/** BPE as native Catalyst expressions — the one tokenizer behind
+  * [[graft.ops.Bpe]], for the demo table and at a learned vocabulary's
+  * size (tens of thousands of ranks, where a column program with one
+  * step per merge rank is structurally impossible). The ranks live in
+  * ONE per-JVM hash map and
   * tokenization is the TEXTBOOK loop (lowest-rank adjacent pair
   * anywhere in the word, leftmost occurrence, repeat to fixpoint) —
   * O(len·merges-applied) hash lookups per word, evaluated inside
@@ -33,8 +33,7 @@ object BpeVocab {
     * (ranks n²+1..n²+n³, same order). Layered by construction — every
     * merge's operands are single characters or outputs of strictly
     * earlier merges — which is the invariant real learned BPE tables
-    * satisfy and the once-through == textbook argument needs
-    * (graft/ops/Bpe.scala). For charset [a-z0-9] this is 47,952
+    * satisfy. For charset [a-z0-9] this is 47,952
     * merges — GPT-2's table is ~50k, so the plan/eval cost is honest.
     * (No external data enters the build: a learned vocab FILE would
     * be, so scale testing uses this generated table; deployments with

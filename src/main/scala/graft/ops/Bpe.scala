@@ -6,55 +6,41 @@ import org.apache.spark.sql.functions._
 /** Deterministic merges-table BPE tokenization — the unit a training
   * pipeline actually budgets by (the whitespace count of
   * [[TextAnalysis.tokenCount]] under-states token inflation; the
-  * regex-boundary "BPE-ish" variant over-states it). The merges table
-  * is a broadcast-foldable LITERAL (a real deployment loads a learned
-  * vocab file and folds it the same way), and tokenization is a pure
-  * Catalyst column program — no UDFs — so it is replayable bit-for-bit
-  * by the d22 SQL oracle.
+  * regex-boundary "BPE-ish" variant over-states it).
   *
   * Semantics are textbook BPE: repeatedly merge the LOWEST-RANK pair
   * present in the word (leftmost occurrence first) until no table pair
-  * applies. The implementation applies ranks once-through, each rank
-  * as a single left fold; that equals textbook because:
+  * applies — so a self-pair (o, o) on "oooo" yields [oo, oo], never the
+  * overlapping [o, oo, o]. The one tokenizer is the native codegen'd
+  * expression pair [[graft.functions.BpeTokenCount]] /
+  * [[graft.functions.BpeTokens]]: its ranks live in a hash map, so the
+  * same expression serves this object's small DEMO table ([[merges]],
+  * vocab name `demo`) and the real-vocab table every query uses
+  * ([[realVocab]], a 47,952-merge generated layered table — GPT-2
+  * scale). It is cheap enough to evaluate per word OCCURRENCE in a
+  * narrow map when the consumer needs the stream in document order
+  * (d14's BPE-window chunking).
   *
-  *  1. a learned merges table is LAYERED — a pair's elements are
-  *     single characters or outputs of strictly-earlier merges (a pair
-  *     over a token can only be learned after the token exists), so
-  *     any pair occurrence CREATED by applying rank r involves r's
-  *     output and therefore has rank > r: once rank r's pass is done,
-  *     no later work can resurrect it ([[merges]] is layered by
-  *     construction; OpsSpec checks the invariant);
-  *  2. within one rank, merging (a, b) -> ab can never create a new
-  *     (a, b) occurrence (ab is strictly longer than a and than b), so
-  *     a single greedy left-to-right fold visits exactly the
-  *     occurrences textbook leftmost-iteration merges — including the
-  *     self-pair overlap case: (o, o) on "oooo" folds to [oo, oo],
-  *     never the overlapping [o, oo, o].
-  *
-  * OpsSpec proves the fold == a driver-side textbook reference
-  * implementation ([[tokenizeReference]]) on randomized words.
+  * This object holds the tables, the word normalization shared with
+  * the oracle, the DuckDB textbook replay the d22 oracle runs, and the
+  * driver-side textbook references ([[tokenizeReference]]). OpsSpec
+  * proves native == textbook on randomized words for both tables, and
+  * checks that the demo table is LAYERED: each pair's elements are
+  * single characters or outputs of strictly-earlier merges, the shape
+  * a learned table has (a pair over a token can only be learned after
+  * the token exists).
   *
   * Scale shape: tokenize DISTINCT words once and join back (what d22
   * does) — corpus word frequency follows Zipf, so the distinct-word
-  * table is orders of magnitude smaller than the token stream. The
-  * fold expression is deep (one `aggregate` per merge rank), so it is
-  * the DEMO-vocab path only; at real vocab size the ranks live in a
-  * hash map inside the native codegen'd expressions
-  * [[graft.functions.BpeTokenCount]] / [[graft.functions.BpeTokens]]
-  * ([[realVocab]] is a 47,952-merge generated layered table — GPT-2
-  * scale), which are also cheap enough to evaluate per word
-  * OCCURRENCE in a narrow map when the consumer needs the stream in
-  * document order (d14's BPE-window chunking). OpsSpec proves
-  * fold == native == textbook on the demo vocab and
-  * native == textbook on the real one.
+  * table is orders of magnitude smaller than the token stream.
   */
 object Bpe {
 
-  /** Layered merge ranks (rank = position + 1). Each element is a
-    * single character or the output of a strictly-earlier merge —
-    * the invariant the once-through fold relies on. Includes a
-    * self-pair (o, o) to keep the overlap semantics load-bearing and
-    * digit merges so alphanumeric words exercise the table.
+  /** The demo table: layered merge ranks (rank = position + 1). Each
+    * element is a single character or the output of a strictly-earlier
+    * merge. Includes a self-pair (o, o) to keep the overlap semantics
+    * load-bearing and digit merges so alphanumeric words exercise the
+    * table.
     */
   val merges: Seq[(String, String)] = Seq(
     "t" -> "h", // 1: th
@@ -156,26 +142,6 @@ object Bpe {
                 row_number() OVER (PARTITION BY w ORDER BY step DESC) AS rn
          FROM r) WHERE rn = 1)"""
 
-  /** One rank's pass: greedy left fold over the token array — merge
-    * the running tail with the current element when they form (a, b).
-    */
-  private def applyMerge(toks: Column, a: String, b: String): Column =
-    aggregate(toks, array().cast("array<string>"),
-      (acc, t) =>
-        when(size(acc) > 0 &&
-            element_at(acc, -1) === lit(a) && t === lit(b),
-          concat(slice(acc, lit(1), size(acc) - 1), array(lit(a + b))))
-          .otherwise(concat(acc, array(t))))
-
-  /** Tokenize one (already-normalized, space-free) word: split to
-    * characters, then fold every rank once-through.
-    */
-  def tokenizeWord(word: Column): Column =
-    merges.foldLeft(
-      filter(split(word, ""), c => length(c) > 0): Column) {
-      case (toks, (a, b)) => applyMerge(toks, a, b)
-    }
-
   /** Normalization shared with the oracle: lowercase, non-alphanumeric
     * to space, whitespace-split, empties dropped.
     */
@@ -183,14 +149,6 @@ object Bpe {
     filter(
       split(regexp_replace(lower(trim(text)), "[^a-z0-9 ]", " "), "\\s+"),
       w => length(w) > 0)
-
-  /** Per-document BPE token count over a distinct-word map: the d22
-    * query body inlines the explode/distinct/join shape; this direct
-    * form (fold per word occurrence) is for small-side columns.
-    */
-  def tokenCount(text: Column): Column =
-    aggregate(normalizeWords(text), lit(0L),
-      (acc, w) => acc + size(tokenizeWord(w)).cast("long"))
 
   /** Textbook reference over an ARBITRARY ranks map (for real-vocab
     * scale, where the demo overload's merges-list scan per step would
@@ -218,7 +176,7 @@ object Bpe {
   /** Driver-side TEXTBOOK reference (lowest-rank pair present, its
     * leftmost occurrence, one merge per step, until fixpoint) over the
     * demo merges list — the equivalence witness for OpsSpec's property
-    * test. Never used in a query plan.
+    * tests. Never used in a query plan.
     */
   def tokenizeReference(word: String): Seq[String] = {
     var toks = word.map(_.toString).toVector

@@ -85,9 +85,6 @@ object Dedup {
     if (df.rdd.getNumPartitions < p) df.repartition(p) else df
   }
 
-  def shingles(text: Column, n: Int): Column =
-    shinglesOfTokens(tokensOf(text), n)
-
   /** Benchmark-contamination screen: for every corpus document, the
     * number of its n-gram shingles that also appear anywhere in a
     * benchmark/eval set — the standard decontamination pass before
@@ -95,7 +92,8 @@ object Dedup {
     * so it is DISTINCT'd and broadcast: the corpus side is one explode +
     * a broadcast left-semi join + one hash aggregate — the 100 TB scan
     * never shuffles on its own size. n_overlap counts DISTINCT
-    * overlapping shingles ([[shingles]] de-duplicates per document).
+    * overlapping shingles ([[shinglesOfTokens]] de-duplicates per
+    * document).
     *
     * Both sides join on a 64-bit md5 PREFIX of the shingle, not the
     * shingle string: the broadcast shrinks from avg-shingle-length
@@ -138,8 +136,8 @@ object Dedup {
   /** Exploded (id, shingle) view — the input to MinHash. NOT
     * deduplicated or sorted: `min` is idempotent, so set semantics buy
     * nothing here and the O(T^2) `array_distinct` + O(T log T)
-    * `array_sort` per doc are pure overhead (use [[shingles]] where
-    * Jaccard's set semantics actually matter).
+    * `array_sort` per doc are pure overhead (use [[shinglesOfTokens]]
+    * where Jaccard's set semantics actually matter).
     */
   def shingleRows(df: DataFrame, idCol: String, textCol: String,
       n: Int): DataFrame =
@@ -791,8 +789,8 @@ object Dedup {
       .drop("_fp")
 
   /** The fingerprint column [[reRouteSeen]] can retain (keepFp=true) so
-    * the store write side (Sinks.writeFingerprints / the streaming
-    * snapshot-out) reuses the ALREADY-computed hash instead of paying a
+    * the store write side (Sinks.writeFingerprints, shared by the
+    * cycle and the stream) reuses the ALREADY-computed hash instead of paying a
     * second md5+normalization pass over every row's text. Callers that
     * keep it must drop it before any user-facing write.
     */

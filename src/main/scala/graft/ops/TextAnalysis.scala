@@ -24,10 +24,6 @@ object TextAnalysis {
     */
   val enStopwords: Seq[String] = Seq("the", "a", "of", "and")
 
-  /** Count of occurrences of `word` as a whitespace-bounded token. */
-  def wordOccurrences(text: Column, word: String): Column =
-    size(filter(split(text, "\\s+"), t => t === lit(word)))
-
   /** Quality-score feature columns (length / punctuation / stopword
     * ratios). Returns the input plus:
     * n_tokens, n_punct, stopword_hits, mean_token_len (x1000, integer —
@@ -84,17 +80,13 @@ object TextAnalysis {
     "es" -> Seq("el", "y", "los"),
     "zh" -> Seq("de5", "shi4", "le5"))
 
-  def langScore(text: Column, lang: String): Column =
-    langMarkers(lang).map(w => wordOccurrences(text, w))
-      .reduce(_ + _)
-
   def langIdColumns(df: DataFrame, textCol: String = "text"): DataFrame = {
     // Tokenize ONCE into a materialized column, then score each
-    // language by filtering the array: the `langScore` column form
-    // re-runs `split(text)` once per marker (15 regex splits of the
-    // full text per row with 5 langs x 3 markers — measured ~4x on
-    // d04). Same counts: split WITHOUT trim, exactly as
-    // [[wordOccurrences]]; a leading empty token never equals a marker.
+    // language by filtering the array: a per-marker column that
+    // re-runs `split(text)` costs 15 regex splits of the full text per
+    // row with 5 langs x 3 markers — measured ~4x on d04. A score
+    // counts a marker's occurrences as a whitespace-bounded token:
+    // split WITHOUT trim; a leading empty token never equals a marker.
     // scale-adaptive parallelization of the scoring chain (no-op when
     // the input already has >= cores partitions — Dedup.parallelized)
     val withToks = Dedup.parallelized(df)

@@ -87,7 +87,7 @@ object Discover {
   /** As [[listInputFiles]], with REOPEN detection for sealed days: a day
     * in `sealedBeforeMs` is pruned from the walk only while its
     * partition directory's mtime PREDATES the recorded observation
-    * stamp (Lineage.observationsAt). A directory modified at-or-after
+    * stamp (Lineage.stateAt). A directory modified at-or-after
     * the stamp means a file landed after the last cycle that audited
     * the day — such a day is still not listed (every row in it is
     * behind the end-of-day watermark, so the delta scan would read and
@@ -300,29 +300,23 @@ object Discover {
     */
   def delta(spark: SparkSession, cfg: PipelineConfig, asOf: Timestamp,
       wms: Map[String, Timestamp]): DataFrame =
-    deltaAndDeferred(spark, cfg, asOf, wms)._1
-
-  /** Eligible delta AND its skipped-cold complement (rows excluded ONLY
-    * by the S6 predicate; a malformed restore header counts as
-    * ineligible on a cold row), both derived from ONE base plan over ONE
-    * pinned file listing — the two sides always describe the same
-    * snapshot, and the O(files) driver walk is paid once per cycle.
-    * The complement is empty by construction when S6 is not configured.
-    * `runCycle` persists it per batch so a row the reference would lose
-    * forever (skip while sincedb advances, s3.rb:152-156) stays
-    * re-drivable after its restore completes.
-    */
-  def deltaAndDeferred(spark: SparkSession, cfg: PipelineConfig,
-      asOf: Timestamp, wms: Map[String, Timestamp]): (DataFrame, DataFrame) = {
-    val d = discover(spark, cfg, asOf, wms, Map.empty)
-    (d.delta, d.deferredCold)
-  }
+    discover(spark, cfg, asOf, wms, Map.empty).delta
 
   /** One cycle's discovery view: the eligible delta, the skipped-cold
     * complement, and any sealed days REOPENED by a post-seal landing
     * (dir mtime at-or-after the observation stamp — see
     * [[listInputFilesDetecting]]); the caller owes reopened days a seal
     * audit + refresh commit, or they reopen forever.
+    *
+    * The complement holds the rows excluded ONLY by the S6 predicate (a
+    * malformed restore header counts as ineligible on a cold row). Both
+    * sides derive from ONE base plan over ONE pinned file listing, so
+    * they always describe the same snapshot and the O(files) driver
+    * walk is paid once per cycle. The complement is empty by
+    * construction when S6 is not configured. `runCycle` persists it per
+    * batch so a row the reference would lose forever (skip while
+    * sincedb advances, s3.rb:152-156) stays re-drivable after its
+    * restore completes.
     */
   case class Discovery(delta: DataFrame, deferredCold: DataFrame,
       reopenedSealedDays: Set[String])

@@ -79,15 +79,21 @@ object Lineage {
   def watermarksAt(spark: SparkSession, dir: String): Map[String, Timestamp] =
     stateAt(spark, dir)._1 // one definition incl. the corrupt-row check
 
-  /** Per-day observation stamps: the max `committed_at` over each day's
-    * commit rows, in epoch millis. `committed_at` is stamped at CYCLE
-    * START (before any listing), so it lower-bounds every file the
-    * cycle's listings and seal audits covered — the sealed-day reopen
-    * check (Discover.listInputFilesDetecting) compares the day
-    * directory's mtime against this: a file landing at-or-after the
-    * stamp may postdate the last audit and reopens the day. Redrive
-    * commits carry `epoch` here precisely so they never advance a
-    * day's stamp (they observe manifest keys, not the day directory).
+  /** Watermarks, observation stamps AND the committed-batch set from
+    * ONE lineage read — the per-cycle lookup (the reference's 3.8.2
+    * "read sincedb once per cycle" discipline, CHANGELOG.md:8, applies
+    * to all three; the seal audit's census/manifest/published checks
+    * all consume the same cycle-start set).
+    *
+    * Observation stamps: the max `committed_at` over each day's commit
+    * rows, in epoch millis. `committed_at` is stamped at CYCLE START
+    * (before any listing), so it lower-bounds every file the cycle's
+    * listings and seal audits covered — the sealed-day reopen check
+    * (Discover.listInputFilesDetecting) compares the day directory's
+    * mtime against this: a file landing at-or-after the stamp may
+    * postdate the last audit and reopens the day. Redrive commits
+    * carry `epoch` here precisely so they never advance a day's stamp
+    * (they observe manifest keys, not the day directory).
     *
     * MIGRATION NOTE: lineage rows committed by pre-seal-audit builds
     * stamped `committed_at` at cycle END (after the listing), so a file
@@ -96,15 +102,6 @@ object Lineage {
     * checkpoint where that sub-cycle window matters, run one cycle with
     * `PipelineConfig.reauditDays` covering the sealed days — the forced
     * audit manifests anything the old stamps would hide.
-    */
-  def observationsAt(spark: SparkSession, dir: String): Map[String, Long] =
-    stateAt(spark, dir)._2
-
-  /** Watermarks, observation stamps AND the committed-batch set from
-    * ONE lineage read — the per-cycle lookup (the reference's 3.8.2
-    * "read sincedb once per cycle" discipline, CHANGELOG.md:8, applies
-    * to all three; the seal audit's census/manifest/published checks
-    * all consume the same cycle-start set).
     */
   def stateAt(spark: SparkSession, dir: String):
       (Map[String, Timestamp], Map[String, Long], Set[String]) = {

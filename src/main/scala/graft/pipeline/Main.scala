@@ -42,7 +42,7 @@ object Main {
     // file this cycle's listings/audits cover has mtime >= nothing the
     // stamp postdates, so the sealed-day reopen check (dir mtime >=
     // stamp) can never skip a landing the audits missed. Stamped into
-    // every commit row as `committed_at` (Lineage.observationsAt).
+    // every commit row as `committed_at` (Lineage.stateAt).
     val observedAt = new Timestamp(System.currentTimeMillis())
 
     // 2. discovery: the unprocessed, cutoff-eligible delta plus the
@@ -88,8 +88,8 @@ object Main {
     // every other exactly-once check, so a crash re-run reproduces
     // identical routing)
     import spark.implicits._
-    val routed = dedupStage(spark, cfg, committedAtStart,
-      mediaStage(cfg, Pipeline(delta.as[Turn](
+    val routed = dedupStage(spark, cfg, fingerprintsDir(cfg),
+      committedAtStart, mediaStage(cfg, Pipeline(delta.as[Turn](
         org.apache.spark.sql.Encoders.product[Turn]),
         cfg.excludePattern, cfg.chunkSize,
         codec = Pipeline.codecFor(cfg)))).cache()
@@ -311,20 +311,6 @@ object Main {
       keys, "left_anti")
   }
 
-  /** The opt-in cross-cycle dedup stage (cfg.dedupAcrossCycles): rows
-    * whose fingerprint an EARLIER committed batch delivered to a
-    * content sink re-route to the `duplicate` sink
-    * (Dedup.reRouteSeen — visible and counted, never dropped). The
-    * seen-set is gated on `committed` — the caller's ONE cycle-start
-    * lineage read — so an orphan fingerprint dir from a crashed cycle
-    * is invisible and a crash re-run (same committed set, same batch
-    * id) reproduces byte-identical routing: exactly-once holds across
-    * every crash window for the SAME reason it does for publishes.
-    * Within-batch duplicates are intentionally NOT screened (neither
-    * fp is committed yet): the invariant is "no content row whose
-    * fingerprint a PRIOR batch published", and within-corpus dedup is
-    * the explicit d01-operator surface.
-    */
   /** Opt-in multimodal stage (cfg.mediaCol): decode every blob's
     * container header ONCE with the native codegen'd
     * [[graft.functions.MediaHeader]] — in the same narrow map as
@@ -337,31 +323,21 @@ object Main {
     * diagnosis. Rows with no blob, and non-content sinks (routing
     * metadata), pass through untouched. Runs BEFORE the dedup stage so
     * an undecodable-media row never reaches the fingerprint store.
+    * One body for the cycle, the redrive and the stream
+    * ([[graft.streaming.Streaming.runForeachBatch]]).
     */
-  private[pipeline] def mediaStage(cfg: PipelineConfig,
+  private[graft] def mediaStage(cfg: PipelineConfig,
       routed: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    mediaStage(if (cfg.mediaConfigured) cfg.mediaCol else null, routed,
-      cfg.mediaFeatures, cfg.mediaThumbSide)
-
-  /** String-keyed form shared with the streaming path
-    * ([[graft.streaming.Streaming.runForeachBatch]]), which has no
-    * PipelineConfig — same stage, same semantics, one body.
-    */
-  private[graft] def mediaStage(mediaCol: String,
-      routed: org.apache.spark.sql.DataFrame,
-      features: Boolean = false,
-      thumbSide: Int = 0): org.apache.spark.sql.DataFrame =
     // the column-presence guard covers frames that predate the media
     // config (a redrive of manifests written before --media-col was
     // turned on): nothing to decode there, pass through
-    if (mediaCol == null || mediaCol.isEmpty ||
-        !routed.columns.contains(mediaCol))
+    if (!cfg.mediaConfigured || !routed.columns.contains(cfg.mediaCol))
       routed
     else {
       val hdrCol = graft.functions.MediaHeader.mediaHeader(
-        col(mediaCol))
+        col(cfg.mediaCol))
       val undecodable =
-        col(mediaCol).isNotNull && col("_media_hdr").isNull
+        col(cfg.mediaCol).isNotNull && col("_media_hdr").isNull
       routed.withColumn("_media_hdr", hdrCol)
         .withColumn("sink",
           when(undecodable && col("sink").isin(Route.contentSinks: _*),
@@ -404,37 +380,57 @@ object Main {
         // SECOND select (the chunkPlan discipline: CollapseProject will
         // not re-inline a non-cheap expression referenced twice).
         .transform { df =>
-          if (!features) df
+          if (!cfg.mediaFeatures) df
           else df
             .withColumn("_media_featstruct",
               graft.functions.MediaFeatureExprs.mediaFeatures(
-                col(mediaCol)))
+                col(cfg.mediaCol)))
             .select(df.columns.toIndexedSeq.map(col) :+
               col("_media_featstruct.checksum").as("media_checksum") :+
               col("_media_featstruct.feat").as("media_feat"): _*)
         }
         // opt-in thumbnail bytes (decodable PNGs only), same narrow map
         .transform { df =>
-          if (thumbSide <= 0) df
+          if (cfg.mediaThumbSide <= 0) df
           else df.withColumn("media_thumb",
             graft.functions.MediaFeatureExprs.mediaThumb(
-              col(mediaCol), thumbSide))
+              col(cfg.mediaCol), cfg.mediaThumbSide))
         }
     }
 
-  private def dedupStage(spark: SparkSession, cfg: PipelineConfig,
-      committed: Set[String],
+  /** The opt-in cross-cycle dedup stage (cfg.dedupAcrossCycles): rows
+    * whose fingerprint an EARLIER committed batch delivered to a
+    * content sink re-route to the `duplicate` sink
+    * (Dedup.reRouteSeen — visible and counted, never dropped). The
+    * seen-set is the fingerprint namespace `fpDir` gated on
+    * `committed` — for the cycle, the caller's ONE cycle-start lineage
+    * read — so an orphan fingerprint dir from a crashed batch is
+    * invisible and a crash re-run (same committed set, same batch id)
+    * reproduces byte-identical routing: exactly-once holds across
+    * every crash window for the SAME reason it does for publishes.
+    * Within-batch duplicates are intentionally NOT screened (neither
+    * fp is committed yet): the invariant is "no content row whose
+    * fingerprint a PRIOR batch published", and within-corpus dedup is
+    * the explicit d01-operator surface.
+    */
+  private[graft] def dedupStage(spark: SparkSession, cfg: PipelineConfig,
+      fpDir: String, committed: Set[String],
       routed: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     if (!cfg.dedupAcrossCycles) routed
-    else Sinks.readFingerprints(spark, cfg.sinkRoot,
-        Lineage.checkpointId(cfg), committed)
+    else Sinks.readFingerprints(spark, fpDir, committed)
       // keepFp: the computed hash column rides along (hidden from every
-      // user-facing write — publishBatch drops it before staging) so
-      // the fingerprint-store write reuses it instead of re-hashing
-      // the batch's text
+      // user-facing write — publishBatch and the stream drop it before
+      // the sink write) so the fingerprint-store write reuses it
+      // instead of re-hashing the batch's text
       .map(graft.ops.Dedup.reRouteSeen(routed, _,
         Route.contentSinks, Route.duplicateSink, keepFp = true))
       .getOrElse(routed)
+
+  /** The batch engine's fingerprint namespace (the stream keeps its own
+    * under `stream/`, see [[graft.streaming.Streaming.runForeachBatch]]).
+    */
+  private def fingerprintsDir(cfg: PipelineConfig): String =
+    Sinks.fingerprintsDir(cfg.sinkRoot, Lineage.checkpointId(cfg))
 
   /** The publish discipline every batch (normal or re-driven) follows:
     * staged write -> atomic publish -> archive copy (iff configured;
@@ -467,8 +463,7 @@ object Main {
     // manifests/ledger: the fp dir only counts once its batch commits,
     // and the idempotent re-run overwrites it wholesale
     if (cfg.dedupAcrossCycles)
-      Sinks.writeFingerprints(routed, cfg.sinkRoot,
-        Lineage.checkpointId(cfg), batchId, Route.contentSinks)
+      Sinks.writeFingerprints(routed, fingerprintsDir(cfg), batchId)
     Aggregate.writeAll(routed, cfg.sinkRoot, batchId)
     Lineage.commitAt(spark, lineageDir, absorbInto(commits, absorb))
     Lineage.compactAt(spark, lineageDir) // no-op until history accumulates
@@ -486,8 +481,7 @@ object Main {
           Lineage.checkpointId(cfg), committedNow)
       }
       if (cfg.dedupAcrossCycles)
-        Sinks.compactFingerprints(spark, cfg.sinkRoot,
-          Lineage.checkpointId(cfg), committedNow)
+        Sinks.compactFingerprints(spark, fingerprintsDir(cfg), committedNow)
     }
     published
   }
@@ -671,8 +665,8 @@ object Main {
     // The watermark map is deliberately EMPTY: these keys are behind the
     // committed watermark (and possibly in sealed days), which is
     // precisely why normal discovery can no longer see them.
-    val current = Discover.deltaAndDeferred(spark, cfg, asOf, Map.empty)
-    val eligibleNow = pendingSemiJoin(current._1, pending).cache()
+    val current = Discover.delta(spark, cfg, asOf, Map.empty)
+    val eligibleNow = pendingSemiJoin(current, pending).cache()
     val redrivenKeys = eligibleNow.select(col("conv_id"), col("turn_idx"))
     val total = eligibleNow.count()
     pending.unpersist()
@@ -685,7 +679,7 @@ object Main {
     // discipline as a normal cycle (publishBatch), the ledger write as
     // its pre-commit hook — it differs only in never advancing a
     // watermark
-    val routed = dedupStage(spark, cfg, committed,
+    val routed = dedupStage(spark, cfg, fingerprintsDir(cfg), committed,
       mediaStage(cfg, Pipeline(eligibleNow.as[Turn](
         org.apache.spark.sql.Encoders.product[Turn]),
         cfg.excludePattern, cfg.chunkSize,
@@ -693,7 +687,7 @@ object Main {
       .cache()
     // committed_at = epoch, NOT now: committed_at is the day-dir
     // observation stamp behind the sealed-day reopen check
-    // (Lineage.observationsAt), and a redrive observes only manifest
+    // (Lineage.stateAt), and a redrive observes only manifest
     // keys — advancing a sealed day's stamp here would let a backfill
     // that landed just before this commit slip past the next reopen
     // check unaudited

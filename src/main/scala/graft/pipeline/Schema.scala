@@ -19,27 +19,6 @@ case class Turn(
     tool: String, // null when the turn is not a tool turn
     ts: Timestamp)
 
-/** A parsed + enriched turn — the post-parse schema (SURVEY.md §1.3).
-  * `text` is NEVER rewritten (byte-equality invariant; the reference
-  * likewise keeps `message` = raw line, s3.rb:224-239): all extraction
-  * goes into new columns.
-  */
-case class EnrichedTurn(
-    conv_id: String,
-    turn_idx: Int,
-    role: String,
-    text: String,
-    tool: String,
-    ts: Timestamp,
-    parsed_ts: Timestamp, // timestamp extracted from the text line
-    level: String, // log-level-like tag extracted from text
-    body: String, // message payload after the grok prefix
-    tool_calls: Seq[String], // `<tool:NAME ...>` markers in the body
-    actor_class: String, // role -> actor_class broadcast lookup
-    tool_category: String, // tool -> category broadcast lookup
-    header: String, // propagated per-conversation header (P5 analog)
-    sink: String) // routing decision
-
 /** Pipeline configuration — the analog of the reference plugin's config
   * block (s3.rb:38-91). All time logic takes an injected `asOf` clock:
   * tests must never read the wall clock (spec:123-139 controls Time.now
@@ -115,7 +94,7 @@ case class EnrichedTurn(
   *                        mtime check — covers backfill landings the
   *                        automatic detection cannot see (see
   *                        `sealDaysGraceSeconds`) and pre-upgrade
-  *                        lineage stamps (Lineage.observationsAt
+  *                        lineage stamps (Lineage.stateAt
   *                        migration note). Idempotent and exactly-once
   *                        like every audit; non-sealed days in the
   *                        list are ignored (normal discovery still

@@ -34,20 +34,26 @@ object Sinks {
   def stagingDir(root: String, batchId: String): String =
     s"$root/_staging/$batchId"
 
-  /** Write the routed delta to per-sink staging dirs. One pass over the
-    * data: partitionBy(sink) splits the fan-out at write time instead of
-    * N filtered jobs re-reading the delta N times.
-    */
+  /** Write the routed delta to per-sink staging dirs ([[writeBySink]]). */
   def writeStaged(routed: DataFrame, root: String, batchId: String,
-      saltBuckets: Int = 16): Unit = {
+      saltBuckets: Int = 16): Unit =
+    writeBySink(routed, stagingDir(root, batchId), saltBuckets)
+
+  /** THE sink layout, shared by the cycle's staged write and the
+    * stream's per-micro-batch dir: `dest/sink=<sink>/`, overwritten
+    * wholesale. One pass over the data: partitionBy(sink) splits the
+    * fan-out at write time instead of N filtered jobs re-reading the
+    * delta N times; the salted repartition + secondary sort is the
+    * skew defense described on [[Sinks]].
+    */
+  def writeBySink(routed: DataFrame, dest: String, saltBuckets: Int): Unit =
     routed
       .repartition(col("conv_id"),
         pmod(hash(col("turn_idx")), lit(saltBuckets)))
       .sortWithinPartitions(col("sink"), col("conv_id"), col("turn_idx"))
       .write.mode("overwrite")
       .partitionBy("sink")
-      .parquet(stagingDir(root, batchId))
-  }
+      .parquet(dest)
 
   /** Publish staged sink dirs as `<sink>/batch=<batchId>`. Idempotent:
     * an existing destination (crashed previous attempt) is replaced
@@ -159,30 +165,35 @@ object Sinks {
   /** Fingerprint store for cross-cycle dedup
     * (PipelineConfig.dedupAcrossCycles): per-batch dirs of the DISTINCT
     * normalized-text fingerprints each committed batch delivered to a
-    * content sink. Identity-keyed like every namespace; readers gate on
-    * the committed-batch set, so an orphan dir from a crashed cycle is
-    * invisible and the idempotent re-run overwrites it.
+    * content sink. The cycle's namespace is this identity-keyed dir;
+    * the stream keeps its own at `<sinkRoot>/stream/_fingerprints`
+    * (Streaming.runForeachBatch). The read, write and fold below take
+    * the namespace dir, so both surfaces share one store: readers gate
+    * on the caller's committed-batch set, so an orphan dir from a
+    * crashed batch is invisible and the idempotent re-run overwrites
+    * it.
     */
   def fingerprintsDir(root: String, checkpointId: String): String =
     s"$root/_fingerprints/$checkpointId"
 
   /** Record the batch's content-sink fingerprints (the dedup write
-    * side). Distinct per batch — within-batch multiplicity is not the
-    * store's business; one row per fp bounds the store by corpus
-    * cardinality, not delivery count. When the dedup stage already
-    * computed the fingerprint column (Dedup.fpColName, kept by
-    * reRouteSeen(keepFp=true)), it is REUSED — no second
-    * md5+normalization pass over the batch's text.
+    * side) as `<nsDir>/batch=<batchId>`. Distinct per batch —
+    * within-batch multiplicity is not the store's business; one row per
+    * fp bounds the store by corpus cardinality, not delivery count.
+    * Rows the dedup stage re-routed to `duplicate` are in an earlier
+    * batch's dir by construction, so each write is O(batch) rows. When
+    * the dedup stage already computed the fingerprint column
+    * (Dedup.fpColName, kept by reRouteSeen(keepFp=true)), it is REUSED
+    * — no second md5+normalization pass over the batch's text.
     */
-  def writeFingerprints(routed: DataFrame, root: String,
-      checkpointId: String, batchId: String,
-      contentSinks: Seq[String]): String = {
-    val dest = s"${fingerprintsDir(root, checkpointId)}/batch=$batchId"
+  def writeFingerprints(routed: DataFrame, nsDir: String,
+      batchId: String): String = {
+    val dest = s"$nsDir/batch=$batchId"
     val fp =
       if (routed.columns.contains(graft.ops.Dedup.fpColName))
         col(graft.ops.Dedup.fpColName)
       else graft.ops.TextAnalysis.fingerprint(col("text"))
-    routed.filter(col("sink").isin(contentSinks: _*))
+    routed.filter(col("sink").isin(Route.contentSinks: _*))
       .select(fp.as("fp"))
       .distinct()
       .write.mode("overwrite").parquet(dest)
@@ -190,26 +201,26 @@ object Sinks {
   }
 
   /** The committed seen-set (None when no committed batch has recorded
-    * fingerprints yet — first cycle, or the feature just turned on).
+    * fingerprints yet — first batch, or the feature just turned on).
+    * May hold duplicate fps after a crashed compaction; the reader's
+    * distinct (Dedup.reRouteSeen) absorbs them.
     */
-  def readFingerprints(spark: SparkSession, root: String,
-      checkpointId: String, committed: Set[String]): Option[DataFrame] = {
-    val dirs = partitionCommitted(
-      batchDirs(spark, fingerprintsDir(root, checkpointId)), committed)._1
+  def readFingerprints(spark: SparkSession, nsDir: String,
+      committed: Set[String]): Option[DataFrame] = {
+    val dirs = partitionCommitted(batchDirs(spark, nsDir), committed)._1
     if (dirs.isEmpty) None else Some(spark.read.parquet(dirs: _*))
   }
 
   /** Fold fingerprint history into one distinct snapshot once the
-    * namespace exceeds `maxDirs` dirs — [[compactDeferred]]'s
+    * namespace exceeds `maxDirs` dirs — [[compactNamespace]]'s
     * discipline (compacted-survivor naming, orphans deleted as crash
     * debris, only pre-listed dirs touched). Keeps the seen-set read
-    * O(1) dirs and O(distinct fps) rows, not O(cycles).
+    * O(1) dirs and O(distinct fps) rows, not O(batches).
     */
-  def compactFingerprints(spark: SparkSession, root: String,
-      checkpointId: String, committedBatches: => Set[String],
-      maxDirs: Int = 64): Boolean =
-    compactNamespace(spark, fingerprintsDir(root, checkpointId),
-      committedBatches, maxDirs, mergeSchema = false)
+  def compactFingerprints(spark: SparkSession, nsDir: String,
+      committedBatches: => Set[String], maxDirs: Int = 64): Boolean =
+    compactNamespace(spark, nsDir, committedBatches, maxDirs,
+      mergeSchema = false)
 
   /** THE fold-committed-dirs-into-one-snapshot discipline shared by the
     * violations and fingerprint namespaces (compactDeferred keeps its
@@ -217,9 +228,10 @@ object Sinks {
     * snapshot written FIRST (coexistence with the inputs only
     * duplicates rows, which every reader's distinct/anti-join absorbs),
     * only pre-listed dirs deleted, orphans deleted as crash debris
-    * (single writer per checkpoint identity; every call site runs
-    * post-commit, so nothing is in-flight). One body so a future fix to
-    * the ordering/orphan rules cannot silently diverge the namespaces.
+    * (single writer per checkpoint identity; every call runs when no
+    * write to the namespace is in flight — the cycle's post-commit, the
+    * stream's batch start). One body so a future fix to the
+    * ordering/orphan rules cannot silently diverge the namespaces.
     */
   private[graft] def compactNamespace(spark: SparkSession, nsDir: String,
       committedBatches: => Set[String], maxDirs: Int,

@@ -27,10 +27,14 @@ import graft.pipeline._
   *
   * Two processing shapes are provided:
   *
-  *  1. [[runForeachBatch]] — the production shape. Each micro-batch runs
-  *     the SAME batch operators (Parse -> Enrich -> Route) and appends
-  *     per-sink output; the full operator set (including the chunked
-  *     prefix scans, which need sorting) is legal inside foreachBatch.
+  *  1. [[runForeachBatch]] — the production shape. It takes the batch
+  *     cycle's [[graft.pipeline.PipelineConfig]], and each micro-batch
+  *     runs the cycle's own parts: `Pipeline` (parse, route, enrich, the
+  *     chunked prefix scans — legal inside foreachBatch), the media
+  *     stage, the dedup stage over the shared fingerprint store and the
+  *     salted per-sink writer (`Sinks.writeBySink`). Only what a
+  *     trigger changes is its own: the carry across micro-batches, the
+  *     ordering guard and the what=next seam.
   *
   *  2. [[streamingAggregates]] — a pure-streaming stateful aggregation:
   *     watermarked tumbling-hour per-sink counts in update mode (the
@@ -49,17 +53,17 @@ object Streaming {
     * `list_new_files` analog (S1) with the source's seen-file log as
     * the listing watermark.
     */
-  def readTurns(spark: SparkSession, inputPath: String,
-      maxFilesPerTrigger: Int = 64, mediaCol: String = null): DataFrame =
+  def readTurns(spark: SparkSession, cfg: PipelineConfig,
+      maxFilesPerTrigger: Int = 64): DataFrame =
     spark.readStream
       // a streaming read pins its schema up front, so the opt-in media
       // blob column must be declared here (the batch path discovers it
       // from the parquet footer instead)
-      .schema(if (mediaCol == null || mediaCol.isEmpty) Schema.turnSchema
-        else Schema.turnSchema.add(mediaCol,
+      .schema(if (!cfg.mediaConfigured) Schema.turnSchema
+        else Schema.turnSchema.add(cfg.mediaCol,
           org.apache.spark.sql.types.BinaryType))
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(inputPath)
+      .parquet(cfg.inputPath)
 
   /** Persisted per-conversation carry state for [[runForeachBatch]]:
     * (last header values, running record-start count) per conv, written
@@ -89,8 +93,9 @@ object Streaming {
     * or batchId+1 to find its strictly-earlier snapshot). Full
     * snapshots are the RIGHT shape for the carry — its state is one
     * row per ACTIVE conversation, not an ever-growing corpus set; the
-    * fingerprint seen-set, which IS corpus-sized, uses the delta +
-    * compaction design instead ([[StreamFingerprints]]).
+    * fingerprint seen-set, which IS corpus-sized, uses the batch
+    * engine's delta + compaction store instead
+    * (Sinks.writeFingerprints, see [[runForeachBatch]]).
     */
   private[streaming] object SnapshotStore {
     import org.apache.spark.sql.types.StructType
@@ -156,102 +161,27 @@ object Streaming {
       SnapshotStore.write(state, dir(sinkRoot), batchId)
   }
 
-  /** Streaming fingerprint store for cross-batch dedup — per-batch
-    * DELTA dirs + threshold compaction, the batch pipeline's
-    * `_fingerprints/<cid>` design (Sinks.writeFingerprints /
-    * compactFingerprints) applied to the stream. Each micro-batch
-    * writes ONLY its own newly-seen content fingerprints (O(batch)
-    * rows — reRouteSeen guarantees a fp already in the seen-set never
-    * reaches a content sink, so deltas are disjoint by construction),
-    * NOT a full seen-set snapshot: a long-running stream's per-batch
-    * write cost stays bounded by the batch, not by the accumulated
-    * corpus. Read fan-in is bounded by [[compact]]: past `maxDirs`
-    * delta dirs, strictly-prior deltas fold into one distinct
-    * `compacted-` dir.
+  /** Production shape: micro-batch = one reference polling cycle, built
+    * from the batch cycle's parts and configured by the same
+    * [[PipelineConfig]]: `inputPath`, `sinkRoot`, `excludePattern`,
+    * `chunkSize`, the codec (`Pipeline.codecFor`), `saltBuckets`,
+    * `dedupAcrossCycles` and the three media settings mean here what
+    * they mean to `Main.runCycle`. Each micro-batch writes
+    * `<sinkRoot>/stream/batch=<id>/sink=<sink>/` with the cycle's sink
+    * writer. Exactly-once comes from the file source's offset log in
+    * `checkpoint` plus the deterministic per-batch output dirs.
     *
-    * Replay safety (the Carry strictly-before rule, per-dir): a read
-    * for batch B unions only delta dirs with id < B, so a retried
-    * batch never consults its own crashed partial write. Compacted
-    * dirs are ALWAYS safe to include: compaction at batch B folds only
-    * ids < B, and B is the only batch that can still retry (micro-
-    * batches are sequential — B runs only after B-1 committed), so
-    * every compacted dir covers strictly-prior batches for every
-    * possible reader. A crash between the compacted write and the
-    * input deletes only duplicates fps across dirs, which the reader
-    * side's distinct (reRouteSeen) absorbs.
-    */
-  object StreamFingerprints {
-    import org.apache.hadoop.fs.Path
-    import org.apache.spark.sql.types._
-
-    val schema: StructType = StructType(Seq(StructField("fp", StringType)))
-
-    def dir(sinkRoot: String): String = s"$sinkRoot/stream/_fingerprints"
-
-    /** (delta dirs as (id, path), compacted dirs as paths). */
-    private def listDirs(spark: SparkSession,
-        root: String): (Seq[(Long, String)], Seq[String]) = {
-      val d = new Path(root)
-      val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(d)) return (Seq.empty, Seq.empty)
-      val names = fs.listStatus(d).toSeq.map(_.getPath)
-        .filter(_.getName.startsWith("batch="))
-      val (comp, delta) =
-        names.partition(_.getName.startsWith("batch=compacted-"))
-      (delta.map(p =>
-          (p.getName.stripPrefix("batch=").toLong, p.toString)),
-        comp.map(_.toString))
-    }
-
-    /** The seen-set visible to batch `beforeBatch`: all compacted dirs
-      * plus deltas strictly before it. May contain duplicate fps after
-      * a crashed compaction — readers must tolerate (reRouteSeen
-      * distincts its seen side).
-      */
-    def read(spark: SparkSession, sinkRoot: String,
-        beforeBatch: Long): DataFrame = {
-      val (delta, comp) = listDirs(spark, dir(sinkRoot))
-      val dirs = comp ++ delta.filter(_._1 < beforeBatch).map(_._2)
-      if (dirs.isEmpty) spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else spark.read.schema(schema).parquet(dirs: _*)
-    }
-
-    /** Write THIS batch's new fps (already content-sink-filtered and
-      * distinct'd by the caller) as `batch=<id>` — idempotent per-batch
-      * overwrite, O(batch) rows.
-      */
-    def write(newFps: DataFrame, sinkRoot: String, batchId: Long): Unit =
-      newFps.write.mode("overwrite").parquet(s"${dir(sinkRoot)}/batch=$batchId")
-
-    /** Fold strictly-prior history into one distinct snapshot once the
-      * namespace exceeds `maxDirs` dirs — compacted dir written FIRST,
-      * only pre-listed dirs deleted (the Sinks.compactNamespace
-      * discipline). The CURRENT batch's own delta is never folded: it
-      * is the one dir a retry of `batchId` must not see.
-      */
-    def compact(spark: SparkSession, sinkRoot: String, batchId: Long,
-        maxDirs: Int = 64): Boolean = {
-      val (delta, comp) = listDirs(spark, dir(sinkRoot))
-      val foldable = comp ++ delta.filter(_._1 < batchId).map(_._2)
-      if (foldable.length <= maxDirs) return false
-      spark.read.schema(schema).parquet(foldable: _*).distinct()
-        .write.mode("overwrite")
-        .parquet(s"${dir(sinkRoot)}/batch=compacted-${System.nanoTime()}")
-      val conf = spark.sparkContext.hadoopConfiguration
-      foldable.foreach { f =>
-        val p = new Path(f)
-        p.getFileSystem(conf).delete(p, true)
-      }
-      true
-    }
-  }
-
-  /** Production shape: micro-batch = one reference polling cycle.
-    * Parse/Enrich/Route are the identical batch operators; per-sink
-    * rows append under `<sinkRoot>/stream/<sink>/`. Exactly-once comes
-    * from the file source's offset log in `checkpointLocation` plus
-    * the deterministic per-batch output dirs.
+    * `archivePrefix` and `cutoffSeconds` are DISCOVERY settings: the
+    * stream does not use them, because the file source's seen-file log
+    * replaces discovery. Discovery's row guards
+    * (`Discover.designGuards`: the null-key/null-ts filter, the
+    * zero-length skip and the archive-prefix self-exclusion) are
+    * therefore not applied either: rows they would drop reach the
+    * stream's sinks. The batch-only features — the S6 columns, day
+    * sealing (`sealDaysGraceSeconds >= 0`), `reauditDays`,
+    * `backupAddPrefix`, `deleteAfterProcess` and `lineagePath` — are
+    * not implemented by the stream; setting any of them fails fast,
+    * naming the field, before a query starts.
     *
     * Cross-batch continuity: header propagation (P5) and session ids
     * (P3) are adjusted by the persisted [[Carry]] state, so the
@@ -260,23 +190,41 @@ object Streaming {
     * reads the previous batch's carry and republishes both the output
     * dir and its own carry snapshot idempotently.
     *
-    * `codec` is orthogonal to the trigger, exactly as the reference's
+    * The codec is orthogonal to the trigger, exactly as the reference's
     * codec plugin is orthogonal to its polling loop (s3.rb:35 vs
     * 130-136): json/multiline users get identical parse semantics under
     * AvailableNow and ProcessingTime as under the batch cycle.
+    *
+    * Cross-batch dedup (`dedupAcrossCycles`) uses the cycle's
+    * fingerprint store (Sinks.readFingerprints / writeFingerprints /
+    * compactFingerprints) in the namespace
+    * `<sinkRoot>/stream/_fingerprints`. Micro-batches run in order, so
+    * when batch B starts every numeric batch id below B has committed:
+    * that is batch B's committed set ([[fpCommittedBefore]]). B first
+    * folds the committed dirs once they pass the threshold — a
+    * `batch=B` dir left by a crashed attempt is an orphan then, and is
+    * deleted — and then reads its seen-set from the same committed set,
+    * so a retry never sees its own write.
     */
-  def runForeachBatch(spark: SparkSession, inputPath: String,
-      sinkRoot: String, checkpoint: String, excludePattern: String = "",
-      trigger: Trigger = Trigger.AvailableNow(),
-      maxFilesPerTrigger: Int = 64,
-      codec: Pipeline.Codec = Pipeline.GrokCodec,
-      dedupAcrossBatches: Boolean = false,
-      fpCompactDirs: Int = 64,
-      mediaCol: String = null,
-      mediaFeatures: Boolean = false,
-      mediaThumbSide: Int = 0): StreamingQuery = {
+  def runForeachBatch(spark: SparkSession, cfg: PipelineConfig,
+      checkpoint: String, trigger: Trigger = Trigger.AvailableNow(),
+      maxFilesPerTrigger: Int = 64): StreamingQuery = {
+    def isSet(v: String) = v != null && v.nonEmpty
+    Seq("storageClassCol" -> isSet(cfg.storageClassCol),
+      "restoreHeaderCol" -> isSet(cfg.restoreHeaderCol),
+      "sealDaysGraceSeconds" -> (cfg.sealDaysGraceSeconds >= 0),
+      "reauditDays" -> cfg.reauditDays.nonEmpty,
+      "backupAddPrefix" -> isSet(cfg.backupAddPrefix),
+      "deleteAfterProcess" -> cfg.deleteAfterProcess,
+      "lineagePath" -> isSet(cfg.lineagePath)).foreach { case (field, on) =>
+      require(!on, s"PipelineConfig.$field is a batch-cycle feature the " +
+        "stream does not implement; unset it for runForeachBatch")
+    }
+    val codec = Pipeline.codecFor(cfg)
+    val sinkRoot = cfg.sinkRoot
+    val fpDir = s"$sinkRoot/stream/_fingerprints"
     import spark.implicits._
-    readTurns(spark, inputPath, maxFilesPerTrigger, mediaCol).writeStream
+    readTurns(spark, cfg, maxFilesPerTrigger).writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -306,7 +254,8 @@ object Streaming {
             .parquet(s"$sinkRoot/stream/_violations/batch=$batchId")
         }
         val turns = flagged.filter(!isLate).drop("carry_max_idx").as[Turn]
-        val routed = Pipeline(turns, excludePattern, codec = codec)
+        val routed = Pipeline(turns, cfg.excludePattern, cfg.chunkSize,
+          codec = codec)
         // the multiline what=next SEAM: that codec's "this row
         // continues" comes from a LAG over the previous row, so the
         // first row of a batch cannot see the last row of the previous
@@ -351,64 +300,41 @@ object Streaming {
               .withColumn("is_continuation",
                 col("is_continuation") || seamRow)
               .withColumn("sink",
-                when(seamRow, Route.sinkExpr(excludePattern))
+                when(seamRow, Route.sinkExpr(cfg.excludePattern))
                   .otherwise(col("sink")))
               .withColumn("session_id",
                 col("session_id") + coalesce(col("carry_sessions"), lit(0L))
                   - when(seamConv, lit(1L)).otherwise(lit(0L)))
               .drop("_first_idx")
         }
-        // multimodal stage (opt-in, same body as the batch cycle's):
-        // AFTER the seam correction so its deadletter override outranks
-        // the seam's sink rewrite — exactly the batch ordering, where
-        // the stage runs on the fully-routed frame — and BEFORE the
-        // dedup re-route so an undecodable-media row never reaches the
+        // multimodal stage (opt-in, the batch cycle's own): AFTER the
+        // seam correction so its deadletter override outranks the
+        // seam's sink rewrite — exactly the batch ordering, where the
+        // stage runs on the fully-routed frame — and BEFORE the dedup
+        // re-route so an undecodable-media row never reaches the
         // fingerprint store
-        val adjusted = Main.mediaStage(mediaCol, sessioned
+        val adjusted = Main.mediaStage(cfg, sessioned
           .drop("carry_header", "carry_fields", "carry_sessions",
-            "carry_max_idx", "carry_prev_belongs"),
-          mediaFeatures, mediaThumbSide)
+            "carry_max_idx", "carry_prev_belongs"))
           .cache()
-        // cross-batch dedup (opt-in): same invariant as the batch
-        // pipeline's dedupAcrossCycles — rows whose fingerprint an
-        // EARLIER batch delivered to a content sink re-route to the
-        // `duplicate` sink. The strictly-before delta-union read makes
-        // a retried batch route identically to its first attempt. The
-        // seen-set has exactly ONE consumer now (the re-route join) —
-        // the delta write below touches only this batch's own rows
-        val seenFps =
-          if (dedupAcrossBatches)
-            Some(StreamFingerprints.read(sess, sinkRoot, batchId))
-          else None
-        val published = seenFps match {
-          case None => adjusted
-          // keepFp: the join's hash column is reused by the
-          // snapshot-out below; dropped before the sink write
-          case Some(seen) => graft.ops.Dedup.reRouteSeen(
-            adjusted, seen, Route.contentSinks, Route.duplicateSink,
-            keepFp = true).cache()
-        }
+        // cross-batch dedup (opt-in): the cycle's dedup stage over the
+        // stream's fingerprint namespace — fold first, then read, both
+        // from the strictly-earlier committed set (see the scaladoc).
+        // Cached: the sink write and the fingerprint write consume it
+        val published =
+          if (!cfg.dedupAcrossCycles) adjusted
+          else {
+            val committed = fpCommittedBefore(sess, fpDir, batchId)
+            Sinks.compactFingerprints(sess, fpDir, committed)
+            Main.dedupStage(sess, cfg, fpDir, committed, adjusted).cache()
+          }
         // per-batch dir + overwrite => a retried micro-batch republishes
         // the same directory idempotently (no duplicate rows), the same
-        // discipline as the batch pipeline's staged publish (Sinks).
-        published.drop(graft.ops.Dedup.fpColName)
-          .repartition(col("conv_id"))
-          .sortWithinPartitions(col("sink"), col("conv_id"), col("turn_idx"))
-          .write.mode("overwrite").partitionBy("sink")
-          .parquet(s"$sinkRoot/stream/batch=$batchId")
-        // fp delta-out: ONLY this batch's newly-seen content fps —
-        // duplicate-sink rows are in an earlier delta by construction
-        // (that is why they re-routed), so the write is O(batch) rows
-        // no matter how large the accumulated corpus is. Threshold
-        // compaction then bounds the read fan-in at O(maxDirs) dirs.
-        if (dedupAcrossBatches) {
-          val newFps = published
-            .filter(col("sink").isin(Route.contentSinks: _*))
-            .select(col(graft.ops.Dedup.fpColName).as("fp"))
-            .distinct()
-          StreamFingerprints.write(newFps, sinkRoot, batchId)
-          StreamFingerprints.compact(sess, sinkRoot, batchId, fpCompactDirs)
-        }
+        // discipline and layout as the batch pipeline's staged publish
+        Sinks.writeBySink(published.drop(graft.ops.Dedup.fpColName),
+          s"$sinkRoot/stream/batch=$batchId", cfg.saltBuckets)
+        if (cfg.dedupAcrossCycles)
+          Sinks.writeFingerprints(published, fpDir, batchId.toString)
         // carry-out: the conv's state AT ITS LAST ROW of this batch
         // (header/session are running values, so max_by(., turn_idx) is
         // the batch-final state), upserted over the previous snapshot
@@ -428,7 +354,7 @@ object Streaming {
         val merged = prev.join(batchCarry, Seq("conv_id"), "left_anti")
           .unionByName(batchCarry)
         Carry.write(merged, sinkRoot, batchId)
-        if (dedupAcrossBatches) published.unpersist()
+        if (cfg.dedupAcrossCycles) published.unpersist()
         adjusted.unpersist()
         prev.unpersist()
         flagged.unpersist()
@@ -436,6 +362,17 @@ object Streaming {
       }
       .start()
   }
+
+  /** The fingerprint batches committed when micro-batch `batchId`
+    * starts: every listed numeric batch id below it (micro-batches run
+    * in order, so each of them committed). Compaction survivors count
+    * through Sinks.partitionCommitted.
+    */
+  private[streaming] def fpCommittedBefore(spark: SparkSession,
+      fpDir: String, batchId: Long): Set[String] =
+    Sinks.batchDirs(spark, fpDir).map(_.split("batch=").last)
+      .filter(b => b.nonEmpty && b.forall(_.isDigit) && b.toLong < batchId)
+      .toSet
 
   /** Pure-streaming per-sink hourly counts with a 3-second event-time
     * watermark (the CUTOFF analog): late rows within 3s still update

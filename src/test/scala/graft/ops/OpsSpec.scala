@@ -830,8 +830,7 @@ class OpsSpec extends AnyFunSuite {
       "words; the merges table is layered; overlap self-pairs fold " +
       "non-overlapping") {
     // layering invariant: every multi-char element is the output of a
-    // strictly-earlier merge — the property the once-through fold
-    // relies on (Bpe.scala's equivalence argument)
+    // strictly-earlier merge — the shape of a learned table
     val outputs = Bpe.merges.map { case (a, b) => a + b }
     Bpe.merges.zipWithIndex.foreach { case ((a, b), r) =>
       for (el <- Seq(a, b) if el.length > 1) {
@@ -841,10 +840,12 @@ class OpsSpec extends AnyFunSuite {
             s"earlier rank, found $creator")
       }
     }
-    // overlap semantics: the self-pair (o, o) folds left-greedy
+    // overlap semantics: the self-pair (o, o) merges leftmost first,
+    // through the native expression on the demo table
     def sparkToks(ws: Seq[String]): Map[String, Seq[String]] =
       ws.toDF("w")
-        .select($"w", Bpe.tokenizeWord($"w").as("t"))
+        .select($"w", graft.functions.BpeExprs.bpeTokens($"w", "demo")
+          .as("t"))
         .collect().map(r => r.getString(0) -> r.getSeq[String](1)).toMap
     val fixed = sparkToks(Seq("ooo", "oooo", "ooooo", "the", "standing",
       "thermal", "120012", "llama", "atoll"))
@@ -862,7 +863,7 @@ class OpsSpec extends AnyFunSuite {
     val got = sparkToks(words)
     for (w <- words)
       assert(got(w) == Bpe.tokenizeReference(w),
-        s"word '$w': fold ${got(w)} != textbook ${Bpe.tokenizeReference(w)}")
+        s"word '$w': native ${got(w)} != textbook ${Bpe.tokenizeReference(w)}")
   }
 
   test("real-vocab BPE: the generated layered table is GPT-2-scale and " +
@@ -938,23 +939,29 @@ class OpsSpec extends AnyFunSuite {
   test("demo vocab three-way equivalence: Catalyst rank fold == native " +
       "ranks-map expression == textbook, on the overlap fixtures and " +
       "randomized words") {
-    import graft.functions.BpeExprs
+    import graft.functions.{BpeExprs, BpeTokens}
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.util.ArrayData
     val rng = new scala.util.Random(99)
     val alphabet = "aeilnorstdgh012o"
     val words = (Seq("ooo", "oooo", "ooooo", "the", "standing", "atoll") ++
       Seq.fill(60)((0 to rng.nextInt(11))
         .map(_ => alphabet(rng.nextInt(alphabet.length))).mkString))
       .filter(_.nonEmpty).distinct
+    // the three: the expression under whole-stage codegen, the same
+    // expression's interpreted eval, and the driver-side textbook loop
     val got = words.toDF("w")
-      .select($"w", Bpe.tokenizeWord($"w").as("fold"),
-        BpeExprs.bpeTokens($"w", "demo").as("native"))
+      .select($"w", BpeExprs.bpeTokens($"w", "demo").as("native"))
       .collect()
-      .map(r => r.getString(0) ->
-        ((r.getSeq[String](1), r.getSeq[String](2)))).toMap
+      .map(r => r.getString(0) -> r.getSeq[String](1)).toMap
     for (w <- words) {
-      val (fold, native) = got(w)
+      val native = got(w)
+      val interpreted = BpeTokens(Literal(w), "demo").eval()
+        .asInstanceOf[ArrayData].toSeq[AnyRef](
+          org.apache.spark.sql.types.StringType).map(_.toString)
       val textbook = Bpe.tokenizeReference(w)
-      assert(fold == textbook, s"'$w': fold $fold != textbook $textbook")
+      assert(interpreted == textbook,
+        s"'$w': interpreted $interpreted != textbook $textbook")
       assert(native == textbook,
         s"'$w': native $native != textbook $textbook")
     }

@@ -187,8 +187,9 @@ object PipelineProps extends Properties("pipeline") {
           val cfg = PipelineConfig(dir, s"$dir-sinks",
             storageClassCol = "storage_class",
             restoreHeaderCol = "restore_hdr")
-          val (elig, defer) = Discover.deltaAndDeferred(spark, cfg, asOf,
+          val disc = Discover.discover(spark, cfg, asOf, Map.empty,
             Map.empty)
+          val (elig, defer) = (disc.delta, disc.deferredCold)
           def ids(df: org.apache.spark.sql.DataFrame) =
             df.select($"conv_id").collect().map(_.getString(0)).toSet
           val all = ids(Discover.delta(spark,

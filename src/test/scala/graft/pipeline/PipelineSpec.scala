@@ -1778,10 +1778,11 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val cfg = PipelineConfig(in, s"$scratch/xd_sinks",
       dedupAcrossCycles = true)
     val cid = Lineage.checkpointId(cfg)
+    val fpDir = Sinks.fingerprintsDir(cfg.sinkRoot, cid)
 
     val r1 = Main.runCycle(spark, cfg, at("2026-05-01T12:00:00Z"))
     assert(r1.rowsProcessed == 2L)
-    val store1 = Sinks.readFingerprints(spark, cfg.sinkRoot, cid,
+    val store1 = Sinks.readFingerprints(spark, fpDir,
       Lineage.committedBatchesAt(spark, Lineage.dirFor(cfg))).get
     assert(store1.count() == 2L, "cycle 1 recorded both content fps")
 
@@ -1794,7 +1795,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.range(1)
       .select(graft.ops.TextAnalysis.fingerprint(lit(tC)).as("fp"))
       .write.mode("overwrite")
-      .parquet(s"${Sinks.fingerprintsDir(cfg.sinkRoot, cid)}/batch=deadbeef")
+      .parquet(s"$fpDir/batch=deadbeef")
 
     // crash window: staged write + publish + fingerprint write happened,
     // lineage commit did NOT — readers see nothing; re-run is idempotent
@@ -1804,14 +1805,12 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val batchId2 = Lineage.batchId(asOf2, wms, cid)
     val delta = Discover.delta(spark, cfg, asOf2, wms)
     val piped = Pipeline(delta.as[Turn], cfg.excludePattern)
-    val seen = Sinks.readFingerprints(spark, cfg.sinkRoot, cid,
-      committedAtStart).get
+    val seen = Sinks.readFingerprints(spark, fpDir, committedAtStart).get
     val routedPartial = graft.ops.Dedup.reRouteSeen(piped, seen,
       Route.contentSinks, Route.duplicateSink)
     Sinks.writeStaged(routedPartial, cfg.sinkRoot, batchId2, cfg.saltBuckets)
     Sinks.publish(spark, cfg.sinkRoot, batchId2)
-    Sinks.writeFingerprints(routedPartial, cfg.sinkRoot, cid, batchId2,
-      Route.contentSinks)
+    Sinks.writeFingerprints(routedPartial, fpDir, batchId2)
     assert(Sinks.readSink(spark, cfg.sinkRoot, Route.duplicateSink)
       .count() == 0L, "uncommitted publish invisible to committed readers")
 
@@ -1840,7 +1839,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"cycle 3 screens against cycle 2's committed fps, got $dup3")
     // b1 (a duplicate) must NOT have re-recorded tA's fp; store rows
     // stay one per distinct content fp
-    val store3 = Sinks.readFingerprints(spark, cfg.sinkRoot, cid,
+    val store3 = Sinks.readFingerprints(spark, fpDir,
       Lineage.committedBatchesAt(spark, Lineage.dirFor(cfg))).get
     assert(store3.distinct().count() == 3L,
       "store = {tA, tB, tC}: duplicate-sink rows never re-record fps")

@@ -30,7 +30,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val ckpt = s"$scratch/ckpt"
     val n1 = Synth.writeTable(spark, input, 42L, 30L)
 
-    val q1 = Streaming.runForeachBatch(spark, input, sinkRoot, ckpt)
+    val q1 = Streaming.runForeachBatch(spark,
+      PipelineConfig(input, sinkRoot), ckpt)
     q1.awaitTermination()
     val out1 = spark.read.option("basePath", s"$sinkRoot/stream")
       .parquet(s"$sinkRoot/stream")
@@ -51,7 +52,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val nExtra = extra.count()
     extra.write.mode("append").partitionBy("day").parquet(input)
 
-    val q2 = Streaming.runForeachBatch(spark, input, sinkRoot, ckpt)
+    val q2 = Streaming.runForeachBatch(spark,
+      PipelineConfig(input, sinkRoot), ckpt)
     q2.awaitTermination()
     val out2 = spark.read.option("basePath", s"$sinkRoot/stream")
       .parquet(s"$sinkRoot/stream")
@@ -69,7 +71,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     Synth.writeTable(spark, input, 42L, 20L)
 
     val streamDf = Streaming.streamingAggregates(
-      Streaming.readTurns(spark, input))
+      Streaming.readTurns(spark, PipelineConfig(input, "")))
     val q = streamDf.writeStream
       .format("memory").queryName("agg_out")
       .outputMode("complete")
@@ -124,7 +126,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val sinkRoot = s"$scratch/pt_sinks"
     val ckpt = s"$scratch/pt_ckpt"
     val n1 = Synth.writeTable(spark, input, 42L, 8L)
-    val q = Streaming.runForeachBatch(spark, input, sinkRoot, ckpt,
+    val q = Streaming.runForeachBatch(spark,
+      PipelineConfig(input, sinkRoot), ckpt,
       trigger = org.apache.spark.sql.streaming.Trigger
         .ProcessingTime("100 milliseconds"))
     try {
@@ -172,8 +175,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     onePart(s"$input/a").setLastModified(1000000L)
     onePart(s"$input/b").setLastModified(2000000L)
 
-    val q = Streaming.runForeachBatch(spark, s"$input/*", sinkRoot, ckpt,
-      maxFilesPerTrigger = 1)
+    val q = Streaming.runForeachBatch(spark,
+      PipelineConfig(s"$input/*", sinkRoot), ckpt, maxFilesPerTrigger = 1)
     q.awaitTermination()
     val nBatches = new java.io.File(s"$sinkRoot/stream").listFiles()
       .count(_.getName.startsWith("batch="))
@@ -225,9 +228,9 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     onePart(s"$input/a").setLastModified(1000000L)
     onePart(s"$input/b").setLastModified(2000000L)
 
-    Streaming.runForeachBatch(spark, s"$input/*", sinkRoot, ckpt,
-      maxFilesPerTrigger = 1, dedupAcrossBatches = true)
-      .awaitTermination()
+    Streaming.runForeachBatch(spark,
+      PipelineConfig(s"$input/*", sinkRoot, dedupAcrossCycles = true), ckpt,
+      maxFilesPerTrigger = 1).awaitTermination()
 
     val out = spark.read.option("basePath", s"$sinkRoot/stream")
       .parquet(s"$sinkRoot/stream/batch=0", s"$sinkRoot/stream/batch=1")
@@ -241,68 +244,97 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"novel rows keep their content sink, got $users")
     // delta store: each batch's dir holds ONLY its own new fps —
     // O(batch) write cost, not O(corpus)
-    val fp0 = spark.read.parquet(
-      s"${Streaming.StreamFingerprints.dir(sinkRoot)}/batch=0")
-    val fp1 = spark.read.parquet(
-      s"${Streaming.StreamFingerprints.dir(sinkRoot)}/batch=1")
+    val fpDir = s"$sinkRoot/stream/_fingerprints"
+    val fp0 = spark.read.parquet(s"$fpDir/batch=0")
+    val fp1 = spark.read.parquet(s"$fpDir/batch=1")
     assert(fp0.count() == 2L, "delta 0 = {tA, tB}")
     assert(fp1.count() == 1L, "delta 1 = {tC} only — the duplicate tA " +
       "is NOT re-recorded and the prior set is NOT rewritten")
-    assert(Streaming.StreamFingerprints.read(spark, sinkRoot, 1).count() == 2L,
+    def seenBy(b: Long) = Sinks.readFingerprints(spark, fpDir,
+      Streaming.fpCommittedBefore(spark, fpDir, b)).get
+    assert(seenBy(1).count() == 2L,
       "a batch consults only STRICTLY earlier deltas")
-    assert(Streaming.StreamFingerprints.read(spark, sinkRoot, 2).count() == 3L,
+    assert(seenBy(2).count() == 3L,
       "the union of deltas is the full seen-set")
   }
 
   test("StreamFingerprints delta store: per-batch O(batch) writes, " +
       "strictly-before reads, threshold compaction that never folds " +
       "the current batch, crash-window duplicate tolerance") {
-    val root = s"$scratch/fp_unit"
-    def delta(fps: String*) = fps.toDF("fp")
+    val dir = s"$scratch/fp_unit/stream/_fingerprints"
+    // a content-sink frame carrying the dedup stage's fp column
+    def delta(fps: String*) =
+      fps.map(_ -> "user").toDF(graft.ops.Dedup.fpColName, "sink")
+    def committed(b: Long) = Streaming.fpCommittedBefore(spark, dir, b)
+    def seenBy(b: Long): Seq[String] =
+      Sinks.readFingerprints(spark, dir, committed(b)).toSeq
+        .flatMap(_.collect().map(_.getString(0))).sorted
+    def listed() = new java.io.File(dir)
+      .listFiles().map(_.getName).filter(_.startsWith("batch=")).toSeq
     // five batches, one new fp each — every delta dir is 1 row
     for (b <- 0L to 4L)
-      Streaming.StreamFingerprints.write(delta(s"fp$b"), root, b)
+      Sinks.writeFingerprints(delta(s"fp$b"), dir, b.toString)
     for (b <- 0L to 4L)
-      assert(spark.read.parquet(
-        s"${Streaming.StreamFingerprints.dir(root)}/batch=$b").count() == 1L,
+      assert(spark.read.parquet(s"$dir/batch=$b").count() == 1L,
         s"delta $b must hold only its own rows")
-    assert(Streaming.StreamFingerprints.read(spark, root, 3L)
-      .collect().map(_.getString(0)).sorted.toSeq == Seq("fp0", "fp1", "fp2"),
+    assert(seenBy(3L) == Seq("fp0", "fp1", "fp2"),
       "read strictly-before 3 = deltas 0..2")
     // compaction at batch 5 folds only ids < 5; batch=4... all of 0..4
     // are < 5, so with maxDirs=2 they fold into one compacted dir
-    assert(Streaming.StreamFingerprints.compact(spark, root, 5L, maxDirs = 2))
-    val dirs = new java.io.File(Streaming.StreamFingerprints.dir(root))
-      .listFiles().map(_.getName).filter(_.startsWith("batch=")).toSeq
+    assert(Sinks.compactFingerprints(spark, dir, committed(5L), maxDirs = 2))
+    val dirs = listed()
     assert(dirs.length == 1 && dirs.head.startsWith("batch=compacted-"),
       s"five deltas folded into one compacted dir, got $dirs")
-    assert(Streaming.StreamFingerprints.read(spark, root, 5L)
-      .collect().map(_.getString(0)).sorted.toSeq ==
-      (0 to 4).map(i => s"fp$i"),
+    assert(seenBy(5L) == (0 to 4).map(i => s"fp$i"),
       "the folded seen-set is unchanged")
     // the CURRENT batch's delta is never folded (a retry of that batch
-    // must not see its own write): batch 5 writes, compacts — its dir
-    // survives even past the threshold
-    Streaming.StreamFingerprints.write(delta("fp5"), root, 5L)
-    Streaming.StreamFingerprints.compact(spark, root, 5L, maxDirs = 0)
-    val after = new java.io.File(Streaming.StreamFingerprints.dir(root))
-      .listFiles().map(_.getName).filter(_.startsWith("batch=")).toSeq
-    assert(after.contains("batch=5"),
-      s"batch 5's own delta must survive its own compaction, got $after")
-    assert(Streaming.StreamFingerprints.read(spark, root, 5L)
-      .collect().map(_.getString(0)).sorted.toSeq ==
-      (0 to 4).map(i => s"fp$i"),
+    // must not see its own write): compaction runs at batch start,
+    // BEFORE the seen-set read, so a stale batch=5 dir left by a
+    // crashed attempt is an orphan there — deleted, not folded
+    Sinks.writeFingerprints(delta("fp5"), dir, "5")
+    assert(Sinks.compactFingerprints(spark, dir, committed(5L), maxDirs = 0))
+    val after = listed()
+    assert(!after.contains("batch=5") &&
+      after.forall(_.startsWith("batch=compacted-")),
+      s"batch 5's stale delta must be deleted by its own compaction, got $after")
+    assert(seenBy(6L) == (0 to 4).map(i => s"fp$i"),
+      "the stale delta's fp5 was not folded into the seen-set")
+    assert(seenBy(5L) == (0 to 4).map(i => s"fp$i"),
       "a retry of batch 5 still sees exactly the prior set")
+    // the retry writes its delta again
+    Sinks.writeFingerprints(delta("fp5"), dir, "5")
     // crash window: compacted dir written but inputs not yet deleted ->
     // duplicate fps across dirs; the reader tolerates (reRouteSeen
     // distincts), and the SET is unchanged
-    Streaming.StreamFingerprints.read(spark, root, 6L).distinct()
+    Sinks.readFingerprints(spark, dir, committed(6L)).get.distinct()
       .write.mode("overwrite")
-      .parquet(s"${Streaming.StreamFingerprints.dir(root)}/batch=compacted-999")
-    val set = Streaming.StreamFingerprints.read(spark, root, 6L)
-      .distinct().collect().map(_.getString(0)).sorted.toSeq
+      .parquet(s"$dir/batch=compacted-999")
+    val set = seenBy(6L).distinct
     assert(set == (0 to 5).map(i => s"fp$i"),
       "coexisting compacted dirs only duplicate rows, never change the set")
+  }
+
+  test("runForeachBatch rejects batch-only config: each setting fails " +
+      "fast with IllegalArgumentException naming its field, and no " +
+      "query starts") {
+    val base = PipelineConfig(s"$scratch/guard_input", s"$scratch/guard_sinks")
+    val cases = Seq(
+      "storageClassCol" -> base.copy(storageClassCol = "storage_class"),
+      "restoreHeaderCol" -> base.copy(restoreHeaderCol = "restore_hdr"),
+      "sealDaysGraceSeconds" -> base.copy(sealDaysGraceSeconds = 0),
+      "reauditDays" -> base.copy(reauditDays = Seq("2025-01-01")),
+      "backupAddPrefix" -> base.copy(backupAddPrefix = "backup/"),
+      "deleteAfterProcess" -> base.copy(deleteAfterProcess = true),
+      "lineagePath" -> base.copy(lineagePath = s"$scratch/guard_lineage"))
+    for ((field, cfg) <- cases) {
+      val ckpt = s"$scratch/guard_ckpt_$field"
+      val e = intercept[IllegalArgumentException](
+        Streaming.runForeachBatch(spark, cfg, ckpt))
+      assert(e.getMessage.contains(field),
+        s"the error must name $field, got: ${e.getMessage}")
+      assert(!new java.io.File(ckpt).exists(),
+        s"$field: no query may start (checkpoint dir created)")
+    }
   }
 
   test("multiline what=next records survive the micro-batch seam: the " +
@@ -315,8 +347,9 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // what=next with 'line ends in backslash glues to the NEXT line' —
     // the codec whose continuation flag is a LAG and therefore blind
     // across a batch boundary without the carried seam flag
-    val codec = Pipeline.MultilineCodec(
-      Parse.MultilineConfig("\\\\$", negate = false, what = "next"))
+    val cfg = PipelineConfig(s"$input/*", sinkRoot, codec = "multiline",
+      multilinePattern = "\\\\$", multilineWhat = "next")
+    val codec = Pipeline.codecFor(cfg)
     val fileA = Seq(
       Turn("mm", 0, "user",
         "2025-01-01T00:00:00Z INFO [user] cmd \\", null, ts0),
@@ -336,8 +369,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     onePart(s"$input/a").setLastModified(1000000L)
     onePart(s"$input/b").setLastModified(2000000L)
 
-    Streaming.runForeachBatch(spark, s"$input/*", sinkRoot, ckpt,
-      maxFilesPerTrigger = 1, codec = codec).awaitTermination()
+    Streaming.runForeachBatch(spark, cfg, ckpt, maxFilesPerTrigger = 1)
+      .awaitTermination()
 
     val cols = Seq($"conv_id", $"turn_idx", $"session_id", $"sink",
       $"is_continuation")
@@ -406,8 +439,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     onePart(s"$input/a").setLastModified(1000000L)
     onePart(s"$input/b").setLastModified(2000000L)
 
-    val q = Streaming.runForeachBatch(spark, s"$input/*", sinkRoot, ckpt,
-      maxFilesPerTrigger = 1)
+    val q = Streaming.runForeachBatch(spark,
+      PipelineConfig(s"$input/*", sinkRoot), ckpt, maxFilesPerTrigger = 1)
     q.awaitTermination()
 
     val out = spark.read.option("basePath", s"$sinkRoot/stream")
@@ -452,9 +485,10 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     onePart(s"$input/a").setLastModified(1000000L)
     onePart(s"$input/b").setLastModified(2000000L)
 
-    val codec = Pipeline.codecFor(PipelineConfig("", "", codec = "json"))
-    val q = Streaming.runForeachBatch(spark, s"$input/*", sinkRoot, ckpt,
-      maxFilesPerTrigger = 1, codec = codec)
+    val cfg = PipelineConfig(s"$input/*", sinkRoot, codec = "json")
+    val codec = Pipeline.codecFor(cfg)
+    val q = Streaming.runForeachBatch(spark, cfg, ckpt,
+      maxFilesPerTrigger = 1)
     q.awaitTermination()
     val nBatches = new java.io.File(s"$sinkRoot/stream").listFiles()
       .count(_.getName.startsWith("batch="))
@@ -487,8 +521,9 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val ts0 = new Timestamp(Synth.baseEpochMs)
     // '+'-prefixed lines continue the previous record — NOT the grok
     // default (whitespace), so any codec fallback is visible
-    val codec = Pipeline.MultilineCodec(
-      Parse.MultilineConfig("^\\+", negate = false, what = "previous"))
+    val cfg = PipelineConfig(s"$input/*", sinkRoot, codec = "multiline",
+      multilinePattern = "^\\+", multilineWhat = "previous")
+    val codec = Pipeline.codecFor(cfg)
     val fileA = Seq(
       Turn("mc", 0, "user", "2025-01-01T00:00:01Z INFO [user] one", null, ts0),
       Turn("mc", 1, "user", "+more of one", null, ts0))
@@ -504,8 +539,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     onePart(s"$input/a").setLastModified(1000000L)
     onePart(s"$input/b").setLastModified(2000000L)
 
-    val q = Streaming.runForeachBatch(spark, s"$input/*", sinkRoot, ckpt,
-      maxFilesPerTrigger = 1, codec = codec)
+    val q = Streaming.runForeachBatch(spark, cfg, ckpt,
+      maxFilesPerTrigger = 1)
     q.awaitTermination()
 
     val cols = Seq($"conv_id", $"turn_idx", $"sink", $"session_id")
@@ -620,9 +655,10 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     // small trigger => conversations span micro-batches, so the media
     // stage runs under carry joins and the seam-free grok codec
-    val q = Streaming.runForeachBatch(spark, input, sinkRoot, ckpt,
-      maxFilesPerTrigger = 2, mediaCol = "media",
+    val cfg = PipelineConfig(input, sinkRoot, mediaCol = "media",
       mediaFeatures = true, mediaThumbSide = 4)
+    val q = Streaming.runForeachBatch(spark, cfg, ckpt,
+      maxFilesPerTrigger = 2)
     q.awaitTermination()
     val out = spark.read.option("basePath", s"$sinkRoot/stream")
       .parquet(s"$sinkRoot/stream").cache()
@@ -631,10 +667,9 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // row-for-row parity with the batch stage on everything the media
     // stage owns: the (possibly deadletter-overridden) sink, the
     // merged media metadata, and the feature/thumbnail columns
-    val batchStaged = Main.mediaStage("media",
+    val batchStaged = Main.mediaStage(cfg,
       Pipeline(withMedia.as[Turn](
-        org.apache.spark.sql.Encoders.product[Turn])),
-      features = true, thumbSide = 4)
+        org.apache.spark.sql.Encoders.product[Turn])))
     def view(df: org.apache.spark.sql.DataFrame) = df.select(
       col("conv_id"), col("turn_idx"), col("sink"),
       element_at(col("meta"), "media_kind").as("k"),
