@@ -2,28 +2,28 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
 /** Native Catalyst expressions for media FEATURE work inside the
   * routed cycle — the opt-in stage (`PipelineConfig.mediaFeatures` /
   * `mediaThumbSide`) that puts content statistics and thumbnails
-  * where routing happens, not in a separate job. Same discipline as
-  * [[MediaHeader]]: evaluated in the narrow map that already holds
-  * the blob bytes, so payloads never shuffle for it.
+  * where routing happens, not in a separate job. Same discipline (and
+  * the same [[StaticMediaExpr]] shape) as [[MediaHeader]]: evaluated in
+  * the narrow map that already holds the blob bytes, so payloads never
+  * shuffle for it.
   *
-  * Coverage is exactly the REAL sample-decode surface
-  * ([[graft.ops.Multimodal.PixelCodec]] PNG pixels, [[graft.ops.Jpeg]]
-  * baseline JPEG pixels, [[graft.ops.Multimodal.PcmCodec]] 16-bit PCM
-  * samples): a blob none of them can decode yields NULL — the
-  * null-flag contract (the row
-  * keeps riding; the header stage has already dead-lettered anything
-  * whose CONTAINER is corrupt). The disclosed video-frame stub
-  * ([[graft.ops.Multimodal.StubCodec]]) is deliberately NOT in this
-  * dispatch: it requires its own synthetic magic and a production
-  * cycle must never fabricate features for real MP4 bytes.
+  * Coverage is exactly the REAL sample-decode surface, the dispatch
+  * [[graft.ops.Multimodal.realFeatures]] that the batch
+  * `decodeFeatures` also takes (PNG pixels, baseline JPEG pixels,
+  * 16-bit PCM samples): a blob none of them can decode yields NULL —
+  * the null-flag contract (the row keeps riding; the header stage has
+  * already dead-lettered anything whose CONTAINER is corrupt). The
+  * disclosed video-frame stub ([[graft.ops.Multimodal.StubCodec]]) is
+  * deliberately NOT in this dispatch: it requires its own synthetic
+  * magic and a production cycle must never fabricate features for real
+  * MP4 bytes.
   */
 object MediaFeatureNative {
 
@@ -34,21 +34,9 @@ object MediaFeatureNative {
   /** Static entry point shared by interpreted eval and generated code.
     * Null == no pixel/sample-decodable content (not an error).
     */
-  def features(payload: Array[Byte], dims: Int): InternalRow = {
-    import graft.ops.{Jpeg, Multimodal}
-    Multimodal.PixelCodec.decodePng(payload)
-        .orElse(Jpeg.decodeBaseline(payload)) match {
-      case Some(px) =>
-        val (ck, f) = Multimodal.pngFeatures(px, dims)
-        row(ck, f)
-      case None => Multimodal.PcmCodec.decodePcm16(payload) match {
-        case Some((ch, rate, samples)) =>
-          val (ck, f) = Multimodal.pcmFeatures(ch, rate, samples, dims)
-          row(ck, f)
-        case None => null
-      }
-    }
-  }
+  def features(payload: Array[Byte], dims: Int): InternalRow =
+    graft.ops.Multimodal.realFeatures(payload, dims)
+      .map { case (ck, f) => row(ck, f) }.orNull
 
   private def row(checksum: Long, feat: Array[Float]): InternalRow =
     new GenericInternalRow(Array[Any](checksum,
@@ -66,23 +54,14 @@ object MediaFeatureNative {
   * sample decode covers it.
   */
 case class MediaFeatureVec(child: Expression, dims: Int)
-    extends UnaryExpression {
+    extends StaticMediaExpr {
 
   override def dataType: DataType = MediaFeatureNative.featSchema
-  override def nullable: Boolean = true
   override def prettyName: String = "media_features"
-
-  override protected def nullSafeEval(input: Any): Any =
-    MediaFeatureNative.features(input.asInstanceOf[Array[Byte]], dims)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    // null for NON-NULL undecodable input, so the defineCodeGen
-    // shortcut (child-pinned isNull) does not apply — the MediaHeader
-    // shape
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.MediaFeatureNative.features($c, $dims);
-      ${ev.isNull} = (${ev.value} == null);
-    """)
+  protected def decode(payload: Array[Byte]): Any =
+    MediaFeatureNative.features(payload, dims)
+  protected def javaCall(c: String): String =
+    s"graft.functions.MediaFeatureNative.features($c, $dims)"
 
   override protected def withNewChildInternal(newChild: Expression): MediaFeatureVec =
     copy(child = newChild)
@@ -92,20 +71,14 @@ case class MediaFeatureVec(child: Expression, dims: Int)
   * otherwise.
   */
 case class MediaThumb(child: Expression, side: Int)
-    extends UnaryExpression {
+    extends StaticMediaExpr {
 
   override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
   override def prettyName: String = "media_thumb"
-
-  override protected def nullSafeEval(input: Any): Any =
-    MediaFeatureNative.thumb(input.asInstanceOf[Array[Byte]], side)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.MediaFeatureNative.thumb($c, $side);
-      ${ev.isNull} = (${ev.value} == null);
-    """)
+  protected def decode(payload: Array[Byte]): Any =
+    MediaFeatureNative.thumb(payload, side)
+  protected def javaCall(c: String): String =
+    s"graft.functions.MediaFeatureNative.thumb($c, $side)"
 
   override protected def withNewChildInternal(newChild: Expression): MediaThumb =
     copy(child = newChild)

@@ -13,35 +13,50 @@ import org.apache.spark.unsafe.types.UTF8String
   * ([[graft.pipeline.Main]]'s `mediaStage`) evaluates it in the same
   * narrow map as routing, so blobs are classified and their metadata
   * extracted without ever shuffling payload bytes. Dispatch is by
-  * magic bytes across the REAL pure-JVM container walks (PNG/JPEG
-  * IHDR+marker, RIFF/WAVE chunk, ISO-BMFF box —
-  * [[graft.ops.Multimodal]]); anything none of them accepts yields a
-  * NULL struct, which the stage routes to the dead-letter sink (the
-  * corrupt-JSON discipline: visible, never dropped).
+  * magic bytes across the REAL pure-JVM container walks (PNG IHDR,
+  * JPEG marker walk, RIFF/WAVE chunk walk, ISO-BMFF box walk —
+  * [[graft.ops.Multimodal]]), and every field is a projection of one
+  * of those parsers: no format is parsed or converted here. Anything
+  * none of them accepts yields a NULL struct, which the stage routes to
+  * the dead-letter sink (the corrupt-JSON discipline: visible, never
+  * dropped).
   *
   * Result struct (fields a format doesn't define are null):
   * kind, width, height, channels, sample_rate, bits, duration_ms.
   */
-case class MediaHeader(child: Expression) extends UnaryExpression {
+case class MediaHeader(child: Expression) extends StaticMediaExpr {
 
   override def dataType: DataType = MediaHeader.schema
-  override def nullable: Boolean = true
   override def prettyName: String = "media_header"
-
-  override protected def nullSafeEval(input: Any): Any =
-    MediaHeader.compute(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    // the result is null for NON-NULL undecodable input, so the
-    // defineCodeGen shortcut (which pins isNull to the child's) does
-    // not apply — assign, then derive isNull from the value
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.MediaHeader.compute($c);
-      ${ev.isNull} = (${ev.value} == null);
-    """)
+  protected def decode(payload: Array[Byte]): Any =
+    MediaHeader.compute(payload)
+  protected def javaCall(c: String): String =
+    s"graft.functions.MediaHeader.compute($c)"
 
   override protected def withNewChildInternal(newChild: Expression): MediaHeader =
     copy(child = newChild)
+}
+
+/** A media-blob expression with ONE static entry point, `decode` in
+  * interpreted eval and `javaCall` (the same call as Java source) in
+  * generated code. Its result is null for NON-NULL undecodable input,
+  * so the defineCodeGen shortcut (child-pinned isNull) does not apply:
+  * generated code assigns, then derives isNull from the value.
+  */
+trait StaticMediaExpr extends UnaryExpression {
+  protected def decode(payload: Array[Byte]): Any
+  protected def javaCall(c: String): String
+
+  override def nullable: Boolean = true
+
+  override protected def nullSafeEval(input: Any): Any =
+    decode(input.asInstanceOf[Array[Byte]])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c => s"""
+      ${ev.value} = ${javaCall(c)};
+      ${ev.isNull} = (${ev.value} == null);
+    """)
 }
 
 object MediaHeader {
@@ -68,44 +83,22 @@ object MediaHeader {
     * the dispatch order carries no semantics.
     */
   def compute(payload: Array[Byte]): InternalRow =
-    ImageCodec.decodeDims(payload) match {
-      case Some((fmt, w, h)) =>
-        row(fmt, Int.box(w), Int.box(h), null, null, null, null,
-          null, null, null)
-      case None => AudioCodec.decodeWav(payload) match {
-        // decodeWav's 4th element is the data-chunk BYTE COUNT;
-        // duration = bytes / byte-rate (the m03 formula). A declared
-        // format whose byte-rate floors to zero (bits*ch*rate < 8 —
-        // each factor individually passes decodeWav's > 0 gates) is
-        // garbage: classify undecodable rather than divide by zero in
-        // an executor.
-        case Some((ch, rate, bits, dataBytes))
-            if rate.toLong * ch * bits / 8 > 0 =>
-          row("wav", null, null, Int.box(ch), Int.box(rate), Int.box(bits),
-            Long.box(dataBytes * 1000L / (rate.toLong * ch * bits / 8)),
-            null, null, null)
-        // `_` not `None`: a zero-byte-rate WAV falls through here too
-        case _ => VideoCodec.decodeMp4(payload) match {
-          case Some((w, h, durMs)) =>
-            // sample-table signals when the stbl parses AND its media
-            // duration floors positive (decodeSampleTables guarantees
-            // totalDelta > 0, not the floored ms) — absent otherwise,
-            // without demoting the header decode
-            val st = VideoCodec.decodeSampleTables(payload)
-              .filter(s => s.totalDelta * 1000L / s.timescale > 0)
-            row("mp4", Int.box(w), Int.box(h), null, null, null,
-              Long.box(durMs),
-              st.map(s => Long.box(s.nFrames)).orNull,
-              st.map { s =>
-                val mediaMs = s.totalDelta * 1000L / s.timescale
-                Long.box(s.totalBytes * 8000L / mediaMs)
-              }.orNull,
-              st.map(s =>
-                Long.box(s.nKeyframes * 1000L / s.nFrames)).orNull)
-          case None => null
-        }
-      }
-    }
+    ImageCodec.decodeDims(payload).map { case (fmt, w, h) =>
+      row(fmt, Int.box(w), Int.box(h), null, null, null, null, null, null,
+        null)
+    }.orElse(AudioCodec.decodeWavMs(payload).map { case (ch, rate, bits, ms) =>
+      row("wav", null, null, Int.box(ch), Int.box(rate), Int.box(bits),
+        Long.box(ms), null, null, null)
+    }).orElse(VideoCodec.decodeMp4(payload).map { case (w, h, durMs) =>
+      // sample-table signals when the stbl parses AND has metrics —
+      // absent otherwise, without demoting the header decode
+      val (frames, bps, kf) = VideoCodec.decodeSampleTables(payload)
+        .flatMap(s => s.metrics.map { case (_, b, k) =>
+          (Long.box(s.nFrames), Long.box(b), Long.box(k))
+        }).getOrElse((null, null, null))
+      row("mp4", Int.box(w), Int.box(h), null, null, null,
+        Long.box(durMs), frames, bps, kf)
+    }).orNull
 
   private def row(kind: String, vals: Any*): InternalRow =
     new GenericInternalRow(

@@ -2,17 +2,17 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import MediaBytes.{be16, u8}
+
 /** REAL baseline JPEG pixel decode — pure JVM end to end (ITU T.81
   * baseline sequential DCT, SOF0): marker walk collecting DQT/DHT/DRI,
   * canonical Huffman entropy decode with byte-unstuffing and restart
   * markers, dequantization, 8x8 inverse DCT, chroma upsampling and
-  * JFIF YCbCr -> RGB. This retires the lossy-codec feature stub for
-  * the overwhelming majority of training-corpus images (baseline
-  * 8-bit); progressive (SOF2), arithmetic coding, 12-bit precision,
-  * and sampling factors above 2 classify as undecodable rather than
-  * throwing — the broken-file-skip discipline
-  * (reference s3.rb:292-301 applied to media, like
-  * [[Multimodal.PixelCodec]]).
+  * JFIF YCbCr -> RGB. The marker walk, [[walkMarkers]], is also
+  * [[Multimodal.ImageCodec]]'s dimension sniff. Progressive (SOF2),
+  * arithmetic coding, 12-bit precision and sampling factors above 2
+  * classify as undecodable rather than throwing — the broken-file-skip
+  * discipline (reference s3.rb:292-301 applied to media).
   *
   * Supported profile: SOF0, 8-bit precision, 1 component (grayscale)
   * or 3 components (YCbCr) with per-component sampling factors in
@@ -166,12 +166,41 @@ object Jpeg {
     else if (v < (1 << (size - 1))) v - (1 << size) + 1
     else v
 
-  private def u8(p: Array[Byte], o: Int): Int = p(o) & 0xff
-  private def be16(p: Array[Byte], o: Int): Int =
-    (u8(p, o) << 8) | u8(p, o + 1)
-
   private final case class Component(id: Int, h: Int, v: Int, tq: Int,
       var td: Int = -1, var ta: Int = -1)
+
+  /** A SOFn frame-header marker: C0-CF except C4 (DHT), C8 (JPG
+    * extension) and CC (DAC).
+    */
+  private[ops] def isSof(m: Int): Boolean =
+    m >= 0xc0 && m <= 0xcf && m != 0xc4 && m != 0xc8 && m != 0xcc
+
+  /** The one marker-segment walk (T.81 B.1) from just after SOI,
+    * skipping fill bytes (B.1.1.2) and the length-less RST0-7/TEM. Each
+    * segment goes to `segment(marker, bodyStart, len)` (`len` counts
+    * itself; the body may run past the payload end — each caller says
+    * how much it needs), which returns whether to walk on. Lost marker
+    * alignment, a cut fill run or length, a length < 2 and EOI end it.
+    */
+  private[ops] def walkMarkers(p: Array[Byte])(
+      segment: (Int, Int, Int) => Boolean): Unit = {
+    var i = 2
+    while (i + 3 < p.length) {
+      if (u8(p, i) != 0xff) return // lost marker alignment
+      var j = i
+      while (j + 1 < p.length && u8(p, j + 1) == 0xff) j += 1 // fill
+      if (j + 1 >= p.length) return // cut mid fill-run
+      val m = u8(p, j + 1)
+      if (m == 0xd9) return // EOI
+      else if ((m >= 0xd0 && m <= 0xd7) || m == 0x01) i = j + 2
+      else {
+        if (j + 3 >= p.length) return
+        val len = be16(p, j + 2)
+        if (len < 2 || !segment(m, j + 4, len)) return
+        i = j + 2 + len
+      }
+    }
+  }
 
   /** Decode a baseline JPEG payload to raw samples — grayscale
     * (channels = 1) or interleaved RGB (channels = 3); None for
@@ -185,108 +214,105 @@ object Jpeg {
     val acTabs = new Array[HuffTable](4)
     var dri = 0
     var frame: Option[(Int, Int, Array[Component])] = None
-    var i = 2
-    while (i + 3 < p.length) {
-      if (u8(p, i) != 0xff) return None // lost marker alignment
-      var j = i
-      while (j + 1 < p.length && u8(p, j + 1) == 0xff) j += 1 // fill
-      if (j + 1 >= p.length) return None
-      val m = u8(p, j + 1)
-      if (m == 0xd9) return None // EOI before any scan
-      else if ((m >= 0xd0 && m <= 0xd7) || m == 0x01) i = j + 2
-      else {
-        if (j + 3 >= p.length) return None
-        val len = be16(p, j + 2)
-        if (len < 2 || j + 2 + len > p.length) return None
-        val b = j + 4 // segment body
-        val e = j + 2 + len // segment end (exclusive)
-        m match {
-          case 0xdb => // DQT: one or more tables
-            var q = b
-            while (q < e) {
-              if (q >= e) return None
-              val pq = u8(p, q) >> 4
-              val tq = u8(p, q) & 0x0f
-              if (tq > 3 || pq > 1) return None
-              val entryBytes = if (pq == 0) 1 else 2
-              if (q + 1 + 64 * entryBytes > e) return None
-              val t = new Array[Int](64)
-              var k = 0
-              while (k < 64) {
-                t(ZigZag(k)) =
-                  if (pq == 0) u8(p, q + 1 + k)
-                  else be16(p, q + 1 + 2 * k)
-                k += 1
-              }
-              quant(tq) = t
-              q += 1 + 64 * entryBytes
+    var pixels: Option[Multimodal.PixelCodec.Pixels] = None // the scan
+    // one segment, which must fit the payload whole; false ends the
+    // walk: at the scan, or on a corrupt or unsupported segment
+    def segment(m: Int, b: Int, len: Int): Boolean = {
+      val e = b - 2 + len // segment end (exclusive)
+      if (e > p.length) return false
+      m match {
+        case 0xdb => // DQT: one or more tables
+          var q = b
+          while (q < e) {
+            val pq = u8(p, q) >> 4
+            val tq = u8(p, q) & 0x0f
+            if (tq > 3 || pq > 1) return false
+            val entryBytes = if (pq == 0) 1 else 2
+            if (q + 1 + 64 * entryBytes > e) return false
+            val t = new Array[Int](64)
+            var k = 0
+            while (k < 64) {
+              t(ZigZag(k)) =
+                if (pq == 0) u8(p, q + 1 + k)
+                else be16(p, q + 1 + 2 * k)
+              k += 1
             }
-          case 0xc4 => // DHT: one or more tables
-            var q = b
-            while (q < e) {
-              if (q + 17 > e) return None
-              val tc = u8(p, q) >> 4
-              val th = u8(p, q) & 0x0f
-              if (tc > 1 || th > 3) return None
-              val counts = Array.tabulate(16)(k => u8(p, q + 1 + k))
-              val n = counts.sum
-              if (n > 256 || q + 17 + n > e) return None
-              val vals = Array.tabulate(n)(k => u8(p, q + 17 + k))
-              val tab = new HuffTable(counts, vals)
-              if (tc == 0) dcTabs(th) = tab else acTabs(th) = tab
-              q += 17 + n
+            quant(tq) = t
+            q += 1 + 64 * entryBytes
+          }
+          true
+        case 0xc4 => // DHT: one or more tables
+          var q = b
+          while (q < e) {
+            if (q + 17 > e) return false
+            val tc = u8(p, q) >> 4
+            val th = u8(p, q) & 0x0f
+            if (tc > 1 || th > 3) return false
+            val counts = Array.tabulate(16)(k => u8(p, q + 1 + k))
+            val n = counts.sum
+            if (n > 256 || q + 17 + n > e) return false
+            val vals = Array.tabulate(n)(k => u8(p, q + 17 + k))
+            val tab = new HuffTable(counts, vals)
+            if (tc == 0) dcTabs(th) = tab else acTabs(th) = tab
+            q += 17 + n
+          }
+          true
+        case 0xdd => // DRI
+          if (len != 4) return false
+          dri = be16(p, b)
+          true
+        case 0xc0 => // SOF0: baseline sequential
+          if (frame.isDefined || len < 8) return false
+          val prec = u8(p, b)
+          val h = be16(p, b + 1)
+          val w = be16(p, b + 3)
+          val nf = u8(p, b + 5)
+          if (prec != 8 || w <= 0 || h <= 0) return false
+          if (nf != 1 && nf != 3) return false
+          if (len != 8 + 3 * nf) return false
+          val comps = Array.tabulate(nf) { c =>
+            val o = b + 6 + 3 * c
+            Component(u8(p, o), u8(p, o + 1) >> 4, u8(p, o + 1) & 0x0f,
+              u8(p, o + 2))
+          }
+          if (comps.exists(c => c.h < 1 || c.h > 2 || c.v < 1 ||
+            c.v > 2 || c.tq > 3)) return false
+          frame = Some((w, h, comps))
+          true
+        case sof if isSof(sof) =>
+          false // progressive/arithmetic/hierarchical/12-bit
+        case 0xda => // SOS: decode the single interleaved scan
+          val (w, h, comps) = frame match {
+            case Some(f) => f
+            case None => return false
+          }
+          if (len < 6) return false
+          val ns = u8(p, b)
+          if (ns != comps.length || len != 6 + 2 * ns) return false
+          var q = b + 1
+          var c = 0
+          while (c < ns) {
+            val cs = u8(p, q)
+            val comp = comps.find(_.id == cs) match {
+              case Some(cm) => cm
+              case None => return false
             }
-          case 0xdd => // DRI
-            if (len != 4) return None
-            dri = be16(p, b)
-          case 0xc0 => // SOF0: baseline sequential
-            if (frame.isDefined) return None
-            if (len < 8) return None
-            val prec = u8(p, b)
-            val h = be16(p, b + 1)
-            val w = be16(p, b + 3)
-            val nf = u8(p, b + 5)
-            if (prec != 8 || w <= 0 || h <= 0) return None
-            if (nf != 1 && nf != 3) return None
-            if (len != 8 + 3 * nf) return None
-            val comps = Array.tabulate(nf) { c =>
-              val o = b + 6 + 3 * c
-              Component(u8(p, o), u8(p, o + 1) >> 4, u8(p, o + 1) & 0x0f,
-                u8(p, o + 2))
-            }
-            if (comps.exists(c => c.h < 1 || c.h > 2 || c.v < 1 ||
-              c.v > 2 || c.tq > 3)) return None
-            frame = Some((w, h, comps))
-          case sof if sof >= 0xc1 && sof <= 0xcf && sof != 0xc4 &&
-              sof != 0xc8 && sof != 0xcc =>
-            return None // progressive/arithmetic/hierarchical/12-bit
-          case 0xda => // SOS: decode the single interleaved scan
-            val (w, h, comps) = frame.getOrElse(return None)
-            if (len < 6) return None
-            val ns = u8(p, b)
-            if (ns != comps.length || len != 6 + 2 * ns) return None
-            var q = b + 1
-            var c = 0
-            while (c < ns) {
-              val cs = u8(p, q)
-              val comp = comps.find(_.id == cs).getOrElse(return None)
-              comp.td = u8(p, q + 1) >> 4
-              comp.ta = u8(p, q + 1) & 0x0f
-              if (comp.td > 3 || comp.ta > 3) return None
-              q += 2
-              c += 1
-            }
-            // baseline full scan: Ss=0, Se=63, Ah=Al=0
-            if (u8(p, q) != 0 || u8(p, q + 1) != 63 ||
-              u8(p, q + 2) != 0) return None
-            return decodeScan(p, e, w, h, comps, quant, dcTabs, acTabs,
+            comp.td = u8(p, q + 1) >> 4
+            comp.ta = u8(p, q + 1) & 0x0f
+            if (comp.td > 3 || comp.ta > 3) return false
+            q += 2
+            c += 1
+          }
+          // baseline full scan: Ss=0, Se=63, Ah=Al=0
+          if (u8(p, q) == 0 && u8(p, q + 1) == 63 && u8(p, q + 2) == 0)
+            pixels = decodeScan(p, e, w, h, comps, quant, dcTabs, acTabs,
               dri)
-          case _ => // APPn/COM/...: skipped
-        }
-        i = j + 2 + len
+          false
+        case _ => true // APPn/COM/...: skipped
       }
     }
-    None // no SOS reached
+    walkMarkers(p)(segment)
+    pixels // None when no SOS was reached
   }
 
   private def decodeScan(p: Array[Byte], scanStart: Int, w: Int, h: Int,
@@ -608,12 +634,7 @@ object Jpeg {
       .map { id =>
         decodeBaseline(synthJpegPayload(id)) match {
           case Some(px) =>
-            val sums = new Array[Long](3)
-            var i = 0
-            while (i < px.data.length) {
-              sums(i % px.channels) += px.data(i) & 0xff
-              i += 1
-            }
+            val sums = Multimodal.channelSums(px)
             def s(c: Int): Option[Long] =
               if (c < px.channels) Some(sums(c)) else None
             (id, px.width, px.height, px.channels, s(0), s(1), s(2))

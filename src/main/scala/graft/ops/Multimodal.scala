@@ -3,21 +3,37 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import MediaBytes._
+
+/** The media codecs' one set of byte readers: unsigned big- and
+  * little-endian integers and four-character codes at an offset. No
+  * bounds checks — each container walk checks its own offsets first.
+  */
+private[ops] object MediaBytes {
+  def u8(p: Array[Byte], o: Int): Int = p(o) & 0xff
+  def be16(p: Array[Byte], o: Int): Int = (u8(p, o) << 8) | u8(p, o + 1)
+  def be32(p: Array[Byte], o: Int): Long =
+    (u8(p, o).toLong << 24) | (u8(p, o + 1) << 16) |
+      (u8(p, o + 2) << 8) | u8(p, o + 3)
+  def be64(p: Array[Byte], o: Int): Long = (be32(p, o) << 32) | be32(p, o + 4)
+  def le16(p: Array[Byte], o: Int): Int = u8(p, o) | (u8(p, o + 1) << 8)
+  def le32(p: Array[Byte], o: Int): Long =
+    u8(p, o).toLong | (u8(p, o + 1) << 8) | (u8(p, o + 2) << 16) |
+      (u8(p, o + 3).toLong << 24)
+  def fourcc(p: Array[Byte], o: Int): String =
+    new String(p, o, 4, "US-ASCII")
+}
+
 /** Multimodal-column plumbing: image/audio/video payloads as opaque
   * `binary` columns with typed metadata, plus decode / feature-extract /
-  * resize / frame-sample stages.
-  *
-  * The Spark-side machinery is REAL and tested: schema, partition-size
-  * control for fat binary rows, batched per-partition processing with a
-  * reused decoder instance (the Scala analog of a Pandas-UDF batch), and
-  * deterministic synthetic payloads. The container-HEADER surface is
-  * real across all four formats ([[ImageCodec]] / [[AudioCodec]] /
-  * [[VideoCodec]]), and pixel-level decode is real for PNG
-  * ([[PixelCodec]] — zlib inflate + all five scanline filters, pure
-  * JDK). Only pixel/frame work on LOSSY codecs (JPEG DCT, MP4 frames)
-  * stays stubbed behind [[StubCodec]] — those genuinely need media
-  * libraries this container lacks; swap it for a JNI/ffmpeg-backed
-  * codec without touching any of the dataflow.
+  * resize stages, batched per partition with a reused decoder (the
+  * Scala analog of a Pandas-UDF batch), over deterministic synthetic
+  * payloads. Each container format has ONE pure-JDK parser, and every
+  * consumer is a projection of it: the header sniffers ([[ImageCodec]],
+  * [[AudioCodec]], [[VideoCodec]]), the sample decoders ([[PixelCodec]]
+  * PNG, [[graft.ops.Jpeg]] baseline JPEG, [[PcmCodec]] 16-bit PCM) and
+  * the routed cycle's media expressions. Only MP4 FRAME decode stays
+  * stubbed ([[StubCodec]]): it needs a video codec library.
   *
   * Scale notes: binary rows are huge relative to text rows, so
   *  - `spark.sql.files.maxPartitionBytes` governs scan-splits, and the
@@ -36,12 +52,13 @@ object Multimodal {
       height: Int,
       duration_ms: Int)
 
+  /** `checksum` and `feat` are null for a blob no decoder accepts. */
   case class MediaFeatures(
       media_id: Long,
       kind: String,
       n_bytes: Int,
-      checksum: Long,
-      feat: Seq[Float]) // fixed-size feature vector
+      checksum: Option[Long],
+      feat: Option[Seq[Float]]) // fixed-size feature vector
 
   /** Deterministic synthetic payload: 16-byte header
     * [magic(4) | width(4) | height(4) | duration(4)] + seeded noise body.
@@ -84,24 +101,14 @@ object Multimodal {
     }
   }
 
-  /** REAL image-container header decode — pure-JVM byte parsing, no
-    * media libraries: PNG dimensions from the IHDR chunk and JPEG
-    * dimensions from a proper marker-segment walk to the first SOF.
-    * This replaces the synthetic-header stub for the image-dimension
-    * path (m02); [[StubCodec]] remains only for pixel-level work
-    * (feature extraction / resample) that genuinely needs codec
-    * libraries absent from this environment.
+  /** REAL image-container header decode: PNG dimensions from the IHDR
+    * chunk and JPEG dimensions from the marker walk to the first SOF —
+    * the parses [[PixelCodec]] and [[graft.ops.Jpeg]] also take (m02).
     */
   object ImageCodec {
 
-    private def u8(p: Array[Byte], o: Int): Int = p(o) & 0xff
-    private def be16(p: Array[Byte], o: Int): Int =
-      (u8(p, o) << 8) | u8(p, o + 1)
-    private def be32(p: Array[Byte], o: Int): Long =
-      (u8(p, o).toLong << 24) | (u8(p, o + 1) << 16) |
-        (u8(p, o + 2) << 8) | u8(p, o + 3)
-
-    private val pngSig =
+    /** The 8-byte PNG signature (PNG spec 5.2). */
+    private[ops] val PngSig: Array[Byte] =
       Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte)
 
     /** (format, width, height) from a PNG or JPEG payload prefix; None
@@ -112,90 +119,56 @@ object Multimodal {
       */
     def decodeDims(payload: Array[Byte]): Option[(String, Int, Int)] =
       if (payload == null) None
-      else if (isPng(payload)) decodePng(payload)
-      else if (payload.length >= 2 && u8(payload, 0) == 0xff &&
-        u8(payload, 1) == 0xd8) decodeJpeg(payload)
-      else None
+      else pngIhdr(payload).map { case (w, h) => ("png", w, h) }
+        .orElse(jpegDims(payload))
 
-    private def isPng(p: Array[Byte]): Boolean =
-      p.length >= 8 && (0 until 8).forall(i => p(i) == pngSig(i))
-
-    /** PNG: the IHDR chunk is REQUIRED to be first (PNG spec 11.2.1):
-      * bytes 8-11 length (must be 13), 12-15 type "IHDR", 16-19 width,
-      * 20-23 height, all big-endian.
+    /** The one PNG IHDR parse: the signature, then the IHDR chunk, which
+      * is REQUIRED to be first (PNG spec 11.2.1): bytes 8-11 length
+      * (must be 13), 12-15 type "IHDR", 16-19 width, 20-23 height, all
+      * big-endian. (width, height) when both are in 1..Int.MaxValue.
       */
-    private def decodePng(p: Array[Byte]): Option[(String, Int, Int)] =
-      if (p.length < 24 || be32(p, 8) != 13L ||
-        !(p(12) == 'I' && p(13) == 'H' && p(14) == 'D' && p(15) == 'R'))
-        None
+    private[ops] def pngIhdr(p: Array[Byte]): Option[(Int, Int)] =
+      if (p.length < 24 || !(0 until 8).forall(i => p(i) == PngSig(i)) ||
+        be32(p, 8) != 13L || fourcc(p, 12) != "IHDR") None
       else {
         val (w, h) = (be32(p, 16), be32(p, 20))
         if (w <= 0 || h <= 0 || w > Int.MaxValue || h > Int.MaxValue) None
-        else Some(("png", w.toInt, h.toInt))
+        else Some((w.toInt, h.toInt))
       }
 
-    /** JPEG: walk marker segments from SOI to the first SOFn frame
-      * header (C0-CF except C4/C8/CC, which are tables/extensions):
-      * precision(1) height(2) width(2) follow the segment length.
-      * Standalone markers (RST, TEM) have no length field; fill bytes
-      * (repeated FF) are permitted before any marker (ITU T.81 B.1.1.2).
+    /** JPEG: [[Jpeg.walkMarkers]] to the first SOFn of any kind, whose
+      * precision(1) height(2) width(2) follow the length. A REAL frame
+      * header is >= 8 bytes long, so a corrupt SOF declaring less
+      * classifies rather than read the next segment as dimensions; only
+      * the dimension bytes must be present. SOS or EOI first: None.
       */
-    private def decodeJpeg(p: Array[Byte]): Option[(String, Int, Int)] = {
-      var i = 2
-      while (i + 3 < p.length) {
-        if (u8(p, i) != 0xff) return None // lost marker alignment
-        var j = i
-        while (j + 1 < p.length && u8(p, j + 1) == 0xff) j += 1 // fill
-        if (j + 1 >= p.length) return None // cut mid fill-run
-        val m = u8(p, j + 1)
-        if (m == 0xd9 || m == 0xda) return None // EOI/SOS before any SOF
-        else if ((m >= 0xd0 && m <= 0xd7) || m == 0x01) i = j + 2
-        else {
-          if (j + 3 >= p.length) return None
-          val len = be16(p, j + 2)
-          if (len < 2) return None
-          val isSof = m >= 0xc0 && m <= 0xcf &&
-            m != 0xc4 && m != 0xc8 && m != 0xcc
-          if (isSof) {
-            // a REAL frame header is >= 8 bytes long (len itself +
-            // precision + height + width + component count); a corrupt
-            // SOF declaring less must classify as undecodable, not
-            // read the next segment's bytes as dimensions
-            if (len < 8 || j + 8 >= p.length) return None
-            val h = be16(p, j + 5)
-            val w = be16(p, j + 7)
-            return if (w > 0 && h > 0) Some(("jpeg", w, h)) else None
-          }
-          i = j + 2 + len
+    private def jpegDims(p: Array[Byte]): Option[(String, Int, Int)] =
+      if (p.length < 2 || u8(p, 0) != 0xff || u8(p, 1) != 0xd8) None
+      else {
+        var dims: Option[(String, Int, Int)] = None
+        Jpeg.walkMarkers(p) { (m, b, len) =>
+          if (Jpeg.isSof(m)) {
+            if (len >= 8 && b + 4 < p.length) {
+              val (h, w) = (be16(p, b + 1), be16(p, b + 3))
+              if (w > 0 && h > 0) dims = Some(("jpeg", w, h))
+            }
+            false
+          } else m != 0xda
         }
+        dims
       }
-      None
-    }
   }
 
-  /** REAL PNG pixel decode — pure JVM end to end: chunk walk
-    * collecting the IDAT stream, zlib inflate
-    * (`java.util.zip.Inflater`, part of the JDK — no media library),
-    * then per-scanline UNFILTERING of all five PNG filter types
-    * (None/Sub/Up/Average/Paeth, PNG spec 9). Covers the
-    * non-interlaced 8-bit-depth color types — grayscale (0),
-    * truecolor (2), truecolor+alpha (6); everything else (palette,
-    * 16-bit, Adam7) classifies as undecodable rather than throwing,
-    * the broken-file-skip discipline. This retires the pixel-level
-    * stub for PNG: feature extraction over PNG columns runs on REAL
-    * decoded samples (m05's oracle recomputes the per-channel sums
-    * from the fixture's closed form without touching a byte of PNG,
-    * so the decode must invert deflate AND every filter exactly).
+  /** REAL PNG pixel decode, pure JDK: [[ImageCodec]]'s IHDR parse, a
+    * chunk walk collecting the IDAT stream, zlib inflate
+    * (`java.util.zip.Inflater`), then per-scanline UNFILTERING of all
+    * five filter types (PNG spec 9). Covers non-interlaced 8-bit
+    * grayscale (0), truecolor (2) and truecolor+alpha (6); palette,
+    * 16-bit and Adam7 classify as undecodable rather than throwing (m05
+    * recomputes the sums from the closed form, so the decode must invert
+    * deflate AND every filter exactly).
     */
   object PixelCodec {
-
-    private def u8(p: Array[Byte], o: Int): Int = p(o) & 0xff
-    private def be32(p: Array[Byte], o: Int): Long =
-      (u8(p, o).toLong << 24) | (u8(p, o + 1) << 16) |
-        (u8(p, o + 2) << 8) | u8(p, o + 3)
-
-    private val pngSig =
-      Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte)
 
     /** Decoded raw samples: row-major, `channels` bytes per pixel. */
     final case class Pixels(width: Int, height: Int, channels: Int,
@@ -214,17 +187,16 @@ object Multimodal {
       * directions are rejected, never padded or clipped).
       */
     def decodePng(p: Array[Byte]): Option[Pixels] = {
-      if (p == null || p.length < 45 || // sig + IHDR + empty IDAT + IEND
-        !(0 until 8).forall(i => p(i) == pngSig(i))) return None
-      if (be32(p, 8) != 13L ||
-        !(p(12) == 'I' && p(13) == 'H' && p(14) == 'D' && p(15) == 'R'))
+      if (p == null || p.length < 45) // sig + IHDR + empty IDAT + IEND
         return None
-      val w = be32(p, 16)
-      val h = be32(p, 20)
+      val (w, h) = ImageCodec.pngIhdr(p) match {
+        case Some(dims) => dims
+        case None => return None
+      }
       val bitDepth = u8(p, 24)
       val colorType = u8(p, 25)
       val interlace = u8(p, 28)
-      if (w <= 0 || h <= 0 || bitDepth != 8 || interlace != 0) return None
+      if (bitDepth != 8 || interlace != 0) return None
       val channels = colorType match {
         case 0 => 1
         case 2 => 3
@@ -232,12 +204,12 @@ object Multimodal {
         case _ => return None
       }
       // dims gate BEFORE any allocation. Per-dimension caps FIRST:
-      // w,h are untrusted 32-bit values, so h*(w*ch+1) can exceed
-      // 2^64 and wrap negative (e.g. w=h=0xFFFFFFFF, ch=1 gives
-      // -2^32), sailing past the product gate and reaching the .toInt
-      // truncations below as garbage. Capping each dimension at
-      // MaxDecodedBytes (2^26) bounds the product at ~2^54 — every
-      // blob the caps reject the product gate would reject anyway.
+      // w,h are untrusted values up to 2^31 - 1, so h*(w*ch+1) can
+      // exceed 2^63 and wrap negative, sailing past the product gate
+      // and reaching the .toInt truncations below as garbage. Capping
+      // each dimension at MaxDecodedBytes (2^26) bounds the product at
+      // ~2^54 — every blob the caps reject the product gate would
+      // reject anyway.
       if (w > MaxDecodedBytes || h > MaxDecodedBytes) return None
       val expected = h * (w * channels.toLong + 1L)
       if (expected > MaxDecodedBytes) return None
@@ -250,16 +222,17 @@ object Multimodal {
         val len = be32(p, i)
         if (len > p.length.toLong - i - 12) return None // truncated chunk
         val l = len.toInt
-        if (p(i + 4) == 'I' && p(i + 5) == 'D' && p(i + 6) == 'A' &&
-          p(i + 7) == 'T') idat.write(p, i + 8, l)
-        else if (p(i + 4) == 'I' && p(i + 5) == 'E' && p(i + 6) == 'N' &&
-          p(i + 7) == 'D') sawEnd = true
+        fourcc(p, i + 4) match {
+          case "IDAT" => idat.write(p, i + 8, l)
+          case "IEND" => sawEnd = true
+          case _ =>
+        }
         i += 12 + l
       }
       if (!sawEnd || idat.size == 0) return None
       inflate(idat.toByteArray, expected.toInt)
-        .flatMap(unfilter(_, w.toInt, h.toInt, channels))
-        .map(Pixels(w.toInt, h.toInt, channels, _))
+        .flatMap(unfilter(_, w, h, channels))
+        .map(Pixels(w, h, channels, _))
     }
 
     /** Inflate to EXACTLY `expected` bytes; a stream that is shorter,
@@ -339,38 +312,37 @@ object Multimodal {
     }
   }
 
-  /** REAL audio-container header decode — RIFF/WAVE chunk walk, pure
-    * JVM: channels / sample rate / bit depth from the `fmt ` chunk and
-    * the payload byte count from the `data` chunk header (duration =
-    * data / byte-rate — no sample decoding needed, exactly how
-    * production audio pipelines size their inputs). Chunk order is NOT
-    * assumed (LIST/INFO chunks before `fmt ` are routine) and chunks
-    * are word-aligned per the RIFF spec. Corrupt blobs classify as
-    * undecodable, never throw.
+  /** REAL audio-container header decode — the one RIFF/WAVE chunk
+    * walk: channels / sample rate / bit depth from `fmt ` and the byte
+    * count from the `data` header (duration = data / byte-rate, no
+    * sample decoding). Corrupt blobs classify, never throw.
     */
   object AudioCodec {
 
-    def decodeWav(p: Array[Byte]): Option[(Int, Int, Int, Long)] = {
-      if (p == null || p.length < 12) return None
-      def ascii(o: Int) = new String(p, o, 4, "US-ASCII")
-      def le16(o: Int): Int = (p(o) & 0xff) | ((p(o + 1) & 0xff) << 8)
-      def le32(o: Int): Long =
-        (p(o) & 0xffL) | ((p(o + 1) & 0xffL) << 8) |
-          ((p(o + 2) & 0xffL) << 16) | ((p(o + 3) & 0xffL) << 24)
-      if (ascii(0) != "RIFF" || ascii(8) != "WAVE") return None
+    /** `fmt ` as (format code, channels, sample rate, bits) and `data`
+      * as (payload offset, declared size); None when absent, both None
+      * for a non-RIFF/WAVE blob. Chunk order is NOT assumed (LIST/INFO
+      * before `fmt ` is routine), chunks are word-aligned, and the walk
+      * stops once both are seen.
+      */
+    private[ops] def chunks(p: Array[Byte])
+        : (Option[(Int, Int, Int, Int)], Option[(Int, Long)]) = {
+      var fmt: Option[(Int, Int, Int, Int)] = None
+      var data: Option[(Int, Long)] = None
+      if (p == null || p.length < 12 || fourcc(p, 0) != "RIFF" ||
+        fourcc(p, 8) != "WAVE") return (fmt, data)
       var i = 12
-      var fmt: Option[(Int, Int, Int)] = None
-      var data: Option[Long] = None
       while (i + 8 <= p.length && (fmt.isEmpty || data.isEmpty)) {
-        val id = ascii(i)
-        val size = le32(i + 4) // unsigned 32-bit, as Long: 0..2^32-1
+        val id = fourcc(p, i)
+        val size = le32(p, i + 4) // unsigned 32-bit, as Long: 0..2^32-1
         // gate on the DECLARED size too: a truncated `fmt ` chunk
         // (size < 16) followed by another chunk would otherwise read
         // the neighbor's header bytes as block-align/bits and classify
         // a corrupt blob successfully with garbage metadata
         if (id == "fmt " && size >= 16L && i + 24 <= p.length)
-          fmt = Some((le16(i + 10), le32(i + 12).toInt, le16(i + 22)))
-        else if (id == "data") data = Some(size)
+          fmt = Some((le16(p, i + 8), le16(p, i + 10),
+            le32(p, i + 12).toInt, le16(p, i + 22)))
+        else if (id == "data") data = Some((i + 8, size))
         // advance in LONG arithmetic: a corrupt size near 2^32 truncated
         // to a small negative Int would otherwise advance by <= 0 and
         // hang the task forever (a hung executor is worse than a throw —
@@ -380,10 +352,30 @@ object Multimodal {
         val next = i.toLong + 8L + size + (size & 1L)
         i = if (next > p.length.toLong) p.length else next.toInt
       }
-      for ((ch, rate, bits) <- fmt; d <- data
-           if ch > 0 && rate > 0 && bits > 0)
-        yield (ch, rate, bits, d)
+      (fmt, data)
     }
+
+    /** (channels, sample rate, bits, data byte count), or None. */
+    def decodeWav(p: Array[Byte]): Option[(Int, Int, Int, Long)] = {
+      val (fmt, data) = chunks(p)
+      for ((_, ch, rate, bits) <- fmt; (_, size) <- data
+           if ch > 0 && rate > 0 && bits > 0)
+        yield (ch, rate, bits, size)
+    }
+
+    /** [[decodeWav]] with the data byte count converted to duration_ms =
+      * bytes * 1000 / byte-rate (the m03 formula). A declared format
+      * whose byte-rate floors to zero (bits*ch*rate < 8 — each factor
+      * individually passes decodeWav's > 0 gates) is garbage and
+      * classifies as undecodable rather than divide by zero in an
+      * executor.
+      */
+    def decodeWavMs(p: Array[Byte]): Option[(Int, Int, Int, Long)] =
+      decodeWav(p).flatMap { case (ch, rate, bits, bytes) =>
+        val byteRate = rate.toLong * ch * bits / 8
+        if (byteRate > 0) Some((ch, rate, bits, bytes * 1000L / byteRate))
+        else None
+      }
   }
 
   /** REAL video-container header decode — ISO-BMFF (MP4) box walk,
@@ -398,15 +390,6 @@ object Multimodal {
     * undecodable, never throw.
     */
   object VideoCodec {
-
-    private def u8(p: Array[Byte], o: Int): Int = p(o) & 0xff
-    private def be32(p: Array[Byte], o: Int): Long =
-      (u8(p, o).toLong << 24) | (u8(p, o + 1) << 16) |
-        (u8(p, o + 2) << 8) | u8(p, o + 3)
-    private def be64(p: Array[Byte], o: Int): Long =
-      (be32(p, o) << 32) | be32(p, o + 4)
-    private def fourcc(p: Array[Byte], o: Int): String =
-      new String(p, o, 4, "US-ASCII")
 
     /** (boxType, payloadStart, boxEnd) for the box at `i`, or None when
       * the header is malformed/truncated. `boxEnd` is clamped to the
@@ -494,9 +477,9 @@ object Multimodal {
       * chunk count — from the FIRST trak carrying a complete stbl
       * (stsz + stts + stco/co64), via pure box-walk arithmetic over
       * moov -> trak -> mdia -> (mdhd, minf -> stbl). No codec work: the
-      * sample tables are plain integers in the container. Derived
-      * metrics (duration_ms, bitrate, keyframe density) are computed by
-      * callers from these raw sums so every division is stated once.
+      * sample tables are plain integers in the container. The derived
+      * metrics are [[SampleStats.metrics]], so every division is stated
+      * once.
       *
       * Undecodable (None) whenever: any table is truncated (declared
       * entry count reaching past its box), an entry count exceeds
@@ -507,7 +490,21 @@ object Multimodal {
       */
     final case class SampleStats(nFrames: Long, totalBytes: Long,
         timescale: Long, totalDelta: Long, nKeyframes: Long,
-        nChunks: Long)
+        nChunks: Long) {
+
+      /** (duration_ms, bitrate_bps, keyframe_density_x1000) by integer
+        * floor division in a FIXED order — duration first, then bitrate
+        * over the floored duration — so the m09 oracle restates them
+        * exactly. None when the duration floors to 0 ms (sub-ms media:
+        * nothing to weight bitrate by).
+        */
+      def metrics: Option[(Long, Long, Long)] = {
+        val durMs = totalDelta * 1000L / timescale
+        if (durMs <= 0) None
+        else Some((durMs, totalBytes * 8000L / durMs,
+          nKeyframes * 1000L / nFrames))
+      }
+    }
 
     /** 16M entries — generous for any real movie (a 24 fps feature film
       * is ~200k frames) while keeping every `count * width` product and
@@ -737,23 +734,31 @@ object Multimodal {
       600L + 100L * (id % 7),
       1000L + Math.floorMod(id * 48271L, 120000L))
 
+  /** One ISO-BMFF box for the synthetic MP4 builders: 32-bit size,
+    * type, payload.
+    */
+  private def box(typ: String, payload: Array[Byte]): Array[Byte] = {
+    val bb = java.nio.ByteBuffer.allocate(8 + payload.length)
+    bb.putInt(8 + payload.length).put(typ.getBytes("US-ASCII"))
+      .put(payload)
+    bb.array()
+  }
+
+  /** A fullbox payload: version + 0 flags, then what `rest` writes
+    * (at most `cap` bytes in all).
+    */
+  private def fullbox(version: Int, rest: java.nio.ByteBuffer => Unit,
+      cap: Int): Array[Byte] = {
+    val bb = java.nio.ByteBuffer.allocate(cap)
+    bb.putInt(version << 24)
+    rest(bb)
+    java.util.Arrays.copyOf(bb.array(), bb.position())
+  }
+
   def synthMp4Payload(id: Long): Array[Byte] = {
     val (w, h, timescale, duration) = synthMp4Params(id)
     val v1 = id % 2 == 1
-    def box(typ: String, payload: Array[Byte]): Array[Byte] = {
-      val bb = java.nio.ByteBuffer.allocate(8 + payload.length)
-      bb.putInt(8 + payload.length).put(typ.getBytes("US-ASCII"))
-        .put(payload)
-      bb.array()
-    }
-    def fullbox0(version: Int, rest: java.nio.ByteBuffer => Unit,
-        cap: Int): Array[Byte] = {
-      val bb = java.nio.ByteBuffer.allocate(cap)
-      bb.putInt(version << 24) // version + 0 flags
-      rest(bb)
-      java.util.Arrays.copyOf(bb.array(), bb.position())
-    }
-    val mvhd = box("mvhd", fullbox0(if (v1) 1 else 0, bb => {
+    val mvhd = box("mvhd", fullbox(if (v1) 1 else 0, bb => {
       if (v1) { bb.putLong(0L); bb.putLong(0L) } // creation, modification
       else { bb.putInt(0); bb.putInt(0) }
       bb.putInt(timescale.toInt)
@@ -762,7 +767,7 @@ object Multimodal {
       bb.put(new Array[Byte](10 + 36 + 24)) // reserved+matrix+predefined
       bb.putInt(2) // next track id
     }, 128))
-    def tkhd(tw: Int, th: Int) = box("tkhd", fullbox0(if (v1) 1 else 0,
+    def tkhd(tw: Int, th: Int) = box("tkhd", fullbox(if (v1) 1 else 0,
       bb => {
         if (v1) { bb.putLong(0L); bb.putLong(0L) }
         else { bb.putInt(0); bb.putInt(0) }
@@ -831,24 +836,12 @@ object Multimodal {
 
   def synthMp4StblPayload(id: Long): Array[Byte] = {
     val (ts, n, d1, d2, k, m) = synthStblParams(id)
-    def box(typ: String, payload: Array[Byte]): Array[Byte] = {
-      val bb = java.nio.ByteBuffer.allocate(8 + payload.length)
-      bb.putInt(8 + payload.length).put(typ.getBytes("US-ASCII"))
-        .put(payload)
-      bb.array()
-    }
-    def full(rest: java.nio.ByteBuffer => Unit, cap: Int): Array[Byte] = {
-      val bb = java.nio.ByteBuffer.allocate(cap)
-      bb.putInt(0) // version 0 + flags
-      rest(bb)
-      java.util.Arrays.copyOf(bb.array(), bb.position())
-    }
-    val mdhd = box("mdhd", full(bb => {
+    val mdhd = box("mdhd", fullbox(0, bb => {
       bb.putInt(0).putInt(0) // creation, modification
       bb.putInt(ts.toInt).putInt(0) // timescale, duration (unused here)
       bb.putInt(0) // language + predefined
     }, 32))
-    val stsz = box("stsz", full(bb => {
+    val stsz = box("stsz", fullbox(0, bb => {
       if (id % 3 == 0) {
         bb.putInt(synthStblSampleSize(id, 0).toInt).putInt(n.toInt)
       } else {
@@ -857,7 +850,7 @@ object Multimodal {
         while (i < n) { bb.putInt(synthStblSampleSize(id, i).toInt); i += 1 }
       }
     }, 16 + 4 * n.toInt))
-    val stts = box("stts", full(bb => {
+    val stts = box("stts", fullbox(0, bb => {
       bb.putInt(2)
       bb.putInt((n / 2).toInt).putInt(d1.toInt)
       bb.putInt((n - n / 2).toInt).putInt(d2.toInt)
@@ -865,18 +858,18 @@ object Multimodal {
     val nSync = (n - 1) / k + 1
     val stss =
       if (id % 4 == 3) Array.empty[Byte]
-      else box("stss", full(bb => {
+      else box("stss", fullbox(0, bb => {
         bb.putInt(nSync.toInt)
         var s = 1L
         while (s <= n) { bb.putInt(s.toInt); s += k }
       }, 16 + 4 * nSync.toInt))
     val chunkTable =
-      if (id % 2 == 0) box("stco", full(bb => {
+      if (id % 2 == 0) box("stco", fullbox(0, bb => {
         bb.putInt(m.toInt)
         var i = 0L
         while (i < m) { bb.putInt((4096L * (i + 1)).toInt); i += 1 }
       }, 16 + 4 * m.toInt))
-      else box("co64", full(bb => {
+      else box("co64", fullbox(0, bb => {
         bb.putInt(m.toInt)
         var i = 0L
         while (i < m) { bb.putLong(4096L * (i + 1)); i += 1 }
@@ -892,14 +885,14 @@ object Multimodal {
     // the SAMPLE tables) so the same payload also passes the header
     // decode: MediaHeader attaches sample-table signals only to blobs
     // whose mp4 header already parsed.
-    val mvhd = box("mvhd", full(bb => {
+    val mvhd = box("mvhd", fullbox(0, bb => {
       bb.putInt(0).putInt(0) // creation, modification
       bb.putInt(1000).putInt(5000) // presentation timescale, duration
       bb.putInt(0x00010000).putShort(0x0100.toShort)
       bb.put(new Array[Byte](10 + 36 + 24))
       bb.putInt(2)
     }, 128))
-    val tkhd = box("tkhd", full(bb => {
+    val tkhd = box("tkhd", fullbox(0, bb => {
       bb.putInt(0).putInt(0) // creation, modification
       bb.putInt(1).putInt(0) // track id, reserved
       bb.putInt(5000) // duration
@@ -920,23 +913,19 @@ object Multimodal {
 
   /** Distributed MP4 sample-table extraction — the m09 query body
     * (same shape as [[videoMeta]]: narrow map, blobs never shuffled).
-    * Derived metrics use integer floor division in a FIXED order
-    * (duration first, then bitrate over the floored duration) so the
-    * oracle can restate them exactly.
+    * The derived metrics are [[VideoCodec.SampleStats.metrics]]; a
+    * blob without them is a -1 sentinel row.
     */
   def videoSampleStats(spark: SparkSession, n: Long): DataFrame = {
     import spark.implicits._
     spark.range(0L, n, 1L, spark.sparkContext.defaultParallelism)
       .map { id =>
-        VideoCodec.decodeSampleTables(synthMp4StblPayload(id)) match {
-          // the floored duration must stay positive to weight bitrate
-          // by (sub-ms media: nothing meaningful to report)
-          case Some(s) if s.totalDelta * 1000L / s.timescale > 0 =>
-            val durMs = s.totalDelta * 1000L / s.timescale
-            (id, s.nFrames, s.totalBytes, durMs,
-              s.totalBytes * 8000L / durMs,
-              s.nKeyframes, s.nKeyframes * 1000L / s.nFrames, s.nChunks)
-          case _ => (id, -1L, -1L, -1L, -1L, -1L, -1L, -1L)
+        VideoCodec.decodeSampleTables(synthMp4StblPayload(id))
+            .flatMap(s => s.metrics.map(s -> _)) match {
+          case Some((s, (durMs, bps, kf))) =>
+            (id, s.nFrames, s.totalBytes, durMs, bps, s.nKeyframes, kf,
+              s.nChunks)
+          case None => (id, -1L, -1L, -1L, -1L, -1L, -1L, -1L)
         }
       }
       .toDF("media_id", "n_frames", "total_bytes", "duration_ms",
@@ -961,74 +950,59 @@ object Multimodal {
     val noise = new Array[Byte](dataBytes)
     new java.util.Random(id).nextBytes(noise)
     val junk = "graftINFO".getBytes("US-ASCII") // odd length: exercises
-    val bb = java.nio.ByteBuffer.allocate(64 + junk.length + dataBytes)
+    // the word-alignment pad (the zero byte after it) the walker must honor
+    val list = java.nio.ByteBuffer.allocate(8 + junk.length + 1)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    bb.put("RIFF".getBytes("US-ASCII"))
-    bb.putInt(36 + junk.length + 1 + dataBytes) // riff size (approx ok)
-    bb.put("WAVE".getBytes("US-ASCII"))
-    bb.put("LIST".getBytes("US-ASCII")).putInt(junk.length).put(junk)
-    bb.put(0.toByte) // the word-alignment pad the walker must honor
+      .put("LIST".getBytes("US-ASCII")).putInt(junk.length).put(junk)
+    wavHeader(36 + junk.length + 1 + dataBytes, // riff size (approx ok)
+      list.array(), ch, rate, bits, dataBytes).put(noise).array()
+  }
+
+  /** The synthetic WAV builders' header: RIFF/WAVE with `riffSize`, the
+    * whole chunks `pre`, a 16-byte PCM `fmt `, and the `data` chunk
+    * header; the buffer has room for exactly `dataBytes` of samples.
+    */
+  private def wavHeader(riffSize: Int, pre: Array[Byte], ch: Int,
+      rate: Int, bits: Int, dataBytes: Int): java.nio.ByteBuffer = {
+    val bb = java.nio.ByteBuffer.allocate(44 + pre.length + dataBytes)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    bb.put("RIFF".getBytes("US-ASCII")).putInt(riffSize)
+    bb.put("WAVE".getBytes("US-ASCII")).put(pre)
     bb.put("fmt ".getBytes("US-ASCII")).putInt(16)
     bb.putShort(1.toShort).putShort(ch.toShort) // PCM, channels
     bb.putInt(rate).putInt(rate * ch * bits / 8) // rate, byte rate
     bb.putShort((ch * bits / 8).toShort).putShort(bits.toShort)
     bb.put("data".getBytes("US-ASCII")).putInt(dataBytes)
-    bb.put(noise)
-    java.util.Arrays.copyOf(bb.array(), bb.position())
   }
 
   /** Distributed WAV metadata extraction — the m03 query body (same
-    * shape as [[imageDims]]: narrow map, blobs never shuffled).
+    * shape as [[imageDims]]: narrow map, blobs never shuffled); a blob
+    * [[AudioCodec.decodeWavMs]] rejects is a -1 sentinel row.
     */
   def audioMeta(spark: SparkSession, n: Long): DataFrame = {
     import spark.implicits._
     spark.range(0L, n, 1L, spark.sparkContext.defaultParallelism)
       .map { id =>
-        AudioCodec.decodeWav(synthWavPayload(id)) match {
-          case Some((ch, rate, bits, dataBytes)) =>
-            (id, ch, rate, bits,
-              dataBytes * 1000L / (rate.toLong * ch * bits / 8))
+        AudioCodec.decodeWavMs(synthWavPayload(id)) match {
+          case Some((ch, rate, bits, ms)) => (id, ch, rate, bits, ms)
           case None => (id, -1, -1, -1, -1L)
         }
       }
       .toDF("media_id", "channels", "sample_rate", "bits", "duration_ms")
   }
 
-  /** REAL audio SAMPLE decode — 16-bit PCM WAV, pure JVM end to end
-    * (PCM is uncompressed; unlike lossy codecs it needs no media
-    * library, so the sample-level path can be as real as PNG's).
-    * Same chunk-walk discipline as [[AudioCodec.decodeWav]] but
-    * captures the data chunk's OFFSET and reads the interleaved
-    * little-endian samples. Only format code 1 (PCM) at 16 bits
-    * qualifies; compressed/float/other-width declarations, a data size
-    * that is not whole frames, or a declared size past the payload end
-    * (truncation) classify as undecodable, never throw. No size gate
-    * is needed: the samples ARE payload bytes — a WAV cannot amplify.
+  /** REAL audio SAMPLE decode — 16-bit PCM WAV: a projection of
+    * [[AudioCodec]]'s chunk walk reading the interleaved little-endian
+    * samples at the data chunk's offset. Only format code 1 (PCM) at 16
+    * bits qualifies; other declarations, a data size that is not whole
+    * frames, or one past the payload end (truncation) classify, never
+    * throw. No size gate: the samples ARE payload bytes.
     */
   object PcmCodec {
 
     /** Some((channels, sampleRate, interleavedSamples)) or None. */
     def decodePcm16(p: Array[Byte]): Option[(Int, Int, Array[Short])] = {
-      if (p == null || p.length < 12) return None
-      def ascii(o: Int) = new String(p, o, 4, "US-ASCII")
-      def le16(o: Int): Int = (p(o) & 0xff) | ((p(o + 1) & 0xff) << 8)
-      def le32(o: Int): Long =
-        (p(o) & 0xffL) | ((p(o + 1) & 0xffL) << 8) |
-          ((p(o + 2) & 0xffL) << 16) | ((p(o + 3) & 0xffL) << 24)
-      if (ascii(0) != "RIFF" || ascii(8) != "WAVE") return None
-      var i = 12
-      var fmt: Option[(Int, Int, Int, Int)] = None // code, ch, rate, bits
-      var data: Option[(Int, Long)] = None // offset, declared size
-      while (i + 8 <= p.length && (fmt.isEmpty || data.isEmpty)) {
-        val id = ascii(i)
-        val size = le32(i + 4)
-        if (id == "fmt " && size >= 16L && i + 24 <= p.length)
-          fmt = Some((le16(i + 8), le16(i + 10), le32(i + 12).toInt,
-            le16(i + 22)))
-        else if (id == "data") data = Some((i + 8, size))
-        val next = i.toLong + 8L + size + (size & 1L)
-        i = if (next > p.length.toLong) p.length else next.toInt
-      }
+      val (fmt, data) = AudioCodec.chunks(p)
       for {
         (code, ch, rate, bits) <- fmt
         (off, size) <- data
@@ -1041,8 +1015,7 @@ object Multimodal {
         val out = new Array[Short](n)
         var j = 0
         while (j < n) {
-          out(j) = ((p(off + 2 * j) & 0xff) |
-            ((p(off + 2 * j + 1) & 0xff) << 8)).toShort
+          out(j) = le16(p, off + 2 * j).toShort
           j += 1
         }
         (ch, rate, out)
@@ -1066,15 +1039,8 @@ object Multimodal {
   def synthPcmWavPayload(id: Long): Array[Byte] = {
     val (ch, rate, frames) = synthPcmParams(id)
     val dataBytes = frames * ch * 2
-    val bb = java.nio.ByteBuffer.allocate(44 + dataBytes)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    bb.put("RIFF".getBytes("US-ASCII")).putInt(36 + dataBytes)
-    bb.put("WAVE".getBytes("US-ASCII"))
-    bb.put("fmt ".getBytes("US-ASCII")).putInt(16)
-    bb.putShort(1).putShort(ch.toShort).putInt(rate)
-      .putInt(rate * ch * 2)
-    bb.putShort((ch * 2).toShort).putShort(16)
-    bb.put("data".getBytes("US-ASCII")).putInt(dataBytes)
+    val bb = wavHeader(36 + dataBytes, Array.emptyByteArray, ch, rate, 16,
+      dataBytes)
     var f = 0
     while (f < frames) {
       var c = 0
@@ -1142,8 +1108,7 @@ object Multimodal {
     new java.util.Random(id).nextBytes(noise)
     val bb = java.nio.ByteBuffer.allocate(64 + noise.length)
     if (id % 2 == 0) {
-      bb.put(Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a)
-        .map(_.toByte))
+      bb.put(ImageCodec.PngSig)
       bb.putInt(13).put("IHDR".getBytes("US-ASCII"))
       bb.putInt(w).putInt(h)
       bb.put(8.toByte).put(2.toByte) // bit depth, truecolor
@@ -1243,14 +1208,11 @@ object Multimodal {
       .put(0.toByte).put(0.toByte).put(0.toByte).array()
     val z = deflate(raw)
     val split = z.length / 2 // two IDAT members, one zlib stream
-    pngSigBytes ++ pngChunk("IHDR", ihdr) ++
+    ImageCodec.PngSig ++ pngChunk("IHDR", ihdr) ++
       pngChunk("IDAT", java.util.Arrays.copyOfRange(z, 0, split)) ++
       pngChunk("IDAT", java.util.Arrays.copyOfRange(z, split, z.length)) ++
       pngChunk("IEND", Array.emptyByteArray)
   }
-
-  private val pngSigBytes =
-    Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte)
 
   private[ops] def pngChunk(typ: String, data: Array[Byte]): Array[Byte] = {
     val t = typ.getBytes("US-ASCII")
@@ -1272,21 +1234,20 @@ object Multimodal {
     } finally d.end()
   }
 
-  /** Per-channel pixel-value sums of one decoded PNG — exact integers,
-    * so the m05 comparison is hash-exact with no floating-point
-    * parity argument needed (means are one division away for callers
-    * that want them).
+  /** Per-channel sample sums of decoded pixels (slots past `channels`
+    * stay 0) — exact integers, so the m05/m08 comparisons are
+    * hash-exact with no floating-point parity argument needed (means
+    * are one division away for callers that want them).
     */
-  def pngChannelSums(payload: Array[Byte]): Option[(Int, Int, Int, Array[Long])] =
-    PixelCodec.decodePng(payload).map { px =>
-      val sums = new Array[Long](4)
-      var i = 0
-      while (i < px.data.length) {
-        sums(i % px.channels) += px.data(i) & 0xff
-        i += 1
-      }
-      (px.width, px.height, px.channels, sums)
+  def channelSums(px: PixelCodec.Pixels): Array[Long] = {
+    val sums = new Array[Long](4)
+    var i = 0
+    while (i < px.data.length) {
+      sums(i % px.channels) += px.data(i) & 0xff
+      i += 1
     }
+    sums
+  }
 
   /** Distributed PNG pixel decode over the synthetic table — the m05
     * query body: batched per-partition decode (same shape as
@@ -1299,10 +1260,12 @@ object Multimodal {
     import spark.implicits._
     spark.range(0L, n, 1L, spark.sparkContext.defaultParallelism)
       .map { id =>
-        pngChannelSums(synthPngPayload(id)) match {
-          case Some((w, h, ch, s)) =>
-            def sum(c: Int): Option[Long] = if (c < ch) Some(s(c)) else None
-            (id, w, h, ch, sum(0), sum(1), sum(2), sum(3))
+        PixelCodec.decodePng(synthPngPayload(id)) match {
+          case Some(px) =>
+            val s = channelSums(px)
+            def sum(c: Int) = if (c < px.channels) Some(s(c)) else None
+            (id, px.width, px.height, px.channels, sum(0), sum(1), sum(2),
+              sum(3))
           case None =>
             (id, -1, -1, -1, Option.empty[Long], Option.empty[Long],
               Option.empty[Long], Option.empty[Long])
@@ -1344,26 +1307,6 @@ object Multimodal {
     out
   }
 
-  /** Production thumbnailing over arbitrary media rows: decode+resize
-    * fused per partition (one pass over the blob bytes, nothing
-    * shuffled but the side*side*channels-byte thumbnail). Undecodable
-    * rows yield a NULL thumbnail rather than vanishing — the caller
-    * decides (the routed stage has already dead-lettered corrupt
-    * blobs; a null here means "not a decodable PNG", e.g. a JPEG).
-    */
-  def thumbnails(media: Dataset[MediaRow], side: Int): DataFrame = {
-    import media.sparkSession.implicits._
-    media.mapPartitions { it =>
-      it.map { m =>
-        PixelCodec.decodePng(m.payload) match {
-          case Some(px) => (m.media_id, px.width, px.height, px.channels,
-            resizeNearest(px, side))
-          case None => (m.media_id, -1, -1, -1, null: Array[Byte])
-        }
-      }
-    }.toDF("media_id", "width", "height", "channels", "thumb")
-  }
-
   /** Distributed thumbnailing over the synthetic PNG table — the m06
     * query body: decode + resize per partition (blobs never shuffled;
     * only side*side*ch ints per row leave the map). Undecodable rows
@@ -1392,23 +1335,20 @@ object Multimodal {
       .toDF("media_id", "tx", "ty", "c0", "c1", "c2", "c3")
   }
 
-  /** STUB decoder — after round 8 it covers VIDEO FRAME decode only
-    * (PNG pixels, baseline-JPEG pixels and 16-bit PCM samples are all
-    * REAL: [[PixelCodec]], [[graft.ops.Jpeg]], [[PcmCodec]]); a real
-    * frame decoder would wrap a video codec library, which this
-    * environment lacks. The dataflow around it (batching, instance
-    * reuse, schema) is production-shaped, and the container surface
-    * for video is real ([[VideoCodec]], incl. the m09 sample-table
-    * walk).
+  /** STUB decoder for VIDEO FRAMES only (everything else is
+    * [[realFeatures]]); a real one would wrap a video codec library.
+    * The dataflow around it is production-shaped, and the video
+    * container surface is real ([[VideoCodec]]).
     */
   object StubCodec {
-    /** "Decode": validate magic, read header dims, hash the body into a
-      * fixed-size pseudo-feature vector. Deterministic per payload.
+    /** "Decode": check the 16-byte MEDI header, hash the body into a
+      * fixed-size pseudo-feature vector. Deterministic per payload;
+      * None for anything else.
       */
-    def decodeToFeatures(payload: Array[Byte], dims: Int): (Long, Array[Float]) = {
-      val bb = java.nio.ByteBuffer.wrap(payload)
-      require(bb.getInt() == 0x4D454449, "bad magic: not a MEDI payload")
-      bb.getInt(); bb.getInt(); bb.getInt() // header consumed
+    def decodeToFeatures(payload: Array[Byte],
+        dims: Int): Option[(Long, Array[Float])] = {
+      if (payload == null || payload.length < 16 ||
+        be32(payload, 0) != 0x4D454449L) return None // "MEDI"
       var checksum = 1469598103934665603L // FNV-1a
       val feat = new Array[Float](dims)
       var i = 16
@@ -1417,7 +1357,7 @@ object Multimodal {
         feat(i % dims) += (payload(i) & 0xff) / 255.0f
         i += 1
       }
-      (checksum, feat)
+      Some((checksum, feat))
     }
 
     /** STUB "resize": real codec would rescale pixels; the fake just
@@ -1433,7 +1373,9 @@ object Multimodal {
 
   /** Decode + feature-extract: batched per partition with one codec
     * instance per task (the mapInPandas batch-shape analog in Scala).
-    * Output drops the payload — downstream never shuffles blobs.
+    * Output drops the payload — downstream never shuffles blobs. Never
+    * throws: a blob no decoder accepts keeps its row, with null
+    * `checksum` and `feat`.
     *
     * Partitioning: `numTasks` (when given) sets the repartition width —
     * the caller sizes it so each task holds a bounded number of payload
@@ -1450,27 +1392,31 @@ object Multimodal {
         media.sparkSession.sparkContext.defaultParallelism)))
       .mapPartitions { it =>
         // codec init happens once per task, not per row. Dispatch:
-        // a decodable PNG or baseline JPEG takes the REAL pixel path
-        // ([[pngFeatures]] — it consumes decoded Pixels, whichever
-        // codec produced them); decodable 16-bit PCM takes the real
-        // sample path; everything else falls back to the disclosed
+        // the REAL decoders ([[realFeatures]]), then the disclosed
         // stub (video FRAME decode needs media libs this container
-        // lacks).
+        // lacks); a blob neither accepts gets null features
         it.map { m =>
-          val (checksum, feat) = PixelCodec.decodePng(m.payload)
-              .orElse(Jpeg.decodeBaseline(m.payload)) match {
-            case Some(px) => pngFeatures(px, dims)
-            case None => PcmCodec.decodePcm16(m.payload) match {
-              case Some((ch, rate, samples)) =>
-                pcmFeatures(ch, rate, samples, dims)
-              case None => StubCodec.decodeToFeatures(m.payload, dims)
-            }
-          }
-          MediaFeatures(m.media_id, m.kind, m.payload.length, checksum,
-            feat.toSeq)
+          val f = realFeatures(m.payload, dims)
+            .orElse(StubCodec.decodeToFeatures(m.payload, dims))
+          MediaFeatures(m.media_id, m.kind,
+            if (m.payload == null) 0 else m.payload.length,
+            f.map(_._1), f.map(_._2.toSeq))
         }
       }
   }
+
+  /** REAL content features of one blob — decoded PNG, then
+    * baseline-JPEG pixels ([[pngFeatures]]), then 16-bit PCM samples
+    * ([[pcmFeatures]]); None when none decodes it. The one dispatch of
+    * [[decodeFeatures]] and the cycle's `media_features` expression.
+    */
+  def realFeatures(payload: Array[Byte],
+      dims: Int): Option[(Long, Array[Float])] =
+    PixelCodec.decodePng(payload).orElse(Jpeg.decodeBaseline(payload))
+      .map(pngFeatures(_, dims))
+      .orElse(PcmCodec.decodePcm16(payload).map { case (ch, rate, s) =>
+        pcmFeatures(ch, rate, s, dims)
+      })
 
   /** REAL feature vector from decoded PCM samples: per-channel mean
     * and RMS (normalized to [-1,1]/[0,1]) in slots 0-3 / 4-7, then

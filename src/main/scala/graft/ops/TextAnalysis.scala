@@ -59,12 +59,15 @@ object TextAnalysis {
     * computation is expressible in ANSI SQL for the oracle; a native
     * implementation would swap in a true O(1)-slide polynomial hash.
     */
-  def rollingFingerprint(text: Column, w: Int = 16): Column = {
-    val t = lower(trim(text))
-    val nWindows = greatest(length(t) - (w - 1), lit(1))
-    array_min(transform(sequence(lit(1), nWindows),
-      i => substring(md5(t.substr(i, lit(w))), 1, 8)))
-  }
+  def rollingFingerprint(text: Column, w: Int = 16): Column =
+    // the normalized text is bound ONCE, as the variable of a
+    // one-element outer lambda: inside the per-window lambda it is a
+    // lambda variable, not a lower(trim(text)) re-evaluated per window
+    element_at(transform(array(lower(trim(text))), t => {
+      val nWindows = greatest(length(t) - (w - 1), lit(1))
+      array_min(transform(sequence(lit(1), nWindows),
+        i => substring(md5(t.substr(i, lit(w))), 1, 8)))
+    }), 1)
 
   /** Language-ID by marker-token voting: a deterministic n-gram-style
     * heuristic — per language, count hits of characteristic tokens; the

@@ -397,7 +397,7 @@ object Discover {
   private[pipeline] val contractViolation: Column =
     col("ts").isNull || col("conv_id").isNull || col("turn_idx").isNull
 
-  private[pipeline] def designGuards(cfg: PipelineConfig)(df: DataFrame): DataFrame = {
+  private[graft] def designGuards(cfg: PipelineConfig)(df: DataFrame): DataFrame = {
     val guarded = df
       .filter(!contractViolation) // schema contract (see above)
       .filter(length(col("text")) > 0) // S3 zero-length skip

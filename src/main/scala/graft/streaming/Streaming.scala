@@ -171,13 +171,13 @@ object Streaming {
     * writer. Exactly-once comes from the file source's offset log in
     * `checkpoint` plus the deterministic per-batch output dirs.
     *
-    * `archivePrefix` and `cutoffSeconds` are DISCOVERY settings: the
-    * stream does not use them, because the file source's seen-file log
-    * replaces discovery. Discovery's row guards
-    * (`Discover.designGuards`: the null-key/null-ts filter, the
-    * zero-length skip and the archive-prefix self-exclusion) are
-    * therefore not applied either: rows they would drop reach the
-    * stream's sinks. The batch-only features — the S6 columns, day
+    * The file source's seen-file log replaces discovery's listing, but
+    * discovery's row guards (`Discover.designGuards`: the
+    * null-key/null-ts filter, the zero-length skip and the
+    * `archivePrefix` self-exclusion) apply to every micro-batch before
+    * the ordering guard, so the stream publishes the rows a cycle
+    * commits. `cutoffSeconds` is a discovery setting the stream does
+    * not use. The batch-only features — the S6 columns, day
     * sealing (`sealDaysGraceSeconds >= 0`), `reauditDays`,
     * `backupAddPrefix`, `deleteAfterProcess` and `lineagePath` — are
     * not implemented by the stream; setting any of them fails fast,
@@ -242,7 +242,7 @@ object Streaming {
         // cached: the count, the quarantine write, and the main path all
         // consume this join — without the cache each would re-read the
         // batch's source files
-        val flagged = batch.join(
+        val flagged = Discover.designGuards(cfg)(batch).join(
           prev.select(col("conv_id"), col("carry_max_idx")),
           Seq("conv_id"), "left").cache()
         val lateRaw = flagged.filter(isLate).drop("carry_max_idx")

@@ -339,7 +339,7 @@ class OpsSpec extends AnyFunSuite {
     val media = Multimodal.synthMedia(spark, 200L)
     val feats = Multimodal.decodeFeatures(media).collect()
     assert(feats.length == 200)
-    assert(feats.forall(_.feat.length == 16))
+    assert(feats.forall(_.feat.get.length == 16))
     // deterministic: same id -> same checksum on re-run
     val again = Multimodal.decodeFeatures(Multimodal.synthMedia(spark, 200L))
       .collect().map(f => f.media_id -> f.checksum).toMap
@@ -1297,7 +1297,7 @@ class OpsSpec extends AnyFunSuite {
     val feats = Multimodal.decodeFeatures(
       Seq(Multimodal.MediaRow(7L, "image", payload, px.width, px.height,
         0)).toDS()).collect()
-    assert(feats.head.checksum == crc.getValue)
+    assert(feats.head.checksum.get == crc.getValue)
     // header dispatch still classifies it as a jpeg
     val hdr = MediaHeader.compute(payload)
     assert(hdr != null && hdr.getUTF8String(0).toString == "jpeg")
@@ -1636,8 +1636,15 @@ class OpsSpec extends AnyFunSuite {
     import spark.implicits._
     val rows = (0L until 6L).map(id => Multimodal.MediaRow(id, "image",
       Multimodal.synthPngPayload(id), 0, 0, 0))
-    val feats = Multimodal.decodeFeatures(spark.createDataset(rows))
+    // a blob no decoder accepts (not even the MEDI stub) keeps its row
+    // with null features instead of failing the task
+    val garbage = Multimodal.MediaRow(6L, "image",
+      Array[Byte](9, 9, 9, 9, 9, 9, 9, 9, 9, 9, 9, 9, 9, 9, 9, 9, 9), 0, 0, 0)
+    val feats = Multimodal.decodeFeatures(
+        spark.createDataset(rows :+ garbage))
       .collect().map(f => f.media_id -> f).toMap
+    assert(feats(6L).n_bytes == 17 && feats(6L).checksum.isEmpty &&
+      feats(6L).feat.isEmpty)
     (0L until 6L).foreach { id =>
       val (w, h) = Multimodal.synthPngDims(id)
       val ch = Multimodal.synthPngChannels(id)
@@ -1646,15 +1653,15 @@ class OpsSpec extends AnyFunSuite {
         val sum = (for (x <- 0 until w; y <- 0 until h)
           yield Multimodal.synthPngValue(id, x, y, c).toLong).sum
         val mean = sum.toDouble / (w.toLong * h) / 255.0
-        assert(math.abs(f.feat(c) - mean) < 1e-6, s"id=$id c=$c")
+        assert(math.abs(f.feat.get(c) - mean) < 1e-6, s"id=$id c=$c")
       }
-      assert(f.feat(8) == w.toFloat && f.feat(9) == h.toFloat &&
-        f.feat(10) == ch.toFloat)
+      assert(f.feat.get(8) == w.toFloat && f.feat.get(9) == h.toFloat &&
+        f.feat.get(10) == ch.toFloat)
       // content-addressed: the checksum is over DECODED samples
       val px = Multimodal.PixelCodec.decodePng(
         Multimodal.synthPngPayload(id)).get
       val crc = new java.util.zip.CRC32(); crc.update(px.data)
-      assert(f.checksum == crc.getValue)
+      assert(f.checksum.get == crc.getValue)
     }
 
     // ... and decodable PCM WAVs to the real sample path: mean/RMS
@@ -1671,10 +1678,10 @@ class OpsSpec extends AnyFunSuite {
         val mean = vals.map(_.toLong).sum.toDouble / frames / 32768.0
         val rms = math.sqrt(
           vals.map(v => v.toLong * v).sum.toDouble / frames) / 32768.0
-        assert(math.abs(f.feat(c) - mean) < 1e-6, s"id=$id c=$c mean")
-        assert(math.abs(f.feat(c + 4) - rms) < 1e-6, s"id=$id c=$c rms")
+        assert(math.abs(f.feat.get(c) - mean) < 1e-6, s"id=$id c=$c mean")
+        assert(math.abs(f.feat.get(c + 4) - rms) < 1e-6, s"id=$id c=$c rms")
       }
-      assert(f.feat(8) == ch.toFloat && f.feat(9) == rate / 1000.0f)
+      assert(f.feat.get(8) == ch.toFloat && f.feat.get(9) == rate / 1000.0f)
     }
   }
 
@@ -1685,14 +1692,16 @@ class OpsSpec extends AnyFunSuite {
       Multimodal.MediaRow(0L, "image", Multimodal.synthPngPayload(4L),
         0, 0, 0),
       Multimodal.MediaRow(1L, "image", Array[Byte](1, 2, 3), 0, 0, 0))
-    val out = Multimodal.thumbnails(spark.createDataset(rows), 4)
+    // the cycle's thumbnail expression, over the same two rows
+    val out = spark.createDataset(rows)
+      .select($"media_id", graft.functions.MediaFeatureExprs
+        .mediaThumb($"payload", 4).as("thumb"))
       .collect().map(r => r.getLong(0) -> r).toMap
     val px = Multimodal.PixelCodec.decodePng(
       Multimodal.synthPngPayload(4L)).get
     assert(out(0L).getAs[Array[Byte]]("thumb").toSeq ==
       Multimodal.resizeNearest(px, 4).toSeq)
-    assert(out(0L).getInt(1) == px.width && out(0L).getInt(3) == px.channels)
-    assert(out(1L).isNullAt(4) && out(1L).getInt(1) == -1,
+    assert(out.size == 2 && out(1L).isNullAt(1),
       "non-PNG rows stay visible with a null thumb")
   }
 

@@ -706,4 +706,40 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       element_at(col("meta"), "media_kind").isNotNull).count() == 0L)
     out.unpersist()
   }
+
+  test("the stream applies discovery's row guards: zero-length text, " +
+      "archive-prefix conv ids and null-ts rows never publish, so a " +
+      "micro-batch commits what the batch cycle commits") {
+    val input = s"$scratch/guard_in"
+    val ts0 = new Timestamp(Synth.baseEpochMs)
+    val day = java.time.Instant.ofEpochMilli(Synth.baseEpochMs).toString
+      .take(10)
+    Seq(
+      ("ok", 0, "user", "2025-01-01T00:00:00Z INFO [user] kept", ts0),
+      ("empty", 0, "user", "", ts0),
+      ("archived/x", 0, "user", "2025-01-01T00:00:00Z INFO [user] again",
+        ts0),
+      ("nullts", 0, "user", "2025-01-01T00:00:00Z INFO [user] no ts",
+        null: Timestamp))
+      .toDF("conv_id", "turn_idx", "role", "text", "ts")
+      .withColumn("tool", lit(null).cast("string"))
+      .withColumn("day", lit(day))
+      .coalesce(1).write.partitionBy("day").parquet(input)
+
+    val streamCfg = PipelineConfig(input, s"$scratch/guard_stream")
+    Streaming.runForeachBatch(spark, streamCfg, s"$scratch/guard_ckpt")
+      .awaitTermination()
+    val streamed = spark.read
+      .parquet(s"${streamCfg.sinkRoot}/stream/batch=0")
+      .select($"conv_id").collect().map(_.getString(0)).toSet
+
+    val cycleCfg = PipelineConfig(input, s"$scratch/guard_cycle")
+    Main.runCycle(spark, cycleCfg,
+      new Timestamp(Synth.baseEpochMs + 365L * 86400000L))
+    val committed = Route.sinkNames.flatMap(s =>
+      Sinks.readSink(spark, cycleCfg.sinkRoot, s).select($"conv_id")
+        .collect().map(_.getString(0))).toSet
+    assert(committed == Set("ok"), s"the cycle commits $committed")
+    assert(streamed == committed, s"the stream published $streamed")
+  }
 }
