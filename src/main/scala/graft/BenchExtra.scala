@@ -242,10 +242,31 @@ object BenchExtra {
 
       section("Full pipeline pass (parse -> route -> enrich -> fused prefix scan)",
         "One wide exchange (the (conv, chunk) repartition for the window); " +
-          "dims join as BroadcastHashJoin; the carry join is SHUFFLE_HASH " +
+          "enrichment is two constant-map lookups, so no join or broadcast " +
+          "exchange; the carry join is SHUFFLE_HASH " +
           "(hinted — AQE's broadcast conversion measured 6-20x slower); " +
           "parse/route/enrich all inside WholeStageCodegen spans.",
         Pipeline(turns))
+
+      section("Committing cycle: staged write",
+        "The one run of the cycle's pipeline plan: the full pipeline pass " +
+          "under the sink layout's salted repartition on (conv_id, " +
+          "pmod(hash(turn_idx), 16)) and the (sink, conv_id, turn_idx) " +
+          "sort, written partitioned by sink. Nothing is cached; every " +
+          "later consumer reads the files.",
+        Sinks.sinkLayout(Pipeline(turns), cfg.saltBuckets))
+
+      section("Committing cycle: metrics aggregate",
+        "ONE grouping-sets aggregate (Expand -> partial + final hash " +
+          "aggregate) over a five-column read-back of the staged files, " +
+          "`sink` from the `sink=` dir names: the per-day watermarks and " +
+          "the three metric tables' rows, told apart by grouping_id().",
+        {
+          Sinks.writeStaged(Pipeline(turns), cfg.sinkRoot, "plans",
+            cfg.saltBuckets)
+          Aggregate.stagedAggregate(spark,
+            Sinks.stagingDir(cfg.sinkRoot, "plans"))
+        })
 
       section("Per-sink aggregate (single grouped pass)",
         "Partial (map-side) + final hash aggregate; the fat `text`/`body` " +

@@ -415,38 +415,57 @@ object Multimodal {
       Some((typ, i + hdr, end))
     }
 
-    /** (width, height, duration_ms) from an MP4 payload; None for
-      * anything unparseable. The ftyp brand check is the format gate
-      * (the conventional MP4 magic at offset 4).
+    /** THE top-level box walk both MP4 decoders read. The ftyp brand
+      * check is the format gate (the conventional MP4 magic at offset
+      * 4). The child boxes of every top-level `moov` go, in file order,
+      * to `visit(boxType, payloadStart, boxEnd)` until it returns true
+      * (done), so a `moov` that leaves the decoder unsatisfied (no mvhd,
+      * no video trak, no usable stbl) does not end the walk. False when
+      * the gate fails or the walk loses box alignment before `visit` is
+      * done (corrupt); true when it is done or the blob ends.
       */
-    def decodeMp4(p: Array[Byte]): Option[(Int, Int, Long)] = {
-      if (p == null || p.length < 12 || fourcc(p, 4) != "ftyp") return None
+    private def walkMoov(p: Array[Byte])(
+        visit: (String, Long, Long) => Boolean): Boolean = {
+      if (p == null || p.length < 12 || fourcc(p, 4) != "ftyp") return false
       val limit = p.length.toLong
       var i = 0L
-      var mvhd: Option[(Long, Long)] = None // (timescale, duration)
-      var dims: Option[(Int, Int)] = None
-      while (i + 8 <= limit && (mvhd.isEmpty || dims.isEmpty)) {
+      while (i + 8 <= limit) {
         boxAt(p, i, limit) match {
-          case None => return None // lost box alignment: corrupt
+          case None => return false // lost box alignment: corrupt
           case Some((typ, body, end)) =>
             if (typ == "moov") {
               var j = body
-              while (j + 8 <= end && (mvhd.isEmpty || dims.isEmpty)) {
+              while (j + 8 <= end) {
                 boxAt(p, j, end) match {
-                  case None => j = end // corrupt child: stop this walk
-                  case Some(("mvhd", b, e)) =>
-                    mvhd = parseMvhd(p, b, e); j = e
-                  case Some(("trak", b, e)) =>
-                    if (dims.isEmpty) dims = parseTrak(p, b, e)
+                  case None => j = end // corrupt child: stop this moov
+                  case Some((c, b, e)) =>
+                    if (visit(c, b, e)) return true
                     j = e
-                  case Some((_, _, e)) => j = e
                 }
               }
             }
             i = end
         }
       }
-      for ((ts, dur) <- mvhd; (w, h) <- dims if ts > 0)
+      true
+    }
+
+    /** (width, height, duration_ms) from an MP4 payload; None for
+      * anything unparseable. The header comes from the first mvhd and
+      * the first video trak, over every `moov` ([[walkMoov]]).
+      */
+    def decodeMp4(p: Array[Byte]): Option[(Int, Int, Long)] = {
+      var mvhd: Option[(Long, Long)] = None // (timescale, duration)
+      var dims: Option[(Int, Int)] = None
+      val ok = walkMoov(p) { (typ, b, e) =>
+        typ match {
+          case "mvhd" => mvhd = parseMvhd(p, b, e)
+          case "trak" => if (dims.isEmpty) dims = parseTrak(p, b, e)
+          case _ =>
+        }
+        mvhd.nonEmpty && dims.nonEmpty
+      }
+      for ((ts, dur) <- mvhd; (w, h) <- dims if ok && ts > 0)
         yield (w, h, dur * 1000L / ts)
     }
 
@@ -513,29 +532,12 @@ object Multimodal {
     private val MaxTableEntries = 1L << 24
 
     def decodeSampleTables(p: Array[Byte]): Option[SampleStats] = {
-      if (p == null || p.length < 12 || fourcc(p, 4) != "ftyp") return None
-      val limit = p.length.toLong
-      var i = 0L
-      while (i + 8 <= limit) {
-        boxAt(p, i, limit) match {
-          case None => return None
-          case Some(("moov", body, end)) =>
-            var j = body
-            while (j + 8 <= end) {
-              boxAt(p, j, end) match {
-                case None => j = end
-                case Some(("trak", tb, te)) =>
-                  val st = parseTrakStbl(p, tb, te)
-                  if (st.isDefined) return st
-                  j = te
-                case Some((_, _, je)) => j = je
-              }
-            }
-            return None // moov walked, no trak with a usable stbl
-          case Some((_, _, end)) => i = end
-        }
+      var st: Option[SampleStats] = None
+      walkMoov(p) { (typ, b, e) =>
+        if (typ == "trak") st = parseTrakStbl(p, b, e)
+        st.isDefined
       }
-      None
+      st
     }
 
     /** mdhd timescale: v0 at payload +12 after 2x u32 times; v1 at +20
@@ -1358,16 +1360,6 @@ object Multimodal {
         i += 1
       }
       Some((checksum, feat))
-    }
-
-    /** STUB "resize": real codec would rescale pixels; the fake just
-      * rewrites the header dims (payload body untouched — deterministic).
-      */
-    def resize(payload: Array[Byte], w: Int, h: Int): Array[Byte] = {
-      val out = payload.clone()
-      val bb = java.nio.ByteBuffer.wrap(out)
-      bb.putInt(4, w); bb.putInt(8, h)
-      out
     }
   }
 

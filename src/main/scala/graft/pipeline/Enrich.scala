@@ -1,35 +1,33 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Enrichment stage: broadcast-hash-join lookups (SURVEY.md §2.3).
+/** Enrichment stage: constant-map lookups (SURVEY.md §2.3).
   *
   * The reference has no relational joins; enrichment enters via the
   * north star: role -> actor_class and tool -> category lookups. Both
-  * dims are tiny (4 / ~10 rows) so they are ALWAYS broadcast — the
-  * `broadcast()` hint makes that explicit rather than relying on the
-  * autoBroadcastJoinThreshold, and there is no shuffle on the fact side.
+  * dims are compile-time constants of 4 and ~10 entries
+  * ([[Schema.roleDim]], [[Schema.toolDim]]), so each lookup is a literal
+  * map in the generated code: `element_at(typedLit(map), key)`. No join,
+  * no broadcast exchange and no Spark job, in any plan that holds it.
   *
-  * Left joins, not inner: an unmapped tool ("mystery_tool" in the
-  * fixtures) must yield a null category, never row loss — row loss would
-  * break the routed-row set-equality invariant.
+  * Lookup semantics are a left join's: an unmapped tool ("mystery_tool"
+  * in the fixtures) or a null key yields a null category and the row
+  * stays — row loss would break the routed-row set-equality invariant.
+  * `element_at` on a map returns null for a missing key under either
+  * ANSI setting. The output keeps the column order the two left joins
+  * produced (`tool`, `role`, the rest, `actor_class`, `tool_category`),
+  * so sink files are unchanged.
   */
 object Enrich {
 
-  def roleDim(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Schema.roleDim.toDF("role", "actor_class")
-  }
-
-  def toolDim(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Schema.toolDim.toDF("tool", "tool_category")
-  }
-
   def apply(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    df.join(broadcast(roleDim(spark)), Seq("role"), "left")
-      .join(broadcast(toolDim(spark)), Seq("tool"), "left")
+    val rest = df.columns.toIndexedSeq.filterNot(Set("tool", "role"))
+    df.select(Seq(col("tool"), col("role")) ++ rest.map(col) ++ Seq(
+      element_at(typedLit(Schema.roleDim.toMap), col("role"))
+        .as("actor_class"),
+      element_at(typedLit(Schema.toolDim.toMap), col("tool"))
+        .as("tool_category")): _*)
   }
 }

@@ -13,13 +13,21 @@ import org.apache.spark.sql.functions._
   * Lifecycle per cycle (SURVEY.md §3.1):
   *   read lineage once -> discover delta (watermark + cutoff predicates,
   *   partition-pruned scan) -> parse (grok columns + header propagation +
-  *   sessionization) -> enrich (broadcast joins) -> route -> staged sink
-  *   writes -> atomic publish -> aggregate metrics -> lineage commit.
+  *   sessionization) -> route -> enrich (constant-map lookups) -> staged
+  *   sink write -> one aggregate over the staged files (per-day
+  *   watermarks + metric rows) -> atomic publish -> metric tables ->
+  *   lineage commit.
   *
-  * Re-running with no new data is a no-op (empty delta -> no publish, no
-  * commit). A crash before the lineage commit leaves the checkpoint
-  * untouched; the re-run reproduces the same batch id and republishes
-  * idempotently.
+  * The staged write is the ONLY run of the pipeline plan: nothing is
+  * cached, and every later consumer (the aggregate, archive,
+  * fingerprints, the consumption mark) reads the files that write
+  * produced — one read -> decode -> write pass per batch, as the
+  * reference does per object (s3.rb:376-396).
+  *
+  * Re-running with no new data is a no-op (empty delta -> an empty
+  * staged write, deleted; no publish, no commit). A crash before the
+  * lineage commit leaves the checkpoint untouched; the re-run
+  * reproduces the same batch id and republishes idempotently.
   */
 object Main {
 
@@ -86,20 +94,17 @@ object Main {
     // optional cross-cycle dedup re-route (reads the committed
     // fingerprint store from the same cycle-start committed set as
     // every other exactly-once check, so a crash re-run reproduces
-    // identical routing)
+    // identical routing) -> the staged write, the plan's one run
     import spark.implicits._
-    val routed = dedupStage(spark, cfg, fingerprintsDir(cfg),
-      committedAtStart, mediaStage(cfg, Pipeline(delta.as[Turn](
-        org.apache.spark.sql.Encoders.product[Turn]),
-        cfg.excludePattern, cfg.chunkSize,
-        codec = Pipeline.codecFor(cfg)))).cache()
+    val staged = stage(spark, cfg, batchId,
+      dedupStage(spark, cfg, fingerprintsDir(cfg), committedAtStart,
+        mediaStage(cfg, Pipeline(delta.as[Turn](
+          org.apache.spark.sql.Encoders.product[Turn]),
+          cfg.excludePattern, cfg.chunkSize,
+          codec = Pipeline.codecFor(cfg)))))
 
-    // new per-day watermarks from the routed delta (one pass; also the
-    // emptiness check)
-    val newWms = routed.groupBy(col("day"))
-      .agg(max(col("ts")).as("mx"), count(lit(1)).as("n"))
-      .collect()
-      .map(r => (r.getString(0), r.getTimestamp(1), r.getLong(2)))
+    // new per-day watermarks, from the staged files' one aggregate
+    val newWms = staged.toSeq.flatMap(_.metrics.days)
     val total = newWms.map(_._3).sum
 
     // day-sealing policy (opt-in): once a day is `sealDaysGraceSeconds`
@@ -233,8 +238,7 @@ object Main {
       }
     }
 
-    if (total == 0L) {
-      routed.unpersist()
+    if (staged.isEmpty) {
       // progress without data: sealing/refresh-only commit (no publish
       // happened under this batchId, so the id's presence in lineage is
       // inert for sink readers). The stranded manifest is STILL written
@@ -264,10 +268,35 @@ object Main {
       Lineage.Commit(batchId, d, sealed_(d, mx), n, observedAt)
     }.toSeq ++ sealCommits.filterNot(c => newDays.contains(c.day)) ++
       reopenCommits
-    val published = publishBatch(spark, cfg, lineageDir, batchId, routed,
-      commits, () => writeStranded())
-    routed.unpersist()
+    val published = publishBatch(spark, cfg, lineageDir, batchId,
+      staged.get, commits, () => writeStranded())
     CycleResult(batchId, total, published)
+  }
+
+  /** What a batch's staged write left: the sink files' schema (the
+    * routed frame's minus `sink`) and the one aggregate over them.
+    */
+  private final case class Staged(
+      schema: org.apache.spark.sql.types.StructType,
+      metrics: Aggregate.BatchMetrics)
+
+  /** Write the routed batch to `_staging/<batchId>` — the one run of its
+    * plan — then check on the driver whether the write produced any
+    * `sink=` dir. None (staging dir deleted, no further Spark job) for
+    * an empty batch; otherwise the one aggregate over the staged files
+    * ([[Aggregate.ofStaged]]).
+    */
+  private def stage(spark: SparkSession, cfg: PipelineConfig,
+      batchId: String, routed: org.apache.spark.sql.DataFrame): Option[Staged] = {
+    // the dedup stage's internal fp column never reaches a sink file
+    val out = routed.drop(graft.ops.Dedup.fpColName)
+    Sinks.writeStaged(out, cfg.sinkRoot, batchId, cfg.saltBuckets)
+    if (Sinks.stagedSinks(spark, cfg.sinkRoot, batchId).isEmpty) {
+      Sinks.dropStaged(spark, cfg.sinkRoot, batchId)
+      None
+    } else Some(Staged(
+      org.apache.spark.sql.types.StructType(out.schema.filter(_.name != "sink")),
+      Aggregate.ofStaged(spark, Sinks.stagingDir(cfg.sinkRoot, batchId))))
   }
 
   /** The seal audit: for each audited day, EVERY source row (no ts
@@ -419,9 +448,10 @@ object Main {
     if (!cfg.dedupAcrossCycles) routed
     else Sinks.readFingerprints(spark, fpDir, committed)
       // keepFp: the computed hash column rides along (hidden from every
-      // user-facing write — publishBatch and the stream drop it before
-      // the sink write) so the fingerprint-store write reuses it
-      // instead of re-hashing the batch's text
+      // user-facing write — the staged write and the stream drop it
+      // before the sink write) so the stream's fingerprint-store write
+      // reuses it; the cycle's write hashes the published text with the
+      // same function (Sinks.writeFingerprints)
       .map(graft.ops.Dedup.reRouteSeen(routed, _,
         Route.contentSinks, Route.duplicateSink, keepFp = true))
       .getOrElse(routed)
@@ -432,29 +462,30 @@ object Main {
   private def fingerprintsDir(cfg: PipelineConfig): String =
     Sinks.fingerprintsDir(cfg.sinkRoot, Lineage.checkpointId(cfg))
 
-  /** The publish discipline every batch (normal or re-driven) follows:
-    * staged write -> atomic publish -> archive copy (iff configured;
-    * BEFORE the commit, like the reference's backup-then-sincedb
-    * ordering s3.rb:169-183, 380-388) -> the caller's pre-commit hook
-    * (stranded manifest / redrive ledger) -> metrics -> lineage commit
-    * -> lineage compaction -> consumption mark (the `delete` analog,
-    * only after the commit succeeded — the reference likewise deletes
-    * last) -> deferred-namespace retirement. ONE definition so the two
-    * callers cannot drift (the redrive path re-converging on this
-    * sequence is how it got archive/metrics/consumption in the first
-    * place).
+  /** The publish discipline every staged batch (normal or re-driven)
+    * follows: atomic publish -> archive copy (iff configured; BEFORE the
+    * commit, like the reference's backup-then-sincedb ordering
+    * s3.rb:169-183, 380-388) -> the caller's pre-commit hook (stranded
+    * manifest / redrive ledger) -> fingerprints (iff configured) ->
+    * metric tables -> lineage commit -> lineage compaction ->
+    * consumption mark (the `delete` analog, only after the commit
+    * succeeded — the reference likewise deletes last) ->
+    * deferred-namespace retirement. ONE definition so the two callers
+    * cannot drift (the redrive path re-converging on this sequence is
+    * how it got archive/metrics/consumption in the first place).
+    * Archive, fingerprints and the consumption mark read the batch's
+    * published files ([[Sinks.readPublished]]); none re-runs the
+    * pipeline plan.
     */
   private def publishBatch(spark: SparkSession, cfg: PipelineConfig,
-      lineageDir: String, batchId: String,
-      routed: org.apache.spark.sql.DataFrame,
+      lineageDir: String, batchId: String, staged: Staged,
       commits: Seq[Lineage.Commit],
       beforeCommit: () => Map[String, Timestamp]): Seq[String] = {
-    // the dedup stage's internal fp column never reaches a sink file
-    Sinks.writeStaged(routed.drop(graft.ops.Dedup.fpColName),
-      cfg.sinkRoot, batchId, cfg.saltBuckets)
     val published = Sinks.publish(spark, cfg.sinkRoot, batchId)
+    def rows = Sinks.readPublished(spark, cfg.sinkRoot, batchId, published,
+      staged.schema)
     if (cfg.backupAddPrefix != null && cfg.backupAddPrefix.nonEmpty)
-      Sinks.archive(routed, cfg.sinkRoot, batchId, cfg.backupAddPrefix,
+      Sinks.archive(rows, cfg.sinkRoot, batchId, cfg.backupAddPrefix,
         // faithful copy incl. the configured S6 metadata columns
         Seq(cfg.storageClassCol, cfg.restoreHeaderCol)
           .filter(c => c != null && c.nonEmpty))
@@ -463,12 +494,12 @@ object Main {
     // manifests/ledger: the fp dir only counts once its batch commits,
     // and the idempotent re-run overwrites it wholesale
     if (cfg.dedupAcrossCycles)
-      Sinks.writeFingerprints(routed, fingerprintsDir(cfg), batchId)
-    Aggregate.writeAll(routed, cfg.sinkRoot, batchId)
+      Sinks.writeFingerprints(rows, fingerprintsDir(cfg), batchId)
+    Aggregate.writeTables(spark, staged.metrics, cfg.sinkRoot, batchId)
     Lineage.commitAt(spark, lineageDir, absorbInto(commits, absorb))
     Lineage.compactAt(spark, lineageDir) // no-op until history accumulates
     if (cfg.deleteAfterProcess)
-      Sinks.markConsumed(routed, cfg.sinkRoot, batchId)
+      Sinks.markConsumed(rows, cfg.sinkRoot, batchId)
     if (cfg.deferralConfigured || cfg.dedupAcrossCycles) {
       // lazily shared: each compactor evaluates the committed set only
       // past its listing threshold, and at most ONE lineage read serves
@@ -679,23 +710,25 @@ object Main {
     // discipline as a normal cycle (publishBatch), the ledger write as
     // its pre-commit hook — it differs only in never advancing a
     // watermark
-    val routed = dedupStage(spark, cfg, fingerprintsDir(cfg), committed,
-      mediaStage(cfg, Pipeline(eligibleNow.as[Turn](
-        org.apache.spark.sql.Encoders.product[Turn]),
-        cfg.excludePattern, cfg.chunkSize,
-        codec = Pipeline.codecFor(cfg))))
-      .cache()
+    val staged = stage(spark, cfg, batchId,
+      dedupStage(spark, cfg, fingerprintsDir(cfg), committed,
+        mediaStage(cfg, Pipeline(eligibleNow.as[Turn](
+          org.apache.spark.sql.Encoders.product[Turn]),
+          cfg.excludePattern, cfg.chunkSize,
+          codec = Pipeline.codecFor(cfg)))))
+      // the pipeline keeps every row: a non-empty input stages rows
+      .getOrElse(throw new IllegalStateException(
+        s"redrive batch $batchId staged no rows from $total eligible"))
     // committed_at = epoch, NOT now: committed_at is the day-dir
     // observation stamp behind the sealed-day reopen check
     // (Lineage.stateAt), and a redrive observes only manifest
     // keys — advancing a sealed day's stamp here would let a backfill
     // that landed just before this commit slip past the next reopen
     // check unaudited
-    val days = eligibleNow.groupBy(col("day"))
-      .agg(max(col("ts")).as("mx"), count(lit(1)).as("n")).collect()
-      .map(r => Lineage.Commit(batchId, r.getString(0), r.getTimestamp(1),
-        r.getLong(2), Lineage.epoch)).toSeq
-    val published = publishBatch(spark, cfg, lineageDir, batchId, routed,
+    val days = staged.metrics.days.map { case (d, mx, n) =>
+      Lineage.Commit(batchId, d, mx, n, Lineage.epoch)
+    }
+    val published = publishBatch(spark, cfg, lineageDir, batchId, staged,
       days,
       // ledger BEFORE commit — see the crash-window analysis above
       // (a redrive manifests nothing, so no watermark absorption)
@@ -704,7 +737,6 @@ object Main {
           s"${Sinks.redrivenDir(cfg.sinkRoot, cid)}/batch=$batchId")
         Map.empty
       })
-    routed.unpersist()
     eligibleNow.unpersist()
     CycleResult(batchId, total, published)
   }

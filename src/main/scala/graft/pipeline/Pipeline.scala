@@ -9,8 +9,9 @@ import org.apache.spark.sql.functions._
   *
   * Ordering rationale (plan quality, not semantics — for the grok and
   * json codecs all four stages commute): routing and enrichment are
-  * NARROW column expressions / broadcast joins, so running them before
-  * the prefix scan's (conv_id, chunk) repartition means the shuffle is
+  * NARROW column expressions (enrichment is a constant-map lookup), so
+  * running them before the prefix scan's (conv_id, chunk) repartition
+  * means the shuffle is
   * the LAST wide step and Catalyst's column pruning can drop any column
   * a given consumer doesn't use from the shuffle itself. An
   * aggregate-only consumer (metrics, Bench) shuffles ~half the bytes

@@ -47,13 +47,16 @@ object Sinks {
     * skew defense described on [[Sinks]].
     */
   def writeBySink(routed: DataFrame, dest: String, saltBuckets: Int): Unit =
+    sinkLayout(routed, saltBuckets).write.mode("overwrite")
+      .partitionBy("sink")
+      .parquet(dest)
+
+  /** The frame [[writeBySink]] writes: salted repartition + secondary sort. */
+  private[graft] def sinkLayout(routed: DataFrame, saltBuckets: Int): DataFrame =
     routed
       .repartition(col("conv_id"),
         pmod(hash(col("turn_idx")), lit(saltBuckets)))
       .sortWithinPartitions(col("sink"), col("conv_id"), col("turn_idx"))
-      .write.mode("overwrite")
-      .partitionBy("sink")
-      .parquet(dest)
 
   /** Publish staged sink dirs as `<sink>/batch=<batchId>`. Idempotent:
     * an existing destination (crashed previous attempt) is replaced
@@ -78,24 +81,53 @@ object Sinks {
     * no reader would change.
     */
   def publish(spark: SparkSession, root: String, batchId: String): Seq[String] = {
-    val conf = spark.sparkContext.hadoopConfiguration
     val staging = new Path(stagingDir(root, batchId))
-    val fs = staging.getFileSystem(conf)
-    if (!fs.exists(staging)) return Seq.empty
-    val published = fs.listStatus(staging).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("sink="))
-      .map { s =>
-        val sink = s.getPath.getName.stripPrefix("sink=")
-        val destDir = new Path(s"$root/$sink")
-        fs.mkdirs(destDir)
-        val dest = new Path(destDir, s"batch=$batchId")
-        if (fs.exists(dest)) fs.delete(dest, true)
-        fs.rename(s.getPath, dest)
-        sink
-      }
+    val fs = staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val published = stagedSinks(spark, root, batchId).map { sink =>
+      val destDir = new Path(s"$root/$sink")
+      fs.mkdirs(destDir)
+      val dest = new Path(destDir, s"batch=$batchId")
+      if (fs.exists(dest)) fs.delete(dest, true)
+      fs.rename(new Path(staging, s"sink=$sink"), dest)
+      sink
+    }
     fs.delete(staging, true)
     published
   }
+
+  /** The sinks a staged write produced, from its `sink=` dir names — a
+    * driver-side listing, no Spark job. Empty when the staged delta had
+    * no rows (the write leaves only its `_SUCCESS` marker) or no staged
+    * dir exists.
+    */
+  def stagedSinks(spark: SparkSession, root: String,
+      batchId: String): Seq[String] = {
+    val staging = new Path(stagingDir(root, batchId))
+    val fs = staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(staging)) Seq.empty
+    else fs.listStatus(staging).toSeq
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith("sink="))
+      .map(_.getPath.getName.stripPrefix("sink="))
+  }
+
+  /** Delete a batch's staging dir (an empty staged write's leftovers). */
+  def dropStaged(spark: SparkSession, root: String, batchId: String): Unit = {
+    val staging = new Path(stagingDir(root, batchId))
+    staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .delete(staging, true)
+  }
+
+  /** A published batch's rows over `sinks`, read back from the
+    * `<sink>/batch=<batchId>` files with `sink` re-attached from each
+    * dir name. `schema` is the written files' schema (the routed frame's
+    * minus `sink`), so the read infers nothing.
+    */
+  def readPublished(spark: SparkSession, root: String, batchId: String,
+      sinks: Seq[String], schema: org.apache.spark.sql.types.StructType)
+      : DataFrame =
+    sinks.map(s => spark.read.schema(schema)
+      .parquet(s"$root/$s/batch=$batchId").withColumn("sink", lit(s)))
+      .reduce(_ unionByName _)
 
   /** The EXPLICIT archive-write op — the `backup_to_bucket` +
     * `backup_add_prefix` action (s3.rb:169-183; spec:274-322 asserts the

@@ -148,6 +148,31 @@ object MediaProps extends Properties("media") {
       }
     }
 
+  /** An MP4 fixture with an empty `moov{udta}` inserted right after its
+    * ftyp box.
+    */
+  private def emptyMoovFirst(p: Array[Byte]): Array[Byte] = {
+    val ftypEnd = java.nio.ByteBuffer.wrap(p).getInt(0)
+    val moov = java.nio.ByteBuffer.allocate(16).putInt(16)
+      .put("moov".getBytes("US-ASCII")).putInt(8)
+      .put("udta".getBytes("US-ASCII")).array()
+    p.take(ftypEnd) ++ moov ++ p.drop(ftypEnd)
+  }
+
+  property("an empty moov ahead of the real one changes neither MP4 " +
+      "decoder's result") =
+    forAllNoShrink(Gen.choose(0L, 999L), Gen.oneOf(
+      Multimodal.synthMp4Payload _, Multimodal.synthMp4StblPayload _)) {
+      (id, gen) =>
+        val p = gen(id)
+        val q = emptyMoovFirst(p)
+        VideoCodec.decodeMp4(q) == VideoCodec.decodeMp4(p) &&
+          VideoCodec.decodeSampleTables(q) ==
+            VideoCodec.decodeSampleTables(p) &&
+          (VideoCodec.decodeMp4(p).isDefined ||
+            VideoCodec.decodeSampleTables(p).isDefined)
+    }
+
   property("decodeFeatures keeps one row per hostile blob, null " +
       "features where no decoder accepts it") =
     forAllNoShrink(genBatch) { ps =>

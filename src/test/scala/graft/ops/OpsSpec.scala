@@ -345,12 +345,6 @@ class OpsSpec extends AnyFunSuite {
       .collect().map(f => f.media_id -> f.checksum).toMap
     assert(feats.forall(f => again(f.media_id) == f.checksum))
 
-    val payload = Multimodal.synthPayload(1L, "image", 100, 80, 0)
-    val resized = Multimodal.StubCodec.resize(payload, 32, 24)
-    val bb = java.nio.ByteBuffer.wrap(resized)
-    assert(bb.getInt() == 0x4D454449 && bb.getInt() == 32 && bb.getInt() == 24)
-    assert(resized.drop(16).sameElements(payload.drop(16)), "body untouched")
-
     // overflow guard: ids large enough that id * 2654435761 wraps Long
     // negative must still produce the true mathematical body length
     // (floorMod; Java % would throw NegativeArraySizeException here)

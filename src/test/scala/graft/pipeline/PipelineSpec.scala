@@ -727,6 +727,19 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(mystery.count() > 0)
     assert(mystery.filter($"tool_category".isNotNull).count() == 0)
     assert(enriched.filter($"actor_class".isNull).count() == 0)
+    // the lookups keep the two left joins' column order
+    val rest = ts.toDF().columns.filterNot(Set("tool", "role"))
+    assert(Enrich(ts.toDF()).columns.toSeq ==
+      Seq("tool", "role") ++ rest ++ Seq("actor_class", "tool_category"))
+    // an unmapped or null key gives null under either ANSI setting
+    val odd = Seq(("x", "mystery_tool"), (null: String, null: String))
+      .toDF("role", "tool")
+    val ansi = spark.conf.get("spark.sql.ansi.enabled")
+    try Seq("true", "false").foreach { on =>
+      spark.conf.set("spark.sql.ansi.enabled", on)
+      assert(Enrich(odd).select($"actor_class", $"tool_category").collect()
+        .forall(r => r.isNullAt(0) && r.isNullAt(1)), s"ansi=$on")
+    } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
   }
 
   test("S6 Glacier eligibility as a pipeline discovery predicate " +
@@ -2082,6 +2095,209 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       !offCols.contains("media_checksum") &&
       !offCols.contains("media_thumb"),
       "feature columns are strictly opt-in")
+  }
+
+  /** The metric-parity fixture: a dead-letter row, an `other`-sink row,
+    * an unmapped tool (null category), a null tool, a null role (so a
+    * null `role` and a null `tool_category` group under the same sink),
+    * and turns over two hours of one day plus a second day.
+    */
+  private def writeMetricFixture(dest: String): Unit = {
+    def at(iso: String) = Timestamp.from(java.time.Instant.parse(iso))
+    def row(c: String, i: Int, role: String, body: String, tool: String,
+        iso: String) = (c, i, role, s"$iso INFO [${Option(role).getOrElse(
+          "system")}] $body", tool, at(iso), iso.substring(0, 10))
+    Seq(row("m1", 0, "user", "hello", null, "2026-05-01T10:15:00Z"),
+      row("m1", 1, "assistant", "hi", null, "2026-05-01T10:45:00Z"),
+      row("m1", 2, "tool", "lookup", "search", "2026-05-01T11:05:00Z"),
+      row("m1", 3, "tool", "odd", "mystery_tool", "2026-05-01T11:30:00Z"),
+      row("m1", 4, "tool", "bare", null, "2026-05-01T11:40:00Z"),
+      row("m2", 0, null, "boot", null, "2026-05-01T11:50:00Z"),
+      row("m2", 1, "narrator", "aside", null, "2026-05-01T11:55:00Z"),
+      row("m3", 0, "user", "next day", null, "2026-05-02T09:00:00Z"),
+      row("m3", 1, "assistant", "calc", "calculator", "2026-05-02T09:10:00Z"))
+      .toDF("conv_id", "turn_idx", "role", "text", "tool", "ts", "day")
+      .union(Seq(("m4", 0, "file", "not a grok line", null: String,
+        at("2026-05-02T09:20:00Z"), "2026-05-02"))
+        .toDF("conv_id", "turn_idx", "role", "text", "tool", "ts", "day"))
+      .write.mode("overwrite").partitionBy("day").parquet(dest)
+  }
+
+  private val metricTables =
+    Seq("by_sink_role", "by_sink_tool_category", "by_sink_hour")
+
+  private def parquetFiles(dir: String): Int =
+    Option(new java.io.File(dir).listFiles).toSeq.flatten
+      .count(_.getName.endsWith(".parquet"))
+
+  private def assertSameTable(got: DataFrame, want: DataFrame,
+      what: String): Unit = {
+    assert(got.schema.map(f => f.name -> f.dataType) ==
+      want.schema.map(f => f.name -> f.dataType), s"$what: schema")
+    // set operations reject map columns: compare those as JSON
+    def comparable(df: DataFrame) = df.select(df.schema.map { f =>
+      f.dataType match {
+        case _: org.apache.spark.sql.types.MapType =>
+          to_json(col(f.name)).as(f.name)
+        case _ => col(f.name)
+      }
+    }: _*)
+    val (g, w) = (comparable(got), comparable(want))
+    assert(g.exceptAll(w).isEmpty && w.exceptAll(g).isEmpty,
+      s"$what: rows\n${got.collect().mkString("\n")}\nvs\n" +
+        want.collect().mkString("\n"))
+  }
+
+  test("metric tables come from ONE aggregate over the staged write and " +
+      "equal Aggregate.writeAll on the same routed frame; lineage rows " +
+      "equal the per-day groupBy") {
+    val in = s"$scratch/metric_in"
+    writeMetricFixture(in)
+    val cfg = PipelineConfig(in, s"$scratch/metric_sinks")
+    val asOf = Timestamp.from(java.time.Instant.parse("2026-06-01T00:00:00Z"))
+    val r = Main.runCycle(spark, cfg, asOf)
+    assert(r.rowsProcessed == 10L)
+
+    // the same routed frame, through the old distributed writer
+    val routed = Pipeline(Discover.delta(spark, cfg, asOf, Map.empty)
+      .as[Turn], cfg.excludePattern, cfg.chunkSize,
+      codec = Pipeline.codecFor(cfg))
+    val refRoot = s"$scratch/metric_ref"
+    Aggregate.writeAll(routed, refRoot, r.batchId)
+    val sinks = routed.select($"sink").distinct().as[String].collect().toSet
+    assert(Set("deadletter", "other", "system").subsetOf(sinks),
+      s"fixture must reach deadletter/other/system, got $sinks")
+    assert(routed.filter($"tool" === "mystery_tool" &&
+      $"tool_category".isNull).count() == 1)
+
+    val base = s"${cfg.sinkRoot}/_metrics/${r.batchId}"
+    assert(new java.io.File(base).list().filterNot(_.startsWith("."))
+      .filterNot(_ == "_SUCCESS").sorted.toSeq == metricTables.sorted,
+      "no table beyond the three")
+    metricTables.foreach { t =>
+      assert(parquetFiles(s"$base/$t") == 1, s"$t is one data file")
+      assertSameTable(spark.read.parquet(s"$base/$t"),
+        spark.read.parquet(s"$refRoot/_metrics/${r.batchId}/$t"), t)
+    }
+    val hours = spark.read.parquet(s"$base/by_sink_hour")
+    assert(hours.select($"hour_start").distinct().count() == 3,
+      "two hours on day one, one on day two")
+
+    val lineage = Lineage.readAt(spark, Lineage.dirFor(cfg))
+      .filter($"batch_id" === r.batchId)
+      .select($"day", $"last_ts", $"rows".as("n"))
+    val want = routed.groupBy($"day")
+      .agg(max($"ts").as("last_ts"), count(lit(1)).as("n"))
+    assertSameTable(lineage, want, "lineage (day, last_ts, n)")
+  }
+
+  test("the committing cycle runs its pipeline plan once: one executed " +
+      "query scans the input and no plan caches; a no-op cycle leaves no " +
+      "staging or metrics dir") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    object plans extends
+        org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+      val listener = new QueryExecutionListener {
+        def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+          seen.add(qe)
+        def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+          seen.add(qe)
+      }
+      /** A plan and, recursively, the plans of the caches it reads. */
+      def withCached(p: org.apache.spark.sql.execution.SparkPlan)
+          : Seq[org.apache.spark.sql.execution.SparkPlan] =
+        p +: collect(p) {
+          case c: InMemoryTableScanExec => c.relation.cachedPlan
+        }.flatMap(withCached)
+      def scans(qe: QueryExecution, dir: String): Boolean =
+        withCached(qe.executedPlan).flatMap(collect(_) {
+          case s: FileSourceScanExec => s.relation.location.rootPaths
+        }).flatten.exists(_.toString.contains(dir))
+      def caches(qe: QueryExecution): Boolean =
+        collect(qe.executedPlan) { case c: InMemoryTableScanExec => c }
+          .nonEmpty
+      /** Every query of `body`, once the listener bus has delivered them
+        * (a sentinel query's event arrives after all earlier ones).
+        */
+      def of[A](body: => A): (A, Seq[QueryExecution]) = {
+        seen.clear()
+        spark.listenerManager.register(listener)
+        try {
+          val a = body
+          val sentinel = spark.range(1).select(lit("plan-once-sentinel"))
+          sentinel.collect()
+          val deadline = System.currentTimeMillis() + 30000L
+          def done = seen.toArray(Array.empty[QueryExecution])
+            .exists(_.analyzed.toString.contains("plan-once-sentinel"))
+          while (!done && System.currentTimeMillis() < deadline)
+            Thread.sleep(20)
+          assert(done, "listener bus drained")
+          (a, seen.toArray(Array.empty[QueryExecution]).toSeq
+            .filterNot(_.analyzed.toString.contains("plan-once-sentinel")))
+        } finally spark.listenerManager.unregister(listener)
+      }
+    }
+    val in = s"$scratch/planonce_input"
+    val n = Synth.writeTable(spark, in, seed, 20L)
+    val cfg = PipelineConfig(in, s"$scratch/planonce_sinks")
+
+    val (r1, qs1) = plans.of(Main.runCycle(spark, cfg, farFuture))
+    assert(r1.rowsProcessed == n)
+    assert(qs1.count(plans.scans(_, "planonce_input")) == 1,
+      "the staged write is the only query that scans the input")
+    assert(!qs1.exists(plans.caches), "no cached relation in any plan")
+
+    val (r2, _) = plans.of(Main.runCycle(spark, cfg, farFuture))
+    assert(r2.rowsProcessed == 0L)
+    assert(!new java.io.File(Sinks.stagingDir(cfg.sinkRoot, r2.batchId))
+      .exists(), "an empty staged write is deleted")
+    assert(!new java.io.File(s"${cfg.sinkRoot}/_metrics/${r2.batchId}")
+      .exists(), "a no-op writes no metrics")
+  }
+
+  test("crash after the staged write, before the lineage commit: the " +
+      "re-run's sinks and metric tables equal a crash-free run") {
+    val in = s"$scratch/crash_in"
+    writeMetricFixture(in)
+    val asOf = Timestamp.from(java.time.Instant.parse("2026-06-01T00:00:00Z"))
+    // the crashing run's lineage dir sits below a regular FILE: the
+    // cycle-start read sees no lineage, and the commit fails after the
+    // publish and the metric writes
+    val block = new java.io.File(s"$scratch/crash_lineage_block")
+    java.nio.file.Files.writeString(block.toPath, "not a dir")
+    val crashCfg = PipelineConfig(in, s"$scratch/crash_sinks",
+      lineagePath = s"${block.getPath}/lineage")
+    intercept[Exception](Main.runCycle(spark, crashCfg, asOf))
+    val okCfg = PipelineConfig(in, s"$scratch/crash_ref_sinks",
+      lineagePath = s"$scratch/crash_ref_lineage")
+    val ref = Main.runCycle(spark, okCfg, asOf)
+    val orphanMetrics =
+      new java.io.File(s"${crashCfg.sinkRoot}/_metrics/${ref.batchId}")
+    assert(orphanMetrics.isDirectory, "the crash hit after the metric writes")
+    assert(Route.sinkNames.forall(s => Sinks.readSink(spark,
+      crashCfg.sinkRoot, s, Lineage.dirFor(crashCfg)).isEmpty),
+      "nothing of the crashed batch is committed")
+
+    block.delete()
+    val re = Main.runCycle(spark, crashCfg, asOf)
+    assert(re.batchId == ref.batchId && re.rowsProcessed == ref.rowsProcessed)
+    assert(re.publishedSinks.sorted == ref.publishedSinks.sorted)
+    ref.publishedSinks.foreach { s =>
+      assertSameTable(
+        Sinks.readSink(spark, crashCfg.sinkRoot, s, Lineage.dirFor(crashCfg)),
+        Sinks.readSink(spark, okCfg.sinkRoot, s, Lineage.dirFor(okCfg)),
+        s"sink $s")
+    }
+    metricTables.foreach { t =>
+      assertSameTable(
+        spark.read.parquet(s"${crashCfg.sinkRoot}/_metrics/${re.batchId}/$t"),
+        spark.read.parquet(s"${okCfg.sinkRoot}/_metrics/${ref.batchId}/$t"), t)
+    }
+    assert(!new java.io.File(s"${crashCfg.sinkRoot}/_staging/${re.batchId}")
+      .exists())
   }
 
   private def write2(dest: String,
