@@ -232,12 +232,12 @@ object BenchExtra {
       val cfg = PipelineConfig(s"$dir/input", s"$dir/sinks")
       val wms = Map("2025-01-01" -> new Timestamp(Synth.baseEpochMs + 3600000L))
       val asOf = new Timestamp(Synth.baseEpochMs + 365L * 86400000L)
-      section("Incremental discovery (literal watermark predicate)",
+      section("Incremental discovery (constant-map watermark lookup)",
         "`PushedFilters` carries only the cutoff `ts <= asOf - cutoff` and " +
-          "the contract guards; `PartitionFilters` is a tautology. The " +
-          "per-day watermark is applied by the Filter after the scan, so " +
-          "it skips no row group and no partition — but no watermark join " +
-          "anywhere.",
+          "the contract guards; there is no `PartitionFilters` term. The " +
+          "per-day watermark is one `element_at` lookup in a literal map, " +
+          "applied by the Filter after the scan: it skips no row group and " +
+          "no partition, and no map size plans a watermark join.",
         Discover.delta(spark, cfg, asOf, wms))
 
       section("Full pipeline pass (parse -> route -> enrich -> fused prefix scan)",

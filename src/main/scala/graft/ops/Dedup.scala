@@ -775,19 +775,6 @@ object Dedup {
       .filter(col("inter") >= col("union_") * jaccardThreshold)
   }
 
-  /** Incremental cross-cycle dedup: drop rows whose normalized
-    * fingerprint already appears in `seenFps` (a single-column `fp`
-    * DataFrame — e.g. fingerprints of previously-published batches).
-    * One left_anti hash join on the 16-byte key; at scale the seen-set
-    * is a bucketed table on `fp` so the join co-partitions. This is the
-    * lineage-integrated dedup a multi-cycle ingest needs: cycle N must
-    * not re-emit documents cycle N-1 already published.
-    */
-  def dropSeen(df: DataFrame, seenFps: DataFrame, textCol: String): DataFrame =
-    df.withColumn("_fp", TextAnalysis.fingerprint(col(textCol)))
-      .join(seenFps.select(col("fp").as("_fp")), Seq("_fp"), "left_anti")
-      .drop("_fp")
-
   /** The fingerprint column [[reRouteSeen]] can retain (keepFp=true) so
     * the store write side (Sinks.writeFingerprints, shared by the
     * cycle and the stream) reuses the ALREADY-computed hash instead of paying a
@@ -796,10 +783,13 @@ object Dedup {
     */
   val fpColName = "_fp"
 
-  /** [[dropSeen]]'s pipeline-integrated sibling: instead of DROPPING a
-    * row whose fingerprint an earlier cycle already published, RE-ROUTE
-    * it to `dupSink` — the engine never silently discards data, so a
-    * cross-cycle duplicate becomes a visible, auditable sink row
+  /** Incremental cross-cycle dedup: a content row whose normalized
+    * fingerprint ([[TextAnalysis.fingerprint]]) appears in `seenFps` (a
+    * single-column `fp` DataFrame — fingerprints of earlier cycles'
+    * published rows) is not dropped but RE-ROUTED to `dupSink`, so
+    * cycle N never re-emits as content what cycle N-1 published. The
+    * engine never silently discards data, so a cross-cycle duplicate
+    * becomes a visible, auditable sink row
     * (graft.pipeline.Route.duplicateSink) that the lineage/seal-audit
     * machinery counts as delivered. Only rows already routed to a
     * content sink are screened; metadata/reject rows keep their sinks.

@@ -18,9 +18,8 @@ import org.apache.spark.sql.functions._
   *    candidate days on the driver from the watermark map so the scan
   *    never lists already-complete partitions;
   *  - zero-length skip (S3) -> `length(text) > 0`;
-  *  - watermark (S4)        -> `ts > wm(day)` as a literal predicate
-  *    filtered right after the scan (a broadcast join against the tiny
-  *    per-day watermark table when the map is too large to inline);
+  *  - watermark (S4)        -> `ts > wm(day)` with `wm(day)` looked up
+  *    in a constant map, filtered right after the scan;
   *  - cutoff (S5)           -> `ts <= asOf - cutoff` with an injected
   *    deterministic `asOf` clock (tests never read the wall clock);
   *  - exclude regex (S7d)   -> `!text.rlike(excludePattern)` is handled in
@@ -36,33 +35,26 @@ object Discover {
   def cutoffPredicate(asOf: Timestamp, cutoffSeconds: Int): Column =
     col("ts") <= lit(new Timestamp(asOf.getTime - cutoffSeconds * 1000L))
 
-  /** How many committed days may be folded into a literal scan predicate
-    * before we fall back to the broadcast-join path (a predicate tree
-    * thousands of terms wide stresses the analyzer for no gain).
-    */
-  val maxLiteralWatermarkTerms = 400
-
-  /** The S4 watermark predicate as a pure literal Column over
-    * (day, ts): `day NOT IN committed  OR  (day = d AND ts > wm_d) ...`.
+  /** The S4 watermark predicate over (day, ts): the day's committed
+    * watermark is one lookup in a constant map,
+    * `wm = element_at(typedLit(wms), day)`, and a row is kept when
+    * `wm IS NULL OR ts > wm` — the reference's `last_modified > sincedb`
+    * (s3.rb:151-152) per partition day. A null or uncommitted day has
+    * no watermark and keeps the row; a null `ts` in a committed day
+    * drops it. The map is a literal in the generated code, so every
+    * map size plans the same: no join, no broadcast exchange.
     *
-    * What reaches the scan: the disjunction mixes the `day` partition
-    * column with the `ts` data column, so Catalyst pushes no `ts > wm`
-    * bound into `PushedFilters` (only the cutoff `ts <= asOf - cutoff`
-    * and the contract guards get there), and its `PartitionFilters`
-    * form is the tautology `(day IS NULL OR day <> d) OR day = d`. The
-    * watermark is therefore applied by the Filter right after the scan:
-    * it skips no row group and prunes no partition. Being literal, it
-    * still needs no join, unlike the broadcast fallback.
+    * What reaches the scan: the predicate mixes the `day` partition
+    * column with the `ts` data column, so Catalyst derives neither a
+    * `PartitionFilters` term nor a `ts > wm` bound in `PushedFilters`
+    * (only the cutoff `ts <= asOf - cutoff` and the contract guards get
+    * there). The watermark is applied by the Filter right after the
+    * scan: it skips no row group and prunes no partition; the listing
+    * already skips completed days ([[completedDays]]).
     */
   def watermarkPredicate(wms: Map[String, Timestamp]): Column = {
-    val days = wms.keys.toSeq.sorted
-    // null day (a __HIVE_DEFAULT_PARTITION__ analog) must behave like the
-    // join fallback: unknown day -> no watermark -> row kept. A bare
-    // `!isin` evaluates to null for null day and would drop the row.
-    val newDay = col("day").isNull || !col("day").isin(days: _*)
-    wms.toSeq.sortBy(_._1).foldLeft(newDay) { case (acc, (d, t)) =>
-      acc || (col("day") === lit(d) && col("ts") > lit(t))
-    }
+    val wm = element_at(typedLit(wms), col("day"))
+    wm.isNull || col("ts") > wm
   }
 
   /** Enumerate the input table's data files ONCE — the snapshot pin.
@@ -292,11 +284,10 @@ object Discover {
     * landing after this call are invisible to every action on the
     * returned DataFrame and surface in the NEXT cycle's delta.
     *
-    * Small watermark maps (the common case: one entry per partition day)
-    * become a literal predicate ([[watermarkPredicate]]), filtered right
-    * after the scan; degenerate maps fall back to a broadcast join —
-    * semantically identical (tested). Of the bounds on `ts`, only the
-    * freshness cutoff is pushed into the Parquet scan.
+    * The per-day watermarks are a constant-map lookup
+    * ([[watermarkPredicate]]), filtered right after the scan. Of the
+    * bounds on `ts`, only the freshness cutoff is pushed into the
+    * Parquet scan.
     */
   def delta(spark: SparkSession, cfg: PipelineConfig, asOf: Timestamp,
       wms: Map[String, Timestamp]): DataFrame =
@@ -451,7 +442,6 @@ object Discover {
   private def baseDelta(spark: SparkSession, cfg: PipelineConfig,
       asOf: Timestamp, wms: Map[String, Timestamp],
       sealedAtMs: Map[String, Long]): (DataFrame, Set[String]) = {
-    import spark.implicits._
     // completed days prune unconditionally UNLESS an observation stamp
     // is supplied (sealing configured), in which case a post-seal
     // landing reopens the day for auditing
@@ -463,15 +453,7 @@ object Discover {
 
     val watermarked =
       if (wms.isEmpty) input
-      else if (wms.size <= maxLiteralWatermarkTerms)
-        input.filter(watermarkPredicate(wms)) // S4, filtered after the scan
-      else {
-        // fallback: broadcast watermark lookup (one row per day — tiny)
-        val wmDf = wms.toSeq.toDF("day", "wm")
-        input.join(broadcast(wmDf), Seq("day"), "left")
-          .filter(col("wm").isNull || col("ts") > col("wm")) // S4
-          .drop("wm")
-      }
+      else input.filter(watermarkPredicate(wms)) // S4, after the scan
 
     val guarded = designGuards(cfg)(
       watermarked.filter(cutoffPredicate(asOf, cfg.cutoffSeconds))) // S5

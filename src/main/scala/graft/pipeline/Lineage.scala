@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Per-partition watermark checkpoint — the sincedb analog.
@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * succeeded (the commit-after-publish ordering mirrors the reference's
   * temp-file -> finalize -> sincedb.write sequence, s3.rb:380-388).
   *
-  * `readState` is called once per run — the reference's 3.8.2 fix
+  * [[stateAt]] is called once per cycle — the reference's 3.8.2 fix
   * ("read sincedb once per cycle, not per object", CHANGELOG.md:8).
   */
 object Lineage {
@@ -64,9 +64,14 @@ object Lineage {
   def read(spark: SparkSession, sinkRoot: String): DataFrame =
     readAt(spark, path(sinkRoot))
 
+  /** Reads with the [[Commit]] encoder's schema: every commit file is
+    * written from it, so inferring the schema from the footers would
+    * cost each cycle a Spark job for a known answer.
+    */
   def readAt(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    if (exists(spark, dir)) spark.read.parquet(dir)
+    if (exists(spark, dir))
+      spark.read.schema(Encoders.product[Commit].schema).parquet(dir)
     else spark.emptyDataset[Commit].toDF()
   }
 

@@ -1,9 +1,8 @@
 package graft.streaming
 
-import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.pipeline._
 
 /** Structured Streaming surface of the transcript pipeline.
@@ -20,30 +19,16 @@ import graft.pipeline._
   *  - the file-source's own tracking of seen files inside
   *    `checkpointLocation` == the sincedb (S17): a restarted query
   *    resumes exactly where it stopped, at-least-once upgraded to
-  *    exactly-once for the file source + foreachBatch idempotent sinks;
-  *  - `withWatermark("ts", "3 seconds")` == CUTOFF_SECOND (S5,
-  *    s3.rb:91): tolerate 3s of event-time disorder before finalizing
-  *    windows.
+  *    exactly-once for the file source + foreachBatch idempotent sinks.
   *
-  * Two processing shapes are provided:
-  *
-  *  1. [[runForeachBatch]] — the production shape. It takes the batch
-  *     cycle's [[graft.pipeline.PipelineConfig]], and each micro-batch
-  *     runs the cycle's own parts: `Pipeline` (parse, route, enrich, the
-  *     chunked prefix scans — legal inside foreachBatch), the media
-  *     stage, the dedup stage over the shared fingerprint store and the
-  *     salted per-sink writer (`Sinks.writeBySink`). Only what a
-  *     trigger changes is its own: the carry across micro-batches, the
-  *     ordering guard and the what=next seam.
-  *
-  *  2. [[streamingAggregates]] — a pure-streaming stateful aggregation:
-  *     watermarked tumbling-hour per-sink counts in update mode (the
-  *     reference's "metrics" analog with real late-data semantics).
-  *
-  * Plus [[StatefulHeaders.propagate]] — per-conversation header
-  * propagation (P5, s3.rb:280-290) as `flatMapGroupsWithState`: the
-  * carried `#Version:` header is genuine keyed state that survives
-  * across micro-batches, which no per-batch window can do.
+  * [[runForeachBatch]] is the stream's one processing shape. It takes
+  * the batch cycle's [[graft.pipeline.PipelineConfig]], and each
+  * micro-batch runs the cycle's own parts: `Pipeline` (parse, route,
+  * enrich, the chunked prefix scans — legal inside foreachBatch), the
+  * media stage, the dedup stage over the shared fingerprint store and
+  * the salted per-sink writer (`Sinks.writeBySink`). Only what a trigger
+  * changes is its own: the [[Carry]] across micro-batches, the ordering
+  * guard and the what=next seam.
   */
 object Streaming {
 
@@ -71,9 +56,21 @@ object Streaming {
     * conversation can SPAN micro-batches; without a carry, headers seen
     * in an earlier batch would not stamp later batches and session ids
     * would restart per batch — diverging from the batch pipeline. The
-    * carry is the foreachBatch analog of the engine-managed state store
-    * (the [[StatefulHeaders]] mechanism), kept in plain parquet so a
-    * retried/restarted batch recomputes it deterministically.
+    * carry is the foreachBatch analog of an engine-managed state store,
+    * kept in plain parquet so a retried/restarted batch recomputes it
+    * deterministically.
+    *
+    * Snapshots live under `<dir>/batch=<id>`. [[read]] takes the latest
+    * snapshot STRICTLY BEFORE a batch id (a retried batch never consults
+    * its own crashed partial write — only the committed predecessor);
+    * [[write]] overwrites idempotently and retains this snapshot plus
+    * the previous two (enough for any retry of batchId or batchId+1 to
+    * find its strictly-earlier snapshot). Full snapshots are the RIGHT
+    * shape for the carry — its state is one row per ACTIVE
+    * conversation, not an ever-growing corpus set; the fingerprint
+    * seen-set, which IS corpus-sized, uses the batch engine's delta +
+    * compaction store instead (Sinks.writeFingerprints, see
+    * [[runForeachBatch]]).
     *
     * Ordering VALIDITY IS CHECKED, not assumed: the carry records each
     * conversation's max committed turn_idx, and a batch delivering
@@ -84,55 +81,8 @@ object Streaming {
     * The reference gets the same guarantee from its serial oldest-first
     * listing (s3.rb:166); a parallel engine has to enforce it.
     */
-  /** The full-snapshot store behind [[Carry]]: per-batch FULL
-    * snapshots under `<dir>/batch=<id>`; reads take the latest
-    * snapshot STRICTLY BEFORE a batch id (a retried batch never
-    * consults its own crashed partial write — only the committed
-    * predecessor); writes overwrite idempotently and retain this
-    * snapshot plus the previous two (enough for any retry of batchId
-    * or batchId+1 to find its strictly-earlier snapshot). Full
-    * snapshots are the RIGHT shape for the carry — its state is one
-    * row per ACTIVE conversation, not an ever-growing corpus set; the
-    * fingerprint seen-set, which IS corpus-sized, uses the batch
-    * engine's delta + compaction store instead
-    * (Sinks.writeFingerprints, see [[runForeachBatch]]).
-    */
-  private[streaming] object SnapshotStore {
-    import org.apache.spark.sql.types.StructType
-
-    def read(spark: SparkSession, dir: String, schema: StructType,
-        beforeBatch: Long): DataFrame = {
-      val d = new org.apache.hadoop.fs.Path(dir)
-      val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val prev =
-        if (!fs.exists(d)) None
-        else fs.listStatus(d).toSeq
-          .map(_.getPath.getName)
-          .filter(_.startsWith("batch="))
-          .map(_.stripPrefix("batch=").toLong)
-          .filter(_ < beforeBatch)
-          .sorted.lastOption
-      prev match {
-        case Some(b) => spark.read.schema(schema).parquet(s"$dir/batch=$b")
-        case None => spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      }
-    }
-
-    def write(state: DataFrame, dir: String, batchId: Long): Unit = {
-      state.write.mode("overwrite").parquet(s"$dir/batch=$batchId")
-      val d = new org.apache.hadoop.fs.Path(dir)
-      val fs = d.getFileSystem(
-        state.sparkSession.sparkContext.hadoopConfiguration)
-      fs.listStatus(d).toSeq
-        .map(_.getPath)
-        .filter(_.getName.startsWith("batch="))
-        .filter(_.getName.stripPrefix("batch=").toLong < batchId - 2)
-        .foreach(p => fs.delete(p, true))
-    }
-  }
-
   object Carry {
+    import org.apache.hadoop.fs.Path
     import org.apache.spark.sql.types._
 
     /** `carry_prev_belongs` is the what=next multiline seam flag: did
@@ -154,11 +104,37 @@ object Streaming {
     def dir(sinkRoot: String): String = s"$sinkRoot/stream/_carry"
 
     def read(spark: SparkSession, sinkRoot: String,
-        beforeBatch: Long): DataFrame =
-      SnapshotStore.read(spark, dir(sinkRoot), schema, beforeBatch)
+        beforeBatch: Long): DataFrame = {
+      val root = dir(sinkRoot)
+      val d = new Path(root)
+      val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val prev =
+        if (!fs.exists(d)) None
+        else fs.listStatus(d).toSeq
+          .map(_.getPath.getName)
+          .filter(_.startsWith("batch="))
+          .map(_.stripPrefix("batch=").toLong)
+          .filter(_ < beforeBatch)
+          .sorted.lastOption
+      prev match {
+        case Some(b) => spark.read.schema(schema).parquet(s"$root/batch=$b")
+        case None => spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+      }
+    }
 
-    def write(state: DataFrame, sinkRoot: String, batchId: Long): Unit =
-      SnapshotStore.write(state, dir(sinkRoot), batchId)
+    def write(state: DataFrame, sinkRoot: String, batchId: Long): Unit = {
+      val root = dir(sinkRoot)
+      state.write.mode("overwrite").parquet(s"$root/batch=$batchId")
+      val d = new Path(root)
+      val fs = d.getFileSystem(
+        state.sparkSession.sparkContext.hadoopConfiguration)
+      fs.listStatus(d).toSeq
+        .map(_.getPath)
+        .filter(_.getName.startsWith("batch="))
+        .filter(_.getName.stripPrefix("batch=").toLong < batchId - 2)
+        .foreach(p => fs.delete(p, true))
+    }
   }
 
   /** Production shape: micro-batch = one reference polling cycle, built
@@ -373,79 +349,4 @@ object Streaming {
     Sinks.batchDirs(spark, fpDir).map(_.split("batch=").last)
       .filter(b => b.nonEmpty && b.forall(_.isDigit) && b.toLong < batchId)
       .toSet
-
-  /** Pure-streaming per-sink hourly counts with a 3-second event-time
-    * watermark (the CUTOFF analog): late rows within 3s still update
-    * their window; older rows are dropped by the engine exactly like
-    * the reference's cutoff defers in-flight files (s3.rb:153-154).
-    * Routing here uses only stateless column expressions (grok parse +
-    * route predicate), which streaming supports natively.
-    */
-  def streamingAggregates(turns: DataFrame, excludePattern: String = ""): DataFrame = {
-    val parsed = Parse.parseColumns(turns)
-    val routed = Route(parsed, excludePattern)
-    routed
-      .withWatermark("ts", "3 seconds")
-      .groupBy(col("sink"), window(col("ts"), "1 hour"))
-      .agg(count(lit(1)).as("n_turns"))
-      .select(col("sink"), col("window.start").as("hour_start"),
-        col("n_turns"))
-  }
-
-  /** Keyed per-conversation state across micro-batches. */
-  object StatefulHeaders {
-
-    case class HeaderState(headerVersion: String, maxTurnIdx: Int)
-
-    case class Stamped(conv_id: String, turn_idx: Int, role: String,
-        text: String, tool: String, ts: Timestamp, header: String,
-        late: Boolean)
-
-    /** P5 as genuine streaming state: the last seen `#Version:` value per
-      * conversation is carried in [[GroupState]] and stamped onto every
-      * later turn — across micro-batch boundaries, which the batch window
-      * cannot see. Within a batch, the group is sorted by turn_idx (the
-      * stable-ordering invariant) so propagation order matches the
-      * reference's serial file read.
-      *
-      * ORDERING GUARD (the Carry path's quarantine discipline, applied
-      * to keyed state): a row whose turn_idx does not exceed the
-      * conversation's committed max is an out-of-order backfill. Its
-      * true header context predates the carried state, so it is
-      * emitted with `late = true` — the caller routes it to quarantine
-      * exactly like the foreachBatch path's stream/_violations — and
-      * it NEVER touches the state: a late header row must not regress
-      * the carried version for rows that legitimately follow it.
-      *
-      * The update function is pure (no clocks), so replays after a
-      * checkpoint recovery produce identical output.
-      */
-    def propagate(turns: org.apache.spark.sql.Dataset[Turn]):
-        org.apache.spark.sql.Dataset[Stamped] = {
-      import turns.sparkSession.implicits._
-      val hdrPattern = Parse.grokDictionary("HEADER_VERSION")
-      turns
-        .groupByKey(_.conv_id)
-        .flatMapGroupsWithState(OutputMode.Append(),
-          GroupStateTimeout.NoTimeout())(
-          (convId: String, it: Iterator[Turn], state: GroupState[HeaderState]) => {
-            val hdrRe = java.util.regex.Pattern.compile(hdrPattern)
-            var st = state.getOption.getOrElse(HeaderState(null, -1))
-            val committedMax = st.maxTurnIdx // frozen at batch start
-            val out = it.toSeq.sortBy(_.turn_idx).map { t =>
-              val late = t.turn_idx <= committedMax
-              if (!late) {
-                val m = hdrRe.matcher(t.text)
-                if (m.matches()) st = HeaderState(m.group(1), t.turn_idx)
-                else if (t.turn_idx > st.maxTurnIdx)
-                  st = st.copy(maxTurnIdx = t.turn_idx)
-              }
-              Stamped(t.conv_id, t.turn_idx, t.role, t.text, t.tool, t.ts,
-                if (late) null else st.headerVersion, late)
-            }
-            state.update(st)
-            out.iterator
-          })
-    }
-  }
 }

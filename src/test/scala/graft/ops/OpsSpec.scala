@@ -272,11 +272,14 @@ class OpsSpec extends AnyFunSuite {
       (4L, "  DOC ONE "), // normalized dup
       (5L, "doc three") // fresh
     ).toDF("doc_id", "text")
-    val kept = Dedup.dropSeen(cycle2, seen, "text")
-      .select($"doc_id").collect().map(_.getLong(0)).toSet
-    assert(kept == Set(5L))
-    assert(Dedup.dropSeen(cycle2, seen, "text").columns.toSeq ==
-      cycle2.columns.toSeq, "schema passes through unchanged")
+      .withColumn("sink", lit("user"))
+    val out = Dedup.reRouteSeen(cycle2, seen,
+      graft.pipeline.Route.contentSinks, graft.pipeline.Route.duplicateSink)
+    val sinks = out.select($"doc_id", $"sink").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(sinks == Map(3L -> "duplicate", 4L -> "duplicate", 5L -> "user"))
+    assert(out.columns.toSeq == cycle2.columns.toSeq,
+      "schema passes through unchanged")
   }
 
   test("simhash: near-identical docs collide, disjoint docs do not") {

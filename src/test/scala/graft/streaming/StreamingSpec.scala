@@ -2,9 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import graft.pipeline._
@@ -64,61 +62,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select($"conv_id", $"turn_idx", $"text")
     val rt = out2.select($"conv_id", $"turn_idx", $"text")
     assert(rt.exceptAll(src).isEmpty && src.exceptAll(rt).isEmpty)
-  }
-
-  test("watermarked streaming hourly aggregates == batch hourly aggregates after drain") {
-    val input = s"$scratch/agg_input"
-    Synth.writeTable(spark, input, 42L, 20L)
-
-    val streamDf = Streaming.streamingAggregates(
-      Streaming.readTurns(spark, PipelineConfig(input, "")))
-    val q = streamDf.writeStream
-      .format("memory").queryName("agg_out")
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-
-    val streamed = spark.table("agg_out")
-      .select($"sink", $"hour_start", $"n_turns")
-    val batch = Route(Parse.parseColumns(spark.read.parquet(input)))
-      .groupBy($"sink", window($"ts", "1 hour").getField("start").as("hour_start"))
-      .agg(count(lit(1)).as("n_turns"))
-    assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty)
-  }
-
-  test("streaming watermark drops too-late rows (the cutoff's accepted " +
-      "data-loss trade-off, s3.rb:91, spec:559-584)") {
-    implicit val sqlCtx = spark.sqlContext
-    def turn(convId: String, idx: Int, iso: String): Turn =
-      Turn(convId, idx, "user", s"${iso} INFO [user] x", null,
-        Timestamp.from(java.time.Instant.parse(iso)))
-    val mem = MemoryStream[Turn]
-    val q = Streaming.streamingAggregates(mem.toDF())
-      .writeStream.format("memory").queryName("late_out")
-      .outputMode("append").start()
-    // two rows in hour 10
-    mem.addData(
-      turn("w1", 0, "2025-01-01T10:00:00Z"),
-      turn("w1", 1, "2025-01-01T10:00:30Z"))
-    q.processAllAvailable()
-    // a much-later row advances the watermark past hour 10 + 3s delay
-    mem.addData(turn("w1", 2, "2025-01-01T12:00:00Z"))
-    q.processAllAvailable()
-    // LATE arrival into the already-finalized hour-10 window: DROPPED —
-    // the reference loses files older than the advanced sincedb the
-    // same way; the cutoff only narrows the window, never closes it
-    mem.addData(turn("w1", 3, "2025-01-01T10:00:40Z"))
-    q.processAllAvailable()
-    // flush the hour-12 window too
-    mem.addData(turn("w1", 4, "2025-01-01T14:00:00Z"))
-    q.processAllAvailable()
-    q.stop()
-    val hour10 = spark.table("late_out")
-      .filter($"hour_start" === Timestamp.from(
-        java.time.Instant.parse("2025-01-01T10:00:00Z")))
-      .agg(sum($"n_turns")).head().getLong(0)
-    assert(hour10 == 2L, "the late row must NOT be counted")
   }
 
   test("ProcessingTime trigger (the 60s polling-interval mode) picks up files appearing between cycles") {
@@ -561,27 +504,39 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       "a non-matching line opens a new record")
   }
 
+  /** Writes each file's turns as one parquet file under `<input>/<name>`,
+    * mtimes ascending in argument order, so a `maxFilesPerTrigger = 1`
+    * stream reads them as consecutive micro-batches.
+    */
+  private def writeOrderedFiles(input: String, files: (String, Seq[Turn])*): Unit =
+    files.zipWithIndex.foreach { case ((name, turns), i) =>
+      turns.toDS().coalesce(1).write.mode("overwrite").parquet(s"$input/$name")
+      new java.io.File(s"$input/$name").listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+        .setLastModified(1000000L * (i + 1))
+    }
+
   test("flatMapGroupsWithState header propagation carries state ACROSS micro-batches") {
+    val input = s"$scratch/hdr_input"
+    val sinkRoot = s"$scratch/hdr_sinks"
     val ts0 = new Timestamp(Synth.baseEpochMs)
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Turn]
-    val out = Streaming.StatefulHeaders.propagate(mem.toDS())
-    val q = out.writeStream.format("memory").queryName("hdr_out")
-      .outputMode("append").start()
+    // file A: header + one data turn; file B: a later turn of the SAME
+    // conversation, plus a fresh conv
+    writeOrderedFiles(input,
+      "a" -> Seq(
+        Turn("c1", 0, "system", "#Version: 2.5", null, ts0),
+        Turn("c1", 1, "user", "2025-01-01T00:00:01Z INFO [user] one", null, ts0)),
+      "b" -> Seq(
+        Turn("c1", 2, "user", "2025-01-01T00:00:02Z INFO [user] two", null, ts0),
+        Turn("c2", 0, "user", "2025-01-01T00:00:03Z INFO [user] no header", null, ts0)))
+    Streaming.runForeachBatch(spark, PipelineConfig(s"$input/*", sinkRoot),
+      s"$scratch/hdr_ckpt", maxFilesPerTrigger = 1).awaitTermination()
+    val nBatches = new java.io.File(s"$sinkRoot/stream").listFiles()
+      .count(_.getName.startsWith("batch="))
+    assert(nBatches == 2, s"one micro-batch per file, got $nBatches")
 
-    // batch 1: header + one data turn
-    mem.addData(
-      Turn("c1", 0, "system", "#Version: 2.5", null, ts0),
-      Turn("c1", 1, "user", "2025-01-01T00:00:01Z INFO [user] one", null, ts0))
-    q.processAllAvailable()
-    // batch 2: later turns of the SAME conversation, plus a fresh conv
-    mem.addData(
-      Turn("c1", 2, "user", "2025-01-01T00:00:02Z INFO [user] two", null, ts0),
-      Turn("c2", 0, "user", "2025-01-01T00:00:03Z INFO [user] no header", null, ts0))
-    q.processAllAvailable()
-    q.stop()
-
-    val rows = spark.table("hdr_out")
+    val rows = spark.read.option("basePath", s"$sinkRoot/stream")
+      .parquet(s"$sinkRoot/stream")
       .select($"conv_id", $"turn_idx", $"header")
       .collect().map(r => (r.getString(0), r.getInt(1)) -> r.getString(2)).toMap
     assert(rows(("c1", 0)) == "2.5") // header row itself carries it
@@ -592,38 +547,36 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("flatMapGroupsWithState ordering guard: late backfill rows are " +
       "flagged, stamped null, and never regress the carried header") {
+    val input = s"$scratch/hdr_late_input"
+    val sinkRoot = s"$scratch/hdr_late_sinks"
     val ts0 = new Timestamp(Synth.baseEpochMs)
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Turn]
-    val out = Streaming.StatefulHeaders.propagate(mem.toDS())
-    val q = out.writeStream.format("memory").queryName("hdr_late")
-      .outputMode("append").start()
+    // file B is a backfilled OLD file — a pre-header turn AND an older
+    // header, both below the carried max turn_idx 9 — followed by a
+    // fresh in-order turn
+    writeOrderedFiles(input,
+      "a" -> Seq(
+        Turn("c1", 5, "system", "#Version: 2.0", null, ts0),
+        Turn("c1", 9, "user", "2025-01-01T00:00:01Z INFO [user] x", null, ts0)),
+      "b" -> Seq(
+        Turn("c1", 2, "user", "2025-01-01T00:00:00Z INFO [user] old", null, ts0),
+        Turn("c1", 3, "system", "#Version: 1.0", null, ts0),
+        Turn("c1", 10, "user", "2025-01-01T00:00:02Z INFO [user] y", null, ts0)))
+    Streaming.runForeachBatch(spark, PipelineConfig(s"$input/*", sinkRoot),
+      s"$scratch/hdr_late_ckpt", maxFilesPerTrigger = 1).awaitTermination()
 
-    mem.addData(
-      Turn("c1", 5, "system", "#Version: 2.0", null, ts0),
-      Turn("c1", 9, "user", "2025-01-01T00:00:01Z INFO [user] x", null, ts0))
-    q.processAllAvailable()
-    // a backfilled OLD file: a pre-header turn AND an older header —
-    // both must be flagged late; the old header must NOT regress state
-    mem.addData(
-      Turn("c1", 2, "user", "2025-01-01T00:00:00Z INFO [user] old", null, ts0),
-      Turn("c1", 3, "system", "#Version: 1.0", null, ts0))
-    q.processAllAvailable()
-    // a fresh in-order turn still sees the CURRENT header
-    mem.addData(
-      Turn("c1", 10, "user", "2025-01-01T00:00:02Z INFO [user] y", null, ts0))
-    q.processAllAvailable()
-    q.stop()
-
-    val rows = spark.table("hdr_late")
-      .select($"turn_idx", $"header", $"late")
-      .collect().map(r => r.getInt(0) -> (r.getString(1), r.getBoolean(2)))
-      .toMap
-    assert(rows(9) == ("2.0", false))
-    assert(rows(2) == (null, true),
-      "a backfilled row must not be stamped with a FUTURE header")
-    assert(rows(3) == (null, true), "late header rows are late too")
-    assert(rows(10) == ("2.0", false),
+    // late rows never reach the pipeline: quarantined raw, unstamped
+    val vio = spark.read.parquet(s"$sinkRoot/stream/_violations/batch=1")
+    assert(vio.columns.toSet == Schema.turnSchema.fieldNames.toSet,
+      "quarantined rows carry no header stamp")
+    assert(vio.select($"turn_idx").collect().map(_.getInt(0)).toSet ==
+      Set(2, 3), "a backfilled row and a late header row are both late")
+    val rows = spark.read.option("basePath", s"$sinkRoot/stream")
+      .parquet(s"$sinkRoot/stream")
+      .select($"turn_idx", $"header")
+      .collect().map(r => r.getInt(0) -> r.getString(1)).toMap
+    assert(rows.keySet == Set(5, 9, 10))
+    assert(rows(9) == "2.0")
+    assert(rows(10) == "2.0",
       "a late 1.0 header must not regress the carried 2.0")
   }
 
