@@ -269,7 +269,7 @@ object Main {
     }.toSeq ++ sealCommits.filterNot(c => newDays.contains(c.day)) ++
       reopenCommits
     val published = publishBatch(spark, cfg, lineageDir, batchId,
-      staged.get, commits, () => writeStranded())
+      staged.get, commits, _ => writeStranded())
     CycleResult(batchId, total, published)
   }
 
@@ -466,21 +466,22 @@ object Main {
     * follows: atomic publish -> archive copy (iff configured; BEFORE the
     * commit, like the reference's backup-then-sincedb ordering
     * s3.rb:169-183, 380-388) -> the caller's pre-commit hook (stranded
-    * manifest / redrive ledger) -> fingerprints (iff configured) ->
-    * metric tables -> lineage commit -> lineage compaction ->
-    * consumption mark (the `delete` analog, only after the commit
-    * succeeded — the reference likewise deletes last) ->
-    * deferred-namespace retirement. ONE definition so the two callers
+    * manifest / redrive ledger; handed the published rows by name, so
+    * a hook that ignores them reads nothing) ->
+    * fingerprints (iff configured) -> metric tables -> lineage commit ->
+    * lineage compaction -> consumption mark (the `delete` analog, only
+    * after the commit succeeded — the reference likewise deletes last)
+    * -> deferred-namespace retirement. ONE definition so the two callers
     * cannot drift (the redrive path re-converging on this sequence is
     * how it got archive/metrics/consumption in the first place).
-    * Archive, fingerprints and the consumption mark read the batch's
-    * published files ([[Sinks.readPublished]]); none re-runs the
+    * Archive, the hook, fingerprints and the consumption mark read the
+    * batch's published files ([[Sinks.readPublished]]); none re-runs the
     * pipeline plan.
     */
   private def publishBatch(spark: SparkSession, cfg: PipelineConfig,
       lineageDir: String, batchId: String, staged: Staged,
       commits: Seq[Lineage.Commit],
-      beforeCommit: () => Map[String, Timestamp]): Seq[String] = {
+      beforeCommit: (=> DataFrame) => Map[String, Timestamp]): Seq[String] = {
     val published = Sinks.publish(spark, cfg.sinkRoot, batchId)
     def rows = Sinks.readPublished(spark, cfg.sinkRoot, batchId, published,
       staged.schema)
@@ -489,7 +490,7 @@ object Main {
         // faithful copy incl. the configured S6 metadata columns
         Seq(cfg.storageClassCol, cfg.restoreHeaderCol)
           .filter(c => c != null && c.nonEmpty))
-    val absorb = beforeCommit()
+    val absorb = beforeCommit(rows)
     // the dedup write side rides the same pre-commit window as the
     // manifests/ledger: the fp dir only counts once its batch commits,
     // and the idempotent re-run overwrites it wholesale
@@ -697,47 +698,41 @@ object Main {
     // committed watermark (and possibly in sealed days), which is
     // precisely why normal discovery can no longer see them.
     val current = Discover.delta(spark, cfg, asOf, Map.empty)
-    val eligibleNow = pendingSemiJoin(current, pending).cache()
-    val redrivenKeys = eligibleNow.select(col("conv_id"), col("turn_idx"))
-    val total = eligibleNow.count()
-    pending.unpersist()
-    if (total == 0L) {
-      eligibleNow.unpersist()
-      return CycleResult(batchId, 0L, Seq.empty)
-    }
+    val eligibleNow = pendingSemiJoin(current, pending)
 
-    // a re-driven batch is a FIRST-CLASS batch: the same publish
-    // discipline as a normal cycle (publishBatch), the ledger write as
-    // its pre-commit hook — it differs only in never advancing a
-    // watermark
+    // a re-driven batch is a FIRST-CLASS batch: the same write-once
+    // staging (its emptiness check included) and publish discipline as
+    // a normal cycle (publishBatch), the ledger write as its pre-commit
+    // hook — it differs only in never advancing a watermark
     val staged = stage(spark, cfg, batchId,
       dedupStage(spark, cfg, fingerprintsDir(cfg), committed,
         mediaStage(cfg, Pipeline(eligibleNow.as[Turn](
           org.apache.spark.sql.Encoders.product[Turn]),
           cfg.excludePattern, cfg.chunkSize,
           codec = Pipeline.codecFor(cfg)))))
-      // the pipeline keeps every row: a non-empty input stages rows
-      .getOrElse(throw new IllegalStateException(
-        s"redrive batch $batchId staged no rows from $total eligible"))
+    pending.unpersist()
+    if (staged.isEmpty) return CycleResult(batchId, 0L, Seq.empty)
+    val total = staged.get.metrics.days.map(_._3).sum
     // committed_at = epoch, NOT now: committed_at is the day-dir
     // observation stamp behind the sealed-day reopen check
     // (Lineage.stateAt), and a redrive observes only manifest
     // keys — advancing a sealed day's stamp here would let a backfill
     // that landed just before this commit slip past the next reopen
     // check unaudited
-    val days = staged.metrics.days.map { case (d, mx, n) =>
+    val days = staged.get.metrics.days.map { case (d, mx, n) =>
       Lineage.Commit(batchId, d, mx, n, Lineage.epoch)
     }
-    val published = publishBatch(spark, cfg, lineageDir, batchId, staged,
-      days,
+    val published = publishBatch(spark, cfg, lineageDir, batchId,
+      staged.get, days,
       // ledger BEFORE commit — see the crash-window analysis above
-      // (a redrive manifests nothing, so no watermark absorption)
-      () => {
-        redrivenKeys.write.mode("overwrite").parquet(
-          s"${Sinks.redrivenDir(cfg.sinkRoot, cid)}/batch=$batchId")
+      // (a redrive manifests nothing, so no watermark absorption). The
+      // pipeline keeps every row, so the published rows' keys are the
+      // eligible keys
+      rows => {
+        rows.select(col("conv_id"), col("turn_idx")).write.mode("overwrite")
+          .parquet(s"${Sinks.redrivenDir(cfg.sinkRoot, cid)}/batch=$batchId")
         Map.empty
       })
-    eligibleNow.unpersist()
     CycleResult(batchId, total, published)
   }
 

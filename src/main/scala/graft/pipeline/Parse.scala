@@ -184,25 +184,31 @@ object Parse {
     *    first row of a conversation always starts) — the scan's lag. Its
     *    record id is 1 + the number of non-belonging rows BEFORE it: the
     *    same running count minus the row's own indicator, plus 1.
+    *
+    * `carryIn` is the scan's ([[PrefixOps.scanMany]]): `session_id` is
+    * the last earlier row's running count (its record id, minus 1 under
+    * what=next when it belongs) and `prev_belongs` whether it belonged.
     */
   def sessionizeConfigured(df: DataFrame, cfg: MultilineConfig,
       chunkSize: Int = 4096, convCol: String = "conv_id",
       idxCol: String = "turn_idx", textCol: String = "text",
-      lastCols: Seq[(Column, String)] = Nil): DataFrame = {
+      lastCols: Seq[(Column, String)] = Nil,
+      carryIn: Option[DataFrame] = None): DataFrame = {
     val next = cfg.what == "next"
     val start = when(coalesce(col("_belongs"), lit(false)), lit(0))
       .otherwise(lit(1))
     val scanned = PrefixOps.scanMany(
       df.withColumn("_belongs", belongsUnder(cfg, textCol)), lastCols,
       Some(start -> "session_id"), chunkSize, convCol, idxCol,
-      lag = if (next) Some(col("_belongs") -> "_prev_belongs") else None)
+      lag = if (next) Some(col("_belongs") -> "prev_belongs") else None,
+      carryIn = carryIn)
     val grouped =
       if (next) scanned
         .withColumn("session_id", col("session_id") - start + 1)
         .withColumn("is_continuation",
-          coalesce(col("_prev_belongs"), lit(false)))
+          coalesce(col("prev_belongs"), lit(false)))
       else scanned.withColumn("is_continuation", col("_belongs"))
-    grouped.drop("_belongs", "_prev_belongs")
+    grouped.drop("_belongs", "prev_belongs")
   }
 
   /** P2: JSON codec mode (spec:397-441; fixtures json.log,

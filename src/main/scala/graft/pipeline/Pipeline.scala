@@ -44,10 +44,15 @@ object Pipeline {
     extends Codec
   case class MultilineCodec(cfg: Parse.MultilineConfig) extends Codec
 
+  /** `carryIn` is the scan's ([[PrefixOps.scanMany]]): `conv_id`,
+    * `header`, `header_fields_carried`, `session_id` and, for the
+    * multiline codec, `prev_belongs` ([[Parse.sessionizeConfigured]]).
+    */
   def apply(ds: Dataset[Turn], excludePattern: String = "",
       chunkSize: Int = 4096,
       includeObjectProperties: Boolean = false,
-      codec: Codec = GrokCodec): DataFrame = {
+      codec: Codec = GrokCodec,
+      carryIn: Option[DataFrame] = None): DataFrame = {
     import org.apache.spark.sql.types.StringType
     // BOTH header families propagate (the reference carries
     // cloudfront_version AND cloudfront_fields per file, s3.rb:280-290),
@@ -60,7 +65,7 @@ object Pipeline {
       PrefixOps.scanMany(Enrich(Route(parsed, excludePattern)), headers,
         Some(when(col("is_continuation"), lit(0)).otherwise(lit(1)) ->
           "session_id"),
-        chunkSize)
+        chunkSize, carryIn = carryIn)
     val scanned = codec match {
       case GrokCodec => routeThenScan(Parse.parseColumns(ds.toDF()))
       case JsonCodec(fields) =>
@@ -77,7 +82,7 @@ object Pipeline {
         // scan output, so this codec routes AFTER its one scan
         Route(Parse.sessionizeConfigured(
           Enrich(Parse.parseColumns(ds.toDF())), mc, chunkSize,
-          lastCols = headers), excludePattern)
+          lastCols = headers, carryIn = carryIn), excludePattern)
     }
     withMeta(scanned, includeObjectProperties)
   }

@@ -60,16 +60,29 @@ object PrefixOps {
     * Chunk summaries are derived from the windowed rows themselves
     * (`max_by(running, idx)` per chunk == the chunk's own scan result at
     * its last row; for the lag, the chunk's last value), so no second
-    * pass over the fat rows is needed; the carry-in table is one row per
-    * (conv, chunk) and joins back on the partitioning the window already
-    * established. A chunk's first row takes its lag from that carry (the
-    * previous chunk's last value), every other row from the in-chunk
-    * window.
+    * pass over the fat rows is needed; the chunk-carry table is one row
+    * per (conv, chunk) and joins back on the partitioning the window
+    * already established. A chunk's first row takes its lag from that
+    * carry (the previous chunk's last value), every other row from the
+    * in-chunk window.
+    *
+    * `carryIn` continues conversations from earlier rows outside `df`:
+    * one row per conversation, `convCol` plus a column per output, named
+    * after it, holding the state at the conversation's last earlier row
+    * — a `lastCols` output's value, the `sum` output's total, the `lag`'s
+    * INPUT value; other columns are ignored. The outputs on `df` then
+    * equal one scan over the earlier rows followed by `df`. A null
+    * carried value carries nothing, and a conversation without a carry
+    * row scans as without `carryIn`. Each carry row is one synthetic
+    * chunk summary at chunk `Long.MinValue`, below every real chunk,
+    * folded in by the chunk-carry window: nothing is added over the fat
+    * rows.
     */
   def scanMany(df: DataFrame, lastCols: Seq[(Column, String)],
       sum: Option[(Column, String)], chunkSize: Int = 4096,
       convCol: String = "conv_id", idxCol: String = "turn_idx",
-      lag: Option[(Column, String)] = None): DataFrame = {
+      lag: Option[(Column, String)] = None,
+      carryIn: Option[DataFrame] = None): DataFrame = {
     require(lastCols.nonEmpty || sum.nonEmpty || lag.nonEmpty,
       "scanMany needs a column to scan")
     val n = lastCols.size
@@ -110,8 +123,14 @@ object PrefixOps {
         max_by(col(rn), col(idxCol)).as(cl)
       } ++ sum.map(_ => max_by(col("_runs"), col(idxCol)).as("_chunk_sum")) ++
         lag.map(_ => max_by(col("_lagv"), col(idxCol)).as("_chunk_lagv"))
-    val summaries = within.groupBy(col(convCol), col("_chunk"))
+    val chunkSummaries = within.groupBy(col(convCol), col("_chunk"))
       .agg(summaryAggs.head, summaryAggs.tail: _*)
+    // the carry-in's synthetic summaries (see the scaladoc)
+    val carried = lastCols.map(_._2).zip(chunkLastNames) ++
+      sum.map(_._2 -> "_chunk_sum") ++ lag.map(_._2 -> "_chunk_lagv")
+    val summaries = carryIn.fold(chunkSummaries)(c => chunkSummaries
+      .unionByName(c.select(col(convCol) +: lit(Long.MinValue).as("_chunk") +:
+        carried.map { case (out, name) => col(out).as(name) }: _*)))
     val wChunks = Window.partitionBy(col(convCol)).orderBy(col("_chunk"))
     val wCarry = wChunks.rowsBetween(Window.unboundedPreceding, -1)
     val carryLasts = chunkLastNames.zip(carryLastNames)

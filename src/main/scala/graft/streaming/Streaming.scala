@@ -27,8 +27,9 @@ import graft.pipeline._
   * enrich, the chunked prefix scans — legal inside foreachBatch), the
   * media stage, the dedup stage over the shared fingerprint store and
   * the salted per-sink writer (`Sinks.writeBySink`). Only what a trigger
-  * changes is its own: the [[Carry]] across micro-batches, the ordering
-  * guard and the what=next seam.
+  * changes is its own: the [[Carry]] snapshot across micro-batches, which
+  * enters the pipeline's prefix scan as its carry-in, and the ordering
+  * guard.
   */
 object Streaming {
 
@@ -51,11 +52,12 @@ object Streaming {
       .parquet(cfg.inputPath)
 
   /** Persisted per-conversation carry state for [[runForeachBatch]]:
-    * (last header values, running record-start count) per conv, written
-    * as a full-state snapshot per micro-batch. With maxFilesPerTrigger a
-    * conversation can SPAN micro-batches; without a carry, headers seen
-    * in an earlier batch would not stamp later batches and session ids
-    * would restart per batch — diverging from the batch pipeline. The
+    * (last header values, last record id, max turn_idx, what=next seam
+    * flag) per conv, written as a full-state snapshot per micro-batch.
+    * With maxFilesPerTrigger a conversation can SPAN micro-batches;
+    * without a carry, headers seen in an earlier batch would not stamp
+    * later batches and session ids would restart per batch — diverging
+    * from the batch pipeline. The
     * carry is the foreachBatch analog of an engine-managed state store,
     * kept in plain parquet so a retried/restarted batch recomputes it
     * deterministically.
@@ -88,8 +90,8 @@ object Streaming {
     /** `carry_prev_belongs` is the what=next multiline seam flag: did
       * the conversation's LAST committed row "belong" under the codec's
       * pattern? If so, the conv's first row of the NEXT batch continues
-      * the same record instead of starting one (see the seam adjustment
-      * in [[runForeachBatch]]). Snapshots written before this field
+      * the same record instead of starting one (the scan's lag carry-in,
+      * see [[runForeachBatch]]). Snapshots written before this field
       * existed read as null == false (no seam), which matches their
       * era's behavior.
       */
@@ -159,12 +161,17 @@ object Streaming {
     * not implemented by the stream; setting any of them fails fast,
     * naming the field, before a query starts.
     *
-    * Cross-batch continuity: header propagation (P5) and session ids
-    * (P3) are adjusted by the persisted [[Carry]] state, so the
-    * streaming output matches the batch pipeline even when a
-    * conversation spans triggers (maxFilesPerTrigger). A retried batch
-    * reads the previous batch's carry and republishes both the output
-    * dir and its own carry snapshot idempotently.
+    * Cross-batch continuity: the persisted [[Carry]] snapshot is the
+    * carry-in of the pipeline's one prefix scan (`Pipeline`'s `carryIn`,
+    * [[graft.pipeline.PrefixOps.scanMany]]): header propagation (P5),
+    * session ids (P3) and the multiline what=next lag continue from each
+    * conversation's last committed row, so the streaming output matches
+    * the batch pipeline even when a conversation spans triggers
+    * (maxFilesPerTrigger). Routing runs on the scan's output, so a
+    * what=next row continuing the previous batch's record routes as a
+    * continuation. A retried batch reads the previous batch's carry and
+    * republishes both the output dir and its own carry snapshot
+    * idempotently.
     *
     * The codec is orthogonal to the trigger, exactly as the reference's
     * codec plugin is orthogonal to its polling loop (s3.rb:35 vs
@@ -205,7 +212,7 @@ object Streaming {
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val sess = batch.sparkSession
-        // cached: the ordering-guard join, the carry-in join and the
+        // cached: the ordering-guard join, the scan's carry-in and the
         // carry-out anti-join all consume this snapshot — uncached,
         // each action would re-scan the carry parquet
         val prev = Carry.read(sess, sinkRoot, batchId).cache()
@@ -230,69 +237,25 @@ object Streaming {
             .parquet(s"$sinkRoot/stream/_violations/batch=$batchId")
         }
         val turns = flagged.filter(!isLate).drop("carry_max_idx").as[Turn]
-        val routed = Pipeline(turns, cfg.excludePattern, cfg.chunkSize,
-          codec = codec)
-        // the multiline what=next SEAM: that codec's "this row
-        // continues" comes from a LAG over the previous row, so the
-        // first row of a batch cannot see the last row of the previous
-        // one — without the carried flag, every record spanning a
-        // micro-batch boundary would split there (and the seam row,
-        // re-classified as a record start, could even dead-letter),
-        // diverging from the batch pipeline. Only what=next has the
-        // lag; grok/json/what=previous use pure per-row predicates.
-        val seamBelongs: Option[org.apache.spark.sql.Column] = codec match {
-          case Pipeline.MultilineCodec(mc) if mc.what == "next" =>
-            Some(Parse.belongsUnder(mc, "text"))
-          case _ => None
-        }
-        // apply carry-in: headers stick across batches; session ids
-        // continue from the running record-start count. Both sides hash
-        // on conv_id (the carry is one row per conv — at scale this is
-        // the same shuffle the batch pipeline's prefix scan already pays)
-        val carried = routed
-          .join(prev, Seq("conv_id"), "left")
-          .withColumn("header",
-            coalesce(col("header"), col("carry_header")))
-          .withColumn("header_fields_carried",
-            coalesce(col("header_fields_carried"), col("carry_fields")))
-        val sessioned = seamBelongs match {
-          case None => carried
-            .withColumn("session_id",
-              col("session_id") + coalesce(col("carry_sessions"), lit(0L)))
-          case Some(_) =>
-            // the conv's first in-order row this batch (computed from
-            // the already-cached raw batch — no pipeline re-derivation)
-            val firstIdx = flagged.filter(!isLate)
-              .groupBy(col("conv_id"))
-              .agg(min(col("turn_idx")).as("_first_idx"))
-            val seamConv = coalesce(col("carry_prev_belongs"), lit(false))
-            val seamRow = seamConv && col("turn_idx") === col("_first_idx")
-            carried.join(firstIdx, Seq("conv_id"), "left")
-              // the seam row CONTINUES the previous batch's record: it
-              // was counted as a start within this batch (its lag saw
-              // nothing), so flip it, re-route it under the corrected
-              // flag, and shift the conv's session ids down by the one
-              // start it no longer contributes
-              .withColumn("is_continuation",
-                col("is_continuation") || seamRow)
-              .withColumn("sink",
-                when(seamRow, Route.sinkExpr(cfg.excludePattern))
-                  .otherwise(col("sink")))
-              .withColumn("session_id",
-                col("session_id") + coalesce(col("carry_sessions"), lit(0L))
-                  - when(seamConv, lit(1L)).otherwise(lit(0L)))
-              .drop("_first_idx")
-        }
-        // multimodal stage (opt-in, the batch cycle's own): AFTER the
-        // seam correction so its deadletter override outranks the
-        // seam's sink rewrite — exactly the batch ordering, where the
-        // stage runs on the fully-routed frame — and BEFORE the dedup
-        // re-route so an undecodable-media row never reaches the
+        // carry-in: the scan's state at each conversation's last
+        // committed row. The scan carries a running count, one less than
+        // the record id when that row belongs under what=next;
+        // carry_prev_belongs is false for every other codec, so one
+        // expression serves them all
+        val carryIn = prev.select(col("conv_id"),
+          col("carry_header").as("header"),
+          col("carry_fields").as("header_fields_carried"),
+          (col("carry_sessions") -
+            when(coalesce(col("carry_prev_belongs"), lit(false)), lit(1L))
+              .otherwise(lit(0L))).as("session_id"),
+          col("carry_prev_belongs").as("prev_belongs"))
+        // multimodal stage (opt-in, the batch cycle's own) on the
+        // fully-routed frame, exactly the batch ordering, and BEFORE the
+        // dedup re-route so an undecodable-media row never reaches the
         // fingerprint store
-        val adjusted = Main.mediaStage(cfg, sessioned
-          .drop("carry_header", "carry_fields", "carry_sessions",
-            "carry_max_idx", "carry_prev_belongs"))
-          .cache()
+        val adjusted = Main.mediaStage(cfg, Pipeline(turns,
+          cfg.excludePattern, cfg.chunkSize, codec = codec,
+          carryIn = Some(carryIn))).cache()
         // cross-batch dedup (opt-in): the cycle's dedup stage over the
         // stream's fingerprint namespace — fold first, then read, both
         // from the strictly-earlier committed set (see the scaladoc).
@@ -313,7 +276,15 @@ object Streaming {
           Sinks.writeFingerprints(published, fpDir, batchId.toString)
         // carry-out: the conv's state AT ITS LAST ROW of this batch
         // (header/session are running values, so max_by(., turn_idx) is
-        // the batch-final state), upserted over the previous snapshot
+        // the batch-final state), upserted over the previous snapshot.
+        // The what=next seam flag: did that row belong? That codec's
+        // "this row continues" is a LAG over the previous row; every
+        // other codec uses per-row predicates and carries false
+        val lastBelongs = codec match {
+          case Pipeline.MultilineCodec(mc) if mc.what == "next" =>
+            max_by(Parse.belongsUnder(mc, "text"), col("turn_idx"))
+          case _ => lit(false)
+        }
         val batchCarry = adjusted.groupBy(col("conv_id"))
           .agg(
             max_by(col("header"), col("turn_idx")).as("carry_header"),
@@ -323,10 +294,7 @@ object Streaming {
             // the ordering guard's reference point: only in-order rows
             // reach here, so this max strictly advances per conversation
             max(col("turn_idx")).as("carry_max_idx"),
-            // the what=next seam flag: did the conv's LAST row belong?
-            seamBelongs
-              .map(b => max_by(b, col("turn_idx")))
-              .getOrElse(lit(false)).as("carry_prev_belongs"))
+            lastBelongs.as("carry_prev_belongs"))
         val merged = prev.join(batchCarry, Seq("conv_id"), "left_anti")
           .unionByName(batchCarry)
         Carry.write(merged, sinkRoot, batchId)

@@ -9,9 +9,10 @@ import org.scalacheck.Prop.forAll
 /** Property-based checks (an upgrade over the reference's example-based
   * RSpec suite, SURVEY.md §5): the distributed prefix-scan primitives
   * must equal their naive single-window definitions for ARBITRARY
-  * inputs and chunk sizes, routing must partition any input, and the
-  * literal watermark predicate must implement exactly the
-  * (day unseen) OR (ts > wm) semantics.
+  * inputs and chunk sizes, a scan continued from a carry-in must equal
+  * one scan over the whole conversation, routing must partition any
+  * input, and the literal watermark predicate must implement exactly
+  * the (day unseen) OR (ts > wm) semantics.
   */
 object PipelineProps extends Properties("pipeline") {
 
@@ -63,6 +64,55 @@ object PipelineProps extends Properties("pipeline") {
           .withColumn("hdr", last($"mark", ignoreNulls = true).over(w))
           .select($"conv_id", $"turn_idx", $"hdr")
         got.exceptAll(naive).isEmpty && naive.exceptAll(got).isEmpty
+      }
+    }
+
+  property("scanMany carry-in == one scan over earlier rows + rows, " +
+      "for lastCols, sum and lag together and singly") =
+    // no shrinking: a shrunk `splits` loses conversations' entries and a
+    // shrunk row can repeat a (conv, turn) key, neither a valid input
+    Prop.forAllNoShrink(genRows, genChunk,
+        Gen.listOfN(4, Gen.choose(0, 20))) {
+      (rows, chunk, splits) =>
+      rows.isEmpty || {
+        // conversation c<i> splits at turn splits(i): 0 = no earlier
+        // rows (no carry-in row), past its length = no later rows
+        val df = rows.map { case (c, i, v) =>
+            (c, i, v, splits(c.stripPrefix("c").toInt))
+          }.toDF("conv_id", "turn_idx", "v", "k")
+          .withColumn("mark", when($"v" > 0, concat(lit("m"), $"v")))
+          .withColumn("mark2", when($"v" % 2 === 1, concat(lit("f"), $"v")))
+          .withColumn("lagv", when($"v" =!= 0, $"v"))
+        val lasts = Seq(col("mark") -> "hdr", col("mark2") -> "hdr2")
+        val sumOf = Some(col("v") -> "run")
+        val lagOf = Some(col("lagv") -> "prev")
+        // the earlier rows' state at each conversation's last row: the
+        // outputs' values, and the lag's input value. One carry frame
+        // serves every shape (columns a shape does not produce are
+        // ignored)
+        val earlier = df.filter($"turn_idx" < $"k")
+        val carry = PrefixOps.scanMany(earlier, lasts, sumOf,
+            chunkSize = chunk, lag = lagOf)
+          .groupBy($"conv_id")
+          .agg(max_by($"hdr", $"turn_idx").as("hdr"),
+            max_by($"hdr2", $"turn_idx").as("hdr2"),
+            max_by($"run", $"turn_idx").as("run"),
+            max_by($"lagv", $"turn_idx").as("prev"))
+        val shapes = Seq(
+          (lasts, sumOf, lagOf, Seq("hdr", "hdr2", "run", "prev")),
+          (lasts, None, None, Seq("hdr", "hdr2")),
+          (Nil, sumOf, None, Seq("run")),
+          (Nil, None, lagOf, Seq("prev")))
+        shapes.forall { case (l, s, g, outs) =>
+          val keep = (Seq("conv_id", "turn_idx") ++ outs).map(col)
+          val got = PrefixOps.scanMany(df.filter($"turn_idx" >= $"k"), l, s,
+              chunkSize = chunk, lag = g, carryIn = Some(carry))
+            .select(keep: _*)
+          val expect = PrefixOps.scanMany(df, l, s, chunkSize = chunk,
+              lag = g)
+            .filter($"turn_idx" >= $"k").select(keep: _*)
+          got.exceptAll(expect).isEmpty && expect.exceptAll(got).isEmpty
+        }
       }
     }
 

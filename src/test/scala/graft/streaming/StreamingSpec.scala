@@ -94,57 +94,63 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("foreachBatch carry: conversations spanning micro-batches get the " +
       "SAME headers and session ids as the batch pipeline") {
-    val input = s"$scratch/carry_input"
-    val sinkRoot = s"$scratch/carry_sinks"
-    val ckpt = s"$scratch/carry_ckpt"
-    val ts0 = new Timestamp(Synth.baseEpochMs)
-    // one conversation split across TWO files: header + first lines in
-    // file A; continuations + more lines in file B (later turns)
-    val fileA = Seq(
-      Turn("cc", 0, "system", "#Version: 9.9", null, ts0),
-      Turn("cc", 1, "system", "#Fields: a b c", null, ts0),
-      Turn("cc", 2, "user", "2025-01-01T00:00:01Z INFO [user] one", null, ts0),
-      Turn("cc", 3, "user", "    continued from one", null, ts0))
-    val fileB = Seq(
-      Turn("cc", 4, "user", "    still continued", null, ts0),
-      Turn("cc", 5, "assistant", "2025-01-01T00:00:05Z INFO [assistant] two", null, ts0),
-      Turn("dd", 0, "user", "2025-01-01T00:00:06Z INFO [user] fresh conv", null, ts0))
-    new java.io.File(input).mkdirs()
-    fileA.toDS().coalesce(1).write.mode("overwrite").parquet(s"$input/a")
-    fileB.toDS().coalesce(1).write.mode("overwrite").parquet(s"$input/b")
-    // make file A strictly older so the source orders A before B
-    def onePart(d: String) = new java.io.File(d).listFiles()
-      .filter(_.getName.endsWith(".parquet")).head
-    onePart(s"$input/a").setLastModified(1000000L)
-    onePart(s"$input/b").setLastModified(2000000L)
+    // 4096 keeps each micro-batch's conversation in one chunk; 2 splits
+    // file A's turns across chunks; 5 splits file B's turns 4 | 5, so the
+    // carry-in meets a chunk boundary inside one micro-batch
+    for (chunk <- Seq(4096, 2, 5)) {
+      val input = s"$scratch/carry_input_$chunk"
+      val sinkRoot = s"$scratch/carry_sinks_$chunk"
+      val ckpt = s"$scratch/carry_ckpt_$chunk"
+      val ts0 = new Timestamp(Synth.baseEpochMs)
+      // one conversation split across TWO files: header + first lines in
+      // file A; continuations + more lines in file B (later turns)
+      val fileA = Seq(
+        Turn("cc", 0, "system", "#Version: 9.9", null, ts0),
+        Turn("cc", 1, "system", "#Fields: a b c", null, ts0),
+        Turn("cc", 2, "user", "2025-01-01T00:00:01Z INFO [user] one", null, ts0),
+        Turn("cc", 3, "user", "    continued from one", null, ts0))
+      val fileB = Seq(
+        Turn("cc", 4, "user", "    still continued", null, ts0),
+        Turn("cc", 5, "assistant", "2025-01-01T00:00:05Z INFO [assistant] two", null, ts0),
+        Turn("dd", 0, "user", "2025-01-01T00:00:06Z INFO [user] fresh conv", null, ts0))
+      new java.io.File(input).mkdirs()
+      fileA.toDS().coalesce(1).write.mode("overwrite").parquet(s"$input/a")
+      fileB.toDS().coalesce(1).write.mode("overwrite").parquet(s"$input/b")
+      // make file A strictly older so the source orders A before B
+      def onePart(d: String) = new java.io.File(d).listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      onePart(s"$input/a").setLastModified(1000000L)
+      onePart(s"$input/b").setLastModified(2000000L)
 
-    val q = Streaming.runForeachBatch(spark,
-      PipelineConfig(s"$input/*", sinkRoot), ckpt, maxFilesPerTrigger = 1)
-    q.awaitTermination()
-    val nBatches = new java.io.File(s"$sinkRoot/stream").listFiles()
-      .count(_.getName.startsWith("batch="))
-    assert(nBatches >= 2, s"conversation must span micro-batches, got $nBatches")
+      val q = Streaming.runForeachBatch(spark,
+        PipelineConfig(s"$input/*", sinkRoot, chunkSize = chunk), ckpt,
+        maxFilesPerTrigger = 1)
+      q.awaitTermination()
+      val nBatches = new java.io.File(s"$sinkRoot/stream").listFiles()
+        .count(_.getName.startsWith("batch="))
+      assert(nBatches >= 2, s"conversation must span micro-batches, got $nBatches")
 
-    val streamed = spark.read.option("basePath", s"$sinkRoot/stream")
-      .parquet(s"$sinkRoot/stream")
-      .select($"conv_id", $"turn_idx", $"header",
-        $"header_fields_carried", $"session_id")
-    val batch = Pipeline((fileA ++ fileB).toDS())
-      .select($"conv_id", $"turn_idx", $"header",
-        $"header_fields_carried", $"session_id")
-    assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty,
-      s"streaming (split) must equal batch:\nstream=${streamed.orderBy($"conv_id", $"turn_idx").collect().mkString("\n")}\n" +
-        s"batch=${batch.orderBy($"conv_id", $"turn_idx").collect().mkString("\n")}")
-    // spot-check the semantics the carry exists for: batch-B rows carry
-    // batch-A's header, and the continuation at the batch boundary does
-    // NOT open a new session
-    val rows = streamed.collect()
-      .map(r => (r.getString(0), r.getInt(1)) ->
-        (r.getString(2), r.getLong(4))).toMap
-    assert(rows(("cc", 4))._1 == "9.9", "header crossed the batch boundary")
-    assert(rows(("cc", 4))._2 == rows(("cc", 3))._2,
-      "continuation at the boundary stays in the same session")
-    assert(rows(("dd", 0))._1 == null, "no cross-conversation leakage")
+      val streamed = spark.read.option("basePath", s"$sinkRoot/stream")
+        .parquet(s"$sinkRoot/stream")
+        .select($"conv_id", $"turn_idx", $"header",
+          $"header_fields_carried", $"session_id")
+      val batch = Pipeline((fileA ++ fileB).toDS())
+        .select($"conv_id", $"turn_idx", $"header",
+          $"header_fields_carried", $"session_id")
+      assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty,
+        s"streaming (split) must equal batch:\nstream=${streamed.orderBy($"conv_id", $"turn_idx").collect().mkString("\n")}\n" +
+          s"batch=${batch.orderBy($"conv_id", $"turn_idx").collect().mkString("\n")}")
+      // spot-check the semantics the carry exists for: batch-B rows carry
+      // batch-A's header, and the continuation at the batch boundary does
+      // NOT open a new session
+      val rows = streamed.collect()
+        .map(r => (r.getString(0), r.getInt(1)) ->
+          (r.getString(2), r.getLong(4))).toMap
+      assert(rows(("cc", 4))._1 == "9.9", "header crossed the batch boundary")
+      assert(rows(("cc", 4))._2 == rows(("cc", 3))._2,
+        "continuation at the boundary stays in the same session")
+      assert(rows(("dd", 0))._1 == null, "no cross-conversation leakage")
+    }
   }
 
   test("cross-batch dedup (opt-in): a later micro-batch's duplicate " +
@@ -283,55 +289,60 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("multiline what=next records survive the micro-batch seam: the " +
       "carried belongs flag keeps the boundary row glued, routed and " +
       "session-numbered exactly like the batch pipeline") {
-    val input = s"$scratch/seam_input"
-    val sinkRoot = s"$scratch/seam_sinks"
-    val ckpt = s"$scratch/seam_ckpt"
-    val ts0 = new Timestamp(Synth.baseEpochMs)
-    // what=next with 'line ends in backslash glues to the NEXT line' —
-    // the codec whose continuation flag is a LAG and therefore blind
-    // across a batch boundary without the carried seam flag
-    val cfg = PipelineConfig(s"$input/*", sinkRoot, codec = "multiline",
-      multilinePattern = "\\\\$", multilineWhat = "next")
-    val codec = Pipeline.codecFor(cfg)
-    val fileA = Seq(
-      Turn("mm", 0, "user",
-        "2025-01-01T00:00:00Z INFO [user] cmd \\", null, ts0),
-      Turn("nn", 0, "user",
-        "2025-01-01T00:00:01Z INFO [user] solo", null, ts0))
-    val fileB = Seq(
-      // the SEAM row: continues mm's record AND is not grok-parseable —
-      // mis-classified as a record start it would ALSO dead-letter
-      Turn("mm", 1, "user", "rest of the command", null, ts0),
-      Turn("mm", 2, "user",
-        "2025-01-01T00:00:02Z INFO [user] next record", null, ts0))
-    new java.io.File(input).mkdirs()
-    fileA.toDS().coalesce(1).write.mode("overwrite").parquet(s"$input/a")
-    fileB.toDS().coalesce(1).write.mode("overwrite").parquet(s"$input/b")
-    def onePart(d: String) = new java.io.File(d).listFiles()
-      .filter(_.getName.endsWith(".parquet")).head
-    onePart(s"$input/a").setLastModified(1000000L)
-    onePart(s"$input/b").setLastModified(2000000L)
+    // chunkSize 2 puts file B's seam row (turn 1) and the record after it
+    // (turn 2) in different chunks of one micro-batch
+    for (chunk <- Seq(4096, 2)) {
+      val input = s"$scratch/seam_input_$chunk"
+      val sinkRoot = s"$scratch/seam_sinks_$chunk"
+      val ckpt = s"$scratch/seam_ckpt_$chunk"
+      val ts0 = new Timestamp(Synth.baseEpochMs)
+      // what=next with 'line ends in backslash glues to the NEXT line' —
+      // the codec whose continuation flag is a LAG and therefore blind
+      // across a batch boundary without the carried seam flag
+      val cfg = PipelineConfig(s"$input/*", sinkRoot, codec = "multiline",
+        multilinePattern = "\\\\$", multilineWhat = "next",
+        chunkSize = chunk)
+      val codec = Pipeline.codecFor(cfg)
+      val fileA = Seq(
+        Turn("mm", 0, "user",
+          "2025-01-01T00:00:00Z INFO [user] cmd \\", null, ts0),
+        Turn("nn", 0, "user",
+          "2025-01-01T00:00:01Z INFO [user] solo", null, ts0))
+      val fileB = Seq(
+        // the SEAM row: continues mm's record AND is not grok-parseable —
+        // mis-classified as a record start it would ALSO dead-letter
+        Turn("mm", 1, "user", "rest of the command", null, ts0),
+        Turn("mm", 2, "user",
+          "2025-01-01T00:00:02Z INFO [user] next record", null, ts0))
+      new java.io.File(input).mkdirs()
+      fileA.toDS().coalesce(1).write.mode("overwrite").parquet(s"$input/a")
+      fileB.toDS().coalesce(1).write.mode("overwrite").parquet(s"$input/b")
+      def onePart(d: String) = new java.io.File(d).listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      onePart(s"$input/a").setLastModified(1000000L)
+      onePart(s"$input/b").setLastModified(2000000L)
 
-    Streaming.runForeachBatch(spark, cfg, ckpt, maxFilesPerTrigger = 1)
-      .awaitTermination()
+      Streaming.runForeachBatch(spark, cfg, ckpt, maxFilesPerTrigger = 1)
+        .awaitTermination()
 
-    val cols = Seq($"conv_id", $"turn_idx", $"session_id", $"sink",
-      $"is_continuation")
-    val streamed = spark.read.option("basePath", s"$sinkRoot/stream")
-      .parquet(s"$sinkRoot/stream").select(cols: _*)
-    val batch = Pipeline((fileA ++ fileB).toDS(), codec = codec)
-      .select(cols: _*)
-    assert(streamed.exceptAll(batch).isEmpty &&
-      batch.exceptAll(streamed).isEmpty,
-      s"what=next streaming must equal batch:\n" +
-        s"stream=${streamed.orderBy($"conv_id", $"turn_idx").collect().mkString("\n")}\n" +
-        s"batch=${batch.orderBy($"conv_id", $"turn_idx").collect().mkString("\n")}")
-    val byKey = streamed.collect()
-      .map(r => (r.getString(0), r.getInt(1)) ->
-        (r.getLong(2), r.getString(3), r.getBoolean(4))).toMap
-    assert(byKey(("mm", 1)) == ((1L, "user", true)),
-      "the seam row continues record 1 and routes by role, not deadletter")
-    assert(byKey(("mm", 2))._1 == 2L, "the record AFTER the seam starts fresh")
+      val cols = Seq($"conv_id", $"turn_idx", $"session_id", $"sink",
+        $"is_continuation")
+      val streamed = spark.read.option("basePath", s"$sinkRoot/stream")
+        .parquet(s"$sinkRoot/stream").select(cols: _*)
+      val batch = Pipeline((fileA ++ fileB).toDS(), codec = codec)
+        .select(cols: _*)
+      assert(streamed.exceptAll(batch).isEmpty &&
+        batch.exceptAll(streamed).isEmpty,
+        s"what=next streaming must equal batch:\n" +
+          s"stream=${streamed.orderBy($"conv_id", $"turn_idx").collect().mkString("\n")}\n" +
+          s"batch=${batch.orderBy($"conv_id", $"turn_idx").collect().mkString("\n")}")
+      val byKey = streamed.collect()
+        .map(r => (r.getString(0), r.getInt(1)) ->
+          (r.getLong(2), r.getString(3), r.getBoolean(4))).toMap
+      assert(byKey(("mm", 1)) == ((1L, "user", true)),
+        "the seam row continues record 1 and routes by role, not deadletter")
+      assert(byKey(("mm", 2))._1 == 2L, "the record AFTER the seam starts fresh")
+    }
   }
 
   test("Carry.read takes the latest snapshot STRICTLY BEFORE the batch " +

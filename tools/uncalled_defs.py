@@ -1,0 +1,154 @@
+#!/usr/bin/env python3
+"""List the `def`s under src/main that nothing calls.
+
+A def counts as called when its name appears as a whole word in the code
+(comments removed) of src/main or perfbench/src anywhere other than its
+own `def` site. Comments are removed first (`//` line comments and `/* */`
+block comments, which nest in Scala), so a name that only a scaladoc or
+a `//` note mentions is reported as uncalled. String literals are kept:
+an interpolated `s"${f(x)}"` is a real call.
+
+The scan matches names, not symbols, so it errs towards "called":
+- two defs sharing a name are both called if either name is used;
+- a recursive def's call to itself counts as a caller.
+
+Not reported:
+- `override` defs, which the runtime or a parent type calls;
+- `main` entry points;
+- `apply`, which counts as called when its enclosing object's name is
+  followed by `(`, `[` or `.apply`.
+
+Usage: python3 tools/uncalled_defs.py [repo_root]
+Prints one `path:line  Owner.name` per uncalled def, then a count.
+"""
+import os
+import re
+import sys
+from collections import Counter
+
+SCAN_DIRS = ["src/main", "perfbench/src"]
+DEF_DIR = "src/main"
+
+DEF_RE = re.compile(
+    r"\bdef\s+(`[^`]+`|[A-Za-z_][A-Za-z0-9_]*|[!#%&*+\-/:<=>?@\\^|~]+)")
+OWNER_RE = re.compile(r"\b(?:object|class|trait)\s+([A-Za-z_][A-Za-z0-9_]*)")
+CHAR_RE = re.compile(r"'(?:\\u[0-9a-fA-F]{4}|\\.|[^'\\\n])'")
+
+
+def strip_comments(src):
+    """Blank out comments, keeping newlines (so line numbers hold) and
+    string and character literals."""
+    out = []
+    i, n = 0, len(src)
+    while i < n:
+        if src.startswith('"""', i):
+            j = src.find('"""', i + 3)
+            j = n if j < 0 else j + 3
+            while j < n and src[j] == '"':  # """...""""" closes at the last quote
+                j += 1
+            out.append(src[i:j])
+            i = j
+        elif src[i] == '"':
+            j = i + 1
+            while j < n and src[j] != '"' and src[j] != "\n":
+                j += 2 if src[j] == "\\" else 1
+            out.append(src[i:j + 1])
+            i = j + 1
+        elif src[i] == "'":
+            m = CHAR_RE.match(src, i)
+            j = m.end() if m else i + 1
+            out.append(src[i:j])
+            i = j
+        elif src.startswith("//", i):
+            j = src.find("\n", i)
+            j = n if j < 0 else j
+            out.append(" " * (j - i))
+            i = j
+        elif src.startswith("/*", i):
+            depth, j = 1, i + 2
+            while j < n and depth:
+                if src.startswith("/*", j):
+                    depth, j = depth + 1, j + 2
+                elif src.startswith("*/", j):
+                    depth, j = depth - 1, j + 2
+                else:
+                    j += 1
+            out.append(re.sub(r"[^\n]", " ", src[i:j]))
+            i = j
+        else:
+            out.append(src[i])
+            i += 1
+    return "".join(out)
+
+
+def scala_files(root, rel):
+    for dirpath, _, names in os.walk(os.path.join(root, rel)):
+        for name in sorted(names):
+            if name.endswith(".scala"):
+                yield os.path.join(dirpath, name)
+
+
+def indent_of(line):
+    return len(line) - len(line.lstrip(" \t"))
+
+
+def owner_at(lines, lineno):
+    """The innermost object/class/trait enclosing line `lineno` (0-based),
+    found by indentation."""
+    ind = indent_of(lines[lineno])
+    for k in range(lineno - 1, -1, -1):
+        m = OWNER_RE.search(lines[k])
+        if m and indent_of(lines[k]) < ind:
+            return m.group(1)
+    return ""
+
+
+def main():
+    root = sys.argv[1] if len(sys.argv) > 1 else os.path.dirname(
+        os.path.dirname(os.path.abspath(__file__)))
+    code = {}
+    for rel in SCAN_DIRS:
+        for path in scala_files(root, rel):
+            with open(path, encoding="utf-8") as f:
+                code[path] = strip_comments(f.read())
+    corpus = "\n".join(code.values())
+
+    defs = []  # (path, line, owner, name)
+    for path, text in code.items():
+        if not os.path.relpath(path, root).startswith(DEF_DIR + os.sep):
+            continue
+        lines = text.split("\n")
+        for m in DEF_RE.finditer(text):
+            lineno = text.count("\n", 0, m.start())
+            head = text[text.rfind("\n", 0, m.start()) + 1:m.start()]
+            name = m.group(1).strip("`")
+            if "override" in head.split():
+                continue
+            if name == "main" and "Array[String]" in text[m.end():m.end() + 60]:
+                continue
+            defs.append((path, lineno + 1, owner_at(lines, lineno), name))
+
+    # every def site in the scanned code, perfbench's included
+    def_sites = Counter(m.group(1).strip("`") for m in DEF_RE.finditer(corpus))
+    words = Counter(re.findall(r"[A-Za-z_$][\w$]*", corpus))
+
+    uncalled = []
+    for path, line, owner, name in defs:
+        if name == "apply":
+            called = re.search(
+                r"\b%s\s*(?:\(|\[|\.apply\b)" % re.escape(owner), corpus)
+        else:
+            uses = (words[name] if re.match(r"\w", name)
+                    else corpus.count(name))
+            called = uses > def_sites[name]
+        if not called:
+            uncalled.append("%s:%d  %s.%s" % (
+                os.path.relpath(path, root), line, owner or "?", name))
+
+    for entry in sorted(uncalled):
+        print(entry)
+    print("%d uncalled of %d defs scanned" % (len(uncalled), len(defs)))
+
+
+if __name__ == "__main__":
+    main()
