@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.pipeline.BatchDirs
 
 /** Deduplication operators for training-data curation, in increasing
   * fuzziness: exact (hash groupBy), n-gram Jaccard, MinHash+LSH,
@@ -467,12 +468,11 @@ object Dedup {
     * A 100 TB curation run cannot afford to re-shingle the corpus for
     * every pair consumer: cluster resolution, curated-corpus builds,
     * contamination reports and audit queries all want the SAME
-    * candidate-pair set. These ops persist it per batch under
-    * `<root>/_pairs/<corpusId>/batch=<id>` with the engine's
-    * namespace discipline (per-batch overwrite = idempotent re-runs;
-    * readers gate on a committed-batch set, so an orphan dir from a
-    * crashed build is invisible — graft.pipeline.Sinks.partitionCommitted
-    * is THE shared definition, `compacted-` survivors included).
+    * candidate-pair set. These ops persist it per batch in the
+    * `<root>/_pairs/<corpusId>` store (graft.pipeline.BatchDirs: a
+    * per-batch overwrite makes re-runs idempotent; readers gate on a
+    * committed-batch set, so an orphan dir from a crashed build is
+    * invisible, and the store's fold survivors count too).
     */
   def pairsDir(root: String, corpusId: String): String =
     s"$root/_pairs/$corpusId"
@@ -482,12 +482,9 @@ object Dedup {
     * next to the corpus that produced it.
     */
   def writePairs(pairs: DataFrame, root: String, corpusId: String,
-      batchId: String): String = {
-    val dest = s"${pairsDir(root, corpusId)}/batch=$batchId"
-    pairs.select(col("id_a"), col("id_b")).distinct()
-      .write.mode("overwrite").parquet(dest)
-    dest
-  }
+      batchId: String): String =
+    BatchDirs(pairsDir(root, corpusId))
+      .write(pairs.select(col("id_a"), col("id_b")).distinct(), batchId)
 
   /** Read the committed pair set back (distinct across batches — two
     * batches may both have found a pair). None when no committed batch
@@ -495,13 +492,9 @@ object Dedup {
     * honest empty frame to fabricate.
     */
   def readPairs(spark: org.apache.spark.sql.SparkSession, root: String,
-      corpusId: String, committed: Set[String]): Option[DataFrame] = {
-    val dirs = graft.pipeline.Sinks.partitionCommitted(
-      graft.pipeline.Sinks.batchDirs(spark, pairsDir(root, corpusId)),
-      committed)._1
-    if (dirs.isEmpty) None
-    else Some(spark.read.parquet(dirs: _*).distinct())
-  }
+      corpusId: String, committed: Set[String]): Option[DataFrame] =
+    BatchDirs(pairsDir(root, corpusId)).read(spark, committed)
+      .map(_.distinct())
 
   /** ---- Incremental MinHash-LSH (new docs against a persisted band
     * state — no re-shingling of the existing corpus) ----------------
@@ -510,19 +503,16 @@ object Dedup {
     * a row x numBands rows per doc, the only thing candidate
     * generation ever needs. A new ingest batch shingles ONLY its own
     * documents, joins its bands against the stored ones, and appends —
-    * the 100 TB corpus is never re-read. Same namespace discipline as
+    * the 100 TB corpus is never re-read. A BatchDirs store like
     * `_pairs` (per-batch dirs, committed-batch gating).
     */
   def bandsDir(root: String, corpusId: String): String =
     s"$root/_bands/$corpusId"
 
   def writeBands(bands: DataFrame, root: String, corpusId: String,
-      batchId: String, idCol: String): String = {
-    val dest = s"${bandsDir(root, corpusId)}/batch=$batchId"
-    bands.select(col("band"), col("sig"), col(idCol))
-      .write.mode("overwrite").parquet(dest)
-    dest
-  }
+      batchId: String, idCol: String): String =
+    BatchDirs(bandsDir(root, corpusId))
+      .write(bands.select(col("band"), col("sig"), col(idCol)), batchId)
 
   /** `dedupRows = false` skips the crash-window duplicate-row distinct:
     * that distinct is a FULL exchange of the corpus-sized band table —
@@ -534,71 +524,48 @@ object Dedup {
     */
   def readBands(spark: org.apache.spark.sql.SparkSession, root: String,
       corpusId: String, committed: Set[String],
-      dedupRows: Boolean = true): Option[DataFrame] = {
-    val dirs = graft.pipeline.Sinks.partitionCommitted(
-      graft.pipeline.Sinks.batchDirs(spark, bandsDir(root, corpusId)),
-      committed)._1
-    if (dirs.isEmpty) None
-    else {
-      val raw = spark.read.parquet(dirs: _*)
-      Some(if (dedupRows) raw.distinct() else raw)
-    }
-  }
+      dedupRows: Boolean = true): Option[DataFrame] =
+    BatchDirs(bandsDir(root, corpusId)).read(spark, committed)
+      .map(raw => if (dedupRows) raw.distinct() else raw)
 
   /** ---- Namespace growth bounds for the dedup stores --------------
     *
     * `_pairs` and `_bands` accumulate one dir per ingest batch; a
     * long-lived corpus would otherwise grow the read fan-in (and the
-    * dir listing) O(batches). Both fold with the engine's ONE shared
-    * compaction body (graft.pipeline.Sinks.compactNamespace): compacted
-    * snapshot written first, whole-row distinct — for bands exactly the
-    * (band, sig, id) distinct every reader already applies — only
-    * pre-listed dirs deleted, orphans (batch ids that never committed)
-    * deleted as crash debris. Readers (readPairs/readBands) recognize
-    * `compacted-` survivors via Sinks.partitionCommitted and tolerate
-    * crash-window duplicate rows via their distinct.
+    * dir listing) O(batches). Both are bounded by the store's fold
+    * (`BatchDirs.fold`): whole-row distinct — for bands exactly the
+    * (band, sig, id) distinct every reader already applies — with
+    * readPairs/readBands absorbing crash-window duplicate rows through
+    * their distinct. `_clusters` is bounded by [[compactClusters]]'
+    * retention instead.
     */
-  def compactPairs(spark: org.apache.spark.sql.SparkSession, root: String,
-      corpusId: String, committedBatches: => Set[String],
-      maxDirs: Int = 64): Boolean =
-    graft.pipeline.Sinks.compactNamespace(spark, pairsDir(root, corpusId),
-      committedBatches, maxDirs, mergeSchema = false)
-
-  def compactBands(spark: org.apache.spark.sql.SparkSession, root: String,
-      corpusId: String, committedBatches: => Set[String],
-      maxDirs: Int = 64): Boolean =
-    graft.pipeline.Sinks.compactNamespace(spark, bandsDir(root, corpusId),
-      committedBatches, maxDirs, mergeSchema = false)
+  def clustersDir(root: String, corpusId: String): String =
+    s"$root/_clusters/$corpusId"
 
   /** `_clusters` must NOT row-fold: each [[writeClusters]] batch is a
     * FULL label generation ([[mergeClusters]] emits merged labels, not
     * deltas), so a distinct union across generations would fabricate
-    * ids with two conflicting labels. The honest bound is RETENTION:
-    * past `maxDirs` dirs, keep only the current generation `keep`
-    * (superseded committed generations and orphans alike are debris —
-    * single writer per corpusId, post-commit call site, same reasoning
-    * as compactNamespace's orphan rule). Delete-only, so there is no
-    * crash window at all: any prefix of the deletes leaves a smaller,
-    * still-correct namespace.
+    * ids with two conflicting labels. The honest bound is the store's
+    * keep-only RETENTION (`BatchDirs.retain`): past `maxDirs` dirs,
+    * keep only the current generation `keep` (superseded committed
+    * generations and orphans alike are debris — single writer per
+    * corpusId, post-commit call site, the same reasoning as the fold's
+    * orphan rule).
     */
   def compactClusters(spark: org.apache.spark.sql.SparkSession,
       root: String, corpusId: String, keep: String,
       maxDirs: Int = 64): Boolean = {
-    val all = graft.pipeline.Sinks.batchDirs(spark,
-      s"$root/_clusters/$corpusId")
-    if (all.length <= maxDirs) return false
+    val store = BatchDirs(clustersDir(root, corpusId))
+    val ids = store.ids(spark)
+    if (ids.length <= maxDirs) return false
     // fail CLOSED before any delete: a `keep` that names no existing
     // dir (typo, or a generation whose writeClusters failed) would
     // otherwise delete EVERY generation — the retention pass must
     // never be able to empty the store
-    require(all.exists(_.endsWith(s"batch=$keep")),
-      s"compactClusters: keep generation 'batch=$keep' does not exist " +
-        s"under _clusters/$corpusId — refusing to delete anything")
-    val conf = spark.sparkContext.hadoopConfiguration
-    all.filterNot(_.endsWith(s"batch=$keep")).foreach { d =>
-      val p = new org.apache.hadoop.fs.Path(d)
-      p.getFileSystem(conf).delete(p, true)
-    }
+    require(ids.contains(keep),
+      s"compactClusters: keep generation '$keep' does not exist at " +
+        s"${store.path(keep)} — refusing to delete anything")
+    store.retain(spark, _ == keep)
     true
   }
 
@@ -661,8 +628,9 @@ object Dedup {
       .select(col("id_a"), col("id_b"))
   }
 
-  /** Resolve clusters from a pair set and PERSIST the labels under
-    * `<root>/_clusters/<corpusId>/batch=<id>` — the production shape:
+  /** Resolve clusters from a pair set and PERSIST the labels as batch
+    * `batchId` of the `<root>/_clusters/<corpusId>` store — the
+    * production shape:
     * downstream consumers (curated-corpus builds, survivor joins) read
     * the persisted label table instead of each re-running the
     * propagation loop, and the final iteration's checkpoint storage is
@@ -687,8 +655,7 @@ object Dedup {
           "iterations; the labels are an over-segmentation — raise " +
           "maxIters or pass allowOverSegmented=true to persist anyway")
     }
-    val dest = s"$root/_clusters/$corpusId/batch=$batchId"
-    res.labels.write.mode("overwrite").parquet(dest)
+    val dest = BatchDirs(clustersDir(root, corpusId)).write(res.labels, batchId)
     res.release()
     dest
   }

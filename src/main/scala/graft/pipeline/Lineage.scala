@@ -211,7 +211,7 @@ object Lineage {
     val partOpt = fs.listStatus(staging)
       .find(_.getPath.getName.endsWith(".parquet")).map(_.getPath)
     val moved = partOpt.exists { part =>
-      fs.rename(part, new Path(p, s"compacted-${System.nanoTime()}.parquet"))
+      fs.rename(part, new Path(p, s"${BatchDirs.survivorName()}.parquet"))
     }
     if (!moved) {
       // no part produced, or move-in failed: abort with the old history

@@ -97,11 +97,9 @@ object Main {
     // identical routing) -> the staged write, the plan's one run
     import spark.implicits._
     val staged = stage(spark, cfg, batchId,
-      dedupStage(spark, cfg, fingerprintsDir(cfg), committedAtStart,
-        mediaStage(cfg, Pipeline(delta.as[Turn](
-          org.apache.spark.sql.Encoders.product[Turn]),
-          cfg.excludePattern, cfg.chunkSize,
-          codec = Pipeline.codecFor(cfg)))))
+      stages(spark, cfg, delta.as[Turn](
+        org.apache.spark.sql.Encoders.product[Turn]),
+        fingerprints(cfg), committedAtStart))
 
     // new per-day watermarks, from the staged files' one aggregate
     val newWms = staged.toSeq.flatMap(_.metrics.days)
@@ -225,8 +223,8 @@ object Main {
           val dayMax = cached.groupBy(col("day"))
             .agg(max(col("ts")).as("mx")).collect()
           if (dayMax.nonEmpty)
-            Sinks.writeDeferred(cached, cfg.sinkRoot,
-              Lineage.checkpointId(cfg), batchId)
+            BatchDirs(Sinks.deferredDir(cfg.sinkRoot,
+              Lineage.checkpointId(cfg))).write(cached, batchId)
           // max ignores null ts; a day whose manifested rows are ALL
           // null-ts yields a null max and is skipped (belt-and-braces:
           // the design guards already exclude null-ts rows everywhere)
@@ -329,15 +327,11 @@ object Main {
     val keys = Seq("conv_id", "turn_idx", "day")
     val published = Sinks.publishedKeys(spark, cfg.sinkRoot, auditDays,
       committed + batchId)
-    val manifestDirs = Sinks.partitionCommitted(
-      Sinks.batchDirs(spark,
-        Sinks.deferredDir(cfg.sinkRoot, Lineage.checkpointId(cfg))),
-      committed)._1
     val unpub = rows.join(published, keys, "left_anti")
-    if (manifestDirs.isEmpty) unpub
-    else unpub.join(
-      spark.read.parquet(manifestDirs: _*).select(keys.map(col): _*),
-      keys, "left_anti")
+    BatchDirs(Sinks.deferredDir(cfg.sinkRoot, Lineage.checkpointId(cfg)))
+      .read(spark, committed)
+      .fold(unpub)(m =>
+        unpub.join(m.select(keys.map(col): _*), keys, "left_anti"))
   }
 
   /** Opt-in multimodal stage (cfg.mediaCol): decode every blob's
@@ -352,8 +346,8 @@ object Main {
     * diagnosis. Rows with no blob, and non-content sinks (routing
     * metadata), pass through untouched. Runs BEFORE the dedup stage so
     * an undecodable-media row never reaches the fingerprint store.
-    * One body for the cycle, the redrive and the stream
-    * ([[graft.streaming.Streaming.runForeachBatch]]).
+    * One body for the cycle, the redrive and the stream, through
+    * [[stages]].
     */
   private[graft] def mediaStage(cfg: PipelineConfig,
       routed: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
@@ -442,11 +436,11 @@ object Main {
     * fingerprint a PRIOR batch published", and within-corpus dedup is
     * the explicit d01-operator surface.
     */
-  private[graft] def dedupStage(spark: SparkSession, cfg: PipelineConfig,
-      fpDir: String, committed: Set[String],
+  private def dedupStage(spark: SparkSession, cfg: PipelineConfig,
+      fingerprints: BatchDirs, committed: Set[String],
       routed: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     if (!cfg.dedupAcrossCycles) routed
-    else Sinks.readFingerprints(spark, fpDir, committed)
+    else fingerprints.read(spark, committed)
       // keepFp: the computed hash column rides along (hidden from every
       // user-facing write — the staged write and the stream drop it
       // before the sink write) so the stream's fingerprint-store write
@@ -456,11 +450,25 @@ object Main {
         Route.contentSinks, Route.duplicateSink, keepFp = true))
       .getOrElse(routed)
 
+  /** The one stage chain of the cycle, the redrive and the stream
+    * ([[graft.streaming.Streaming.runForeachBatch]]): `Pipeline` (parse,
+    * route, enrich and the prefix scan, continuing from `carryIn` when
+    * given) -> [[mediaStage]] -> [[dedupStage]] over the `fingerprints`
+    * namespace gated on `committed`.
+    */
+  private[graft] def stages(spark: SparkSession, cfg: PipelineConfig,
+      turns: org.apache.spark.sql.Dataset[Turn], fingerprints: BatchDirs,
+      committed: Set[String],
+      carryIn: Option[DataFrame] = None): DataFrame =
+    dedupStage(spark, cfg, fingerprints, committed,
+      mediaStage(cfg, Pipeline(turns, cfg.excludePattern, cfg.chunkSize,
+        codec = Pipeline.codecFor(cfg), carryIn = carryIn)))
+
   /** The batch engine's fingerprint namespace (the stream keeps its own
     * under `stream/`, see [[graft.streaming.Streaming.runForeachBatch]]).
     */
-  private def fingerprintsDir(cfg: PipelineConfig): String =
-    Sinks.fingerprintsDir(cfg.sinkRoot, Lineage.checkpointId(cfg))
+  private def fingerprints(cfg: PipelineConfig): BatchDirs =
+    BatchDirs(Sinks.fingerprintsDir(cfg.sinkRoot, Lineage.checkpointId(cfg)))
 
   /** The publish discipline every staged batch (normal or re-driven)
     * follows: atomic publish -> archive copy (iff configured; BEFORE the
@@ -495,7 +503,7 @@ object Main {
     // manifests/ledger: the fp dir only counts once its batch commits,
     // and the idempotent re-run overwrites it wholesale
     if (cfg.dedupAcrossCycles)
-      Sinks.writeFingerprints(rows, fingerprintsDir(cfg), batchId)
+      Sinks.writeFingerprints(rows, fingerprints(cfg).dir, batchId)
     Aggregate.writeTables(spark, staged.metrics, cfg.sinkRoot, batchId)
     Lineage.commitAt(spark, lineageDir, absorbInto(commits, absorb))
     Lineage.compactAt(spark, lineageDir) // no-op until history accumulates
@@ -509,11 +517,13 @@ object Main {
       if (cfg.deferralConfigured) {
         Sinks.compactDeferred(spark, cfg.sinkRoot, Lineage.checkpointId(cfg),
           committedNow)
-        Sinks.compactViolations(spark, cfg.sinkRoot,
-          Lineage.checkpointId(cfg), committedNow)
+        // the census's fold drops orphans as crash debris: their rows
+        // were re-quarantined under the successor batch id
+        BatchDirs(Sinks.violationsDir(cfg.sinkRoot, Lineage.checkpointId(cfg)))
+          .fold(spark, committedNow)
       }
       if (cfg.dedupAcrossCycles)
-        Sinks.compactFingerprints(spark, fingerprintsDir(cfg), committedNow)
+        fingerprints(cfg).fold(spark, committedNow)
     }
     published
   }
@@ -538,12 +548,10 @@ object Main {
       batchId: String, auditDays: Set[String], committed: Set[String],
       raw: org.apache.spark.sql.DataFrame): Unit = {
     val violAll = raw.filter(Discover.contractViolation)
-    val vDir = Sinks.violationsDir(cfg.sinkRoot, Lineage.checkpointId(cfg))
-    val priorDirs = Sinks.partitionCommitted(
-      Sinks.batchDirs(spark, vDir), committed)._1
-    val fresh =
-      if (priorDirs.isEmpty) violAll
-      else {
+    val census = BatchDirs(
+      Sinks.violationsDir(cfg.sinkRoot, Lineage.checkpointId(cfg)))
+    val fresh = census.read(spark, committed, Some(censusIdentitySchema))
+      .fold(violAll) { priorAll =>
         // day-filtered (the right side stays bounded by the audited
         // days, not the census's lifetime) and deduped on the FULL ROW,
         // null-safely: a producer that smuggles a null ts can smuggle
@@ -562,9 +570,7 @@ object Main {
         // once per new column; and NOT a dynamic column intersection
         // — a mixed-schema census dir makes that nondeterministic.
         // NEVER extend this list.
-        val prior = spark.read.schema(censusIdentitySchema)
-          .parquet(priorDirs: _*)
-          .filter(col("day").isin(auditDays.toSeq: _*))
+        val prior = priorAll.filter(col("day").isin(auditDays.toSeq: _*))
         violAll.join(prior,
           censusIdentitySchema.fieldNames.toSeq
             .map(c => violAll(c) <=> prior(c)).reduce(_ && _),
@@ -574,8 +580,8 @@ object Main {
     val n = cached.count()
     if (n > 0) {
       System.err.println(s"[audit] $n contract-violation rows (null ts " +
-        s"or null identity key) quarantined to $vDir/batch=$batchId")
-      cached.write.mode("overwrite").parquet(s"$vDir/batch=$batchId")
+        s"or null identity key) quarantined to ${census.path(batchId)}")
+      census.write(cached, batchId)
     }
     cached.unpersist()
   }
@@ -647,12 +653,8 @@ object Main {
     // commit) is ignored and the keys re-drive; a committed one
     // excludes them; an orphaned publish (crash before ledger) is
     // invisible to readers and simply re-driven under a fresh batch id.
-    val manifestDirs = Sinks.partitionCommitted(
-      Sinks.batchDirs(spark, Sinks.deferredDir(cfg.sinkRoot, cid)),
-      committed)._1
-    val ledgerDirs = Sinks.partitionCommitted(
-      Sinks.batchDirs(spark, Sinks.redrivenDir(cfg.sinkRoot, cid)),
-      committed)._1
+    val manifests = BatchDirs(Sinks.deferredDir(cfg.sinkRoot, cid))
+    val ledger = BatchDirs(Sinks.redrivenDir(cfg.sinkRoot, cid))
 
     // the batch id hashes the COMMITTED-BATCH SET from lineage (which
     // survives every compaction), not the day watermarks — redrives
@@ -670,23 +672,24 @@ object Main {
     val batchId = Lineage.batchId(asOf, wms, s"$cid|redrive|$stateHash")
     // nothing manifested, or nothing ever committed -> nothing can be
     // behind a watermark: return WITHOUT touching the input table
-    if (manifestDirs.isEmpty || wms.isEmpty)
+    val manifestRows =
+      if (wms.isEmpty) None else manifests.read(spark, committed)
+    if (manifestRows.isEmpty)
       return CycleResult(batchId, 0L, Seq.empty)
 
     // pending = manifested keys, behind-the-watermark, not yet re-driven.
     // Manifest + ledger are small (skipped-cold rows only); everything
     // here stays off the input table until pending is known non-empty.
-    val manifested = spark.read.parquet(manifestDirs: _*)
+    val manifested = manifestRows.get
       .select(col("conv_id"), col("turn_idx"), col("ts"), col("day"))
       .distinct()
     val wmDf = wms.toSeq.toDF("day", "_wm")
     val behindWm = manifested.join(broadcast(wmDf), Seq("day"))
       .filter(col("ts") <= col("_wm"))
       .select(col("conv_id"), col("turn_idx"))
-    val pending =
-      (if (ledgerDirs.isEmpty) behindWm
-       else behindWm.join(spark.read.parquet(ledgerDirs: _*),
-         Seq("conv_id", "turn_idx"), "left_anti")).cache()
+    val pending = ledger.read(spark, committed)
+      .fold(behindWm)(behindWm.join(_, Seq("conv_id", "turn_idx"), "left_anti"))
+      .cache()
     if (pending.count() == 0L) {
       pending.unpersist()
       return CycleResult(batchId, 0L, Seq.empty)
@@ -705,11 +708,9 @@ object Main {
     // a normal cycle (publishBatch), the ledger write as its pre-commit
     // hook — it differs only in never advancing a watermark
     val staged = stage(spark, cfg, batchId,
-      dedupStage(spark, cfg, fingerprintsDir(cfg), committed,
-        mediaStage(cfg, Pipeline(eligibleNow.as[Turn](
-          org.apache.spark.sql.Encoders.product[Turn]),
-          cfg.excludePattern, cfg.chunkSize,
-          codec = Pipeline.codecFor(cfg)))))
+      stages(spark, cfg, eligibleNow.as[Turn](
+        org.apache.spark.sql.Encoders.product[Turn]),
+        fingerprints(cfg), committed))
     pending.unpersist()
     if (staged.isEmpty) return CycleResult(batchId, 0L, Seq.empty)
     val total = staged.get.metrics.days.map(_._3).sum
@@ -729,8 +730,7 @@ object Main {
       // pipeline keeps every row, so the published rows' keys are the
       // eligible keys
       rows => {
-        rows.select(col("conv_id"), col("turn_idx")).write.mode("overwrite")
-          .parquet(s"${Sinks.redrivenDir(cfg.sinkRoot, cid)}/batch=$batchId")
+        ledger.write(rows.select(col("conv_id"), col("turn_idx")), batchId)
         Map.empty
       })
     CycleResult(batchId, total, published)

@@ -28,6 +28,13 @@ import org.apache.spark.sql.functions._
   * across `saltBuckets` writers (skew defense) while per-conversation
   * turn order within each output file stays stable (the north star's
   * "salted repartitioning ... secondary sort on turn_idx").
+  *
+  * Every per-batch namespace here — each `<sink>`, `archive`,
+  * `_consumed`, `_deferred`, `_redriven`, `_violations` and
+  * `_fingerprints` — is a [[BatchDirs]] store, which owns the
+  * `batch=<id>` layout, the committed-or-survivor gate and the growth
+  * bounds. This object names the namespaces and decides what each
+  * batch writes into them.
   */
 object Sinks {
 
@@ -84,9 +91,8 @@ object Sinks {
     val staging = new Path(stagingDir(root, batchId))
     val fs = staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val published = stagedSinks(spark, root, batchId).map { sink =>
-      val destDir = new Path(s"$root/$sink")
-      fs.mkdirs(destDir)
-      val dest = new Path(destDir, s"batch=$batchId")
+      fs.mkdirs(new Path(s"$root/$sink"))
+      val dest = new Path(BatchDirs(s"$root/$sink").path(batchId))
       if (fs.exists(dest)) fs.delete(dest, true)
       fs.rename(new Path(staging, s"sink=$sink"), dest)
       sink
@@ -126,7 +132,8 @@ object Sinks {
       sinks: Seq[String], schema: org.apache.spark.sql.types.StructType)
       : DataFrame =
     sinks.map(s => spark.read.schema(schema)
-      .parquet(s"$root/$s/batch=$batchId").withColumn("sink", lit(s)))
+      .parquet(BatchDirs(s"$root/$s").path(batchId))
+      .withColumn("sink", lit(s)))
       .reduce(_ unionByName _)
 
   /** The EXPLICIT archive-write op — the `backup_to_bucket` +
@@ -155,15 +162,12 @@ object Sinks {
       "backup_add_prefix must be non-empty: an empty prefix would make " +
         "archived keys indistinguishable from source keys and defeat " +
         "the self-exclusion guard (Discover S7c)")
-    val dest = s"$root/archive/batch=$batchId"
     val base = Seq(concat(lit(addPrefix), col("conv_id")).as("conv_id"),
       col("turn_idx"), col("role"), col("text"), col("tool"), col("ts"),
       col("day"))
     val extras = extraCols.filter(routed.columns.contains).map(col)
-    routed
-      .select(base ++ extras: _*)
-      .write.mode("overwrite").parquet(dest)
-    dest
+    BatchDirs(s"$root/archive").write(routed.select(base ++ extras: _*),
+      batchId)
   }
 
   /** The deferred/redriven namespaces are keyed by CHECKPOINT IDENTITY,
@@ -186,10 +190,11 @@ object Sinks {
 
   /** Contract-violation census (null event times found by the seal
     * audit) — operator-facing, never consulted by the engine itself.
-    * Per-batch dirs like every namespace; a reader wanting
-    * exactly-once rows should filter to committed batch ids (readSink
-    * discipline) — an orphan dir from a crashed cycle is overwritten
-    * by the idempotent re-run but is not otherwise cleaned.
+    * A [[BatchDirs]] store like every namespace; a reader wanting
+    * exactly-once rows should read through the store's committed gate
+    * (readSink discipline) — an orphan dir from a crashed cycle is
+    * overwritten by the idempotent re-run and deleted by the next fold
+    * (`Main.publishBatch`).
     */
   def violationsDir(root: String, checkpointId: String): String =
     s"$root/_violations/$checkpointId"
@@ -199,161 +204,73 @@ object Sinks {
     * normalized-text fingerprints each committed batch delivered to a
     * content sink. The cycle's namespace is this identity-keyed dir;
     * the stream keeps its own at `<sinkRoot>/stream/_fingerprints`
-    * (Streaming.runForeachBatch). The read, write and fold below take
-    * the namespace dir, so both surfaces share one store: readers gate
-    * on the caller's committed-batch set, so an orphan dir from a
+    * (Streaming.runForeachBatch). Both are [[BatchDirs]] stores: readers
+    * gate on the caller's committed-batch set, so an orphan dir from a
     * crashed batch is invisible and the idempotent re-run overwrites
-    * it.
+    * it, and [[BatchDirs.fold]] keeps the seen-set read O(1) dirs and
+    * O(distinct fps) rows. The seen-set may hold duplicate fps after a
+    * crashed fold; the reader's distinct (Dedup.reRouteSeen) absorbs
+    * them.
     */
   def fingerprintsDir(root: String, checkpointId: String): String =
     s"$root/_fingerprints/$checkpointId"
 
   /** Record the batch's content-sink fingerprints (the dedup write
-    * side) as `<nsDir>/batch=<batchId>`. Distinct per batch —
-    * within-batch multiplicity is not the store's business; one row per
-    * fp bounds the store by corpus cardinality, not delivery count.
-    * Rows the dedup stage re-routed to `duplicate` are in an earlier
-    * batch's dir by construction, so each write is O(batch) rows. When
-    * the dedup stage already computed the fingerprint column
+    * side) as batch `batchId` of the namespace `nsDir`. Distinct per
+    * batch — within-batch multiplicity is not the store's business; one
+    * row per fp bounds the store by corpus cardinality, not delivery
+    * count. Rows the dedup stage re-routed to `duplicate` are in an
+    * earlier batch's dir by construction, so each write is O(batch)
+    * rows. When the dedup stage already computed the fingerprint column
     * (Dedup.fpColName, kept by reRouteSeen(keepFp=true)), it is REUSED
     * — no second md5+normalization pass over the batch's text.
     */
   def writeFingerprints(routed: DataFrame, nsDir: String,
       batchId: String): String = {
-    val dest = s"$nsDir/batch=$batchId"
     val fp =
       if (routed.columns.contains(graft.ops.Dedup.fpColName))
         col(graft.ops.Dedup.fpColName)
       else graft.ops.TextAnalysis.fingerprint(col("text"))
-    routed.filter(col("sink").isin(Route.contentSinks: _*))
-      .select(fp.as("fp"))
-      .distinct()
-      .write.mode("overwrite").parquet(dest)
-    dest
+    BatchDirs(nsDir).write(
+      routed.filter(col("sink").isin(Route.contentSinks: _*))
+        .select(fp.as("fp"))
+        .distinct(),
+      batchId)
   }
-
-  /** The committed seen-set (None when no committed batch has recorded
-    * fingerprints yet — first batch, or the feature just turned on).
-    * May hold duplicate fps after a crashed compaction; the reader's
-    * distinct (Dedup.reRouteSeen) absorbs them.
-    */
-  def readFingerprints(spark: SparkSession, nsDir: String,
-      committed: Set[String]): Option[DataFrame] = {
-    val dirs = partitionCommitted(batchDirs(spark, nsDir), committed)._1
-    if (dirs.isEmpty) None else Some(spark.read.parquet(dirs: _*))
-  }
-
-  /** Fold fingerprint history into one distinct snapshot once the
-    * namespace exceeds `maxDirs` dirs — [[compactNamespace]]'s
-    * discipline (compacted-survivor naming, orphans deleted as crash
-    * debris, only pre-listed dirs touched). Keeps the seen-set read
-    * O(1) dirs and O(distinct fps) rows, not O(batches).
-    */
-  def compactFingerprints(spark: SparkSession, nsDir: String,
-      committedBatches: => Set[String], maxDirs: Int = 64): Boolean =
-    compactNamespace(spark, nsDir, committedBatches, maxDirs,
-      mergeSchema = false)
-
-  /** THE fold-committed-dirs-into-one-snapshot discipline shared by the
-    * violations and fingerprint namespaces (compactDeferred keeps its
-    * own body — its ledger interplay is genuinely different): compacted
-    * snapshot written FIRST (coexistence with the inputs only
-    * duplicates rows, which every reader's distinct/anti-join absorbs),
-    * only pre-listed dirs deleted, orphans deleted as crash debris
-    * (single writer per checkpoint identity; every call runs when no
-    * write to the namespace is in flight — the cycle's post-commit, the
-    * stream's batch start). One body so a future fix to the
-    * ordering/orphan rules cannot silently diverge the namespaces.
-    */
-  private[graft] def compactNamespace(spark: SparkSession, nsDir: String,
-      committedBatches: => Set[String], maxDirs: Int,
-      mergeSchema: Boolean): Boolean = {
-    val all = batchDirs(spark, nsDir)
-    if (all.length <= maxDirs) return false
-    val committed = committedBatches
-    val (dirs, orphans) = partitionCommitted(all, committed)
-    if (dirs.nonEmpty)
-      spark.read.option("mergeSchema", mergeSchema.toString)
-        .parquet(dirs: _*).distinct()
-        .write.mode("overwrite")
-        .parquet(s"$nsDir/batch=compacted-${System.nanoTime()}")
-    val conf = spark.sparkContext.hadoopConfiguration
-    (dirs ++ orphans).foreach { d =>
-      val p = new Path(d)
-      p.getFileSystem(conf).delete(p, true)
-    }
-    true
-  }
-
-  /** Per-batch manifest of skipped-cold rows (S6): the reference loses
-    * an unrestored object forever once sincedb passes its mtime
-    * (s3.rb:152-156); we advance the watermark identically but keep the
-    * skipped rows re-drivable. Idempotent per-batch overwrite; schema =
-    * full input row incl. the storage columns, so a backfill pipeline
-    * can re-evaluate eligibility directly from the manifest.
-    */
-  def writeDeferred(deferred: DataFrame, root: String, checkpointId: String,
-      batchId: String): String = {
-    val dest = s"${deferredDir(root, checkpointId)}/batch=$batchId"
-    deferred.write.mode("overwrite").parquet(dest)
-    dest
-  }
-
-  /** List `batch=*` child dirs of a namespace root (empty if absent). */
-  def batchDirs(spark: SparkSession, root: String): Seq[String] = {
-    val p = new Path(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.map(_.getPath)
-      .filter(_.getName.startsWith("batch=")).map(_.toString)
-  }
-
-  /** THE definition of a recognized (vs orphan) batch dir: its batch id
-    * committed, or it is a compaction survivor. Shared by redrive's
-    * reads and [[compactDeferred]]'s folding/cleanup so the two can
-    * never disagree about which dirs count.
-    */
-  def partitionCommitted(dirs: Seq[String],
-      committed: Set[String]): (Seq[String], Seq[String]) =
-    dirs.partition { d =>
-      val b = d.split("batch=").last
-      b.startsWith("compacted-") || committed.contains(b)
-    }
 
   /** Retire resolved deferred/redriven history: when the `_deferred`
     * namespace exceeds `maxDirs` per-batch dirs, fold every manifest
-    * MINUS the committed-ledger keys into one compacted dir and delete
-    * the folded inputs (manifests AND the ledger dirs they absorbed).
-    * Keeps both namespaces O(pending backlog), not O(cycles) — the
-    * `_lineage` compaction discipline applied here.
+    * MINUS the committed-ledger keys into one compacted survivor and
+    * delete the folded inputs (manifests AND the ledger dirs they
+    * absorbed). Keeps both namespaces O(pending backlog), not O(cycles)
+    * — the `_lineage` compaction discipline applied here. The ledger
+    * anti-join is what sets it apart from [[BatchDirs.fold]]; the
+    * listing, gate, survivor and delete are the store's.
     *
     * Crash-safe by ordering, tolerant of duplicates like every reader:
-    * compacted dir first (old + new coexisting only duplicates keys,
-    * which redrive's distinct/anti-join absorb), then the listed
-    * manifest dirs, then the folded ledger dirs (a leftover ledger
-    * entry merely anti-joins against nothing). Only dirs LISTED before
-    * the rewrite are deleted — concurrent appends are never touched.
+    * survivor first (old + new coexisting only duplicates keys, which
+    * redrive's distinct/anti-join absorb), then the listed manifest
+    * dirs, then the listed ledger dirs (a leftover ledger entry merely
+    * anti-joins against nothing). Only dirs LISTED before the rewrite
+    * are deleted — concurrent appends are never touched.
     */
   def compactDeferred(spark: SparkSession, root: String, checkpointId: String,
       committedBatches: => Set[String], maxDirs: Int = 64): Boolean = {
-    val allManifest = batchDirs(spark, deferredDir(root, checkpointId))
+    val manifests = BatchDirs(deferredDir(root, checkpointId))
+    val ledger = BatchDirs(redrivenDir(root, checkpointId))
+    val manifestDirs = manifests.dirs(spark)
     // cheap listing guard FIRST — the committed set (a lineage read +
     // driver collect) is by-name and only evaluated past the threshold
-    if (allManifest.length <= maxDirs) return false
+    if (manifestDirs.length <= maxDirs) return false
     val committed = committedBatches
-    val (manifestDirs, manifestOrphans) =
-      partitionCommitted(allManifest, committed)
-    val (ledgerDirs, ledgerOrphans) = partitionCommitted(
-      batchDirs(spark, redrivenDir(root, checkpointId)), committed)
-    if (manifestDirs.nonEmpty) {
-      val all = spark.read.parquet(manifestDirs: _*).distinct()
-      val remaining =
-        if (ledgerDirs.isEmpty) all
-        else all.join(spark.read.parquet(ledgerDirs: _*),
-          Seq("conv_id", "turn_idx"), "left_anti")
-      remaining.write.mode("overwrite").parquet(
-        s"${deferredDir(root, checkpointId)}/batch=compacted-${System.nanoTime()}")
-    }
+    val ledgerDirs = ledger.dirs(spark)
+    BatchDirs.readDirs(spark, manifests.admitted(manifestDirs, committed))
+      .foreach { m =>
+        val all = m.distinct()
+        manifests.writeSurvivor(
+          BatchDirs.readDirs(spark, ledger.admitted(ledgerDirs, committed))
+            .fold(all)(l => all.join(l, Seq("conv_id", "turn_idx"), "left_anti")))
+      }
     // orphans (dirs whose batch never committed) are crash leftovers —
     // this engine is single-writer PER CHECKPOINT IDENTITY (the same
     // assumption behind the staged publish's delete+rename), and the
@@ -362,42 +279,9 @@ object Sinks {
     // whose commit never happened (its rows are still normally
     // discoverable); an orphan ledger is ignored by every reader. Both
     // are deleted here so crash debris cannot accumulate forever.
-    val conf = spark.sparkContext.hadoopConfiguration
-    (manifestDirs ++ ledgerDirs ++ manifestOrphans ++ ledgerOrphans)
-      .foreach { d =>
-        val p = new Path(d)
-        p.getFileSystem(conf).delete(p, true)
-      }
+    BatchDirs.delete(spark, manifestDirs ++ ledgerDirs)
     true
   }
-
-  /** Retire violation-census history: when `_violations/<cid>` exceeds
-    * `maxDirs` per-batch dirs, fold every COMMITTED batch's rows into
-    * one compacted snapshot and delete the folded inputs plus orphan
-    * dirs — [[compactDeferred]]'s discipline applied to the census, so
-    * a standing `reauditDays` config with a misbehaving producer
-    * cannot grow the dir count (and the census's prior-batch read
-    * fan-in, Main.quarantineViolations) without bound.
-    *
-    * The fold reads with mergeSchema: census batches store RAW rows
-    * whose schema may evolve across engine versions, and the compacted
-    * snapshot must lose no column of any era (absent columns pad to
-    * null — whole-row distinct treats them null-safely). The frozen
-    * census identity columns exist in every batch ever written, so the
-    * census's fixed-schema dedup read works on the compacted dir
-    * unchanged. Crash-safety and orphan reasoning are compactDeferred's
-    * verbatim: compacted dir written first (coexistence only duplicates
-    * rows, which the census's whole-row anti-join absorbs), only
-    * pre-listed dirs deleted, orphans are crash debris whose rows were
-    * re-quarantined under the successor batch id (single writer per
-    * checkpoint identity; this runs post-commit, so nothing is
-    * in-flight).
-    */
-  def compactViolations(spark: SparkSession, root: String,
-      checkpointId: String, committedBatches: => Set[String],
-      maxDirs: Int = 64): Boolean =
-    compactNamespace(spark, violationsDir(root, checkpointId),
-      committedBatches, maxDirs, mergeSchema = true)
 
   /** S16 `delete` analog (s3.rb:181-183): after a successful commit, the
     * batch's consumed (conv_id, day) set is recorded in a per-batch
@@ -406,21 +290,19 @@ object Sinks {
     * (exactly how the reference separates "processed" from the
     * irreversible delete behind its `delete` flag).
     */
-  def markConsumed(routed: DataFrame, root: String, batchId: String): String = {
-    val dest = s"$root/_consumed/batch=$batchId"
-    routed.select(col("conv_id"), col("day")).distinct()
-      .write.mode("overwrite").parquet(dest)
-    dest
-  }
+  def markConsumed(routed: DataFrame, root: String, batchId: String): String =
+    BatchDirs(s"$root/_consumed")
+      .write(routed.select(col("conv_id"), col("day")).distinct(), batchId)
 
   /** (conv_id, turn_idx, day) keys published across ALL sinks for the
     * given days — the seal audit's "already delivered" side.
     * `committed` is the recognized batch-id set (the caller's ONE
     * cycle-start lineage read, plus the in-flight batch whose staged
     * publish has happened but whose commit has not: its delta rows ARE
-    * delivered, and the audit runs pre-commit). The day filter is a
-    * pushed data-column predicate, so row-group stats skip batches
-    * that contain none of the audited days.
+    * delivered, and the audit runs pre-commit). Each sink's batch dirs
+    * are read with the key schema, so nothing is inferred; the day
+    * filter is a pushed data-column predicate, so row-group stats skip
+    * batches that contain none of the audited days.
     *
     * Cost note (100 TB): this reads each audited day's published rows
     * once — paid once per day LIFETIME (at seal), plus once per reopen.
@@ -446,14 +328,12 @@ object Sinks {
           p.getName.startsWith(".") ||
           p.getName == "archive" || // prefixed COPIES, not deliveries
           p.getName == "stream") // the streaming surface commits its own
-    val batches = sinkDirs.flatMap(sd => batchDirs(spark, sd.toString))
-      .filter(d => committed.contains(d.split("batch=").last))
-    if (batches.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], keySchema)
-    else spark.read.parquet(batches: _*)
+    sinkDirs.flatMap(d =>
+      BatchDirs(d.toString).read(spark, committed, Some(keySchema)))
+      .reduceOption(_ unionByName _)
+      .getOrElse(spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], keySchema))
       .filter(col("day").isin(days.toSeq: _*))
-      .select(col("conv_id"), col("turn_idx"), col("day"))
   }
 
   /** Read a sink's COMMITTED contents: only batch dirs present in the
@@ -466,20 +346,10 @@ object Sinks {
     * (configurable `lineagePath` pipelines, Lineage.dirFor).
     */
   def readSink(spark: SparkSession, root: String, sink: String,
-      lineageDir: String): DataFrame = {
-    val committed = Lineage.committedBatchesAt(spark, lineageDir)
-    val dir = new Path(s"$root/$sink")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val batches =
-      if (!fs.exists(dir)) Seq.empty[String]
-      else fs.listStatus(dir).toSeq
-        .map(_.getPath)
-        .filter(p => p.getName.startsWith("batch=") &&
-          committed.contains(p.getName.stripPrefix("batch=")))
-        .map(_.toString)
-    if (batches.isEmpty) {
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        Schema.turnSchema)
-    } else spark.read.parquet(batches: _*)
-  }
+      lineageDir: String): DataFrame =
+    BatchDirs(s"$root/$sink")
+      .read(spark, Lineage.committedBatchesAt(spark, lineageDir))
+      .getOrElse(spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        Schema.turnSchema))
 }

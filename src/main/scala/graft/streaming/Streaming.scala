@@ -25,11 +25,11 @@ import graft.pipeline._
   * the batch cycle's [[graft.pipeline.PipelineConfig]], and each
   * micro-batch runs the cycle's own parts: `Pipeline` (parse, route,
   * enrich, the chunked prefix scans — legal inside foreachBatch), the
-  * media stage, the dedup stage over the shared fingerprint store and
-  * the salted per-sink writer (`Sinks.writeBySink`). Only what a trigger
-  * changes is its own: the [[Carry]] snapshot across micro-batches, which
-  * enters the pipeline's prefix scan as its carry-in, and the ordering
-  * guard.
+  * media stage and the dedup stage over the shared fingerprint store
+  * (one chain, `Main.stages`), and the salted per-sink writer
+  * (`Sinks.writeBySink`). Only what a trigger changes is its own: the
+  * [[Carry]] snapshot across micro-batches, which enters the pipeline's
+  * prefix scan as its carry-in, and the ordering guard.
   */
 object Streaming {
 
@@ -62,29 +62,29 @@ object Streaming {
     * kept in plain parquet so a retried/restarted batch recomputes it
     * deterministically.
     *
-    * Snapshots live under `<dir>/batch=<id>`. [[read]] takes the latest
-    * snapshot STRICTLY BEFORE a batch id (a retried batch never consults
-    * its own crashed partial write — only the committed predecessor);
-    * [[write]] overwrites idempotently and retains this snapshot plus
-    * the previous two (enough for any retry of batchId or batchId+1 to
-    * find its strictly-earlier snapshot). Full snapshots are the RIGHT
-    * shape for the carry — its state is one row per ACTIVE
-    * conversation, not an ever-growing corpus set; the fingerprint
-    * seen-set, which IS corpus-sized, uses the batch engine's delta +
-    * compaction store instead (Sinks.writeFingerprints, see
-    * [[runForeachBatch]]).
+    * Snapshots are the micro-batches of a [[BatchDirs]] store at
+    * [[dir]]. [[read]] takes the latest snapshot STRICTLY BEFORE a batch
+    * id (a retried batch never consults its own crashed partial write —
+    * only the committed predecessor); [[write]] overwrites idempotently
+    * and retains this snapshot plus the previous two (enough for any
+    * retry of batchId or batchId+1 to find its strictly-earlier
+    * snapshot). A snapshot holds one row per conversation the stream has
+    * EVER seen: the upsert never retires a conversation, so every
+    * micro-batch rewrites the whole set and unions it into the scan's
+    * carry-in. The fingerprint seen-set, which grows the same way, is a
+    * per-batch delta store that folds instead (Sinks.writeFingerprints,
+    * see [[runForeachBatch]]).
     *
     * Ordering VALIDITY IS CHECKED, not assumed: the carry records each
     * conversation's max committed turn_idx, and a batch delivering
     * turn_idx <= that max (an out-of-order backfill — e.g. an old file
     * landing late) has those rows QUARANTINED to
-    * `stream/_violations/batch=N` before the pipeline runs, never
+    * the `stream/_violations` store before the pipeline runs, never
     * silently stamped with a header/session context that postdates them.
     * The reference gets the same guarantee from its serial oldest-first
     * listing (s3.rb:166); a parallel engine has to enforce it.
     */
   object Carry {
-    import org.apache.hadoop.fs.Path
     import org.apache.spark.sql.types._
 
     /** `carry_prev_belongs` is the what=next multiline seam flag: did
@@ -107,35 +107,20 @@ object Streaming {
 
     def read(spark: SparkSession, sinkRoot: String,
         beforeBatch: Long): DataFrame = {
-      val root = dir(sinkRoot)
-      val d = new Path(root)
-      val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val prev =
-        if (!fs.exists(d)) None
-        else fs.listStatus(d).toSeq
-          .map(_.getPath.getName)
-          .filter(_.startsWith("batch="))
-          .map(_.stripPrefix("batch=").toLong)
-          .filter(_ < beforeBatch)
-          .sorted.lastOption
-      prev match {
-        case Some(b) => spark.read.schema(schema).parquet(s"$root/batch=$b")
-        case None => spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      }
+      val store = BatchDirs(dir(sinkRoot))
+      // the committed predecessor is the one snapshot read
+      store.read(spark, store.before(spark, beforeBatch).lastOption.toSet,
+        Some(schema))
+        .getOrElse(spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
     }
 
     def write(state: DataFrame, sinkRoot: String, batchId: Long): Unit = {
-      val root = dir(sinkRoot)
-      state.write.mode("overwrite").parquet(s"$root/batch=$batchId")
-      val d = new Path(root)
-      val fs = d.getFileSystem(
-        state.sparkSession.sparkContext.hadoopConfiguration)
-      fs.listStatus(d).toSeq
-        .map(_.getPath)
-        .filter(_.getName.startsWith("batch="))
-        .filter(_.getName.stripPrefix("batch=").toLong < batchId - 2)
-        .foreach(p => fs.delete(p, true))
+      val spark = state.sparkSession
+      val store = BatchDirs(dir(sinkRoot))
+      store.write(state, batchId.toString)
+      val stale = store.before(spark, batchId - 2).toSet
+      store.retain(spark, id => !stale(id))
     }
   }
 
@@ -144,10 +129,11 @@ object Streaming {
     * [[PipelineConfig]]: `inputPath`, `sinkRoot`, `excludePattern`,
     * `chunkSize`, the codec (`Pipeline.codecFor`), `saltBuckets`,
     * `dedupAcrossCycles` and the three media settings mean here what
-    * they mean to `Main.runCycle`. Each micro-batch writes
-    * `<sinkRoot>/stream/batch=<id>/sink=<sink>/` with the cycle's sink
-    * writer. Exactly-once comes from the file source's offset log in
-    * `checkpoint` plus the deterministic per-batch output dirs.
+    * they mean to `Main.runCycle`. Each micro-batch writes its batch of
+    * the `<sinkRoot>/stream` [[BatchDirs]] store, one `sink=<sink>/` dir
+    * per sink, with the cycle's sink writer. Exactly-once comes from the
+    * file source's offset log in `checkpoint` plus the deterministic
+    * per-batch output dirs.
     *
     * The file source's seen-file log replaces discovery's listing, but
     * discovery's row guards (`Discover.designGuards`: the
@@ -179,15 +165,14 @@ object Streaming {
     * AvailableNow and ProcessingTime as under the batch cycle.
     *
     * Cross-batch dedup (`dedupAcrossCycles`) uses the cycle's
-    * fingerprint store (Sinks.readFingerprints / writeFingerprints /
-    * compactFingerprints) in the namespace
-    * `<sinkRoot>/stream/_fingerprints`. Micro-batches run in order, so
-    * when batch B starts every numeric batch id below B has committed:
-    * that is batch B's committed set ([[fpCommittedBefore]]). B first
-    * folds the committed dirs once they pass the threshold — a
-    * `batch=B` dir left by a crashed attempt is an orphan then, and is
-    * deleted — and then reads its seen-set from the same committed set,
-    * so a retry never sees its own write.
+    * fingerprint store (a [[BatchDirs]] namespace written by
+    * Sinks.writeFingerprints) at `<sinkRoot>/stream/_fingerprints`.
+    * Micro-batches run in order, so when batch B starts every numeric
+    * batch id below B has committed: that is batch B's committed set
+    * (`BatchDirs.before`). B first folds the committed dirs once they
+    * pass the threshold — batch B's own dir, left by a crashed attempt,
+    * is an orphan then, and is deleted — and then reads its seen-set
+    * from the same committed set, so a retry never sees its own write.
     */
   def runForeachBatch(spark: SparkSession, cfg: PipelineConfig,
       checkpoint: String, trigger: Trigger = Trigger.AvailableNow(),
@@ -205,7 +190,9 @@ object Streaming {
     }
     val codec = Pipeline.codecFor(cfg)
     val sinkRoot = cfg.sinkRoot
-    val fpDir = s"$sinkRoot/stream/_fingerprints"
+    val fingerprints = BatchDirs(s"$sinkRoot/stream/_fingerprints")
+    val violations = BatchDirs(s"$sinkRoot/stream/_violations")
+    val output = BatchDirs(s"$sinkRoot/stream")
     import spark.implicits._
     readTurns(spark, cfg, maxFilesPerTrigger).writeStream
       .option("checkpointLocation", checkpoint)
@@ -232,9 +219,8 @@ object Streaming {
         val nLate = lateRaw.count()
         if (nLate > 0) {
           System.err.println(s"[stream] batch=$batchId: $nLate out-of-order " +
-            s"backfill rows quarantined to stream/_violations/batch=$batchId")
-          lateRaw.write.mode("overwrite")
-            .parquet(s"$sinkRoot/stream/_violations/batch=$batchId")
+            s"backfill rows quarantined to ${violations.path(batchId.toString)}")
+          violations.write(lateRaw, batchId.toString)
         }
         val turns = flagged.filter(!isLate).drop("carry_max_idx").as[Turn]
         // carry-in: the scan's state at each conversation's last
@@ -249,31 +235,29 @@ object Streaming {
             when(coalesce(col("carry_prev_belongs"), lit(false)), lit(1L))
               .otherwise(lit(0L))).as("session_id"),
           col("carry_prev_belongs").as("prev_belongs"))
-        // multimodal stage (opt-in, the batch cycle's own) on the
-        // fully-routed frame, exactly the batch ordering, and BEFORE the
-        // dedup re-route so an undecodable-media row never reaches the
-        // fingerprint store
-        val adjusted = Main.mediaStage(cfg, Pipeline(turns,
-          cfg.excludePattern, cfg.chunkSize, codec = codec,
-          carryIn = Some(carryIn))).cache()
-        // cross-batch dedup (opt-in): the cycle's dedup stage over the
-        // stream's fingerprint namespace — fold first, then read, both
-        // from the strictly-earlier committed set (see the scaladoc).
-        // Cached: the sink write and the fingerprint write consume it
-        val published =
-          if (!cfg.dedupAcrossCycles) adjusted
+        // cross-batch dedup (opt-in) reads the stream's fingerprint
+        // namespace: fold first, then read, both from the
+        // strictly-earlier committed set (see the scaladoc)
+        val committed =
+          if (!cfg.dedupAcrossCycles) Set.empty[String]
           else {
-            val committed = fpCommittedBefore(sess, fpDir, batchId)
-            Sinks.compactFingerprints(sess, fpDir, committed)
-            Main.dedupStage(sess, cfg, fpDir, committed, adjusted).cache()
+            val c = fingerprints.before(sess, batchId).toSet
+            fingerprints.fold(sess, c)
+            c
           }
+        // the cycle's stage chain, continuing each conversation from its
+        // carry. Cached: the sink write, the fingerprint write and the
+        // carry-out consume it
+        val published = Main.stages(sess, cfg, turns, fingerprints,
+          committed, Some(carryIn)).cache()
         // per-batch dir + overwrite => a retried micro-batch republishes
         // the same directory idempotently (no duplicate rows), the same
         // discipline and layout as the batch pipeline's staged publish
         Sinks.writeBySink(published.drop(graft.ops.Dedup.fpColName),
-          s"$sinkRoot/stream/batch=$batchId", cfg.saltBuckets)
+          output.path(batchId.toString), cfg.saltBuckets)
         if (cfg.dedupAcrossCycles)
-          Sinks.writeFingerprints(published, fpDir, batchId.toString)
+          Sinks.writeFingerprints(published, fingerprints.dir,
+            batchId.toString)
         // carry-out: the conv's state AT ITS LAST ROW of this batch
         // (header/session are running values, so max_by(., turn_idx) is
         // the batch-final state), upserted over the previous snapshot.
@@ -285,7 +269,9 @@ object Streaming {
             max_by(Parse.belongsUnder(mc, "text"), col("turn_idx"))
           case _ => lit(false)
         }
-        val batchCarry = adjusted.groupBy(col("conv_id"))
+        // (the dedup re-route changes only `sink`, so the carried
+        // columns are the pipeline's own)
+        val batchCarry = published.groupBy(col("conv_id"))
           .agg(
             max_by(col("header"), col("turn_idx")).as("carry_header"),
             max_by(col("header_fields_carried"), col("turn_idx"))
@@ -298,23 +284,11 @@ object Streaming {
         val merged = prev.join(batchCarry, Seq("conv_id"), "left_anti")
           .unionByName(batchCarry)
         Carry.write(merged, sinkRoot, batchId)
-        if (cfg.dedupAcrossCycles) published.unpersist()
-        adjusted.unpersist()
+        published.unpersist()
         prev.unpersist()
         flagged.unpersist()
         ()
       }
       .start()
   }
-
-  /** The fingerprint batches committed when micro-batch `batchId`
-    * starts: every listed numeric batch id below it (micro-batches run
-    * in order, so each of them committed). Compaction survivors count
-    * through Sinks.partitionCommitted.
-    */
-  private[streaming] def fpCommittedBefore(spark: SparkSession,
-      fpDir: String, batchId: Long): Set[String] =
-    Sinks.batchDirs(spark, fpDir).map(_.split("batch=").last)
-      .filter(b => b.nonEmpty && b.forall(_.isDigit) && b.toLong < batchId)
-      .toSet
 }

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.pipeline.SparkTestSession
+import graft.pipeline.{BatchDirs, SparkTestSession}
 
 /** Unit coverage for the training-data operators whose full semantics
   * the DuckDB oracle can't express (dedup survivors, LSH recall,
@@ -1829,9 +1829,10 @@ class OpsSpec extends AnyFunSuite {
     val before = pairSet()
     assert(before.size == 5 && !before.contains(("zz", "zy")),
       "orphan rows are invisible to the committed reader")
-    assert(!Dedup.compactPairs(spark, root, "c1", committed, maxDirs = 64),
+    val pairStore = BatchDirs(Dedup.pairsDir(root, "c1"))
+    assert(!pairStore.fold(spark, committed, maxDirs = 64),
       "below the threshold: no-op")
-    assert(Dedup.compactPairs(spark, root, "c1", committed, maxDirs = 2))
+    assert(pairStore.fold(spark, committed, maxDirs = 2))
     val dirs = new java.io.File(s"$root/_pairs/c1").listFiles()
       .map(_.getName).filter(_.startsWith("batch=")).toSeq
     assert(dirs.length == 1 && dirs.head.startsWith("batch=compacted-"),
@@ -1848,7 +1849,8 @@ class OpsSpec extends AnyFunSuite {
       .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2)))
       .toSet
     val bandsBefore = bandSet()
-    assert(Dedup.compactBands(spark, root, "c1", bandCommitted, maxDirs = 1))
+    assert(BatchDirs(Dedup.bandsDir(root, "c1"))
+      .fold(spark, bandCommitted, maxDirs = 1))
     assert(bandSet() == bandsBefore)
     // crash window: a second compacted dir coexisting (interrupted run)
     // only duplicates rows — readPairs' distinct absorbs it

@@ -22,6 +22,9 @@ object PipelineProps extends Properties("pipeline") {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
+  // every property over genRows uses forAllNoShrink: a shrunk list can
+  // repeat a (conv_id, turn_idx) key, which the scans do not order, and
+  // each shrink step re-runs the Spark scans
   private val genRows: Gen[List[(String, Int, Int)]] = for {
     nConvs <- Gen.choose(1, 4)
     rows <- Gen.listOfN(60, for {
@@ -35,7 +38,7 @@ object PipelineProps extends Properties("pipeline") {
   private val genChunk: Gen[Int] = Gen.choose(1, 9)
 
   property("prefixSum == naive running sum for any input and chunk size") =
-    forAll(genRows, genChunk) { (rows, chunk) =>
+    Prop.forAllNoShrink(genRows, genChunk) { (rows, chunk) =>
       rows.isEmpty || {
         val df = rows.toDF("conv_id", "turn_idx", "v")
         val got = PrefixOps.scanMany(df, Nil, Some(col("v") -> "run"),
@@ -50,7 +53,7 @@ object PipelineProps extends Properties("pipeline") {
     }
 
   property("propagateLastNonNull == naive ignoreNulls window") =
-    forAll(genRows, genChunk) { (rows, chunk) =>
+    Prop.forAllNoShrink(genRows, genChunk) { (rows, chunk) =>
       rows.isEmpty || {
         // v == 0 -> null marker, else a string value
         val df = rows.toDF("conv_id", "turn_idx", "v")
@@ -129,7 +132,7 @@ object PipelineProps extends Properties("pipeline") {
 
   property("lagGatedPrefixSum == lagOne -> prefixSum composition " +
       "(the r9 fused what=next scan) for any input and chunk size") =
-    forAll(genRows, genChunk) { (rows, chunk) =>
+    Prop.forAllNoShrink(genRows, genChunk) { (rows, chunk) =>
       rows.isEmpty || {
         // text "2"/"3" belongs (v > 1); v == 0 -> a null lag value
         val df = rows.toDF("conv_id", "turn_idx", "v")

@@ -1271,13 +1271,13 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val batchesBefore =
       Lineage.committedBatchesAt(spark, Lineage.dirFor(cfg)).size
     val dirsBefore =
-      Sinks.batchDirs(spark, Sinks.deferredDir(cfg.sinkRoot, cid)).size
+      BatchDirs(Sinks.deferredDir(cfg.sinkRoot, cid)).dirs(spark).size
     val r3 = Main.runCycle(spark, cfg, at("2025-09-03T02:00:00Z"))
     assert(r3.rowsProcessed == 0L)
     assert(Lineage.committedBatchesAt(spark, Lineage.dirFor(cfg)).size ==
       batchesBefore, "a quiet sealed day must not re-audit every cycle")
-    assert(Sinks.batchDirs(spark,
-      Sinks.deferredDir(cfg.sinkRoot, cid)).size == dirsBefore)
+    assert(BatchDirs(
+      Sinks.deferredDir(cfg.sinkRoot, cid)).dirs(spark).size == dirsBefore)
 
     // redrive publishes the backfill exactly once; a second redrive and
     // a further normal cycle deliver nothing more
@@ -1354,11 +1354,12 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(new java.io.File(s"$in/day=2025-12-01").setLastModified(1000L))
 
     // automatic detection cannot fire: no reopen, nothing manifested
-    val dirsBefore = Sinks.batchDirs(spark, Sinks.deferredDir(cfg.sinkRoot, cid)).size
+    val dirsBefore =
+      BatchDirs(Sinks.deferredDir(cfg.sinkRoot, cid)).dirs(spark).size
     val r2 = Main.runCycle(spark, cfg, at("2025-12-03T01:00:00Z"))
     assert(r2.rowsProcessed == 0L)
-    assert(Sinks.batchDirs(spark,
-      Sinks.deferredDir(cfg.sinkRoot, cid)).size == dirsBefore,
+    assert(BatchDirs(
+      Sinks.deferredDir(cfg.sinkRoot, cid)).dirs(spark).size == dirsBefore,
       "the blind spot is real: no automatic reopen without an mtime bump")
 
     // the operator forces the audit — the backfill is manifested and
@@ -1471,8 +1472,8 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // reauditDays config cannot grow it unboundedly
     Main.runCycle(spark, cfg.copy(reauditDays = Seq("2026-02-01")),
       at("2026-02-02T05:00:00Z"))
-    val violDirs = Sinks.batchDirs(spark,
-      Sinks.violationsDir(cfg.sinkRoot, cid))
+    val violDirs = BatchDirs(
+      Sinks.violationsDir(cfg.sinkRoot, cid)).dirs(spark)
     assert(violDirs.size == 1,
       s"re-audit must not duplicate the census, got $violDirs")
   }
@@ -1697,14 +1698,14 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!Sinks.compactDeferred(spark, root, cid, committed, maxDirs = 16),
       "below threshold: no-op")
     assert(Sinks.compactDeferred(spark, root, cid, committed, maxDirs = 2))
-    val mDirs = Sinks.batchDirs(spark, Sinks.deferredDir(root, cid))
+    val mDirs = BatchDirs(Sinks.deferredDir(root, cid)).dirs(spark)
     assert(mDirs.size == 1 && mDirs.head.contains("batch=compacted-"))
     val remaining = spark.read.parquet(mDirs.head)
       .select($"conv_id").collect().map(_.getString(0)).sorted
     assert(remaining.toSeq == Seq("k2", "k3"),
       "k1 retired via committed ledger; orphan manifest's k9 dropped " +
         s"(its stranding never committed) — got ${remaining.mkString(",")}")
-    assert(Sinks.batchDirs(spark, Sinks.redrivenDir(root, cid)).isEmpty,
+    assert(BatchDirs(Sinks.redrivenDir(root, cid)).dirs(spark).isEmpty,
       "committed ledger folded away; orphan ledger cleaned up")
     assert(spark.read
       .parquet(s"${Sinks.deferredDir(root, "othercid")}/batch=z")
@@ -1765,11 +1766,11 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       at("2026-04-02T02:00:00Z"))
     Main.runCycle(spark, cfg.copy(reauditDays = Seq("2026-04-01")),
       at("2026-04-02T03:00:00Z"))
-    assert(Sinks.batchDirs(spark,
-      Sinks.violationsDir(cfg.sinkRoot, cid)).size == 1,
+    assert(BatchDirs(
+      Sinks.violationsDir(cfg.sinkRoot, cid)).dirs(spark).size == 1,
       "re-audits must not duplicate the census")
-    assert(Sinks.batchDirs(spark,
-      Sinks.deferredDir(cfg.sinkRoot, cid)).isEmpty,
+    assert(BatchDirs(
+      Sinks.deferredDir(cfg.sinkRoot, cid)).dirs(spark).isEmpty,
       "re-audits must never manifest contract-violating rows")
   }
 
@@ -1795,7 +1796,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     val r1 = Main.runCycle(spark, cfg, at("2026-05-01T12:00:00Z"))
     assert(r1.rowsProcessed == 2L)
-    val store1 = Sinks.readFingerprints(spark, fpDir,
+    val store1 = BatchDirs(fpDir).read(spark,
       Lineage.committedBatchesAt(spark, Lineage.dirFor(cfg))).get
     assert(store1.count() == 2L, "cycle 1 recorded both content fps")
 
@@ -1818,7 +1819,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val batchId2 = Lineage.batchId(asOf2, wms, cid)
     val delta = Discover.delta(spark, cfg, asOf2, wms)
     val piped = Pipeline(delta.as[Turn], cfg.excludePattern)
-    val seen = Sinks.readFingerprints(spark, fpDir, committedAtStart).get
+    val seen = BatchDirs(fpDir).read(spark, committedAtStart).get
     val routedPartial = graft.ops.Dedup.reRouteSeen(piped, seen,
       Route.contentSinks, Route.duplicateSink)
     Sinks.writeStaged(routedPartial, cfg.sinkRoot, batchId2, cfg.saltBuckets)
@@ -1852,7 +1853,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"cycle 3 screens against cycle 2's committed fps, got $dup3")
     // b1 (a duplicate) must NOT have re-recorded tA's fp; store rows
     // stay one per distinct content fp
-    val store3 = Sinks.readFingerprints(spark, fpDir,
+    val store3 = BatchDirs(fpDir).read(spark,
       Lineage.committedBatchesAt(spark, Lineage.dirFor(cfg))).get
     assert(store3.distinct().count() == 3L,
       "store = {tA, tB, tC}: duplicate-sink rows never re-record fps")
@@ -1887,10 +1888,11 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       Row("other", 0, "u", "t", null, ts0, "2025-09-01"))
 
     val committed = Set("a", "b")
-    assert(!Sinks.compactViolations(spark, root, cid, committed,
+    assert(!BatchDirs(Sinks.violationsDir(root, cid)).fold(spark, committed,
       maxDirs = 16), "below threshold: no-op")
-    assert(Sinks.compactViolations(spark, root, cid, committed, maxDirs = 2))
-    val dirs = Sinks.batchDirs(spark, Sinks.violationsDir(root, cid))
+    assert(BatchDirs(Sinks.violationsDir(root, cid)).fold(spark, committed,
+      maxDirs = 2))
+    val dirs = BatchDirs(Sinks.violationsDir(root, cid)).dirs(spark)
     assert(dirs.size == 1 && dirs.head.contains("batch=compacted-"),
       s"got $dirs")
     val folded = spark.read.option("mergeSchema", "true").parquet(dirs.head)

@@ -199,8 +199,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(fp0.count() == 2L, "delta 0 = {tA, tB}")
     assert(fp1.count() == 1L, "delta 1 = {tC} only — the duplicate tA " +
       "is NOT re-recorded and the prior set is NOT rewritten")
-    def seenBy(b: Long) = Sinks.readFingerprints(spark, fpDir,
-      Streaming.fpCommittedBefore(spark, fpDir, b)).get
+    def seenBy(b: Long) = BatchDirs(fpDir).read(spark,
+      BatchDirs(fpDir).before(spark, b).toSet).get
     assert(seenBy(1).count() == 2L,
       "a batch consults only STRICTLY earlier deltas")
     assert(seenBy(2).count() == 3L,
@@ -214,9 +214,9 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // a content-sink frame carrying the dedup stage's fp column
     def delta(fps: String*) =
       fps.map(_ -> "user").toDF(graft.ops.Dedup.fpColName, "sink")
-    def committed(b: Long) = Streaming.fpCommittedBefore(spark, dir, b)
+    def committed(b: Long) = BatchDirs(dir).before(spark, b).toSet
     def seenBy(b: Long): Seq[String] =
-      Sinks.readFingerprints(spark, dir, committed(b)).toSeq
+      BatchDirs(dir).read(spark, committed(b)).toSeq
         .flatMap(_.collect().map(_.getString(0))).sorted
     def listed() = new java.io.File(dir)
       .listFiles().map(_.getName).filter(_.startsWith("batch=")).toSeq
@@ -230,7 +230,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       "read strictly-before 3 = deltas 0..2")
     // compaction at batch 5 folds only ids < 5; batch=4... all of 0..4
     // are < 5, so with maxDirs=2 they fold into one compacted dir
-    assert(Sinks.compactFingerprints(spark, dir, committed(5L), maxDirs = 2))
+    assert(BatchDirs(dir).fold(spark, committed(5L), maxDirs = 2))
     val dirs = listed()
     assert(dirs.length == 1 && dirs.head.startsWith("batch=compacted-"),
       s"five deltas folded into one compacted dir, got $dirs")
@@ -241,7 +241,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // BEFORE the seen-set read, so a stale batch=5 dir left by a
     // crashed attempt is an orphan there — deleted, not folded
     Sinks.writeFingerprints(delta("fp5"), dir, "5")
-    assert(Sinks.compactFingerprints(spark, dir, committed(5L), maxDirs = 0))
+    assert(BatchDirs(dir).fold(spark, committed(5L), maxDirs = 0))
     val after = listed()
     assert(!after.contains("batch=5") &&
       after.forall(_.startsWith("batch=compacted-")),
@@ -255,7 +255,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // crash window: compacted dir written but inputs not yet deleted ->
     // duplicate fps across dirs; the reader tolerates (reRouteSeen
     // distincts), and the SET is unchanged
-    Sinks.readFingerprints(spark, dir, committed(6L)).get.distinct()
+    BatchDirs(dir).read(spark, committed(6L)).get.distinct()
       .write.mode("overwrite")
       .parquet(s"$dir/batch=compacted-999")
     val set = seenBy(6L).distinct

@@ -18,8 +18,12 @@ Not reported:
 - `apply`, which counts as called when its enclosing object's name is
   followed by `(`, `[` or `.apply`.
 
+Each uncalled def gets a verdict: `test-reference` when the code of a
+src/test file calls it (by the same name match), `dead` otherwise.
+
 Usage: python3 tools/uncalled_defs.py [repo_root]
-Prints one `path:line  Owner.name` per uncalled def, then a count.
+Prints one `path:line  Owner.name  verdict` per uncalled def, then the
+counts.
 """
 import os
 import re
@@ -28,6 +32,7 @@ from collections import Counter
 
 SCAN_DIRS = ["src/main", "perfbench/src"]
 DEF_DIR = "src/main"
+TEST_DIR = "src/test"
 
 DEF_RE = re.compile(
     r"\bdef\s+(`[^`]+`|[A-Za-z_][A-Za-z0-9_]*|[!#%&*+\-/:<=>?@\\^|~]+)")
@@ -103,15 +108,32 @@ def owner_at(lines, lineno):
     return ""
 
 
+def read_code(root, rel):
+    code = {}
+    for path in scala_files(root, rel):
+        with open(path, encoding="utf-8") as f:
+            code[path] = strip_comments(f.read())
+    return code
+
+
+def called_in(corpus, words, def_sites, owner, name):
+    """Whether `corpus` calls `owner.name`: more uses of the name than
+    def sites of it (an `apply`: the owner's name followed by a call)."""
+    if name == "apply":
+        return re.search(
+            r"\b%s\s*(?:\(|\[|\.apply\b)" % re.escape(owner), corpus) is not None
+    uses = words[name] if re.match(r"\w", name) else corpus.count(name)
+    return uses > def_sites[name]
+
+
 def main():
     root = sys.argv[1] if len(sys.argv) > 1 else os.path.dirname(
         os.path.dirname(os.path.abspath(__file__)))
     code = {}
     for rel in SCAN_DIRS:
-        for path in scala_files(root, rel):
-            with open(path, encoding="utf-8") as f:
-                code[path] = strip_comments(f.read())
+        code.update(read_code(root, rel))
     corpus = "\n".join(code.values())
+    tests = "\n".join(read_code(root, TEST_DIR).values())
 
     defs = []  # (path, line, owner, name)
     for path, text in code.items():
@@ -131,23 +153,25 @@ def main():
     # every def site in the scanned code, perfbench's included
     def_sites = Counter(m.group(1).strip("`") for m in DEF_RE.finditer(corpus))
     words = Counter(re.findall(r"[A-Za-z_$][\w$]*", corpus))
+    test_def_sites = Counter(
+        m.group(1).strip("`") for m in DEF_RE.finditer(tests))
+    test_words = Counter(re.findall(r"[A-Za-z_$][\w$]*", tests))
 
     uncalled = []
     for path, line, owner, name in defs:
-        if name == "apply":
-            called = re.search(
-                r"\b%s\s*(?:\(|\[|\.apply\b)" % re.escape(owner), corpus)
-        else:
-            uses = (words[name] if re.match(r"\w", name)
-                    else corpus.count(name))
-            called = uses > def_sites[name]
-        if not called:
-            uncalled.append("%s:%d  %s.%s" % (
-                os.path.relpath(path, root), line, owner or "?", name))
+        if called_in(corpus, words, def_sites, owner, name):
+            continue
+        verdict = ("test-reference"
+                   if called_in(tests, test_words, test_def_sites, owner, name)
+                   else "dead")
+        uncalled.append(("%s:%d  %s.%s" % (
+            os.path.relpath(path, root), line, owner or "?", name), verdict))
 
-    for entry in sorted(uncalled):
-        print(entry)
-    print("%d uncalled of %d defs scanned" % (len(uncalled), len(defs)))
+    for entry, verdict in sorted(uncalled):
+        print("%s  %s" % (entry, verdict))
+    n_test = sum(1 for _, v in uncalled if v == "test-reference")
+    print("%d uncalled of %d defs scanned: %d test-reference, %d dead" % (
+        len(uncalled), len(defs), n_test, len(uncalled) - n_test))
 
 
 if __name__ == "__main__":
