@@ -77,11 +77,26 @@ object Dedup {
     * this is a no-op (no shuffle added); it fires exactly when text
     * bytes are few enough that shuffling them is cheaper than leaving
     * cores idle.
+    *
+    * Deciding runs no job: `.rdd` is probed only on a plan without an
+    * exchange, where the partition count is the leaves' and costs a
+    * planning pass. A plan with an exchange passes through — `.rdd`
+    * would run its stages just to count partitions, and a shuffle's
+    * output is already spread.
     */
   def parallelized(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
     // streaming frames have no .rdd (and their micro-batch partitioning
     // is the source's business) — pass them through untouched
     if (df.isStreaming) return df
+    // under AQE the exchanges sit in the adaptive node's initial plan
+    // (its input plan with the exchanges inserted)
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case other => other
+    }
+    if (plan.exists(_.isInstanceOf[Exchange])) return df
     val p = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < p) df.repartition(p) else df
   }
@@ -151,22 +166,6 @@ object Dedup {
     // — the chunkPlan discipline).
     df.select(col(idCol), tokensOf(col(textCol)).as("_toks"))
       .select(col(idCol), explode(shingleArr(col("_toks"), n)).as("shingle"))
-
-  /** One MinHash value from a shared digest: hex slice `i` (4 chars =
-    * 16 bits) of md5(shingle). All `k` hash functions are slices of ONE
-    * md5 per shingle — md5's bits are independent, so the slices act as
-    * k independent minhash functions at 1/k the hash work (the 8-md5
-    * form measured 8x the digest cost for identical LSH behavior).
-    * String-min of fixed-width hex == numeric min; md5 keeps the oracle
-    * expressible in SQL.
-    */
-  def minhashCol(shingleArr: Column, i: Int): Column = {
-    require(i >= 0 && i < 8,
-      s"minhashCol slice index must be 0..7 (one md5 = 8 slices); " +
-        s"got $i — use minhashSignatures for more hash functions")
-    array_min(transform(shingleArr,
-      s => substring(md5(s), 1 + 4 * i, 4)))
-  }
 
   /** MinHash signatures: `numHashes` columns mh0..mh{k-1} per doc, as
     * a fully NARROW per-row chain — tokens, shingles and the per-shingle
@@ -802,9 +801,6 @@ object Dedup {
       .reduce(_.bitwiseOR(_))
     coalesce(gathered, lit(0L))
   }
-
-  /** Hamming distance between two simhash values (bit-count of xor). */
-  def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
   /** SimHash near-dup PAIRS within Hamming distance `maxHamming`, via
     * band bucketing over the native wide hash

@@ -79,13 +79,11 @@ final case class BatchDirs(dir: String) {
   /** Fold growth bound: once the namespace holds more than `maxDirs`
     * dirs, write every counted dir's distinct rows as one `compacted-`
     * survivor, then delete every dir listed before it (orphans
-    * included). `committed` is by-name: the listing guard runs first, so
-    * the set (a lineage read for the cycle) is only evaluated past the
-    * threshold. The read merges schemas, so a namespace whose rows
+    * included). The read merges schemas, so a namespace whose rows
     * gained a column across engine versions (the violation census)
     * loses none in the snapshot; absent columns read as null.
     */
-  def fold(spark: SparkSession, committed: => Set[String],
+  def fold(spark: SparkSession, committed: Set[String],
       maxDirs: Int = 64): Boolean = {
     val listed = dirs(spark)
     if (listed.length <= maxDirs) return false
@@ -108,19 +106,13 @@ final case class BatchDirs(dir: String) {
     * committed set.
     */
   private[pipeline] def writeSurvivor(df: DataFrame): String =
-    write(df, BatchDirs.survivorName())
+    write(df, s"compacted-${System.nanoTime()}")
 }
 
 object BatchDirs {
 
   private def idOf(dir: String): String =
     new Path(dir).getName.stripPrefix("batch=")
-
-  /** A fresh compaction-survivor name; `Lineage.compactAt` names its
-    * compacted file with it too.
-    */
-  private[pipeline] def survivorName(): String =
-    s"compacted-${System.nanoTime()}"
 
   /** Read exactly `dirs` (paths from [[BatchDirs.dirs]]); None when empty. */
   private[pipeline] def readDirs(spark: SparkSession, dirs: Seq[String],

@@ -343,6 +343,17 @@ object Discover {
     withMedia.add("day", StringType)
   }
 
+  /** THE definition of a row-contract violation — null event time or a
+    * null identity key. One predicate shared by the design guards
+    * (exclusion from delta + audit) and the seal audit's quarantine
+    * (capture into `_violations`), so "excluded by design" and
+    * "quarantined at seal" can never cover different row sets.
+    * Each leaf is a plain IsNull — pushed to parquet null-count stats,
+    * ~free when the contract holds.
+    */
+  private[pipeline] val contractViolation: Column =
+    col("ts").isNull || col("conv_id").isNull || col("turn_idx").isNull
+
   /** The S3 zero-length and S7c archive-prefix guards — shared by the
     * delta path and the seal audit: a row skipped BY DESIGN (empty
     * text; an already-archived key) must never be classified as
@@ -377,17 +388,6 @@ object Discover {
     * operator-visible. A non-sealing deployment never hides the
     * partition, so the row remains observable in place.
     */
-  /** THE definition of a row-contract violation — null event time or a
-    * null identity key. One predicate shared by the design guards
-    * (exclusion from delta + audit) and the seal audit's quarantine
-    * (capture into `_violations`), so "excluded by design" and
-    * "quarantined at seal" can never cover different row sets.
-    * Each leaf is a plain IsNull — pushed to parquet null-count stats,
-    * ~free when the contract holds.
-    */
-  private[pipeline] val contractViolation: Column =
-    col("ts").isNull || col("conv_id").isNull || col("turn_idx").isNull
-
   private[graft] def designGuards(cfg: PipelineConfig)(df: DataFrame): DataFrame = {
     val guarded = df
       .filter(!contractViolation) // schema contract (see above)

@@ -19,6 +19,8 @@ import org.apache.spark.sql.functions._
   *
   * [[stateAt]] is called once per cycle — the reference's 3.8.2 fix
   * ("read sincedb once per cycle, not per object", CHANGELOG.md:8).
+  * A commit and a compaction are the same write, one appended file
+  * ([[append]]), so the table has one crash-safety argument.
   */
 object Lineage {
 
@@ -39,13 +41,17 @@ object Lineage {
     * EXCLUDED: it changes where rows go, not whether they are consumed,
     * so changing it must not orphan the existing watermark.
     */
-  def checkpointId(cfg: PipelineConfig): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val ident = Seq(cfg.inputPath, cfg.archivePrefix,
+  def checkpointId(cfg: PipelineConfig): String =
+    md5Hex(Seq(cfg.inputPath, cfg.archivePrefix,
       cfg.storageClassCol, cfg.restoreHeaderCol).map(String.valueOf)
-      .mkString("|")
-    md.digest(ident.getBytes("UTF-8")).map("%02x".format(_)).mkString
-  }
+      .mkString("|"))
+
+  /** Lower-case hex MD5 of `s`'s UTF-8 bytes: the one hash behind every
+    * checkpoint and batch identity.
+    */
+  private[pipeline] def md5Hex(s: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
 
   /** Resolve the lineage table directory for a config: the default keeps
     * the historical `<sinkRoot>/_lineage` location; an explicit
@@ -110,13 +116,13 @@ object Lineage {
     */
   def stateAt(spark: SparkSession, dir: String):
       (Map[String, Timestamp], Map[String, Long], Set[String]) = {
-    // aggregation stays SPARK-SIDE: the driver receives one row per
-    // day (plus the batch-id set), never the full commit history —
-    // compaction bounds the file count, not the row count, so a
-    // driver-side fold would grow O(total commits) over the
-    // checkpoint's lifetime. Spark's max also keeps full microsecond
-    // timestamp precision and ignores stray NULLs when non-null
-    // values exist for the day.
+    // the per-day maxima are folded SPARK-SIDE, one row per day, but
+    // `collect_set(batch_id)` ships every committed batch id: the
+    // driver receives O(days + commits) per cycle, growing over the
+    // checkpoint's lifetime (compaction bounds the file count, not
+    // the row count). Spark's max keeps full microsecond timestamp
+    // precision and ignores stray NULLs when non-null values exist
+    // for the day.
     val rows = readAt(spark, dir)
       .groupBy(col("day"))
       .agg(max(col("last_ts")).as("wm"), max(col("committed_at")).as("obs"),
@@ -157,40 +163,37 @@ object Lineage {
     readAt(spark, dir).select("batch_id").distinct()
       .collect().map(_.getString(0)).toSet
 
-  /** Append commit rows for a published batch. */
+  /** Append commit rows for a published batch ([[append]]). */
   def commit(spark: SparkSession, sinkRoot: String, rows: Seq[Commit]): Unit =
     commitAt(spark, path(sinkRoot), rows)
 
   def commitAt(spark: SparkSession, dir: String, rows: Seq[Commit]): Unit = {
     import spark.implicits._
-    // coalesce(1) is CORRECT here, not a scale smell: a commit is a
-    // handful of rows (one per partition day) and the O(1)-read
-    // compaction bounds the file count — do not copy this to data tables
-    if (rows.nonEmpty)
-      rows.toDS().toDF().coalesce(1).write.mode(SaveMode.Append)
-        .parquet(dir)
+    if (rows.nonEmpty) append(rows.toDS().toDF(), dir)
   }
 
+  /** The commit path: one parquet file appended to `dir`. The committer
+    * lands the whole file or none, and readers skip its `_temporary`
+    * staging. coalesce(1) is CORRECT here, not a scale smell: a commit
+    * is a handful of rows (one per partition day) and [[compactAt]]
+    * bounds the file count — do not copy this to data tables.
+    */
+  private def append(df: DataFrame, dir: String): Unit =
+    df.coalesce(1).write.mode(SaveMode.Append).parquet(dir)
+
   /** Compact the lineage table when it has accumulated more than
-    * `maxFiles` commit files (one tiny parquet per batch): rewrite the
-    * listed history into ONE new file placed ALONGSIDE the old files,
-    * then delete exactly the superseded files. The sincedb analog stays
-    * O(1) to read forever — the reference's single-scalar file has the
-    * same property by construction (s3.rb:446-468).
+    * `maxFiles` commit files (one tiny parquet per batch): re-commit the
+    * listed history as ONE file through the commit path, then delete
+    * exactly the listed files. The sincedb analog stays O(1) to read
+    * forever — the reference's single-scalar file has the same property
+    * by construction (s3.rb:446-468).
     *
-    * Crash-safety (no directory swap, no window where history is gone):
-    *  - the compacted file is written to a SIBLING staging dir (readers
-    *    scan only `_lineage/`, so it is invisible until moved);
-    *  - the single move-in is one HDFS/local rename, checked — on
-    *    failure we abort with the old files fully intact;
-    *  - a crash between the move-in and the deletes leaves the compacted
-    *    file AND some old files: duplicate commit rows, which every
-    *    lineage read tolerates by construction ([[watermarks]] takes
-    *    max per day, [[committedBatches]] a distinct set — both
-    *    idempotent under row duplication), and the next compaction
-    *    removes;
-    *  - only files listed BEFORE the rewrite are deleted — commits
-    *    appended concurrently are never touched.
+    * A crash behaves as for any commit: the append lands one whole file
+    * or none, and a crash before the deletes leaves the compacted file
+    * AND some listed files — duplicate commit rows, which every lineage
+    * read tolerates ([[stateAt]] takes max per day and a batch-id set),
+    * and which the next compaction folds. Only files listed BEFORE the
+    * append are deleted, so a concurrent commit is never touched.
     */
   def compact(spark: SparkSession, sinkRoot: String, maxFiles: Int = 64): Boolean =
     compactAt(spark, path(sinkRoot), maxFiles)
@@ -200,29 +203,13 @@ object Lineage {
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) return false
-    val oldFiles = fs.listStatus(p).toSeq
-      .filter(_.getPath.getName.endsWith(".parquet")).map(_.getPath)
-    if (oldFiles.length <= maxFiles) return false
-    // read EXACTLY the listed files (pinned), rewrite into one file
-    val staging = new Path(dir + "_compacting")
-    if (fs.exists(staging)) fs.delete(staging, true)
-    spark.read.parquet(oldFiles.map(_.toString): _*)
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(staging.toString)
-    val partOpt = fs.listStatus(staging)
-      .find(_.getPath.getName.endsWith(".parquet")).map(_.getPath)
-    val moved = partOpt.exists { part =>
-      fs.rename(part, new Path(p, s"${BatchDirs.survivorName()}.parquet"))
-    }
-    if (!moved) {
-      // no part produced, or move-in failed: abort with the old history
-      // fully intact; never leave the staging dir behind
-      fs.delete(staging, true)
-      false
-    } else {
-      oldFiles.foreach(f => fs.delete(f, false))
-      fs.delete(staging, true)
-      true
-    }
+    val listed = fs.listStatus(p).toSeq.map(_.getPath)
+      .filter(_.getName.endsWith(".parquet"))
+    if (listed.length <= maxFiles) return false
+    append(spark.read.schema(Encoders.product[Commit].schema)
+      .parquet(listed.map(_.toString): _*), dir)
+    listed.foreach(fs.delete(_, false))
+    true
   }
 
   /** Deterministic batch identity: a pure function of the checkpoint
@@ -235,13 +222,11 @@ object Lineage {
       ident: String = ""): String = {
     val state = wms.toSeq.sortBy(_._1)
       .map { case (d, t) => s"$d=${t.getTime}" }.mkString(",")
-    val md = java.security.MessageDigest.getInstance("MD5")
     // `ident` (the checkpoint identity) keeps batch ids DISJOINT between
     // two pipelines publishing into one sinkRoot: without it, identical
     // (asOf, state) pairs would collide and the second publish would
     // replace the first's batch directory
-    md.digest(s"$ident|${asOf.getTime}|$state".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
+    md5Hex(s"$ident|${asOf.getTime}|$state")
   }
 
   def exists(spark: SparkSession, p: String): Boolean = {

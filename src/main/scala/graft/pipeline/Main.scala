@@ -244,12 +244,9 @@ object Main {
       // must be recorded BEFORE the seal makes them undiscoverable, or
       // the "nothing silently lost" invariant breaks exactly when it
       // matters
-      if (sealCommits.nonEmpty || reopenCommits.nonEmpty) {
-        val absorb = writeStranded()
-        Lineage.commitAt(spark, lineageDir,
-          absorbInto(sealCommits ++ reopenCommits, absorb))
-        Lineage.compactAt(spark, lineageDir)
-      }
+      if (sealCommits.nonEmpty || reopenCommits.nonEmpty)
+        commitTail(spark, cfg, lineageDir, batchId, committedAtStart,
+          absorbInto(sealCommits ++ reopenCommits, writeStranded()))
       return CycleResult(batchId, 0L, Seq.empty)
     }
 
@@ -267,7 +264,7 @@ object Main {
     }.toSeq ++ sealCommits.filterNot(c => newDays.contains(c.day)) ++
       reopenCommits
     val published = publishBatch(spark, cfg, lineageDir, batchId,
-      staged.get, commits, _ => writeStranded())
+      committedAtStart, staged.get, commits, _ => writeStranded())
     CycleResult(batchId, total, published)
   }
 
@@ -476,19 +473,19 @@ object Main {
     * s3.rb:169-183, 380-388) -> the caller's pre-commit hook (stranded
     * manifest / redrive ledger; handed the published rows by name, so
     * a hook that ignores them reads nothing) ->
-    * fingerprints (iff configured) -> metric tables -> lineage commit ->
-    * lineage compaction -> consumption mark (the `delete` analog, only
-    * after the commit succeeded — the reference likewise deletes last)
-    * -> deferred-namespace retirement. ONE definition so the two callers
-    * cannot drift (the redrive path re-converging on this sequence is
-    * how it got archive/metrics/consumption in the first place).
+    * fingerprints (iff configured) -> metric tables -> [[commitTail]]
+    * -> consumption mark (the `delete` analog, only after the commit
+    * succeeded — the reference likewise deletes last). ONE definition
+    * so the two callers cannot drift (the redrive path re-converging on
+    * this sequence is how it got archive/metrics/consumption in the
+    * first place).
     * Archive, the hook, fingerprints and the consumption mark read the
     * batch's published files ([[Sinks.readPublished]]); none re-runs the
     * pipeline plan.
     */
   private def publishBatch(spark: SparkSession, cfg: PipelineConfig,
-      lineageDir: String, batchId: String, staged: Staged,
-      commits: Seq[Lineage.Commit],
+      lineageDir: String, batchId: String, committed: Set[String],
+      staged: Staged, commits: Seq[Lineage.Commit],
       beforeCommit: (=> DataFrame) => Map[String, Timestamp]): Seq[String] = {
     val published = Sinks.publish(spark, cfg.sinkRoot, batchId)
     def rows = Sinks.readPublished(spark, cfg.sinkRoot, batchId, published,
@@ -505,27 +502,37 @@ object Main {
     if (cfg.dedupAcrossCycles)
       Sinks.writeFingerprints(rows, fingerprints(cfg).dir, batchId)
     Aggregate.writeTables(spark, staged.metrics, cfg.sinkRoot, batchId)
-    Lineage.commitAt(spark, lineageDir, absorbInto(commits, absorb))
-    Lineage.compactAt(spark, lineageDir) // no-op until history accumulates
+    commitTail(spark, cfg, lineageDir, batchId, committed,
+      absorbInto(commits, absorb))
     if (cfg.deleteAfterProcess)
       Sinks.markConsumed(rows, cfg.sinkRoot, batchId)
-    if (cfg.deferralConfigured || cfg.dedupAcrossCycles) {
-      // lazily shared: each compactor evaluates the committed set only
-      // past its listing threshold, and at most ONE lineage read serves
-      // all of them when they do
-      lazy val committedNow = Lineage.committedBatchesAt(spark, lineageDir)
-      if (cfg.deferralConfigured) {
-        Sinks.compactDeferred(spark, cfg.sinkRoot, Lineage.checkpointId(cfg),
-          committedNow)
-        // the census's fold drops orphans as crash debris: their rows
-        // were re-quarantined under the successor batch id
-        BatchDirs(Sinks.violationsDir(cfg.sinkRoot, Lineage.checkpointId(cfg)))
-          .fold(spark, committedNow)
-      }
-      if (cfg.dedupAcrossCycles)
-        fingerprints(cfg).fold(spark, committedNow)
-    }
     published
+  }
+
+  /** The one commit tail of every lineage commit (a published batch,
+    * cycle or redrive, and the cycle's seal/refresh-only commit):
+    * append `rows` to the lineage, compact it, then run the config-gated
+    * growth bounds — the `_deferred` fold with its ledger anti-join, the
+    * `_violations` fold and the fingerprint fold. The bounds gate on
+    * `committed + batchId`, the run's one cycle-start lineage read plus
+    * its own commit: each of those namespaces is keyed by checkpoint
+    * identity and has one writer, so no other identity's batch ever
+    * names a dir in them.
+    */
+  private def commitTail(spark: SparkSession, cfg: PipelineConfig,
+      lineageDir: String, batchId: String, committed: Set[String],
+      rows: Seq[Lineage.Commit]): Unit = {
+    Lineage.commitAt(spark, lineageDir, rows)
+    Lineage.compactAt(spark, lineageDir) // no-op until history accumulates
+    val now = committed + batchId
+    val cid = Lineage.checkpointId(cfg)
+    if (cfg.deferralConfigured) {
+      Sinks.compactDeferred(spark, cfg.sinkRoot, cid, now)
+      // the census's fold drops orphans as crash debris: their rows
+      // were re-quarantined under the successor batch id
+      BatchDirs(Sinks.violationsDir(cfg.sinkRoot, cid)).fold(spark, now)
+    }
+    if (cfg.dedupAcrossCycles) fingerprints(cfg).fold(spark, now)
   }
 
   /** Contract-violation census: rows violating the row contract — null
@@ -664,11 +671,7 @@ object Main {
     // redrive's own commit changes the set, so consecutive redrives get
     // distinct ids, while a same-state crash re-run reproduces the same
     // id and republishes idempotently.
-    val stateHash = {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      md.digest(committed.toSeq.sorted.mkString(",").getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString
-    }
+    val stateHash = Lineage.md5Hex(committed.toSeq.sorted.mkString(","))
     val batchId = Lineage.batchId(asOf, wms, s"$cid|redrive|$stateHash")
     // nothing manifested, or nothing ever committed -> nothing can be
     // behind a watermark: return WITHOUT touching the input table
@@ -724,7 +727,7 @@ object Main {
       Lineage.Commit(batchId, d, mx, n, Lineage.epoch)
     }
     val published = publishBatch(spark, cfg, lineageDir, batchId,
-      staged.get, days,
+      committed, staged.get, days,
       // ledger BEFORE commit — see the crash-window analysis above
       // (a redrive manifests nothing, so no watermark absorption). The
       // pipeline keeps every row, so the published rows' keys are the

@@ -194,7 +194,7 @@ object Sinks {
     * exactly-once rows should read through the store's committed gate
     * (readSink discipline) — an orphan dir from a crashed cycle is
     * overwritten by the idempotent re-run and deleted by the next fold
-    * (`Main.publishBatch`).
+    * (`Main.commitTail`).
     */
   def violationsDir(root: String, checkpointId: String): String =
     s"$root/_violations/$checkpointId"
@@ -255,14 +255,11 @@ object Sinks {
     * are deleted — concurrent appends are never touched.
     */
   def compactDeferred(spark: SparkSession, root: String, checkpointId: String,
-      committedBatches: => Set[String], maxDirs: Int = 64): Boolean = {
+      committed: Set[String], maxDirs: Int = 64): Boolean = {
     val manifests = BatchDirs(deferredDir(root, checkpointId))
     val ledger = BatchDirs(redrivenDir(root, checkpointId))
     val manifestDirs = manifests.dirs(spark)
-    // cheap listing guard FIRST — the committed set (a lineage read +
-    // driver collect) is by-name and only evaluated past the threshold
     if (manifestDirs.length <= maxDirs) return false
-    val committed = committedBatches
     val ledgerDirs = ledger.dirs(spark)
     BatchDirs.readDirs(spark, manifests.admitted(manifestDirs, committed))
       .foreach { m =>

@@ -90,6 +90,41 @@ class OpsSpec extends AnyFunSuite {
     assert(stream.isStreaming && (Dedup.parallelized(stream) eq stream))
   }
 
+  test("parallelized decides without a Spark job: a shuffled input " +
+      "passes through, a leaf scan is still repartitioned") {
+    import org.apache.spark.ListenerBusShim
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def jobsOf[T](f: => T): (T, Int) = {
+      ListenerBusShim.drain(sc)
+      jobs.set(0)
+      val r = f
+      ListenerBusShim.drain(sc)
+      (r, jobs.get)
+    }
+    val dir = SparkTestSession.scratchDir("parjobs")
+    (0 until 40).map(i => (i.toLong, s"doc text ${i % 7}"))
+      .toDF("doc_id", "text").coalesce(1).write.parquet(s"$dir/docs")
+    val docs = spark.read.parquet(s"$dir/docs")
+    sc.addSparkListener(listener)
+    try {
+      val shuffled = Dedup.dropExactDups(docs, "doc_id", "text")
+      val (passed, n) = jobsOf(Dedup.parallelized(shuffled))
+      assert(n == 0, s"building on a shuffled frame ran $n job(s)")
+      assert(passed eq shuffled)
+      val (leaf, m) = jobsOf(Dedup.parallelized(docs))
+      assert(m == 0, s"probing a leaf scan ran $m job(s)")
+      assert(leaf.rdd.getNumPartitions == sc.defaultParallelism)
+      assert(leaf.count() == 40L)
+    } finally sc.removeSparkListener(listener)
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+  }
+
   test("hashSampleFlag: deterministic, rate-monotone, null keys dropped") {
     val df = (0L until 200L).map(i => (i, s"doc$i")).toDF("id", "name")
     def kept(rate: Int): Long = df.filter(

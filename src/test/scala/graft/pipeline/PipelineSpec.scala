@@ -1103,6 +1103,39 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       "grace not elapsed -> no new seal commits")
   }
 
+  test("a seal-only cycle runs the growth bounds: 65 orphan manifest " +
+      "dirs are folded away by the commit that only seals") {
+    val inputPath = s"$scratch/sealfold_in"
+    def at(iso: String) = Timestamp.from(java.time.Instant.parse(iso))
+    (0 until 4).map { i =>
+      ("sf-" + i, 0, "user", s"2025-05-01T00:00:0${i}Z INFO [user] s$i",
+        null: String, at(s"2025-05-01T0$i:00:00Z"), "2025-05-01")
+    }.toDF("conv_id", "turn_idx", "role", "text", "tool", "ts", "day")
+      .write.mode("overwrite").partitionBy("day").parquet(inputPath)
+    val asOf = at("2025-05-10T00:00:00Z")
+    val cfg = PipelineConfig(inputPath, s"$scratch/sealfold_sinks")
+    assert(Main.runCycle(spark, cfg, asOf).rowsProcessed == 4L)
+
+    // 65 crashed cycles' orphan manifests: one past the fold threshold
+    val ns = Sinks.deferredDir(cfg.sinkRoot, Lineage.checkpointId(cfg))
+    Seq(("sf-x", 0, at("2025-05-01T00:00:00Z"), "2025-05-01"))
+      .toDF("conv_id", "turn_idx", "ts", "day")
+      .write.parquet(s"$ns/batch=orphan0")
+    (1 until 65).foreach(i => org.apache.commons.io.FileUtils.copyDirectory(
+      new java.io.File(s"$ns/batch=orphan0"),
+      new java.io.File(s"$ns/batch=orphan$i")))
+    assert(BatchDirs(ns).dirs(spark).size == 65)
+
+    // no new data, sealing on: the cycle's only commit is the seal
+    val sealCfg = cfg.copy(sealDaysGraceSeconds = 3600)
+    val r = Main.runCycle(spark, sealCfg, asOf)
+    assert(r.rowsProcessed == 0L && r.publishedSinks.isEmpty)
+    assert(Discover.completedDays(Lineage.watermarks(spark, cfg.sinkRoot)) ==
+      Set("2025-05-01"), "the cycle committed the seal")
+    assert(BatchDirs(ns).dirs(spark).isEmpty,
+      "the seal-only commit folded the namespace (orphans are crash debris)")
+  }
+
   test("sealing is cutoff-safe and manifest-safe: grace clamps to >= " +
       "cutoff (no loss of cutoff-deferred rows) and sealing-only cycles " +
       "still write the deferred-cold manifest") {

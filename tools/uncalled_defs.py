@@ -2,11 +2,12 @@
 """List the `def`s under src/main that nothing calls.
 
 A def counts as called when its name appears as a whole word in the code
-(comments removed) of src/main or perfbench/src anywhere other than its
-own `def` site. Comments are removed first (`//` line comments and `/* */`
-block comments, which nest in Scala), so a name that only a scaladoc or
-a `//` note mentions is reported as uncalled. String literals are kept:
-an interpolated `s"${f(x)}"` is a real call.
+of src/main or perfbench/src anywhere other than its own `def` site.
+Comments (`//` line comments and `/* */` block comments, which nest in
+Scala) and the text of string literals are blanked first, so a name that
+only a scaladoc, a `//` note or a message string mentions is reported as
+uncalled. The code inside an interpolated literal is kept: `$name` and
+`${f(x)}` in `s"..."` are real uses.
 
 The scan matches names, not symbols, so it errs towards "called":
 - two defs sharing a name are both called if either name is used;
@@ -40,25 +41,65 @@ OWNER_RE = re.compile(r"\b(?:object|class|trait)\s+([A-Za-z_][A-Za-z0-9_]*)")
 CHAR_RE = re.compile(r"'(?:\\u[0-9a-fA-F]{4}|\\.|[^'\\\n])'")
 
 
+IDENT_RE = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
+
+
+def blank(text):
+    return re.sub(r"[^\n]", " ", text)
+
+
+def literal_code(src, i, triple, interpolated):
+    """Blank the string literal whose body starts at `i`, keeping the code
+    of its `$name` and `${...}` interpolations when `interpolated` (with
+    the `$` itself blanked). Returns (text, index past the literal)."""
+    quote = '"""' if triple else '"'
+    out, n = [], len(src)
+    while i < n:
+        if src.startswith(quote, i):
+            j = i + len(quote)
+            while triple and j < n and src[j] == '"':  # """...""""" closes at the last quote
+                j += 1
+            return "".join(out) + blank(src[i:j]), j
+        if not triple and src[i] == "\n":  # unterminated: ends at the line
+            return "".join(out), i
+        if not triple and src[i] == "\\":
+            out.append(blank(src[i:i + 2]))
+            i += 2
+        elif interpolated and src.startswith("$$", i):
+            out.append("  ")
+            i += 2
+        elif interpolated and src.startswith("${", i):
+            depth, j = 1, i + 2
+            while j < n and depth:
+                depth += {"{": 1, "}": -1}.get(src[j], 0)
+                j += 1
+            out.append(" " + src[i + 1:j])
+            i = j
+        elif interpolated and src[i] == "$" and IDENT_RE.match(src, i + 1):
+            j = IDENT_RE.match(src, i + 1).end()
+            out.append(" " + src[i + 1:j])
+            i = j
+        else:
+            out.append(blank(src[i]))
+            i += 1
+    return "".join(out), n
+
+
 def strip_comments(src):
-    """Blank out comments, keeping newlines (so line numbers hold) and
-    string and character literals."""
+    """Blank out comments and string-literal text, keeping newlines (so
+    line numbers hold), character literals and the code of
+    interpolations."""
     out = []
     i, n = 0, len(src)
     while i < n:
-        if src.startswith('"""', i):
-            j = src.find('"""', i + 3)
-            j = n if j < 0 else j + 3
-            while j < n and src[j] == '"':  # """...""""" closes at the last quote
-                j += 1
-            out.append(src[i:j])
+        if src[i] == '"':
+            triple = src.startswith('"""', i)
+            start = i + (3 if triple else 1)
+            # an identifier glued to the quote is an interpolator (s, f, raw)
+            interpolated = i > 0 and (src[i - 1].isalnum() or src[i - 1] == "_")
+            text, j = literal_code(src, start, triple, interpolated)
+            out.append(" " * (start - i) + text)
             i = j
-        elif src[i] == '"':
-            j = i + 1
-            while j < n and src[j] != '"' and src[j] != "\n":
-                j += 2 if src[j] == "\\" else 1
-            out.append(src[i:j + 1])
-            i = j + 1
         elif src[i] == "'":
             m = CHAR_RE.match(src, i)
             j = m.end() if m else i + 1
