@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import java.sql.Timestamp
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -18,8 +19,12 @@ import org.apache.spark.sql.functions._
   *    candidate days on the driver from the watermark map so the scan
   *    never lists already-complete partitions;
   *  - zero-length skip (S3) -> `length(text) > 0`;
-  *  - watermark (S4)        -> `ts > wm(day)` with `wm(day)` looked up
-  *    in a constant map, filtered right after the scan;
+  *  - watermark (S4)        -> per FILE first: the file ledger
+  *    ([[FileLedger]]) records each input file's max ts, and a file
+  *    whose max is not above its day's watermark is never read (the
+  *    reference's per-object `last_modified > sincedb` check); then per
+  *    ROW, `ts > wm(day)` with `wm(day)` looked up in a constant map,
+  *    filtered right after the scan of the files that remain;
   *  - cutoff (S5)           -> `ts <= asOf - cutoff` with an injected
   *    deterministic `asOf` clock (tests never read the wall clock);
   *  - exclude regex (S7d)   -> `!text.rlike(excludePattern)` is handled in
@@ -49,8 +54,12 @@ object Discover {
     * `PartitionFilters` term nor a `ts > wm` bound in `PushedFilters`
     * (only the cutoff `ts <= asOf - cutoff` and the contract guards get
     * there). The watermark is applied by the Filter right after the
-    * scan: it skips no row group and prunes no partition; the listing
-    * already skips completed days ([[completedDays]]).
+    * scan: it skips no row group and prunes no partition. Whole files
+    * are skipped before the scan instead: the listing skips completed
+    * days ([[completedDays]]), and the file ledger drops every file
+    * whose max ts is at or below its day's watermark
+    * ([[pinUncovered]]) — exactly the files whose every row this
+    * Filter would drop.
     */
   def watermarkPredicate(wms: Map[String, Timestamp]): Column = {
     val wm = element_at(typedLit(wms), col("day"))
@@ -68,13 +77,17 @@ object Discover {
     * forever once the commit advances past its timestamps. Pinning the
     * file list makes every recomputation read the same snapshot.
     *
-    * Scale note: this is one name-only listing per cycle — exactly the
-    * reference's ListObjects cost; the driver holds file paths, not data.
+    * Scale note: this is one listing per cycle — exactly the
+    * reference's ListObjects cost; the driver holds file statuses
+    * (path, length, mtime), not data. The cycle then keeps only the
+    * listed files the file ledger cannot show to be covered by the
+    * watermark ([[pinUncovered]]); this listing is the unfiltered one.
     */
   def listInputFiles(spark: SparkSession, inputPath: String,
       skipDays: Set[String] = Set.empty): Seq[String] =
     listInputFilesDetecting(spark, inputPath,
       skipDays.iterator.map(_ -> Long.MaxValue).toMap)._1
+      .map(_.getPath.toString)
 
   /** As [[listInputFiles]], with REOPEN detection for sealed days: a day
     * in `sealedBeforeMs` is pruned from the walk only while its
@@ -104,7 +117,7 @@ object Discover {
     * that path, never the only road to the audit.
     */
   def listInputFilesDetecting(spark: SparkSession, inputPath: String,
-      sealedBeforeMs: Map[String, Long]): (Seq[String], Set[String]) = {
+      sealedBeforeMs: Map[String, Long]): (Seq[FileStatus], Set[String]) = {
     val reopened = Set.newBuilder[String]
     val files = walkParquet(spark, inputPath, ())((st, _) => {
       val name = st.getPath.getName
@@ -155,26 +168,45 @@ object Discover {
     */
   private def walkParquet[C](spark: SparkSession, inputPath: String,
       init: C)(
-      descend: (org.apache.hadoop.fs.FileStatus, C) => Option[C])(
-      keep: C => Boolean): Seq[String] = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(inputPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val root = fs.makeQualified(new Path(inputPath))
+      descend: (FileStatus, C) => Option[C])(
+      keep: C => Boolean): Seq[FileStatus] = {
+    val root = inputRoot(spark, inputPath)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) return Seq.empty
-    val out = Seq.newBuilder[String]
+    val out = Seq.newBuilder[FileStatus]
     def walk(dir: Path, ctx: C): Unit =
       fs.listStatus(dir).foreach { st =>
         val name = st.getPath.getName
         val hidden = name.startsWith("_") || name.startsWith(".")
         if (!hidden) {
           if (st.isDirectory) descend(st, ctx).foreach(walk(st.getPath, _))
-          else if (keep(ctx) && name.endsWith(".parquet"))
-            out += st.getPath.toString
+          else if (keep(ctx) && name.endsWith(".parquet")) out += st
         }
       }
     walk(root, init)
-    out.result().sorted
+    out.result().sortBy(_.getPath.toString)
+  }
+
+  /** The input root, qualified: the one base every listed path and
+    * [[dayOf]] is relative to.
+    */
+  private def inputRoot(spark: SparkSession, inputPath: String): Path = {
+    val p = new Path(inputPath)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(p)
+  }
+
+  /** The `day` partition value of a file directly below
+    * `<root>/day=<v>/`, the engine's own layout, where Spark's partition
+    * inference reads `v` verbatim. None for any other placement and for
+    * values Spark would unescape or read as null: the ledger never
+    * drops such a file, it is read as before.
+    */
+  private def dayOf(root: Path, file: Path): Option[String] = {
+    val dir = file.getParent
+    if (dir == null || dir.getParent != root) None
+    else Some(dir.getName).filter(_.startsWith("day=")).map(_.drop(4))
+      .filter(v => v.nonEmpty && !v.contains('%') &&
+        v != "__HIVE_DEFAULT_PARTITION__")
   }
 
   /** End-of-day instant for a `yyyy-MM-dd` partition value: next
@@ -280,8 +312,10 @@ object Discover {
     * than each partition's committed watermark and older than the
     * freshness cutoff. Returns a DataFrame with the input schema plus
     * the `day` partition column. The underlying scan is PINNED to the
-    * file list enumerated at call time ([[listInputFiles]]) — rows
-    * landing after this call are invisible to every action on the
+    * file list enumerated at call time ([[listInputFiles]]), less the
+    * files the file ledger shows covered by the watermark
+    * ([[pinUncovered]], which also records the files it statted) —
+    * rows landing after this call are invisible to every action on the
     * returned DataFrame and surface in the NEXT cycle's delta.
     *
     * The per-day watermarks are a constant-map lookup
@@ -308,16 +342,22 @@ object Discover {
     * batch so a row the reference would lose forever (skip while
     * sincedb advances, s3.rb:152-156) stays re-drivable after its
     * restore completes.
+    *
+    * `files` is the pinned file list both sides read: the listed files
+    * the file ledger cannot show to be covered by the watermark
+    * ([[pinUncovered]]). An empty `files` means an empty delta and an
+    * empty complement, known on the driver without a Spark job.
     */
   case class Discovery(delta: DataFrame, deferredCold: DataFrame,
-      reopenedSealedDays: Set[String])
+      reopenedSealedDays: Set[String], files: Seq[String])
 
   def discover(spark: SparkSession, cfg: PipelineConfig, asOf: Timestamp,
       wms: Map[String, Timestamp],
       sealedAtMs: Map[String, Long]): Discovery = {
-    val (base, reopened) = baseDelta(spark, cfg, asOf, wms, sealedAtMs)
+    val (base, files, reopened) =
+      baseDelta(spark, cfg, asOf, wms, sealedAtMs)
     val eligible = coalesce(storageEligiblePredicate(cfg, asOf), lit(false))
-    Discovery(base.filter(eligible), base.filter(!eligible), reopened)
+    Discovery(base.filter(eligible), base.filter(!eligible), reopened, files)
   }
 
   /** The read schema for the input table under this config: the Turn
@@ -416,7 +456,7 @@ object Discover {
         if (inTarget || days.contains(name.stripPrefix("day="))) Some(true)
         else None // another day's partition — pruned wholesale
       } else Some(inTarget)
-    })(identity)
+    })(identity).map(_.getPath.toString)
 
   /** Read an EXPLICIT pinned file list with the config's
     * [[readSchema]] (`day` from the dir layout) and no filters. The
@@ -441,14 +481,15 @@ object Discover {
 
   private def baseDelta(spark: SparkSession, cfg: PipelineConfig,
       asOf: Timestamp, wms: Map[String, Timestamp],
-      sealedAtMs: Map[String, Long]): (DataFrame, Set[String]) = {
+      sealedAtMs: Map[String, Long]): (DataFrame, Seq[String], Set[String]) = {
     // completed days prune unconditionally UNLESS an observation stamp
     // is supplied (sealing configured), in which case a post-seal
     // landing reopens the day for auditing
     val skipMap = completedDays(wms).iterator
       .map(d => d -> sealedAtMs.getOrElse(d, Long.MaxValue)).toMap
-    val (files, reopened) =
+    val (listed, reopened) =
       listInputFilesDetecting(spark, cfg.inputPath, skipMap)
+    val files = pinUncovered(spark, cfg, wms, listed)
     val input = readFiles(spark, cfg, files)
 
     val watermarked =
@@ -457,6 +498,71 @@ object Discover {
 
     val guarded = designGuards(cfg)(
       watermarked.filter(cutoffPredicate(asOf, cfg.cutoffSeconds))) // S5
-    (guarded, reopened)
+    (guarded, files, reopened)
   }
+
+  /** S4 per file, the reference's per-object sincedb check (s3.rb:142,
+    * 151-152): of the `listed` files, keep every file whose day has no
+    * committed watermark and every file whose max ts is above it. A
+    * dropped file holds only rows the watermark Filter drops, so the
+    * delta, the skipped-cold complement and every commit stay the same.
+    *
+    * The max comes from the file ledger ([[FileLedger]]). The listed
+    * files it does not know — new, rewritten (another length or mtime),
+    * or behind a torn ledger file — are statted first by one narrow
+    * ts-only scan ([[fileMaxTs]]), and their entries appended. Writing
+    * the ledger is best-effort: an entry that fails to land is statted
+    * again next cycle, and the cycle's own result never depends on it.
+    */
+  private def pinUncovered(spark: SparkSession, cfg: PipelineConfig,
+      wms: Map[String, Timestamp], listed: Seq[FileStatus]): Seq[String] = {
+    val ledgerDir = FileLedger.dir(Lineage.dirFor(cfg))
+    val keys = listed.map(FileLedger.Key.of)
+    val known = FileLedger.read(spark, ledgerDir)
+    val fresh = fileMaxTs(spark, cfg, keys.filterNot(known.contains))
+    if (fresh.nonEmpty)
+      try {
+        FileLedger.append(spark, ledgerDir, fresh)
+        FileLedger.fold(spark, ledgerDir, keys.toSet)
+      } catch { case _: java.io.IOException => () }
+    val maxTs = known ++ fresh
+    val root = inputRoot(spark, cfg.inputPath)
+    keys.filter { k =>
+      dayOf(root, new Path(k.path)).flatMap(wms.get) match {
+        case None => true
+        case Some(wm) => maxTs.get(k).forall(_.exists(_ >
+          org.apache.spark.sql.catalyst.util.DateTimeUtils
+            .fromJavaTimestamp(wm)))
+      }
+    }.map(_.path)
+  }
+
+  /** The max ts (epoch micros, the Filter's own comparison domain) of
+    * each of `keys`' files over all of its rows, from one narrow scan of
+    * the ts column: each task folds its rows into a per-file max, and
+    * the driver merges the partial maxima (no shuffle, no aggregate).
+    * A file no row of which has a non-null ts maps to None. Paths are
+    * matched back through the scan's file-path column, which is
+    * URI-encoded; when a scanned path matches no key, nothing is
+    * returned, and the files stay unknown rather than read as empty.
+    */
+  private def fileMaxTs(spark: SparkSession, cfg: PipelineConfig,
+      keys: Seq[FileLedger.Key]): Map[FileLedger.Key, FileLedger.MaxTs] =
+    if (keys.isEmpty) Map.empty
+    else {
+      val maxima = readFiles(spark, cfg, keys.map(_.path))
+        .select(col("_metadata.file_path"), unix_micros(col("ts")))
+        .rdd.mapPartitions { rows =>
+          val m = scala.collection.mutable.HashMap.empty[String, Long]
+          rows.filter(!_.isNullAt(1)).foreach { r =>
+            val t = r.getLong(1)
+            m.update(r.getString(0), m.get(r.getString(0)).fold(t)(_.max(t)))
+          }
+          m.iterator
+        }.collect().toSeq
+        .groupMapReduce(p => new Path(new java.net.URI(p._1)).toString)(
+          _._2)(_ max _)
+      if (!maxima.keySet.subsetOf(keys.map(_.path).toSet)) Map.empty
+      else keys.map(k => k -> maxima.get(k.path)).toMap
+    }
 }

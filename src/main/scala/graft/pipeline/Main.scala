@@ -24,8 +24,12 @@ import org.apache.spark.sql.functions._
   * produced — one read -> decode -> write pass per batch, as the
   * reference does per object (s3.rb:376-396).
   *
-  * Re-running with no new data is a no-op (empty delta -> an empty
-  * staged write, deleted; no publish, no commit). A crash before the
+  * Re-running with no new data is a no-op: the file ledger shows every
+  * listed file covered by the watermark, so discovery pins no file and
+  * the cycle runs no pipeline job (no staged write, no publish, no
+  * commit). A delta that is empty for other reasons (every row cutoff-
+  * deferred or cold) writes an empty staged batch, which is deleted.
+  * A crash before the
   * lineage commit leaves the checkpoint untouched; the re-run
   * reproduces the same batch id and republishes idempotently.
   */
@@ -95,11 +99,14 @@ object Main {
     // fingerprint store from the same cycle-start committed set as
     // every other exactly-once check, so a crash re-run reproduces
     // identical routing) -> the staged write, the plan's one run
+    // no pinned file: the delta is empty, known on the driver
     import spark.implicits._
-    val staged = stage(spark, cfg, batchId,
-      stages(spark, cfg, delta.as[Turn](
-        org.apache.spark.sql.Encoders.product[Turn]),
-        fingerprints(cfg), committedAtStart))
+    val staged =
+      if (disc.files.isEmpty) None
+      else stage(spark, cfg, batchId,
+        stages(spark, cfg, delta.as[Turn](
+          org.apache.spark.sql.Encoders.product[Turn]),
+          fingerprints(cfg), committedAtStart))
 
     // new per-day watermarks, from the staged files' one aggregate
     val newWms = staged.toSeq.flatMap(_.metrics.days)

@@ -2227,8 +2227,9 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("the committing cycle runs its pipeline plan once: one executed " +
-      "query scans the input and no plan caches; a no-op cycle leaves no " +
-      "staging or metrics dir") {
+      "query reads the input rows, one more only the ts of its unknown " +
+      "files, and no plan caches; a no-op cycle reads no input and leaves " +
+      "no staging or metrics dir") {
     import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.util.QueryExecutionListener
@@ -2247,10 +2248,14 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
         p +: collect(p) {
           case c: InMemoryTableScanExec => c.relation.cachedPlan
         }.flatMap(withCached)
-      def scans(qe: QueryExecution, dir: String): Boolean =
+      /** The columns each scan of `dir` in `qe`'s plans reads. */
+      def scans(qe: QueryExecution, dir: String): Seq[Seq[String]] =
         withCached(qe.executedPlan).flatMap(collect(_) {
-          case s: FileSourceScanExec => s.relation.location.rootPaths
-        }).flatten.exists(_.toString.contains(dir))
+          case s: FileSourceScanExec
+              if s.relation.location.rootPaths
+                .exists(_.toString.contains(dir)) =>
+            s.requiredSchema.fieldNames.toSeq
+        })
       def caches(qe: QueryExecution): Boolean =
         collect(qe.executedPlan) { case c: InMemoryTableScanExec => c }
           .nonEmpty
@@ -2281,12 +2286,16 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     val (r1, qs1) = plans.of(Main.runCycle(spark, cfg, farFuture))
     assert(r1.rowsProcessed == n)
-    assert(qs1.count(plans.scans(_, "planonce_input")) == 1,
-      "the staged write is the only query that scans the input")
+    val reads = qs1.map(plans.scans(_, "planonce_input")).filter(_.nonEmpty)
+    assert(reads.length == 2 && reads.count(_ == Seq(Seq("ts"))) == 1,
+      "the staged write is the only query that reads the input rows; the " +
+        s"file ledger's stat reads only ts: $reads")
     assert(!qs1.exists(plans.caches), "no cached relation in any plan")
 
-    val (r2, _) = plans.of(Main.runCycle(spark, cfg, farFuture))
+    val (r2, qs2) = plans.of(Main.runCycle(spark, cfg, farFuture))
     assert(r2.rowsProcessed == 0L)
+    assert(qs2.forall(plans.scans(_, "planonce_input").isEmpty),
+      "a no-op cycle reads no input file")
     assert(!new java.io.File(Sinks.stagingDir(cfg.sinkRoot, r2.batchId))
       .exists(), "an empty staged write is deleted")
     assert(!new java.io.File(s"${cfg.sinkRoot}/_metrics/${r2.batchId}")
@@ -2333,6 +2342,218 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     assert(!new java.io.File(s"${crashCfg.sinkRoot}/_staging/${re.batchId}")
       .exists())
+  }
+
+  // ---- the file ledger (per-file sincedb) ----------------------------
+
+  /** Writes `rows` (conv_id, turn_idx, role, ts, storage_class) as ONE
+    * parquet file at exactly `dest`, replacing any file there; the
+    * local filesystem's checksum sidecar of the old file goes with it.
+    */
+  private def putFile(dest: String,
+      rows: Seq[(String, Int, String, Timestamp, String)]): Unit = {
+    val tmp = s"$scratch/putfile-${System.nanoTime()}"
+    rows.map { case (c, i, role, ts, sc) =>
+      (c, i, role, s"${Synth.isoTs(ts.getTime)} INFO [$role] $c/$i",
+        null: String, ts, sc)
+    }.toDF("conv_id", "turn_idx", "role", "text", "tool", "ts",
+        "storage_class")
+      .coalesce(1).write.parquet(tmp)
+    val part = new java.io.File(tmp).listFiles()
+      .find(f => f.getName.startsWith("part-") &&
+        f.getName.endsWith(".parquet")).get
+    val target = new java.io.File(dest)
+    target.getParentFile.mkdirs()
+    new java.io.File(target.getParentFile, s".${target.getName}.crc").delete()
+    java.nio.file.Files.move(part.toPath, target.toPath,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
+  }
+
+  /** Two sink roots over one input: `a` keeps its file ledger, `b` has
+    * its `_files` dir deleted before every cycle. Each [[cycle]] runs
+    * both and checks they return the same result; [[assertSameOutputs]]
+    * compares their committed sinks and stranded manifests.
+    */
+  private final class LedgerTwins(name: String, in: String,
+      mk: (String, String) => PipelineConfig) {
+    val a = mk(in, s"$scratch/$name/keeps")
+    val b = mk(in, s"$scratch/$name/rebuilds")
+    def ledgerDir(cfg: PipelineConfig): String =
+      FileLedger.dir(Lineage.dirFor(cfg))
+    def cycle(asOf: Timestamp): Main.CycleResult = {
+      org.apache.commons.io.FileUtils.deleteQuietly(
+        new java.io.File(ledgerDir(b)))
+      val ra = Main.runCycle(spark, a, asOf)
+      val rb = Main.runCycle(spark, b, asOf)
+      assert(ra == rb, s"$name: ledger-keeping cycle $ra, rebuilt $rb")
+      ra
+    }
+    def assertSameOutputs(): Unit = {
+      Route.sinkNames.foreach { s =>
+        assertSameTable(
+          Sinks.readSink(spark, a.sinkRoot, s, Lineage.dirFor(a)),
+          Sinks.readSink(spark, b.sinkRoot, s, Lineage.dirFor(b)),
+          s"$name: sink $s")
+      }
+      def manifest(cfg: PipelineConfig) =
+        BatchDirs(Sinks.deferredDir(cfg.sinkRoot, Lineage.checkpointId(cfg)))
+          .read(spark, Lineage.committedBatchesAt(spark, Lineage.dirFor(cfg)))
+          .map(_.select($"conv_id", $"turn_idx").collect().toSet)
+      assert(manifest(a) == manifest(b), s"$name: stranded manifests")
+    }
+    /** The single ledger file of `a`. */
+    def onlyLedgerFile(): java.io.File = {
+      val fs = new java.io.File(ledgerDir(a)).listFiles()
+        .filter(_.getName.endsWith(".ledger"))
+      assert(fs.length == 1, s"$name: ledger files ${fs.toSeq}")
+      fs.head
+    }
+  }
+
+  private def tsAt(minutes: Long): Timestamp =
+    new Timestamp(Synth.baseEpochMs + minutes * 60000L)
+
+  test("file ledger: the kept ledger and one rebuilt every cycle commit " +
+      "the same rows over cutoff-deferred, late, cold, day/ts-mismatch " +
+      "and rewritten files under an input path with a space") {
+    val in = s"$scratch/ledger eq/in put"
+    val d1 = s"$in/day=2025-01-01"
+    val tw = new LedgerTwins("ledger_eq", in, (i, root) =>
+      PipelineConfig(i, root, storageClassCol = "storage_class"))
+    // cycle 1 at +60 min: c1's turn 5 (+70) is past the cutoff; the cold
+    // c2 rows are stranded behind the watermark; c3's one row sits in
+    // the day before its ts (a day/ts mismatch) and is past the cutoff
+    // too. Committed, it moves that day's watermark past its end, so
+    // the day leaves the listing
+    putFile(s"$d1/f1.parquet", (0 until 5).map(i =>
+      ("c1", i, "user", tsAt(10L + 10 * i), null: String)) :+
+      (("c1", 5, "user", tsAt(70L), null: String)))
+    putFile(s"$d1/f2.parquet", Seq(("c2", 0, "user", tsAt(20L), "GLACIER"),
+      ("c2", 1, "assistant", tsAt(21L), "GLACIER")))
+    putFile(s"$in/day=2024-12-31/f3.parquet",
+      Seq(("c3", 0, "user", tsAt(1500L), null)))
+    assert(tw.cycle(tsAt(60L)).rowsProcessed == 5L)
+    // every listed file is keyed in the ledger exactly as the walk lists
+    // it: the scan's URI-encoded file path maps back to the walk's path
+    val listed = Discover.listInputFilesDetecting(spark, in, Map.empty)._1
+      .map(FileLedger.Key.of).toSet
+    assert(listed.exists(_.path.contains("in put/day=")))
+    assert(FileLedger.read(spark, tw.ledgerDir(tw.a)).keySet == listed)
+
+    // cycle 2: a late file behind day one's watermark lands; the deferred
+    // and the mismatched rows commit, the late rows drop as before
+    putFile(s"$d1/f4.parquet", Seq(("c4", 0, "user", tsAt(5L), null),
+      ("c4", 1, "assistant", tsAt(6L), null)))
+    assert(tw.cycle(tsAt(4320L)).rowsProcessed == 2L)
+
+    // cycle 3: the late file is rewritten in place, larger, with rows
+    // above the watermark; its stale entry no longer matches
+    putFile(s"$d1/f4.parquet", Seq(("c4", 0, "user", tsAt(100L), null),
+      ("c4", 1, "assistant", tsAt(101L), null),
+      ("c4", 2, "user", tsAt(102L), null)))
+    assert(tw.cycle(tsAt(4330L)).rowsProcessed == 3L)
+
+    // cycle 4: nothing new, and no file is pinned
+    assert(tw.cycle(tsAt(4340L)).rowsProcessed == 0L)
+    val (wms, _, _) = Lineage.stateAt(spark, Lineage.dirFor(tw.a))
+    assert(Discover.discover(spark, tw.a, tsAt(4340L), wms, Map.empty)
+      .files.isEmpty, "every file is covered by the watermark")
+    tw.assertSameOutputs()
+  }
+
+  /** Commits a file with one cutoff-deferred row, damages the one
+    * ledger file with `damage`, then checks the next cycle commits the
+    * deferred row as a run without the ledger does.
+    */
+  private def tornLedgerCase(name: String)(damage: String => String): Unit = {
+    val in = s"$scratch/$name/in"
+    val tw = new LedgerTwins(name, in, (i, root) => PipelineConfig(i, root))
+    putFile(s"$in/day=2025-01-01/f1.parquet", (0 until 5).map(i =>
+      ("c1", i, "user", tsAt(10L + 10 * i), null: String)) :+
+      (("c1", 5, "user", tsAt(70L), null: String)))
+    assert(tw.cycle(tsAt(60L)).rowsProcessed == 5L)
+    val f = tw.onlyLedgerFile()
+    val text = java.nio.file.Files.readString(f.toPath)
+    assert(text.contains(s" ${tsAt(70L).getTime * 1000L}\n"),
+      s"the entry records the deferred row's ts: $text")
+    java.nio.file.Files.writeString(f.toPath, damage(text))
+    new java.io.File(f.getParentFile, s".${f.getName}.crc").delete()
+    assert(tw.cycle(tsAt(4320L)).rowsProcessed == 1L,
+      "the damaged entry is unknown, so the file is read again")
+    tw.assertSameOutputs()
+  }
+
+  test("file ledger: a truncated ledger file (a cut-off max ts, no " +
+      "footer) is ignored, never read as a lower max") {
+    val maxTs = (tsAt(70L).getTime * 1000L).toString
+    tornLedgerCase("ledger_torn")(t =>
+      t.substring(0, t.indexOf(maxTs) + 4))
+  }
+
+  test("file ledger: a garbage line or a changed max fails the footer " +
+      "checksum, and the file is statted again") {
+    val maxTs = (tsAt(70L).getTime * 1000L).toString
+    tornLedgerCase("ledger_garbage")(t =>
+      "garbage\n" + t.replace(s" $maxTs\n", " 0\n"))
+  }
+
+  test("file ledger: an input file rewritten at the same path with a new " +
+      "size is read again") {
+    val in = s"$scratch/ledger_rewrite/in"
+    val f1 = s"$in/day=2025-01-01/f1.parquet"
+    val tw = new LedgerTwins("ledger_rewrite", in,
+      (i, root) => PipelineConfig(i, root))
+    putFile(f1, (0 until 3).map(i =>
+      ("c1", i, "user", tsAt(10L + 10 * i), null: String)))
+    assert(tw.cycle(tsAt(4320L)).rowsProcessed == 3L)
+    val before = new java.io.File(f1).length()
+    putFile(f1, (0 until 5).map(i =>
+      ("c1", i, "user", tsAt(10L + 10 * i), null: String)))
+    assert(new java.io.File(f1).length() != before)
+    assert(tw.cycle(tsAt(4330L)).rowsProcessed == 2L,
+      "the rewritten file's rows above the watermark commit")
+    tw.assertSameOutputs()
+  }
+
+  test("file ledger text: every prefix of a ledger file parses to all of " +
+      "its entries or none; an unparseable line is skipped on its own") {
+    val entries = Map(
+      FileLedger.Key("file:/in put/day=2025-01-01/a b.parquet", 10L, 20L) ->
+        Some(1735689612345678L),
+      FileLedger.Key("file:/in/day=2025-01-02/c%d.parquet", 11L, 21L) -> None)
+    val text = FileLedger.format(entries)
+    assert(FileLedger.parse(text) == entries)
+    (0 until text.length).foreach { n =>
+      val got = FileLedger.parse(text.substring(0, n))
+      assert(got.isEmpty || got == entries, s"prefix of $n chars: $got")
+    }
+    // a line that fits the footer but is not an entry drops alone
+    val body = "not an entry\n"
+    val crc = new java.util.zip.CRC32
+    crc.update(body.getBytes("UTF-8"))
+    assert(FileLedger.parse(
+      s"${body}#end 1 ${java.lang.Long.toHexString(crc.getValue)}\n").isEmpty)
+    val withGood = text.substring(0, text.indexOf("#end")) + body
+    val crc2 = new java.util.zip.CRC32
+    crc2.update(withGood.getBytes("UTF-8"))
+    assert(FileLedger.parse(
+      s"${withGood}#end 3 ${java.lang.Long.toHexString(crc2.getValue)}\n") ==
+      entries)
+  }
+
+  test("file ledger fold: past 64 ledger files one file keeps the entries " +
+      "of the listed files, and exactly the folded files are deleted") {
+    val dir = s"$scratch/ledger_fold/_files"
+    val keys = (0 until 70).map(i =>
+      FileLedger.Key(s"file:/in/day=2025-01-01/f$i.parquet", i.toLong, 1L))
+    keys.foreach(k => FileLedger.append(spark, dir, Map(k -> Some(k.length))))
+    assert(!FileLedger.fold(spark, dir, keys.toSet, maxFiles = 70))
+    val listed = keys.take(50).toSet
+    assert(FileLedger.fold(spark, dir, listed))
+    assert(new java.io.File(dir).list().count(_.endsWith(".ledger")) == 1)
+    assert(FileLedger.read(spark, dir) ==
+      listed.map(k => k -> Some(k.length)).toMap)
   }
 
   private def write2(dest: String,

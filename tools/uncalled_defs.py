@@ -16,6 +16,9 @@ The scan matches names, not symbols, so it errs towards "called":
 Not reported:
 - `override` defs, which the runtime or a parent type calls;
 - `main` entry points;
+- the defs in ENTRY_POINTS, which code outside the code base calls by
+  name (`SparkEntry.entry`, the flagship query of the `SparkEntry`
+  contract);
 - `apply`, which counts as called when its enclosing object's name is
   followed by `(`, `[` or `.apply`.
 
@@ -34,6 +37,9 @@ from collections import Counter
 SCAN_DIRS = ["src/main", "perfbench/src"]
 DEF_DIR = "src/main"
 TEST_DIR = "src/test"
+# (owner, name) of defs called from outside the code base: callers of
+# the SparkEntry contract load graft.SparkEntry and call `entry` on it.
+ENTRY_POINTS = {("SparkEntry", "entry")}
 
 DEF_RE = re.compile(
     r"\bdef\s+(`[^`]+`|[A-Za-z_][A-Za-z0-9_]*|[!#%&*+\-/:<=>?@\\^|~]+)")
@@ -189,7 +195,10 @@ def main():
                 continue
             if name == "main" and "Array[String]" in text[m.end():m.end() + 60]:
                 continue
-            defs.append((path, lineno + 1, owner_at(lines, lineno), name))
+            owner = owner_at(lines, lineno)
+            if (owner, name) in ENTRY_POINTS:
+                continue
+            defs.append((path, lineno + 1, owner, name))
 
     # every def site in the scanned code, perfbench's included
     def_sites = Counter(m.group(1).strip("`") for m in DEF_RE.finditer(corpus))
