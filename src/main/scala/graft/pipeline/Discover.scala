@@ -15,9 +15,9 @@ import org.apache.spark.sql.functions._
   * Catalyst `Column` predicate so pushdown/pruning happen for free:
   *
   *  - prefix pruning (S2)   -> partition pruning on the `day` partition
-  *    column (Catalyst `PruneFileSourcePartitions`); discovery computes
-  *    candidate days on the driver from the watermark map so the scan
-  *    never lists already-complete partitions;
+  *    column (Catalyst `PruneFileSourcePartitions`); with sealing on,
+  *    discovery computes candidate days on the driver from the
+  *    watermark map so the scan never lists sealed partitions;
   *  - zero-length skip (S3) -> `length(text) > 0`;
   *  - watermark (S4)        -> per FILE first: the file ledger
   *    ([[FileLedger]]) records each input file's max ts, and a file
@@ -55,11 +55,11 @@ object Discover {
     * (only the cutoff `ts <= asOf - cutoff` and the contract guards get
     * there). The watermark is applied by the Filter right after the
     * scan: it skips no row group and prunes no partition. Whole files
-    * are skipped before the scan instead: the listing skips completed
-    * days ([[completedDays]]), and the file ledger drops every file
-    * whose max ts is at or below its day's watermark
-    * ([[pinUncovered]]) — exactly the files whose every row this
-    * Filter would drop.
+    * are skipped before the scan instead: with sealing configured the
+    * listing skips completed days ([[completedDays]]), and the file
+    * ledger drops every file whose max ts is at or below its day's
+    * watermark ([[pinUncovered]]) — exactly the files whose every row
+    * this Filter would drop.
     */
   def watermarkPredicate(wms: Map[String, Timestamp]): Column = {
     val wm = element_at(typedLit(wms), col("day"))
@@ -98,8 +98,7 @@ object Discover {
     * behind the end-of-day watermark, so the delta scan would read and
     * drop it all), but it is reported in the second component so the
     * caller can run the seal audit over it. `Long.MaxValue` = prune
-    * unconditionally (the pre-sealing behavior; used for days completed
-    * without the sealing feature, where no observation stamp exists).
+    * unconditionally (a day without an observation stamp).
     *
     * The mtime check costs NOTHING extra: the parent listStatus that
     * the walk already performs returns each day dir's FileStatus, mtime
@@ -482,11 +481,14 @@ object Discover {
   private def baseDelta(spark: SparkSession, cfg: PipelineConfig,
       asOf: Timestamp, wms: Map[String, Timestamp],
       sealedAtMs: Map[String, Long]): (DataFrame, Seq[String], Set[String]) = {
-    // completed days prune unconditionally UNLESS an observation stamp
-    // is supplied (sealing configured), in which case a post-seal
-    // landing reopens the day for auditing
-    val skipMap = completedDays(wms).iterator
-      .map(d => d -> sealedAtMs.getOrElse(d, Long.MaxValue)).toMap
+    // completed days prune only under sealing, whose audit and reopen
+    // check cover them; otherwise a later file above the watermark of a
+    // day completed by a past-its-end row is listed (the ledger drops
+    // the covered files)
+    val skipMap =
+      if (cfg.sealDaysGraceSeconds < 0) Map.empty[String, Long]
+      else completedDays(wms).iterator
+        .map(d => d -> sealedAtMs.getOrElse(d, Long.MaxValue)).toMap
     val (listed, reopened) =
       listInputFilesDetecting(spark, cfg.inputPath, skipMap)
     val files = pinUncovered(spark, cfg, wms, listed)

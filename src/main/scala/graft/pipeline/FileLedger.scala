@@ -1,7 +1,6 @@
 package graft.pipeline
 
-import java.nio.charset.StandardCharsets.UTF_8
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.sql.SparkSession
 
 /** The per-file sincedb: facts about input files, kept beside the
@@ -20,13 +19,10 @@ import org.apache.spark.sql.SparkSession
   * mtime contract, s3.rb:383-390; parquet writers never rewrite a file).
   *
   * The ledger holds facts about immutable files, not commit state, so
-  * it needs no lineage gate: a crash at any point leaves every written
-  * entry true. Each ledger file is one driver-side write through the
-  * Hadoop FileSystem API, no Spark job, and ends with a footer (entry
-  * count and CRC32 of the body). A file without a valid footer is torn
-  * or damaged and is ignored as a whole; an unparseable line is
-  * ignored on its own. Either way its input files count as unknown and
-  * are statted again, never wrongly skipped.
+  * it needs no lineage gate: a crash anywhere leaves every written
+  * entry true. It lives in the [[CheckpointStore]] beside the lineage,
+  * but a damaged ledger file is ignored (and an unparseable line on its
+  * own): its input files count as unknown and are statted again.
   */
 object FileLedger {
 
@@ -38,119 +34,49 @@ object FileLedger {
       Key(st.getPath.toString, st.getLen, st.getModificationTime)
   }
 
-  /** Max `ts` in epoch microseconds over a file's rows, None if no row
-    * has a non-null ts.
-    */
+  /** Max `ts` in epoch micros over a file's rows; None: no non-null ts. */
   type MaxTs = Option[Long]
 
   def dir(lineageDir: String): String = s"$lineageDir/_files"
 
-  private val Suffix = ".ledger"
-  private val Footer = "#end"
+  private def store(spark: SparkSession, dir: String) =
+    new CheckpointStore(spark, dir, ".ledger", strict = false)
 
-  /** Every valid entry of the ledger files under `dir` (empty when the
-    * dir does not exist). Duplicate keys, left by a crashed fold or by
-    * two identities statting one file, merge by max: a larger max only
-    * keeps a file pinned.
-    */
+  /** Every valid entry of the ledger under `dir`. */
   def read(spark: SparkSession, dir: String): Map[Key, MaxTs] =
-    merged(files(spark, dir))
+    entries(store(spark, dir).read())
 
   /** Append `entries` as one new ledger file. */
   def append(spark: SparkSession, dir: String,
       entries: Map[Key, MaxTs]): Unit =
-    if (entries.nonEmpty) {
-      val d = new Path(dir)
-      val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val out = fs.create(new Path(d,
-        s"${System.nanoTime()}-${java.util.UUID.randomUUID()}$Suffix"), false)
-      try out.write(format(entries).getBytes(UTF_8)) finally out.close()
-    }
+    store(spark, dir).append(lines(entries))
 
-  /** Growth bound, as the lineage's: once the ledger holds more than
-    * `maxFiles` files, rewrite the entries of the `listed` input files
-    * as one file, then delete exactly the ledger files read for it.
-    * Entries of files no longer listed (a sealed day, a deleted file, a
-    * stale length or mtime, another identity's input) drop out; a crash
-    * before the deletes leaves duplicate entries, which [[read]] merges.
+  /** Growth bound, the store's fold: past `maxFiles` ledger files, only
+    * the entries of the `listed` input files are kept (a sealed day, a
+    * deleted or rewritten file, another identity's input drop out).
     */
   def fold(spark: SparkSession, dir: String, listed: Set[Key],
-      maxFiles: Int = 64): Boolean = {
-    val ledgers = files(spark, dir)
-    if (ledgers.length <= maxFiles) return false
-    append(spark, dir,
-      merged(ledgers).filter { case (k, _) => listed.contains(k) })
-    ledgers.foreach { case (fs, p) => fs.delete(p, false) }
-    true
-  }
+      maxFiles: Int = 64): Boolean =
+    store(spark, dir).fold(maxFiles)(ls =>
+      lines(entries(ls).filter { case (k, _) => listed.contains(k) }))
 
-  /** One ledger file's text: a line per entry, `<url-encoded path>
-    * <length> <mtime> <max ts micros or ->`, then the footer
-    * `#end <entries> <crc32 of the body, hex>`.
-    */
-  private[pipeline] def format(entries: Map[Key, MaxTs]): String = {
-    val body = entries.toSeq.sortBy(_._1.path).map { case (k, mx) =>
-      s"${java.net.URLEncoder.encode(k.path, UTF_8)} ${k.length} ${k.mtime} " +
-        mx.fold("-")(_.toString) + "\n"
-    }.mkString
-    s"$body$Footer ${entries.size} ${crc(body)}\n"
-  }
-
-  /** The entries of one ledger file's text; empty unless its footer
-    * matches the body's entry count and checksum.
-    */
-  private[pipeline] def parse(text: String): Map[Key, MaxTs] = {
-    val cut = text.lastIndexOf(s"\n$Footer ") + 1
-    val footer =
-      if (cut == 0 && !text.startsWith(s"$Footer ")) Array.empty[String]
-      else text.substring(cut).stripSuffix("\n").split(' ')
-    val body = text.substring(0, cut)
-    val lines = body.split('\n').filter(_.nonEmpty)
-    val valid = footer.length == 3 && footer(0) == Footer &&
-      footer(1) == lines.length.toString && footer(2) == crc(body)
-    if (!valid) Map.empty
-    else lines.iterator.flatMap(parseLine).toMap
-  }
-
-  private def parseLine(line: String): Option[(Key, MaxTs)] =
-    line.split(' ') match {
-      case Array(p, len, mt, mx) =>
-        scala.util.Try {
-          val max = if (mx == "-") None else Some(mx.toLong)
-          Key(java.net.URLDecoder.decode(p, UTF_8), len.toLong, mt.toLong) -> max
-        }.toOption
-      case _ => None
+  /** A line per entry: `<path> <length> <mtime> <max ts micros>`. */
+  private[pipeline] def lines(entries: Map[Key, MaxTs]): Seq[String] =
+    entries.toSeq.sortBy(_._1.path).map { case (k, mx) =>
+      CheckpointStore.line(k.path, k.length.toString, k.mtime.toString,
+        mx.map(_.toString).orNull)
     }
 
-  private def crc(s: String): String = {
-    val c = new java.util.zip.CRC32
-    c.update(s.getBytes(UTF_8))
-    java.lang.Long.toHexString(c.getValue)
-  }
-
-  private def merged(ledgers: Seq[(FileSystem, Path)]): Map[Key, MaxTs] =
-    ledgers.flatMap { case (fs, p) => parse(slurp(fs, p)) }
-      .groupMapReduce(_._1)(_._2)(Ordering[MaxTs].max)
-
-  /** The ledger files under `dir`; hidden names (the local filesystem's
-    * `.crc` sidecars) are skipped.
+  /** The entries of ledger lines, skipping unparseable ones. Duplicate
+    * keys (a crashed fold, two identities statting one file) merge by
+    * max: a larger max only keeps a file pinned.
     */
-  private def files(spark: SparkSession, dir: String): Seq[(FileSystem, Path)] = {
-    val d = new Path(dir)
-    val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(d)) Seq.empty
-    else fs.listStatus(d).toSeq.map(_.getPath)
-      .filter(p => p.getName.endsWith(Suffix) && !p.getName.startsWith("."))
-      .map(fs -> _)
-  }
+  private[pipeline] def entries(lines: Seq[String]): Map[Key, MaxTs] =
+    lines.flatMap(parseLine).groupMapReduce(_._1)(_._2)(Ordering[MaxTs].max)
 
-  /** A ledger file's text; empty, so invalid, when it cannot be read
-    * whole (a checksum failure on a torn local file, a file a concurrent
-    * fold deleted).
-    */
-  private def slurp(fs: FileSystem, p: Path): String =
-    try {
-      val in = fs.open(p)
-      try new String(in.readAllBytes(), UTF_8) finally in.close()
-    } catch { case _: java.io.IOException => "" }
+  private def parseLine(line: String): Option[(Key, MaxTs)] =
+    scala.util.Try(CheckpointStore.fields(line) match {
+      case Seq(p, len, mt, mx) =>
+        Key(p, len.toLong, mt.toLong) -> Option(mx).map(_.toLong)
+    }).toOption
 }

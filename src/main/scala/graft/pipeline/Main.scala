@@ -11,8 +11,9 @@ import org.apache.spark.sql.functions._
   * Streaming trigger; see graft.streaming).
   *
   * Lifecycle per cycle (SURVEY.md §3.1):
-  *   read lineage once -> discover delta (watermark + cutoff predicates,
-  *   partition-pruned scan) -> parse (grok columns + header propagation +
+  *   read lineage once (driver-side, no Spark job) -> discover delta
+  *   (file ledger + watermark + cutoff predicates, partition-pruned
+  *   scan) -> parse (grok columns + header propagation +
   *   sessionization) -> route -> enrich (constant-map lookups) -> staged
   *   sink write -> one aggregate over the staged files (per-day
   *   watermarks + metric rows) -> atomic publish -> metric tables ->
@@ -26,12 +27,12 @@ import org.apache.spark.sql.functions._
   *
   * Re-running with no new data is a no-op: the file ledger shows every
   * listed file covered by the watermark, so discovery pins no file and
-  * the cycle runs no pipeline job (no staged write, no publish, no
-  * commit). A delta that is empty for other reasons (every row cutoff-
-  * deferred or cold) writes an empty staged batch, which is deleted.
-  * A crash before the
-  * lineage commit leaves the checkpoint untouched; the re-run
-  * reproduces the same batch id and republishes idempotently.
+  * the cycle runs no Spark job (no staged write, no publish, no commit;
+  * the lineage and the ledger are read on the driver). A delta empty
+  * for other reasons (every row cutoff-deferred or cold) writes an
+  * empty staged batch, which is deleted. A crash before the lineage
+  * commit leaves the checkpoint untouched; the re-run reproduces the
+  * same batch id and republishes idempotently.
   */
 object Main {
 
@@ -40,14 +41,12 @@ object Main {
 
   def runCycle(spark: SparkSession, cfg: PipelineConfig,
       asOf: Timestamp): CycleResult = {
-    // 1. checkpoint state — read ONCE per cycle (CHANGELOG.md:8
-    // semantics), from the config's resolved lineage location (identity-
-    // keyed when lineagePath is set — the sincedb_path analog)
+    // 1. checkpoint state — read ONCE per cycle (CHANGELOG.md:8), from
+    // the config's lineage location (identity-keyed when lineagePath is
+    // set — the sincedb_path analog). The one read serves every
+    // per-cycle lookup: watermarks, observation stamps and the
+    // committed-batch set every later exactly-once check consumes
     val lineageDir = Lineage.dirFor(cfg)
-    // ONE lineage read serves every per-cycle lookup (watermarks,
-    // observation stamps, committed-batch set — the 3.8.2 read-once
-    // discipline); the audit's census/manifest/published checks all
-    // consume this same cycle-start committed set
     val (wms, obsMs, committedAtStart) = Lineage.stateAt(spark, lineageDir)
     val batchId = Lineage.batchId(asOf, wms, Lineage.checkpointId(cfg))
     // the cycle's observation stamp, taken BEFORE any listing: every

@@ -15,7 +15,8 @@ import org.apache.spark.sql.functions._
   *   1. write every sink's delta under `_staging/<batchId>/<sink>/`;
   *   2. atomically rename each to `<sink>/batch=<batchId>/` (local/HDFS
   *      rename is atomic per directory);
-  *   3. append the lineage commit rows (Lineage.commit) LAST.
+  *   3. append the lineage commit rows LAST: one driver-side file of
+  *      the checkpoint store, renamed into place (Lineage.commitAt).
   *
   * `batchId` is a pure function of (asOf, checkpoint state), so a crashed
   * run re-executed on the same state republishes the SAME batch

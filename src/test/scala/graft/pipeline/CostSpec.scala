@@ -53,18 +53,17 @@ class CostSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def inputFiles(in: String): Int =
     Discover.listInputFiles(spark, in).length
 
-  test("a no-op cycle after a commit runs 2 jobs, the lineage read's") {
+  test("a no-op cycle after a commit runs no Spark job") {
     val in = s"$scratch/noop_in"
     land(in, 0L, 20L, 1)
     val cfg = PipelineConfig(in, s"$scratch/noop_sinks")
     assert(Main.runCycle(spark, cfg, asOf).rowsProcessed > 0)
     val (r, n) = jobsOf(Main.runCycle(spark, cfg, asOf))
     assert(r.rowsProcessed == 0L)
-    assert(n == 2, s"no-op cycle ran $n jobs")
+    assert(n == 0, s"no-op cycle ran $n jobs")
   }
 
-  test("the no-op cycle over more than 32 input files still runs 2 jobs: " +
-      "no file is read, so Spark lists none") {
+  test("the no-op cycle over more than 32 input files runs no Spark job") {
     val in = s"$scratch/wide_in"
     land(in, 0L, 60L, 40)
     assert(inputFiles(in) > 32)
@@ -72,10 +71,10 @@ class CostSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Main.runCycle(spark, cfg, asOf).rowsProcessed > 0)
     val (r, n) = jobsOf(Main.runCycle(spark, cfg, asOf))
     assert(r.rowsProcessed == 0L)
-    assert(n == 2, s"no-op cycle over ${inputFiles(in)} files ran $n jobs")
+    assert(n == 0, s"no-op cycle over ${inputFiles(in)} files ran $n jobs")
   }
 
-  test("a committing poll cycle runs 15 jobs, one of them the stat of " +
+  test("a committing poll cycle runs 12 jobs, one of them the stat of " +
       "its new file") {
     val in = s"$scratch/poll_in"
     land(in, 0L, 20L, 1)
@@ -84,29 +83,28 @@ class CostSpec extends AnyFunSuite with BeforeAndAfterAll {
     land(in, 1010L, 20L, 1)
     val (r, n) = jobsOf(Main.runCycle(spark, cfg, asOf))
     assert(r.rowsProcessed > 0)
-    assert(n == 15, s"committing cycle ran $n jobs")
+    assert(n == 12, s"committing cycle ran $n jobs")
   }
 
-  test("a committing cycle that compacts the lineage runs 17 jobs") {
-    import spark.implicits._
+  test("a committing cycle that compacts the lineage runs 12 jobs") {
     val in = s"$scratch/compact_in"
     land(in, 0L, 20L, 1)
     val cfg = PipelineConfig(in, s"$scratch/compact_sinks")
     // 64 commit files of a day the input never has: the cycle's own
     // commit is the 65th, past the compaction bound
-    sc.parallelize((0 until 64).map(i => Lineage.Commit(s"old$i",
-        "1990-01-01", new Timestamp(i * 1000L), 1L, Lineage.epoch)), 64)
-      .toDS().write.parquet(Lineage.dirFor(cfg))
+    (0 until 64).foreach(i => Lineage.commitAt(spark, Lineage.dirFor(cfg),
+      Seq(Lineage.Commit(s"old$i", "1990-01-01", new Timestamp(i * 1000L),
+        1L, Lineage.epoch))))
     val (r, n) = jobsOf(Main.runCycle(spark, cfg, asOf))
     assert(r.rowsProcessed > 0)
     assert(new java.io.File(Lineage.dirFor(cfg)).list()
-      .count(_.endsWith(".parquet")) == 1, "the lineage was compacted")
+      .count(_.endsWith(".commits")) == 1, "the lineage was compacted")
     assert(FileLedger.read(spark, FileLedger.dir(Lineage.dirFor(cfg)))
       .nonEmpty, "compaction leaves the file ledger beside it")
-    assert(n == 17, s"compacting cycle ran $n jobs")
+    assert(n == 12, s"compacting cycle ran $n jobs")
   }
 
-  test("Lineage.stateAt runs 2 jobs") {
+  test("Lineage.stateAt runs no Spark job") {
     val in = s"$scratch/state_in"
     land(in, 0L, 20L, 1)
     val cfg = PipelineConfig(in, s"$scratch/state_sinks")
@@ -114,6 +112,41 @@ class CostSpec extends AnyFunSuite with BeforeAndAfterAll {
     val ((wms, _, committed), n) =
       jobsOf(Lineage.stateAt(spark, Lineage.dirFor(cfg)))
     assert(wms.nonEmpty && committed.size == 1)
-    assert(n == 2, s"stateAt ran $n jobs")
+    assert(n == 0, s"stateAt ran $n jobs")
+  }
+
+  test("a lineage dir in the Parquet format converts once to the same " +
+      "state, then reads with no Spark job") {
+    import spark.implicits._
+    val dir = s"$scratch/parquet_lineage"
+    def at(iso: String) = Timestamp.from(java.time.Instant.parse(iso))
+    val commits = Seq(
+      Lineage.Commit("b1", "2025-01-01", at("2025-01-01T10:00:00.123456Z"),
+        3L, at("2025-01-02T00:00:00Z")),
+      Lineage.Commit("b2", "2025-01-01", at("2025-01-01T09:00:00Z"), 1L,
+        null),
+      Lineage.Commit("b2", "2025-01-02", at("2025-01-02T23:59:59.999999Z"),
+        2L, at("2025-01-03T00:00:00.5Z")),
+      Lineage.Commit("r1", "2025-01-02", at("2025-01-02T01:00:00Z"), 1L,
+        Lineage.epoch))
+    // the earlier format: one coalesce(1) Parquet file per commit, and
+    // one compacted file holding several commits' rows
+    commits.take(2).foreach(c =>
+      Seq(c).toDS().coalesce(1).write.mode("append").parquet(dir))
+    commits.drop(2).toDS().coalesce(1).write.mode("append").parquet(dir)
+    // the state the Parquet-reading stateAt computed
+    val rows = spark.read.parquet(dir).groupBy($"day")
+      .agg(max($"last_ts"), max($"committed_at"), collect_set($"batch_id"))
+      .collect()
+    val want = (rows.map(r => r.getString(0) -> r.getTimestamp(1)).toMap,
+      rows.flatMap(r => Option(r.getTimestamp(2))
+        .map(r.getString(0) -> _.getTime)).toMap,
+      rows.flatMap(_.getSeq[String](3)).toSet)
+    assert(Lineage.stateAt(spark, dir) == want)
+    assert(!new java.io.File(dir).list().exists(_.endsWith(".parquet")),
+      "the conversion deletes the Parquet commit files")
+    val (again, n) = jobsOf(Lineage.stateAt(spark, dir))
+    assert(again == want)
+    assert(n == 0, s"stateAt after the conversion ran $n jobs")
   }
 }

@@ -624,7 +624,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("empty/missing lineage reads as epoch watermark (sincedb_spec analog)") {
     assert(Lineage.watermarks(spark, s"$scratch/nonexistent").isEmpty)
-    val df = Lineage.read(spark, s"$scratch/nonexistent")
+    val df = Lineage.readAt(spark, Lineage.path(s"$scratch/nonexistent"))
     assert(df.isEmpty)
   }
 
@@ -683,21 +683,24 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val root = s"$scratch/compact_sinks"
     val now = new Timestamp(0L)
     (1 to 80).foreach { i =>
-      Lineage.commit(spark, root, Seq(
+      Lineage.commitAt(spark, Lineage.path(root), Seq(
         Lineage.Commit(s"b$i", f"2025-01-${i % 28 + 1}%02d",
           new Timestamp(i * 1000L), i.toLong, now)))
     }
-    val before = Lineage.read(spark, root).collect()
+    val before = Lineage.readAt(spark, Lineage.path(root))
       .map(_.toString).sorted
     val wmBefore = Lineage.watermarks(spark, root)
-    assert(Lineage.compact(spark, root, maxFiles = 16), "compaction triggered")
+    assert(Lineage.compactAt(spark, Lineage.path(root), maxFiles = 16),
+      "compaction triggered")
     val p = new org.apache.hadoop.fs.Path(Lineage.path(root))
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.listStatus(p).count(_.getPath.getName.endsWith(".parquet")) == 1)
-    val after = Lineage.read(spark, root).collect().map(_.toString).sorted
+    assert(fs.listStatus(p).count(_.getPath.getName.endsWith(".commits")) == 1)
+    val after = Lineage.readAt(spark, Lineage.path(root))
+      .map(_.toString).sorted
     assert(after.toSeq == before.toSeq, "history identical after compaction")
     assert(Lineage.watermarks(spark, root) == wmBefore)
-    assert(!Lineage.compact(spark, root, maxFiles = 16), "idempotent no-op below threshold")
+    assert(!Lineage.compactAt(spark, Lineage.path(root), maxFiles = 16),
+      "idempotent no-op below threshold")
 
     // crash-window simulation: a compaction that died between the
     // compacted-file move-in and the old-file deletes leaves DUPLICATE
@@ -705,18 +708,73 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // (max-per-day watermarks, distinct batch set), and the next
     // compaction converges back to one file.
     val one = fs.listStatus(p).map(_.getPath)
-      .find(_.getName.endsWith(".parquet")).get
+      .find(_.getName.endsWith(".commits")).get
     org.apache.hadoop.fs.FileUtil.copy(fs, one, fs,
-      new org.apache.hadoop.fs.Path(p, "dup-leftover.parquet"),
+      new org.apache.hadoop.fs.Path(p, "dup-leftover.commits"),
       false, spark.sparkContext.hadoopConfiguration)
     assert(Lineage.watermarks(spark, root) == wmBefore,
       "watermarks unchanged under duplicated history")
     assert(Lineage.committedBatches(spark, root) ==
       before.indices.map(i => s"b${i + 1}").toSet,
       "batch set unchanged under duplicated history")
-    assert(Lineage.compact(spark, root, maxFiles = 1), "re-compaction converges")
-    assert(fs.listStatus(p).count(_.getPath.getName.endsWith(".parquet")) == 1)
+    assert(Lineage.compactAt(spark, Lineage.path(root), maxFiles = 1),
+      "re-compaction converges")
+    assert(fs.listStatus(p).count(_.getPath.getName.endsWith(".commits")) == 1)
     assert(Lineage.watermarks(spark, root) == wmBefore)
+  }
+
+  test("lineage store: a microsecond last_ts and odd strings round-trip " +
+      "exactly, so the batch id and the watermark filter see the commit") {
+    val dir = s"$scratch/lin_micros"
+    val wm = Timestamp.from(java.time.Instant.parse("2025-01-01T10:00:00.123456Z"))
+    val cs = Seq(Lineage.Commit("b1", "2025-01-01", wm, 3L, Lineage.epoch),
+      Lineage.Commit("-", "a b-c%+\u00e9", Lineage.epoch, 0L, null),
+      Lineage.Commit("", null, Lineage.epoch, 1L, wm))
+    Lineage.commitAt(spark, dir, cs)
+    assert(Lineage.readAt(spark, dir) == cs)
+    val wms = Lineage.stateAt(spark, dir)._1.filter(_._1 == "2025-01-01")
+    assert(wms("2025-01-01").getNanos == 123456000)
+    assert(Lineage.batchId(farFuture, wms) ==
+      Lineage.batchId(farFuture, Map("2025-01-01" -> wm)))
+    val above = Timestamp.from(wm.toInstant.plusNanos(1000L))
+    val rows = Seq((wm, "2025-01-01"), (above, "2025-01-01")).toDF("ts", "day")
+    assert(rows.filter(Discover.watermarkPredicate(wms))
+      .select($"ts").as[Timestamp].collect().toSeq == Seq(above),
+      "only the row 1 microsecond above the watermark passes")
+  }
+
+  test("lineage store: a visible commit file with a bad footer fails the " +
+      "read and names the file; a hidden in-flight file is ignored") {
+    val dir = new java.io.File(s"$scratch/lin_footer")
+    Lineage.commitAt(spark, dir.getPath, Seq(Lineage.Commit("b1",
+      "2025-01-01", new Timestamp(1000L), 1L, Lineage.epoch)))
+    val good = dir.listFiles().filter(_.getName.endsWith(".commits")).head
+    val text = java.nio.file.Files.readString(good.toPath)
+    java.nio.file.Files.writeString(
+      new java.io.File(dir, ".inflight.commits.tmp").toPath,
+      text.replace("b1", "b2"))
+    assert(Lineage.committedBatchesAt(spark, dir.getPath) == Set("b1"))
+    java.nio.file.Files.writeString(
+      new java.io.File(dir, "damaged.commits").toPath, text.replace("b1", "b2"))
+    val ex = intercept[IllegalStateException](
+      Lineage.stateAt(spark, dir.getPath))
+    assert(ex.getMessage.contains("damaged.commits"), ex.getMessage)
+  }
+
+  test("lineage store: a compaction cut between its append and its " +
+      "deletes reads the same state, and the next one converges") {
+    val dir = s"$scratch/lin_cutfold"
+    (1 to 5).foreach(i => Lineage.commitAt(spark, dir, Seq(Lineage.Commit(
+      s"b$i", s"2025-01-0${i % 3 + 1}", new Timestamp(i * 1000L), i.toLong,
+      new Timestamp(i * 2000L)))))
+    val state = Lineage.stateAt(spark, dir)
+    // the fold's append, with none of its deletes
+    Lineage.commitAt(spark, dir, Lineage.readAt(spark, dir))
+    assert(Lineage.stateAt(spark, dir) == state)
+    assert(Lineage.compactAt(spark, dir, maxFiles = 1))
+    assert(new java.io.File(dir).list().count(_.endsWith(".commits")) == 1)
+    assert(Lineage.readAt(spark, dir).length == 10, "duplicates kept as rows")
+    assert(Lineage.stateAt(spark, dir) == state)
   }
 
   test("enrich: left joins preserve rows; unmapped tool -> null category") {
@@ -895,8 +953,8 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     val rA = Main.runCycle(spark, cfgA, farFuture)
     assert(rA.rowsProcessed == nA)
-    assert(Lineage.watermarksAt(spark, Lineage.dirFor(cfgA)).nonEmpty)
-    assert(Lineage.watermarksAt(spark, Lineage.dirFor(cfgB)).isEmpty,
+    assert(Lineage.stateAt(spark, Lineage.dirFor(cfgA))._1.nonEmpty)
+    assert(Lineage.stateAt(spark, Lineage.dirFor(cfgB))._1.isEmpty,
       "pipeline B's watermark must not move when A commits")
     assert(Lineage.watermarks(spark, sinkRoot).isEmpty,
       "default-location lineage untouched when lineagePath is set")
@@ -1525,13 +1583,11 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Main.runCycle(spark, cfg, at("2025-03-03T00:00:00Z"))
       .rowsProcessed == 1L)
     val lineageDir = Lineage.dirFor(cfg)
-    val lcols = Seq("batch_id", "day", "last_ts", "rows", "committed_at")
 
     // a hand-written/corrupt commit: a COMPLETED day whose only row has
     // a null observation stamp
-    Seq(("corrupt1", "2025-03-02",
-      Discover.endOfDayTs("2025-03-02").get, 0L, null: Timestamp))
-      .toDF(lcols: _*).write.mode("append").parquet(lineageDir)
+    Lineage.commitAt(spark, lineageDir, Seq(Lineage.Commit("corrupt1",
+      "2025-03-02", Discover.endOfDayTs("2025-03-02").get, 0L, null)))
     // sealing-enabled: fail closed (the day could never reopen)
     val ex1 = intercept[IllegalStateException] {
       Main.runCycle(spark, cfg, at("2025-03-03T01:00:00Z"))
@@ -1549,11 +1605,11 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     // null last_ts: the watermark is load-bearing on EVERY path —
     // always fatal, with every offending day in one message
-    Seq(("corrupt2", "2025-03-04", null: Timestamp, 0L,
-          at("2025-03-03T00:00:00Z")),
-        ("corrupt3", "2025-03-05", null: Timestamp, 0L,
-          at("2025-03-03T00:00:00Z")))
-      .toDF(lcols: _*).write.mode("append").parquet(lineageDir)
+    Lineage.commitAt(spark, lineageDir, Seq(
+      Lineage.Commit("corrupt2", "2025-03-04", null, 0L,
+        at("2025-03-03T00:00:00Z")),
+      Lineage.Commit("corrupt3", "2025-03-05", null, 0L,
+        at("2025-03-03T00:00:00Z"))))
     val ex2 = intercept[IllegalStateException] {
       Main.runCycle(spark, cfg.copy(sealDaysGraceSeconds = -1),
         at("2025-03-03T04:00:00Z"))
@@ -2218,7 +2274,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(hours.select($"hour_start").distinct().count() == 3,
       "two hours on day one, one on day two")
 
-    val lineage = Lineage.readAt(spark, Lineage.dirFor(cfg))
+    val lineage = Lineage.readAt(spark, Lineage.dirFor(cfg)).toDF()
       .filter($"batch_id" === r.batchId)
       .select($"day", $"last_ts", $"rows".as("n"))
     val want = routed.groupBy($"day")
@@ -2424,8 +2480,8 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // cycle 1 at +60 min: c1's turn 5 (+70) is past the cutoff; the cold
     // c2 rows are stranded behind the watermark; c3's one row sits in
     // the day before its ts (a day/ts mismatch) and is past the cutoff
-    // too. Committed, it moves that day's watermark past its end, so
-    // the day leaves the listing
+    // too. Committed, it moves that day's watermark past its end, and
+    // the ledger drops the day's covered file from then on
     putFile(s"$d1/f1.parquet", (0 until 5).map(i =>
       ("c1", i, "user", tsAt(10L + 10 * i), null: String)) :+
       (("c1", 5, "user", tsAt(70L), null: String)))
@@ -2516,28 +2572,47 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     tw.assertSameOutputs()
   }
 
+  test("without sealing, a day completed by a row past its end is still " +
+      "listed: a later file with rows above its watermark commits") {
+    val in = s"$scratch/unsealed_done/in"
+    val cfg = PipelineConfig(in, s"$scratch/unsealed_done/sinks")
+    val day = s"$in/day=2024-12-31"
+    putFile(s"$day/f1.parquet", Seq(("c1", 0, "user", tsAt(1500L), null)))
+    assert(Main.runCycle(spark, cfg, tsAt(4320L)).rowsProcessed == 1L)
+    assert(Discover.completedDays(Lineage.watermarks(spark, cfg.sinkRoot)) ==
+      Set("2024-12-31"), "the row past the day's end completes the day")
+    putFile(s"$day/f2.parquet", Seq(("c2", 0, "user", tsAt(1600L), null)))
+    assert(Main.runCycle(spark, cfg, tsAt(4330L)).rowsProcessed == 1L,
+      "the row above the watermark commits")
+    assert(Route.sinkNames.map(s => Sinks.readSink(spark, cfg.sinkRoot, s)
+      .filter($"conv_id" === "c2").count()).sum == 1L)
+  }
+
   test("file ledger text: every prefix of a ledger file parses to all of " +
       "its entries or none; an unparseable line is skipped on its own") {
     val entries = Map(
       FileLedger.Key("file:/in put/day=2025-01-01/a b.parquet", 10L, 20L) ->
         Some(1735689612345678L),
       FileLedger.Key("file:/in/day=2025-01-02/c%d.parquet", 11L, 21L) -> None)
-    val text = FileLedger.format(entries)
-    assert(FileLedger.parse(text) == entries)
+    def parse(t: String) =
+      CheckpointStore.parse(t).fold(Map.empty[FileLedger.Key,
+        FileLedger.MaxTs])(FileLedger.entries)
+    val text = CheckpointStore.format(FileLedger.lines(entries))
+    assert(parse(text) == entries)
     (0 until text.length).foreach { n =>
-      val got = FileLedger.parse(text.substring(0, n))
+      val got = parse(text.substring(0, n))
       assert(got.isEmpty || got == entries, s"prefix of $n chars: $got")
     }
     // a line that fits the footer but is not an entry drops alone
     val body = "not an entry\n"
     val crc = new java.util.zip.CRC32
     crc.update(body.getBytes("UTF-8"))
-    assert(FileLedger.parse(
+    assert(parse(
       s"${body}#end 1 ${java.lang.Long.toHexString(crc.getValue)}\n").isEmpty)
     val withGood = text.substring(0, text.indexOf("#end")) + body
     val crc2 = new java.util.zip.CRC32
     crc2.update(withGood.getBytes("UTF-8"))
-    assert(FileLedger.parse(
+    assert(parse(
       s"${withGood}#end 3 ${java.lang.Long.toHexString(crc2.getValue)}\n") ==
       entries)
   }
